@@ -2,18 +2,19 @@ package graft
 
 import org.apache.spark.sql.functions.col
 
-/** Dev-only decomposition of the exact-selection boundary phase (round-10
-  * verdict item 5): on the reference workload (10 M×20 doubles), how much
-  * of the histogram / gather passes is parquet decode + row iteration
-  * (irreducible for any exact algorithm that scans) vs the per-value
-  * bucket binary search (the part a codegen walk could in principle
-  * shave)? Usage: tools/run.sh graft.QselProbe [dataDir]. Prints decode
-  * wall (full-column scan, no search), then two warm
-  * quantileBoundsSelect calls with their [qsel] phase lines. */
+/** Dev-only decomposition of the exact-selection boundary phase: on the
+  * reference workload (10 M×20 doubles), how much of the histogram /
+  * gather passes is parquet decode (irreducible for any exact algorithm
+  * that scans) vs the per-value bucket search? Usage:
+  * tools/run.sh graft.QselProbe [dataDir]. Prints the decode wall (the
+  * passes' own columnar source, every batch visited, no search), then two
+  * warm quantileBoundsSelect calls with their [qsel] phase lines: count,
+  * sample (job 1), splits (driver: split points, grids, broadcast),
+  * hist (job 2), gather (job 3 and the driver's candidate sort). */
 object QselProbe {
   def main(args: Array[String]): Unit = {
-    // the [qsel] phase lines are gated off for contract queries (round-10
-    // verdict item 3); this harness is their one consumer
+    // the [qsel] phase lines are gated off for contract queries; this
+    // harness is their one consumer
     System.setProperty("graft.qsel.verbose", "true")
     val data = args.headOption.getOrElse("/tmp/refbench/massive_data.parquet")
     val cpus = Sessions.cpus
@@ -27,11 +28,16 @@ object QselProbe {
       f
       println(f"[probe] $tag=${(System.nanoTime() - t0) / 1e9}%.2f")
     }
-    // decode floor: iterate every row of every column, touch one value
+    // decode floor: pull every batch of the passes' source, touch one column
     for (i <- 1 to 3) time(s"decode_pass$i") {
-      proj.queryExecution.toRdd.foreachPartition { it =>
+      org.apache.spark.sql.graft.Bridge.columnarBatches(proj).foreachPartition { it =>
         var s = 0.0
-        while (it.hasNext) { val r = it.next(); if (!r.isNullAt(0)) s += r.getDouble(0) }
+        while (it.hasNext) {
+          val b = it.next()
+          val v = b.column(0)
+          var r = 0
+          while (r < b.numRows) { if (!v.isNullAt(r)) s += v.getDouble(r); r += 1 }
+        }
       }
     }
     for (i <- 1 to 2) time(s"select_pass$i") {

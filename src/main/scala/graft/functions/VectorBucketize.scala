@@ -134,7 +134,7 @@ object VectorBucketizeExpr {
 
   /** [[searchRow]] restricted to a caller-proved bracket [lo0, hi0) — the
     * [[CompositeGridIndex]] fast path for the rank tokenizer's two
-    * aggregation passes (round 11; same idea as Tokenize.GridIndex): the
+    * aggregation passes (round 11; same idea as [[BucketizeGrid]]): the
     * grid brackets by the FIRST key field, this finishes the lexicographic
     * search inside the bracket. Exactly equal to the full-range search for
     * any bracket containing the answer (property-pinned). */
@@ -157,13 +157,13 @@ object VectorBucketizeExpr {
   }
 
   /** Grid bracket for [[searchRowIn]] over a lexicographically-ascending
-    * flat T×m threshold matrix (round 11, Tokenize.GridIndex lifted to
-    * composite keys): first components are non-decreasing, so a uniform
+    * flat T×m threshold matrix (round 11, the scalar [[BucketizeGrid]] lifted
+    * to composite keys): first components are non-decreasing, so a uniform
     * grid over [first(0), first(T-1)] with per-cell lower_bound brackets
     * confines the lex search for any key to the cells its FIRST field can
     * land in (±1 cell so fp rounding at a cell edge never excludes the
     * answer; bnd(G) pinned to T unconditionally — the same two edge rules
-    * the scalar GridIndex carries from the round-10 advisor item). For a
+    * the scalar BucketizeGrid carries). For a
     * continuous first field the bracket is a couple of entries; for a
     * low-cardinality first field it is that value's tie run — the lex
     * search then starts where the field-0 probes would have ended.
@@ -183,7 +183,7 @@ object VectorBucketizeExpr {
     // grid only when a cell is >= 1 ulp wide: below that a cell edge's
     // 0.5-ulp fp rounding spans multiple cells and the ±1-cell margin can
     // exclude the true index (caught by the round-11 property test on
-    // ulp-adjacent firsts; same rule as Tokenize.GridIndex)
+    // ulp-adjacent firsts; same rule as BucketizeGrid)
     private val gridOk = java.lang.Double.isFinite(inv) && inv > 0.0 &&
       (hi0 - lo0) / G >= math.ulp(math.max(math.abs(lo0), math.abs(hi0)))
     private def lbFirst(v: Double): Int = {

@@ -1,10 +1,15 @@
 package graft.operators
 
+import scala.collection.mutable
+import scala.reflect.ClassTag
+
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
-import graft.functions.BucketizeExpr
+import graft.functions.{BucketizeExpr, BucketizeGrid}
 
 /** Quantile tokenization — the reference's core capability: per-column
   * quantile boundaries + discretization of every value into an integer bin id
@@ -263,7 +268,7 @@ object Tokenize {
     val flatOff: Array[Int] = nb.scanLeft(0)(_ + _)
     val splitsB = sc.broadcast(splits)
     val keyIdxB = sc.broadcast(keyIdx)
-    // grid-bracketed lex search (round 11: the same surgery GridIndex did
+    // grid-bracketed lex search (round 11: the same surgery BucketizeGrid does
     // for quantileBoundsSelect, lifted to composite keys — the plain
     // search walked ~13 scattered cache lines of a ~450 KB split matrix
     // per (row, col) in BOTH passes below)
@@ -570,87 +575,6 @@ object Tokenize {
     finally es.shutdown()
   }
 
-  /** Phase 1, exact, selection-based — the preferred scale path. Finds the
-    * exact values at the quantile positions WITHOUT any global sort:
-    *
-    *  1. a metadata-speed row count (zero columns read on parquet) decides
-    *     the small-input collect path;
-    *  2. a PARTITION-HEAD SKIP-SAMPLE picks ~`numBuckets` split points per
-    *     column: up to 64 evenly-strided partitions are visited and only
-    *     the first ~sampleSize/64 rows of each are decoded (~2% of a large
-    *     scan). The sample only steers bucket granularity, so its bias can
-    *     never change the RESULT — a pathological sample (e.g. a file
-    *     value-clustered so partition heads miss the range) only inflates
-    *     candidate-bucket volume, which the maxCollect guard absorbs via
-    *     the distributed gather fallback;
-    *  3. ONE scan bucket-counts every column against its split points
-    *     (grid-bracketed lower_bound, [[GridIndex]], map-side combined —
-    *     the shuffle carries only (col, bucket) partial counts);
-    *     per-column non-null counts fall out as the histogram row sums —
-    *     no separate count pass;
-    *  4. cumulative bucket counts locate each needed position's bucket; a
-    *     second scan shuffles ONLY the candidate buckets (≈ |probs| x n/B
-    *     rows per column), each sorted locally inside flatMapGroups and the
-    *     needed offsets emitted.
-    *
-    * vs the sort path: 2 full scans + a candidate-sized shuffle instead of
-    * one range-partitioned full sort + double-pass zipWithIndex per column
-    * (and vs the round-3 shape: the count aggregation and the full-scan
-    * Bernoulli sample are gone — 4 data passes became 2 plus two ~free
-    * jobs). The result is byte-identical to [[quantileBoundsExact]]
-    * (equality spec) — positions are exact; the sample only steers bucket
-    * granularity. [[quantileBoundsSample]] deliberately KEEPS its full-scan
-    * Bernoulli sample: there the sample IS the answer, and skip-sampling
-    * would trade the DKW guarantee for speed.
-    *
-    * Caveats: values equal to a split point share a bucket (ties never split
-    * across buckets, so tie-heavy columns degrade gracefully into one big
-    * bucket = the column's own sort).
-    *
-    * NaN policy (round 12, closing the round-11 verdict's robustness
-    * item): NaN ranks '''last''', matching Spark's sort/agg ordering AND
-    * `java.util.Arrays.sort(double[])` — the two orders every pass here
-    * leans on. Concretely: [[GridIndex.search]] sends NaN past every
-    * split (top bucket), the histogram therefore counts NaN in the top
-    * bucket where sort-last rows belong, the gather pass's local
-    * `Arrays.sort` places NaN after every finite value inside that
-    * bucket, and the skip-sample drops NaN before deriving split points
-    * so the grid itself stays finite. Net effect: finite-rank quantiles
-    * are EXACT regardless of NaN presence (NaN only occupies tail
-    * positions, exactly as a Spark sort would place it), and a quantile
-    * position that lands in the NaN tail returns NaN — the same answer
-    * [[quantileBoundsExact]]'s Spark sort produces. Property-pinned in
-    * TokenizeSpec against a NaN-last brute force. */
-  /** Grid-accelerated lower_bound over a sorted distinct split array —
-    * EXACTLY equal to `BucketizeExpr.search(splits, v, Int.MaxValue)`
-    * (property-pinned in TokenizeSpec), built for the histogram/gather
-    * passes' hot loop: the plain binary search walks ~13 scattered cache
-    * lines of a 64 KB split array PER VALUE (round-10 profile: the
-    * 10 M×20 histogram pass spent ~2 s searching over a ~0.4 s decode
-    * floor). A uniform grid over [splits.head, splits.last] with
-    * per-cell lower_bound brackets cuts that to one multiply + two int
-    * reads + a ≤2-step search: splits are equi-depth over the SAME
-    * distribution the grid spans, so 4 cells per split keeps the
-    * densest cell's bracket a couple of entries wide. Brackets are
-    * widened ±1 cell so fp rounding at a cell edge can never exclude
-    * the true index — exactness never depends on the grid. */
-  private[operators] final class GridIndex(val splits: Array[Double]) extends Serializable {
-    // Round 13: the grid machinery (G sizing, the round-11 ulp-wide-cell
-    // guard, the bnd table with its unconditionally-pinned top edge, the
-    // ±1-cell bracket) moved to graft.functions.BucketizeGrid so the
-    // tokenizer expression and the selection passes share ONE hardened
-    // implementation — the round-11 fp-edge fix class must never have to
-    // be applied twice. GridIndex keeps its call-site shape (unclamped
-    // lower_bound) as a thin delegate.
-    private val g = new graft.functions.BucketizeGrid(splits)
-    /** #splits strictly < v (right-closed tie convention). NaN returns
-      * `splits.length` — past every split, the NaN-last rank order
-      * (round 12; splits are NaN-free by construction: the skip-sample
-      * strips NaN). */
-    def search(v: Double): Int =
-      graft.functions.BucketizeGrid.search(g, v, Int.MaxValue)
-  }
-
   /** Dev-only phase timing for the selection passes — prints ONLY under
     * -Dgraft.qsel.verbose=true (set by the QselProbe/RankProbe harnesses);
     * contract queries emit nothing to stderr (round-10 verdict item 3). */
@@ -689,6 +613,59 @@ object Tokenize {
     }
   }
 
+  /** Phase 1, exact, selection-based — the preferred scale path. Finds the
+    * exact values at the quantile positions (pos = p·(n−1), interpolated
+    * between floor and ceil) without a global sort:
+    *
+    *  - '''Sizing, driver.''' A bare parquet scan is counted from its
+    *    footers (no job); any other input pays one column-less `count()`.
+    *    Inputs of at most `smallCollect` TOTAL rows (not non-null rows: a
+    *    mostly-null wide input is still big to collect) are collected and
+    *    sorted on the driver, where three jobs would cost more than they
+    *    save. Larger inputs take the three jobs below.
+    *  - '''Source.''' Every job reads the cast projection as
+    *    `ColumnarBatch`es ([[org.apache.spark.sql.graft.Bridge.columnarBatches]]):
+    *    a vectorized parquet scan hands over its own double vectors, any
+    *    other plan goes through Spark's `RowToColumnarExec`. Each job has one
+    *    column-at-a-time loop over `ColumnVector.getDouble`.
+    *  - '''Job 1, sample.''' Up to 64 evenly strided partitions decode only
+    *    their first ~sampleSize/64 rows; each returns, per column, its
+    *    null- and NaN-free values sorted. The driver concatenates those
+    *    sorted runs, picks ≤ numBuckets − 1 distinct equi-depth split points
+    *    per column and builds one [[graft.functions.BucketizeGrid]] per
+    *    column. The splits come from partition heads, not a full-scan
+    *    Bernoulli sample, because they only steer bucket granularity and
+    *    never the result: a head sample costs ~2% of a scan, and a biased
+    *    one (a value-clustered file) only enlarges the candidate buckets,
+    *    which the `maxCollect` guard absorbs. [[quantileBoundsSample]] keeps
+    *    its full-scan sample because there the sample IS the answer.
+    *  - '''Job 2, histogram.''' One scan counts every column's values per
+    *    bucket (grid-bracketed lower_bound) into a partition-local flat
+    *    (col, bucket) array; tree-reduced. The per-column non-null counts
+    *    are its row sums. The driver turns the cumulative counts into a
+    *    (bucket, in-bucket offset) for every needed position.
+    *  - '''Job 3, gather.''' A second scan keeps only the values that fall
+    *    in a needed bucket (≈ |probs|·n/B per column) as primitive arrays
+    *    keyed by (col, bucket). Up to `maxCollect` candidates are collected
+    *    and sorted per bucket on the driver; above it each bucket is sorted
+    *    on the executors after a reduceByKey and only the needed offsets
+    *    come back.
+    *
+    * The result is byte-identical to [[quantileBoundsExact]] (equality
+    * spec). Values equal to a split share a bucket, so ties never split
+    * across buckets and a tie-heavy column degrades into a few big buckets.
+    *
+    * NaN ranks '''last''', as in Spark's sort and `Arrays.sort(double[])`:
+    * the sample drops NaN so the splits stay finite and ordered; the grid
+    * search sends NaN past every split, so the histogram counts it in the
+    * top bucket where sort-last rows belong; the driver's `Arrays.sort`
+    * puts it after every finite value of that bucket. Finite-rank quantiles
+    * are therefore exact whatever the NaN count, and a position in the NaN
+    * tail returns NaN, as the sort path does. Property-pinned in
+    * TokenizeSpec against a NaN-last brute force.
+    *
+    * Every broadcast the call makes is destroyed before it returns or
+    * throws. */
   def quantileBoundsSelect(df: DataFrame, cols: Seq[String], probs: Seq[Double],
                            numBuckets: Int = 8192, sampleSize: Int = 200000,
                            maxCollect: Long = 64000000L,
@@ -696,25 +673,18 @@ object Tokenize {
     val spark = df.sparkSession
     val sc = spark.sparkContext
     val k = cols.size
-    // helper: the exact (floor, ceil, frac) interpolation positions for a
-    // column with n non-null values
+    // the exact (floor, ceil, frac) interpolation positions for a column
+    // with n non-null values
     def positionsFor(n: Long): Seq[(Long, Long, Double)] =
       probs.map { p =>
         val pos = p * (n - 1)
         (math.floor(pos).toLong, math.ceil(pos).toLong, pos - math.floor(pos))
       }
-    // row count for collect/sample sizing — must use TOTAL rows (a
-    // mostly-null wide input can have tiny non-null counts but still be
-    // huge to collect). A bare parquet scan answers from FOOTERS on the
-    // driver (no job at all — round 10, same convention as
-    // Tables.rowCount); anything else pays one column-less count() scan.
     val tPhase0 = System.nanoTime()
     def phase(tag: String, since: Long): Long = devPhase("qsel", tag, since)
     val footer = footerCount(df)
     val totalRows = footer.getOrElse(df.count())
     val proj = df.select(cols.map(c => col(c).cast("double")): _*)
-    // small inputs: one collect, driver-side sorts — the bucket machinery's
-    // extra jobs cost more than they save under ~1M rows
     if (totalRows <= smallCollect) {
       val rows = proj.collect()
       return cols.indices.map { ci =>
@@ -728,180 +698,195 @@ object Tokenize {
         }
       }.toMap
     }
-    // sample-derived split points (sorted, distinct) per column; the sample
-    // only steers bucket granularity — positions stay exact regardless, so
-    // a cheap partition-head skip-sample suffices: visit up to 64 evenly
-    // strided partitions, decode only the head rows of each (early-stop —
-    // the parquet reader never pulls later batches), skip the rest entirely
-    // primitive InternalRow access (no Row boxing) for every pass below;
-    // scan-reused rows must be copied when they outlive the iterator step
-    val internal = proj.queryExecution.toRdd
-    val nPart = internal.getNumPartitions
+    val batches = Bridge.columnarBatches(proj)
+    val nPart = batches.getNumPartitions
     val visit = math.min(nPart, 64)
     val stride = math.max(1, nPart / visit)
     val perPartCap = math.max(256, sampleSize / visit)
-    val tCount = phase(s"count(footer=${footer.isDefined})", tPhase0)
-    val sampleRows = internal.mapPartitionsWithIndex { (pid, it) =>
-      if (pid % stride == 0) it.take(perPartCap).map(_.copy()) else Iterator.empty
-    }.collect()
-    val tSample = phase("sample", tCount)
-    val splits: Array[Array[Double]] = cols.indices.map { ci =>
-      // NaN is stripped BEFORE deriving split points: a NaN split would be
-      // unordered under IEEE compares. NaN DATA still counts — search()
-      // sends it past the last split, i.e. the top bucket, which is where
-      // the NaN-last sort order puts it (policy above)
-      val vs = sampleRows.iterator.filterNot(_.isNullAt(ci)).map(_.getDouble(ci))
-        .filter(v => v == v).toArray
-      java.util.Arrays.sort(vs)
-      if (vs.isEmpty) Array.empty[Double]
-      else {
+    val held = mutable.ArrayBuffer.empty[Broadcast[_]]
+    def broadcast[T: ClassTag](v: T): Broadcast[T] = {
+      val b = sc.broadcast(v)
+      held += b
+      b
+    }
+    try {
+      val tCount = phase(s"count(footer=${footer.isDefined})", tPhase0)
+      // job 1: per sampled partition, per column, the head rows' values,
+      // sorted on the executor (the reader stops after the head batches)
+      val runs: Array[Array[Array[Double]]] = batches.mapPartitionsWithIndex { (pid, it) =>
+        if (pid % stride != 0) Iterator.empty
+        else {
+          val bufs = Array.fill(k)(new mutable.ArrayBuilder.ofDouble)
+          var left = perPartCap
+          while (left > 0 && it.hasNext) {
+            val batch = it.next()
+            val m = math.min(batch.numRows, left)
+            var ci = 0
+            while (ci < k) {
+              val vec = batch.column(ci)
+              val buf = bufs(ci)
+              var r = 0
+              while (r < m) {
+                if (!vec.isNullAt(r)) {
+                  val v = vec.getDouble(r)
+                  if (v == v) buf += v // NaN splits would be unordered
+                }
+                r += 1
+              }
+              ci += 1
+            }
+            left -= m
+          }
+          Iterator.single(bufs.map { b =>
+            val a = b.result()
+            java.util.Arrays.sort(a)
+            a
+          })
+        }
+      }.collect()
+      val tSample = phase("sample", tCount)
+      val grids: Array[BucketizeGrid] = Array.tabulate(k) { ci =>
+        // Arrays.sort detects the concatenated sorted runs and merges them
+        val vs = Array.concat(runs.map(_(ci)).toIndexedSeq: _*)
+        java.util.Arrays.sort(vs)
         val b = math.min(numBuckets, vs.length)
-        (1 until b).iterator
+        new BucketizeGrid((1 until b).iterator
           .map(i => vs(((i.toLong * vs.length) / b).toInt.min(vs.length - 1)))
-          .toArray.distinct
+          .toArray.distinct)
       }
-    }.toArray
-    val nb: Array[Int] = splits.map(_.length + 1)
-    val flatOff: Array[Int] = nb.scanLeft(0)(_ + _)
-    val gidxB = sc.broadcast(splits.map(new GridIndex(_)))
-    // pass 1: flat (col, bucket) histogram in one scan — per value: one
-    // grid-bracketed search + one array increment, zero allocation
-    // (round 10: GridIndex replaced the 13-probe binary search; round
-    // 11: mapPartitions with a partition-local accumulator replaced the
-    // treeAggregate seqOp, hoisting the broadcast reads and the
-    // per-element closure dispatch out of the row loop)
-    val hist: Array[Long] = internal.mapPartitions { it =>
-      val gx = gidxB.value
-      val off = flatOff // closure-captured, ~k ints
-      val acc = new Array[Long](off(k))
-      while (it.hasNext) {
-        val row = it.next()
-        var ci = 0
-        while (ci < k) {
-          if (!row.isNullAt(ci)) {
-            acc(off(ci) + gx(ci).search(row.getDouble(ci))) += 1
+      val nb: Array[Int] = grids.map(_.n + 1)
+      val flatOff: Array[Int] = nb.scanLeft(0)(_ + _)
+      val gridB = broadcast(grids)
+      val tSplits = phase("splits", tSample)
+      // job 2: flat (col, bucket) histogram — per value one grid-bracketed
+      // search and one increment into a partition-local array
+      val hist: Array[Long] = batches.mapPartitions { it =>
+        val gx = gridB.value
+        val off = flatOff
+        val acc = new Array[Long](off(k))
+        while (it.hasNext) {
+          val batch = it.next()
+          val m = batch.numRows
+          var ci = 0
+          while (ci < k) {
+            val vec = batch.column(ci)
+            val g = gx(ci)
+            val base = off(ci)
+            var r = 0
+            while (r < m) {
+              if (!vec.isNullAt(r))
+                acc(base + BucketizeGrid.search(g, vec.getDouble(r), Int.MaxValue)) += 1
+              r += 1
+            }
+            ci += 1
           }
-          ci += 1
         }
+        Iterator.single(acc)
+      }.treeReduce { (a, b) =>
+        var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
       }
-      Iterator.single(acc)
-    }.treeReduce { (a, b) =>
-      var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-    }
-    val tHist = phase("hist", tSample)
-    // cumulative counts -> (bucket, in-bucket offset) for every needed pos
-    val cums: Array[Array[Long]] = cols.indices.map { ci =>
-      val cum = new Array[Long](nb(ci) + 1)
-      (0 until nb(ci)).foreach(b => cum(b + 1) = cum(b) + hist(flatOff(ci) + b))
-      cum
-    }.toArray
-    // per-column non-null counts are the histogram row sums — the round-3
-    // dedicated count aggregation pass is gone
-    val counts: Array[Long] = cums.map(_.last)
-    cols.indices.foreach(i =>
-      require(counts(i) > 0, s"quantileBoundsSelect: no non-null values in ${cols(i)}"))
-    val positions: Array[Seq[(Long, Long, Double)]] =
-      counts.map(positionsFor)
-    val needPos: Array[Array[Long]] =
-      positions.map(_.flatMap(t => Seq(t._1, t._2)).distinct.sorted.toArray)
-    val neededOffsets: Array[Map[Int, Array[Long]]] = cols.indices.map { ci =>
-      val cum = cums(ci)
-      needPos(ci).toSeq.groupBy { p =>
-        java.util.Arrays.binarySearch(cum, p) match {
-          case i if i >= 0 =>
-            var j = i; while (j < nb(ci) && cum(j + 1) == cum(j)) j += 1; j
-          case i => -i - 2
-        }
-      }.map { case (b, ps) => b -> ps.map(_ - cum(b)).toArray }
-    }.toArray
-    // membership structure for the gather pass: per col, sorted needed
-    // buckets PLUS an O(1) bucket→buffer-slot table (round 13, the rank
-    // path's CompositeGridIndex convention): the gather loop's
-    // per-value membership test was a binarySearch over the ~|probs|
-    // needed buckets — ~8 L1 probes per value; a direct nb(ci)-entry
-    // int table (−1 = not needed, ≈ 32 KB/col, L2-resident) makes it
-    // one read. Same bucket set, so exactness is untouched.
-    val neededBuckets: Array[Array[Int]] =
-      neededOffsets.map(_.keys.toArray.sorted)
-    val bucketSlot: Array[Array[Int]] = cols.indices.map { ci =>
-      val slot = Array.fill(nb(ci))(-1)
-      neededBuckets(ci).iterator.zipWithIndex.foreach { case (b, j) => slot(b) = j }
-      slot
-    }.toArray
-    val candVolume: Long = cols.indices.map { ci =>
-      neededBuckets(ci).map(b => hist(flatOff(ci) + b)).sum
-    }.sum
-    val neededBkB = sc.broadcast(neededBuckets)
-    val bucketSlotB = sc.broadcast(bucketSlot)
-    // pass 2: gather ONLY candidate-bucket values (≈ |probs| x n/B per col)
-    // as per-partition PRIMITIVE arrays keyed by (col, bucket) — round 10:
-    // the per-row `flatMap { ... Iterator.single((ci, b, v)) }` form
-    // allocated two iterators per row (400 M for the 10 M×20 workload) and
-    // collected millions of boxed tuples the driver then groupBy'd —
-    // gather measured 3.7-5.2 s warm against the same pass's ~0.4 s decode
-    // floor. The while-loop + ArrayBuilder.ofDouble form keeps the hot
-    // loop allocation-free and ships ~8 bytes/candidate.
-    val cand = internal.mapPartitions { it =>
-      val gx = gidxB.value
-      val nbk = neededBkB.value
-      val slot = bucketSlotB.value
-      val bufs = Array.tabulate(k)(ci =>
-        Array.fill(nbk(ci).length)(new scala.collection.mutable.ArrayBuilder.ofDouble))
-      while (it.hasNext) {
-        val row = it.next()
-        var ci = 0
-        while (ci < k) {
-          if (!row.isNullAt(ci)) {
-            val v = row.getDouble(ci)
-            val j = slot(ci)(gx(ci).search(v))
-            if (j >= 0) bufs(ci)(j) += v
+      val tHist = phase("hist", tSplits)
+      // cumulative counts -> (bucket, in-bucket offset) for every needed pos
+      val cums: Array[Array[Long]] = cols.indices.map { ci =>
+        val cum = new Array[Long](nb(ci) + 1)
+        (0 until nb(ci)).foreach(b => cum(b + 1) = cum(b) + hist(flatOff(ci) + b))
+        cum
+      }.toArray
+      val counts: Array[Long] = cums.map(_.last)
+      cols.indices.foreach(i =>
+        require(counts(i) > 0, s"quantileBoundsSelect: no non-null values in ${cols(i)}"))
+      val positions: Array[Seq[(Long, Long, Double)]] =
+        counts.map(positionsFor)
+      val needPos: Array[Array[Long]] =
+        positions.map(_.flatMap(t => Seq(t._1, t._2)).distinct.sorted.toArray)
+      val neededOffsets: Array[Map[Int, Array[Long]]] = cols.indices.map { ci =>
+        val cum = cums(ci)
+        needPos(ci).toSeq.groupBy { p =>
+          java.util.Arrays.binarySearch(cum, p) match {
+            case i if i >= 0 =>
+              var j = i; while (j < nb(ci) && cum(j + 1) == cum(j)) j += 1; j
+            case i => -i - 2
           }
-          ci += 1
+        }.map { case (b, ps) => b -> ps.map(_ - cum(b)).toArray }
+      }.toArray
+      // gather membership: per col, the sorted needed buckets and a
+      // bucket -> buffer-slot table (−1 = not needed), so the per-value
+      // test is one int read
+      val neededBuckets: Array[Array[Int]] =
+        neededOffsets.map(_.keys.toArray.sorted)
+      val bucketSlot: Array[Array[Int]] = cols.indices.map { ci =>
+        val slot = Array.fill(nb(ci))(-1)
+        neededBuckets(ci).iterator.zipWithIndex.foreach { case (b, j) => slot(b) = j }
+        slot
+      }.toArray
+      val candVolume: Long = cols.indices.map { ci =>
+        neededBuckets(ci).map(b => hist(flatOff(ci) + b)).sum
+      }.sum
+      val neededBkB = broadcast(neededBuckets)
+      val bucketSlotB = broadcast(bucketSlot)
+      // job 3: gather the candidate-bucket values as per-partition
+      // primitive arrays keyed by (col, bucket)
+      val cand = batches.mapPartitions { it =>
+        val gx = gridB.value
+        val nbk = neededBkB.value
+        val slot = bucketSlotB.value
+        val bufs = Array.tabulate(k)(ci =>
+          Array.fill(nbk(ci).length)(new mutable.ArrayBuilder.ofDouble))
+        while (it.hasNext) {
+          val batch = it.next()
+          val m = batch.numRows
+          var ci = 0
+          while (ci < k) {
+            val vec = batch.column(ci)
+            val g = gx(ci)
+            val sl = slot(ci)
+            val bf = bufs(ci)
+            var r = 0
+            while (r < m) {
+              if (!vec.isNullAt(r)) {
+                val v = vec.getDouble(r)
+                val j = sl(BucketizeGrid.search(g, v, Int.MaxValue))
+                if (j >= 0) bf(j) += v
+              }
+              r += 1
+            }
+            ci += 1
+          }
         }
+        Iterator.range(0, k).flatMap(ci =>
+          bufs(ci).indices.iterator.map(j => ((ci, nbk(ci)(j)), bufs(ci)(j).result())))
       }
-      Iterator.range(0, k).flatMap(ci =>
-        bufs(ci).indices.iterator.map(j => ((ci, nbk(ci)(j)), bufs(ci)(j).result())))
-    }
-    // small candidate sets sort driver-side (typical: ≤ a few M values);
-    // larger ones fall back to a distributed per-bucket sort that ships only
-    // the needed offsets back
-    val picked: Map[(Int, Int, Long), Double] =
-      if (candVolume <= maxCollect) {
-        val merged = scala.collection.mutable.HashMap
-          .empty[(Int, Int), scala.collection.mutable.ArrayBuilder.ofDouble]
-        cand.collect().foreach { case (key, arr) =>
-          merged.getOrElseUpdate(key,
-            new scala.collection.mutable.ArrayBuilder.ofDouble) ++= arr
+      val picked: Map[(Int, Int, Long), Double] =
+        if (candVolume <= maxCollect) {
+          val merged = mutable.HashMap.empty[(Int, Int), mutable.ArrayBuilder.ofDouble]
+          cand.collect().foreach { case (key, arr) =>
+            merged.getOrElseUpdate(key, new mutable.ArrayBuilder.ofDouble) ++= arr
+          }
+          merged.iterator.flatMap { case ((ci, b), ab) =>
+            val arr = ab.result()
+            java.util.Arrays.sort(arr)
+            neededOffsets(ci)(b).iterator.map(off => (ci, b, off) -> arr(off.toInt))
+          }.toMap
+        } else {
+          val neededOffB = broadcast(neededOffsets)
+          cand.reduceByKey(_ ++ _).flatMap { case ((ci, b), arr) =>
+            java.util.Arrays.sort(arr)
+            neededOffB.value(ci)(b).iterator.map(off => ((ci, b, off), arr(off.toInt)))
+          }.collect().toMap
         }
-        merged.iterator.flatMap { case ((ci, b), ab) =>
-          val arr = ab.result()
-          java.util.Arrays.sort(arr)
-          neededOffsets(ci)(b).iterator.map(off => (ci, b, off) -> arr(off.toInt))
+      phase("gather", tHist)
+      cols.indices.map { ci =>
+        val cum = cums(ci)
+        val byGlobal: Map[Long, Double] = neededOffsets(ci).toSeq.flatMap { case (b, offs) =>
+          offs.map(off => (cum(b) + off) -> picked((ci, b, off)))
         }.toMap
-      } else {
-        val neededOffB = sc.broadcast(neededOffsets)
-        val r = cand.reduceByKey(_ ++ _).flatMap { case ((ci, b), arr) =>
-          java.util.Arrays.sort(arr)
-          neededOffB.value(ci)(b).iterator.map(off => ((ci, b, off), arr(off.toInt)))
-        }.collect().toMap
-        neededOffB.destroy()
-        r
-      }
-    gidxB.destroy()
-    neededBkB.destroy()
-    bucketSlotB.destroy()
-    phase("gather", tHist)
-    cols.indices.map { ci =>
-      val cum = cums(ci)
-      val byGlobal: Map[Long, Double] = neededOffsets(ci).toSeq.flatMap { case (b, offs) =>
-        offs.map(off => (cum(b) + off) -> picked((ci, b, off)))
+        cols(ci) -> positions(ci).map { case (lo, hi, fr) =>
+          val l = byGlobal(lo)
+          val h = byGlobal(hi)
+          l + (h - l) * fr
+        }
       }.toMap
-      cols(ci) -> positions(ci).map { case (lo, hi, fr) =>
-        val l = byGlobal(lo)
-        val h = byGlobal(hi)
-        l + (h - l) * fr
-      }
-    }.toMap
+    } finally held.foreach(_.destroy())
   }
 
   /** Memo cache for driver-contract queries: the same (sfDir, cols, bins)

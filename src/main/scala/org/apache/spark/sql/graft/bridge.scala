@@ -22,6 +22,32 @@ object Bridge {
       : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
     df.queryExecution.toRdd
 
+  /** The DataFrame's rows as `ColumnarBatch`es, one batch stream per
+    * partition of [[internalRdd]] (same partitions, same row order). When
+    * the executed plan only converts a columnar child to rows —
+    * `WholeStageCodegen(ColumnarToRow(InputAdapter(child)))` or a bare
+    * `ColumnarToRow(child)`, e.g. a vectorized parquet scan — the child's
+    * batches are read directly and no row is ever built; any other plan
+    * (including a scan that decodes rows itself: whole-stage codegen off,
+    * or too many fields) is converted by Spark's own
+    * `RowToColumnarExec`. Batches are reused: a consumer must be done with
+    * one before it pulls the next. The plan nodes are built under the
+    * frame's session so their conf and metrics bind to it. */
+  def columnarBatches(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.rdd.RDD[org.apache.spark.sql.vectorized.ColumnarBatch] = {
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter,
+      RowToColumnarExec, WholeStageCodegenExec}
+    val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    spark.withActive {
+      val columnar = df.queryExecution.executedPlan match {
+        case WholeStageCodegenExec(ColumnarToRowExec(InputAdapter(c))) => c
+        case ColumnarToRowExec(c) => c
+        case p => RowToColumnarExec(p)
+      }
+      columnar.executeColumnar()
+    }
+  }
+
   /** Eager localCheckpoint that HANDS BACK the checkpointed RDD.
     * `Dataset.localCheckpoint(true)` performs exactly these steps but keeps
     * the RDD internal, so the blocks can only be reclaimed after the frame

@@ -207,7 +207,7 @@ class TokenizeSpec extends SparkSpec {
     assert(BucketizeExpr.search(bounds, 9.9, 3) == 2) // clamp to bins-1
   }
 
-  test("GridIndex.search == BucketizeExpr.search on every input shape (round 10)") {
+  test("unclamped BucketizeGrid.search == BucketizeExpr.search") {
     val rnd = new scala.util.Random(7)
     // distributions the selection pass actually sees: gaussian (randn
     // fixtures), uniform, heavy ties, tiny arrays, singletons
@@ -227,7 +227,7 @@ class TokenizeSpec extends SparkSpec {
       Array(0.0, Double.MinPositiveValue),
       Iterator.iterate(Double.MinPositiveValue)(math.nextUp).take(8).toArray)
     for (splits <- splitSets) {
-      val gx = new Tokenize.GridIndex(splits)
+      val g = new BucketizeGrid(splits)
       val probes = Iterator.fill(20000)(rnd.nextGaussian() * 3) ++
         splits.iterator ++ // exact boundary hits -> lower bucket
         splits.iterator.map(v => math.nextUp(v)) ++
@@ -236,7 +236,8 @@ class TokenizeSpec extends SparkSpec {
           -1e308, 1e308, 0.0, -0.0,
           Double.NaN) // round 12: both sides send NaN past every split
       for (v <- probes)
-        assert(gx.search(v) == BucketizeExpr.search(splits, v, Int.MaxValue),
+        assert(BucketizeGrid.search(g, v, Int.MaxValue) ==
+          BucketizeExpr.search(splits, v, Int.MaxValue),
           s"mismatch at v=$v n=${splits.length}")
     }
   }
@@ -244,8 +245,8 @@ class TokenizeSpec extends SparkSpec {
   test("BucketizeGrid == plain search for BOTH closure conventions on every input shape (round 13)") {
     // the grid-bracketed search that BucketizeExpr's interpreted AND
     // generated paths now share must be bit-for-bit the plain full-range
-    // search — including on DUPLICATE-heavy bounds (unlike GridIndex's
-    // distinct splits, quantile edges keep duplicates unless dropped:
+    // search — including on DUPLICATE-heavy bounds (unlike the selection
+    // passes' distinct splits, quantile edges keep duplicates unless dropped:
     // a run of equal boundaries must never escape the widened bracket,
     // which is what makes one grid serve upper_bound too)
     val rnd = new scala.util.Random(13)
@@ -383,6 +384,119 @@ class TokenizeSpec extends SparkSpec {
     val allNaN = spark.range(5000).select(lit(Double.NaN).as("v"))
     quantileBoundsSelect(allNaN, Seq("v"), Seq(0.5), numBuckets = 8, smallCollect = 0)("v")
       .foreach(q => assert(q.isNaN))
+  }
+
+  test("BucketizeGrid's swept bnd equals the per-cell lower_bound on every cell") {
+    val rnd = new scala.util.Random(21)
+    def lowerBound(b: Array[Double], x: Double): Int = {
+      var lo = 0
+      var hi = b.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (b(mid) < x) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+    val narrow = Iterator.iterate(1.0)(math.nextUp).take(64).toArray // < 1 ulp per cell
+    assert(!new BucketizeGrid(narrow).gridOk)
+    val boundSets: Seq[Array[Double]] = Seq(
+      Array.fill(8191)(rnd.nextGaussian()).sorted,
+      Array.fill(5000)(rnd.nextDouble() * 1e6).sorted,
+      Array.fill(2000)(rnd.nextInt(5).toDouble).sorted, // duplicate-heavy
+      Array.fill(64)(7.5), // all equal: zero span
+      Array(3.25), // single split
+      Array.empty[Double],
+      narrow,
+      Array(0.0, Double.MinPositiveValue), // denormal span
+      Array(-1e308, 0.0, 1e308), // span overflows to Infinity: NaN edge at cell 0
+      Array(Double.NegativeInfinity, 0.0, 1.0), // every edge NaN
+      Array(0.0, 1.0, Double.PositiveInfinity))
+    for (bounds <- boundSets) {
+      val g = new BucketizeGrid(bounds)
+      for (c <- 0 until g.G) {
+        val edge = g.lo0 + c * (g.hi0 - g.lo0) / g.G
+        assert(g.bnd(c) == lowerBound(bounds, edge), s"cell $c of ${g.G}, n=${bounds.length}")
+      }
+      assert(g.bnd(g.G) == bounds.length)
+    }
+  }
+
+  test("selection quantiles read a columnar parquet source exactly, NaN last, as a row-rooted plan does") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("qselcolumnar").toString
+    val cols = Seq("a", "b", "c")
+    // per column a different mix: ~9% NaN + ~13% null over a permuted ramp;
+    // 1/3 null over randn; a low-cardinality column with a NaN tail
+    spark.range(60000).select(
+      when(pmod(col("id"), lit(11)) === 3, lit(Double.NaN))
+        .when(pmod(col("id"), lit(7)) === 2, lit(null).cast("double"))
+        .otherwise(pmod(col("id") * 2654435761L, lit(100003)).cast("double") / 7).as("a"),
+      when(pmod(col("id"), lit(3)) === 0, lit(null).cast("double"))
+        .otherwise(randn(5)).as("b"),
+      when(col("id") >= 58000, lit(Double.NaN))
+        .otherwise(pmod(col("id"), lit(13)).cast("double")).as("c"))
+      .repartition(3).write.parquet(s"$dir/t")
+    val df = spark.read.parquet(s"$dir/t")
+    // the projection the passes read is a columnar scan converted to rows,
+    // so they take the scan's own batches
+    val plan = df.select(cols.map(c => col(c).cast("double")): _*).queryExecution.executedPlan
+    assert(plan.children.exists(_.isInstanceOf[org.apache.spark.sql.execution.ColumnarToRowExec]),
+      plan.treeString)
+    val probs = (0 to 20).map(_.toDouble / 20)
+    def brute(c: String): Seq[Double] = {
+      val vs = df.filter(col(c).isNotNull).select(c).collect().map(_.getDouble(0))
+      java.util.Arrays.sort(vs) // NaN last
+      probs.map { p =>
+        val pos = p * (vs.length - 1)
+        val l = vs(math.floor(pos).toInt)
+        val h = vs(math.ceil(pos).toInt)
+        l + (h - l) * (pos - math.floor(pos))
+      }
+    }
+    def same(a: Seq[Double], b: Seq[Double], label: String): Unit = {
+      assert(a.size == b.size, label)
+      a.zip(b).foreach { case (x, y) =>
+        assert(x == y || (x.isNaN && y.isNaN), s"$label: $x != $y")
+      }
+    }
+    val columnar = quantileBoundsSelect(df, cols, probs, numBuckets = 64, smallCollect = 0)
+    val distributedGather = quantileBoundsSelect(df, cols, probs, numBuckets = 64,
+      smallCollect = 0, maxCollect = 0)
+    val rowRooted = quantileBoundsSelect(df.repartition(3), cols, probs, numBuckets = 64,
+      smallCollect = 0)
+    cols.foreach { c =>
+      val b = brute(c)
+      same(columnar(c), b, s"columnar source, $c")
+      same(distributedGather(c), b, s"columnar source, distributed gather, $c")
+      same(rowRooted(c), b, s"row-rooted plan, $c")
+    }
+    assert(columnar("c").last.isNaN && !columnar("c").head.isNaN)
+  }
+
+  test("quantileBoundsSelect names an all-null column and releases its broadcasts") {
+    import org.apache.spark.sql.functions._
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val df = spark.range(5000).select(col("id").cast("double").as("v"),
+      lit(null).cast("double").as("empty"))
+    // broadcast value blocks made by code, not Spark's own task-binary
+    // broadcasts (byte arrays, released only by the context cleaner)
+    val bm = org.apache.spark.SparkEnv.get.blockManager
+    def userBroadcasts: Set[org.apache.spark.storage.BlockId] =
+      bm.getMatchingBlockIds {
+        case org.apache.spark.storage.BroadcastBlockId(_, "") => true
+        case _ => false
+      }.filter(id => bm.getLocalValues(id) // toList releases the read lock
+        .exists(_.data.toList.exists(!_.isInstanceOf[Array[Byte]]))).toSet
+    val before = userBroadcasts
+    val err = intercept[IllegalArgumentException] {
+      quantileBoundsSelect(df, Seq("v", "empty"), Seq(0.5), numBuckets = 8, smallCollect = 0)
+    }
+    assert(err.getMessage.contains("no non-null values in empty"), err.getMessage)
+    // destroy() removes the blocks asynchronously
+    eventually(timeout(5.seconds)) {
+      assert((userBroadcasts -- before).isEmpty)
+    }
   }
 
   test("q_tokenize_nan: injected NaN lands the top bin, clean rows match the bucketize query (round 12)") {
