@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Bench harness (driver contract): times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR and prints JSON lines on stdout — the LAST line is the
@@ -41,6 +41,15 @@ import org.apache.spark.sql.SparkSession
   * write-side cost.
   */
 object Bench {
+  /** The calibration probe's fixed work: a codegen'd range+sum of `rows`
+    * rows. Per-row product ≤ 2^28 × 2.65e9 ≈ 7e17 (fits a long under
+    * ANSI); the modulus bounds each addend < 1e9+7 so the 2^28-row sum
+    * tops out near 2.7e17 — no overflow at any cardinality we'd ever use,
+    * so the result is the same with `spark.sql.ansi.enabled` on or off. */
+  private[graft] def calibFrame(spark: SparkSession, rows: Long, partitions: Int): DataFrame =
+    spark.range(0L, rows, 1L, partitions)
+      .selectExpr("sum((id * 2654435761) % 1000000007) as s")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "900").toDouble
@@ -73,11 +82,7 @@ object Bench {
       try {
         HostMeter.untimedGc()
         val s0 = System.nanoTime()
-        // per-row product ≤ 2^28 × 2.65e9 ≈ 7e17 (fits a long under ANSI);
-        // the modulus bounds each addend < 1e9+7 so the 2^28-row sum tops
-        // out near 2.7e17 — no overflow at any cardinality we'd ever use
-        spark.range(0L, 1L << 28, 1L, calibCores)
-          .selectExpr("sum((id * 2654435761) % 1000000007) as s")
+        calibFrame(spark, 1L << 28, calibCores)
           .write.format("noop").mode("overwrite").save()
         val sec = (System.nanoTime() - s0) / 1e9
         calibBest = math.min(calibBest, sec)

@@ -20,9 +20,8 @@ object BenchSome {
       case rest => (2, rest)
     }
     require(names.nonEmpty, "usage: BenchSome <sfDir> [passes=N] <query>...")
-    // same guard class as FuzzyProbe: passes <= 0 would otherwise surface
-    // as a NoSuchElementException at the summary line after full session
-    // bring-up
+    // passes <= 0 would otherwise surface as a NoSuchElementException at
+    // the summary line after full session bring-up
     require(passes > 0, s"passes must be > 0, got $passes")
     val spark = Sessions.local(Sessions.cpus)
     spark.sparkContext.setLogLevel("ERROR")

@@ -92,9 +92,8 @@ object ScaleProbe {
           s"$DerivationVersion replicas=$Replicas"
     }
 
-  /** Loud gate for probes that CONSUME a generated corpus dir (SketchProbe,
-    * RankProbe, FuzzyProbe, PagerankProbe take an xN dir they don't
-    * generate): fail with instructions rather than silently measuring a
+  /** Loud gate for probes that CONSUME a generated corpus dir
+    * (PagerankProbe takes an xN dir it doesn't generate): fail with instructions rather than silently measuring a
     * corpus from an older derivation formula. Checks the version token
     * only — a consumer doesn't know the generator's replica count. */
   private[graft] def requireCurrentDerivation(xnDir: String): Unit = {
@@ -250,8 +249,7 @@ object ScaleProbe {
         // deterministic multi-query pass and lands a full 32 g-heap
         // System.gc() in the SAME query's slot on every pass — q_ann_recall
         // read a constant 7.0 s across passes vs 0.94 s in the identical
-        // window with the tick moved (SPARK_GRAFT_PERIODIC_GC=100000s
-        // A/B). Collecting the prior samples' garbage here makes any tick
+        // window with the tick moved to 100000s. Collecting the prior samples' garbage here makes any tick
         // that does land inside a timed region near-free, without
         // disabling the cleaner semantics long probes rely on. A tick can
         // still land inside a single > 60 s sample — disclosed, and

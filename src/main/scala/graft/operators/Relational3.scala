@@ -305,17 +305,6 @@ object Relational3 {
   private val gateState = scala.collection.concurrent.TrieMap
     .empty[String, (String, (Seq[(String, (Long, Map[Long, Double]))], Seq[(String, Long)]))]
 
-  /** Probe hook (SketchProbe's `build` row only): drop the cached gate for
-    * ONE dir so the next [[sketchGateState]] call there re-runs the
-    * overlapped build — the only way to time the first-invocation build
-    * repeatedly in one JIT-warm JVM (a fresh JVM conflates it with
-    * class-load/codegen bootstrap, measured separately by ScanProbe).
-    * Dir-scoped (round-14 advisor item): a global clear() would silently
-    * re-charge the build to OTHER dirs' `full`/`gate` rows if a probe ever
-    * times multiple dirs in one JVM. Never called by contract queries. */
-  private[graft] def clearGateStateForProbe(dir: String): Unit =
-    gateState.keys.filter(_.endsWith("|" + dir)).foreach(gateState.remove)
-
   /** Round-13 advisor item (medium): entries are VALIDATED against a
     * metadata fingerprint of `dir`/lineitem.parquet (sizes + mtimes) on
     * every lookup — since round 15 via the shared
@@ -342,8 +331,8 @@ object Relational3 {
       // from its own thread overlaps it with the bracket iterations
       // (Spark schedules concurrent jobs from one session; the shared
       // parquet scan rides the page cache), so the build wall tends to
-      // max(brackets, distinct) instead of their sum. SketchProbe's
-      // pass-1 `full` row is the build's measured record.
+      // max(brackets, distinct) instead of their sum (the build's measured
+      // floor is recorded in SURVEY §2D).
       val exactF = scala.concurrent.Future {
         li.select(col("l_returnflag"), col("l_partkey"))
           .filter(col("l_partkey").isNotNull && col("l_returnflag").isNotNull)

@@ -312,66 +312,6 @@ object TpcH {
       .orderBy("s_suppkey")
   }
 
-  /** Q3's revenue sum on the split primitive-long lanes
-    * ([[Relational3.splitDsumUs]] — the q1/q_cube convention): the exact
-    * per-row micros-long is projected on the LINEITEM side BEFORE the
-    * fact⋈fact join, so (a) the per-group accumulation is two codegen'd
-    * long sums instead of a per-row BigDecimal merge over Q3's
-    * HIGH-cardinality (per-order) groups, and (b) at the SFs where li⋈o
-    * shuffles, the fact exchange carries one 8-byte long instead of two
-    * doubles. Bit-identical to [[q3]] (same per-value Decimal(38,6)
-    * rounding, exact lane reassembly). MEASURED AND REJECTED (round 20,
-    * [[graft.DsumAB]] interleaved min-of-passes): sf0.1 0.74 s decimal vs
-    * 0.85 s split, 100× 2.75 vs 2.80 s — parity at scale, a slight loss
-    * locally, because Q3's aggregate input is the post-filter/post-join
-    * sliver of the fact (unlike q1's full-fact input where the same
-    * conversion won 2×) and the split form pays its per-row lane-bound
-    * guard on every filtered lineitem row BEFORE the join. Kept (with the
-    * OptimizedFormsSpec bitwise pin) as the probe's subject; [[q3]] stays
-    * the declared form. */
-  private[graft] def q3SplitForm(spark: SparkSession, dir: String): DataFrame = {
-    val c = Tables.customer(spark, dir).filter(col("c_mktsegment") === "BUILDING")
-    val o = Tables.orders(spark, dir).filter(col("o_orderdate") < ts("1998-03-15 00:00:00"))
-    val li = Tables.lineitem(spark, dir).filter(col("l_shipdate") > ts("1998-03-15 00:00:00"))
-      .select(col("l_orderkey"), Relational3.splitDsumUs(rev, "revenue"))
-    val lanes = Relational3.splitDsum("revenue")
-    li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(dim(c), col("o_custkey") === col("c_custkey"))
-      .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-      .agg(lanes.head, lanes.tail: _*)
-      .select(col("l_orderkey"), Relational3.splitDsumOut("revenue"),
-        col("o_orderdate"), col("o_orderpriority"))
-      .orderBy(col("revenue").desc, col("o_orderdate"), col("l_orderkey"))
-      .limit(10)
-      .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-  }
-
-  /** Q15's revenue view on the split lanes (same convention as
-    * [[q3SplitForm]]): the quarter's per-supplier sums accumulate as two
-    * long lanes; the view is reused by the scalar max exactly as in
-    * [[q15]], and lane reassembly is bit-identical so the max equi-join
-    * matches the same rows. MEASURED AND REJECTED (round 20,
-    * [[graft.DsumAB]]): sf0.1 0.58 s decimal vs 0.62 s split, 100× 1.33
-    * vs 1.36 s — parity; the quarter-filtered aggregate input is too
-    * small for the lane conversion to pay. [[q15]] stays declared. */
-  private[graft] def q15SplitForm(spark: SparkSession, dir: String): DataFrame = {
-    val lanes = Relational3.splitDsum("total_revenue")
-    val revenue = Tables.lineitem(spark, dir)
-      .filter(col("l_shipdate") >= ts("1997-01-01 00:00:00") &&
-        col("l_shipdate") < ts("1997-04-01 00:00:00"))
-      .select(col("l_suppkey").as("supplier_no"),
-        Relational3.splitDsumUs(rev, "total_revenue"))
-      .groupBy("supplier_no")
-      .agg(lanes.head, lanes.tail: _*)
-      .select(col("supplier_no"), Relational3.splitDsumOut("total_revenue"))
-    val maxRev = revenue.agg(max(col("total_revenue")).as("max_revenue"))
-    Tables.supplier(spark, dir)
-      .join(revenue, col("s_suppkey") === col("supplier_no"))
-      .join(broadcast(maxRev), col("total_revenue") === col("max_revenue"))
-      .select("s_suppkey", "s_name", "total_revenue")
-      .orderBy("s_suppkey")
-  }
-
   /** Q17 — small-quantity-order revenue, verbatim shape (adaptation:
     * p_container 'MED BOX' → a p_size band; a single-size cut selects
     * ~1.6 parts at sf0.001 and the final sum degenerates to NULL): the

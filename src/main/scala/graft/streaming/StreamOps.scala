@@ -607,38 +607,6 @@ object StreamOps {
     frame
   }
 
-  /** Live watermarked SESSION-WINDOW aggregation (round-8 verdict item 5 —
-    * the second driver-visible Structured Streaming query, closing the gap
-    * between the spec-only watermark coverage and the contract surface):
-    * the events parquet is consumed as a file stream, aggregated with the
-    * native `session_window` (30-min gap) under an event-time watermark,
-    * and APPEND mode emits each session exactly once — when the watermark
-    * passes its end, i.e. genuine late-data state EVICTION, the mechanism
-    * StreamingSpec proves under controlled arrival order.
-    *
-    * Determinism: append mode only flushes sessions the watermark has
-    * passed, and the final watermark normally stops at max(ts) − delay, so
-    * every user's trailing session would be withheld in the state store and
-    * the result would be arrival-dependent. The input is therefore STAGED
-    * ([[stagedEvents]]: time-range files replayed oldest-first, one per
-    * micro-batch) plus one SENTINEL row (user_id = −1) whose timestamp
-    * sits 10 gaps past the corpus maximum, as the final batch. The
-    * watermark is global, so the sentinel pushes it past every remaining
-    * session's end; the terminal no-data micro-batch evicts the tail, and
-    * the output — minus the sentinel's own session — is exactly the batch
-    * gap-and-island result, hash-checked against [[graft.operators
-    * .PipelineOps.qSessionWindow]]'s oracle SQL.
-    *
-    * Scale: session state per live (user, session) is the agg buffer (two
-    * longs + a decimal); the watermark bounds it — and because the PACED
-    * replay (round 9) advances the watermark every batch, sessions are
-    * evicted incrementally as their time slice passes: peak state and the
-    * per-batch flush are bounded by [[PaceRowsPerBatch]], not corpus size
-    * (the round-8 one-batch drain held every session in state and emitted
-    * ~1 M rows in one terminal flush at the 100× probe — a replay
-    * artifact, not the operator). The sentinel trick is the standard
-    * stream-drain pattern for bounded replays; a true unbounded
-    * deployment simply has no drain step. */
   /** Shared scaffold of every PACED staged-replay drain (round-16 review:
     * the prologue/epilogue existed as 5 near-identical copies, and the
     * round-15 drain-recipe pins had to be applied per copy): stage the
@@ -679,8 +647,8 @@ object StreamOps {
     val sent = sentinels(stagedSchema)
     val in = if (sent.isEmpty) stagedDir
              else sentineledReplay(spark, tmp, stagedDir, stagedSchema, sent)
-    val parts = stateParts(statePartsFor(
-      perBatchRows(stagedRows, stagedFiles), spark.sparkContext.defaultParallelism))
+    val parts = statePartsFor(
+      perBatchRows(stagedRows, stagedFiles), spark.sparkContext.defaultParallelism)
     val ss = streamingSession(spark, parts)
     if (provider.nonEmpty)
       ss.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
@@ -712,6 +680,38 @@ object StreamOps {
     frame
   }
 
+  /** Live watermarked SESSION-WINDOW aggregation (round-8 verdict item 5 —
+    * the second contract-visible Structured Streaming query, closing the gap
+    * between the spec-only watermark coverage and the contract surface):
+    * the events parquet is consumed as a file stream, aggregated with the
+    * native `session_window` (30-min gap) under an event-time watermark,
+    * and APPEND mode emits each session exactly once — when the watermark
+    * passes its end, i.e. genuine late-data state EVICTION, the mechanism
+    * StreamingSpec proves under controlled arrival order.
+    *
+    * Determinism: append mode only flushes sessions the watermark has
+    * passed, and the final watermark normally stops at max(ts) − delay, so
+    * every user's trailing session would be withheld in the state store and
+    * the result would be arrival-dependent. The input is therefore STAGED
+    * ([[stagedEvents]]: time-range files replayed oldest-first, one per
+    * micro-batch) plus one SENTINEL row (user_id = −1) whose timestamp
+    * sits 10 gaps past the corpus maximum, as the final batch. The
+    * watermark is global, so the sentinel pushes it past every remaining
+    * session's end; the terminal no-data micro-batch evicts the tail, and
+    * the output — minus the sentinel's own session — is exactly the batch
+    * gap-and-island result, hash-checked against [[graft.operators
+    * .PipelineOps.qSessionWindow]]'s oracle SQL.
+    *
+    * Scale: session state per live (user, session) is the agg buffer (two
+    * longs + a decimal); the watermark bounds it — and because the PACED
+    * replay (round 9) advances the watermark every batch, sessions are
+    * evicted incrementally as their time slice passes: peak state and the
+    * per-batch flush are bounded by [[PaceRowsPerBatch]], not corpus size
+    * (the round-8 one-batch drain held every session in state and emitted
+    * ~1 M rows in one terminal flush at the 100× probe — a replay
+    * artifact, not the operator). The sentinel trick is the standard
+    * stream-drain pattern for bounded replays; a true unbounded
+    * deployment simply has no drain step. */
   def qSessionWindowLive(spark: SparkSession, dir: String): DataFrame = {
     // PACED drain (round-9, verdict item 1): the replay consumes the
     // time-ordered staged copy one file per micro-batch, so the watermark
@@ -741,7 +741,8 @@ object StreamOps {
     // per-pass telemetry, load 10–13): long won EVERY pair — 121→75,
     // 68→35, 52→39, 40→32 s (min 39.9 vs 32.2) — the BigDecimal merge
     // path, not just the 8 B of row, was the cost. Long is the shipped
-    // shape; SessionSumStateLong=false keeps decimal for A/B.
+    // shape; SessionSumStateLong=false keeps the decimal reference form
+    // that StreamingSpec compares it against.
     val dec6 = org.apache.spark.sql.types.DecimalType(38, 6)
     val (sumAgg, sumOut) =
       if (SessionSumStateLong)
@@ -803,17 +804,6 @@ object StreamOps {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       scratchRoots.values.foreach(deleteRecursively)))
 
-  /** State-store partition count OVERRIDE for the live contract queries'
-    * bounded replays: 0 (the default) = derive per query
-    * ([[statePartsFor]], or [[DefaultStateParts]] for the fixed-size
-    * drains); > 0 = explicit, and REPLACES the derived value (round-9
-    * advisor item: the old `max(override, derived)` floor meant the
-    * SessAB A/B hook could only RAISE the count — a run requesting 8 or
-    * 16 at the 100× probe silently measured the derived 32, making the
-    * A/B table misleading in exactly the direction it was built to
-    * test). */
-  @volatile private[graft] var StreamStatePartitions = 0
-
   /** Baseline state-partition count: each state partition is a store
     * instance paying per-BATCH delta-file + commit I/O, so at a fixed
     * small batch count the harness overhead is ∝ partitions, not data.
@@ -824,11 +814,6 @@ object StreamOps {
     * first commit); these queries wipe their checkpoint per invocation,
     * so the choice binds per run. */
   private[graft] val DefaultStateParts = 8
-
-  /** Effective state-partition count: explicit override wins, else the
-    * query's derived value. */
-  private def stateParts(derived: Int): Int =
-    if (StreamStatePartitions > 0) StreamStatePartitions else derived
 
   /** Pure derivation (spec-pinned in StreamingSpec): one state partition
     * per ~250k rows of a MICRO-BATCH — state-store merge/evict work is
@@ -1052,28 +1037,21 @@ object StreamOps {
       })
     }
 
-  /** Child session for the streaming jobs: same SparkContext, own SQLConf,
-    * so the state-partition choice never leaks into the caller's session.
-    * The returned contract frame is rebuilt on the CALLER's session from
-    * the scratch files, which keeps the cross-session boundary at a
-    * parquet handoff. */
-  /** Dev A/B hook (SessAB): swap the state-store provider class; empty =
-    * Spark default (HDFS-backed). */
-  @volatile private[graft] var StateProviderClass: String = ""
-
   /** Round-13 (SessAB A/B, verdict item 6 — ADOPTED): when true (the
     * default), qSessionWindowLive's sum rides the state store as an
     * 8-byte long of exact micros instead of a 16-byte slow-path
     * Decimal(38,6) buffer — bit-identical output (see the in-query
     * comment), and the long shape won every interleaved 100× pass-pair
-    * (min 32.2 vs 39.9 s). False restores the decimal shape for A/B. */
+    * (min 32.2 vs 39.9 s). False restores the decimal reference shape. */
   @volatile private[graft] var SessionSumStateLong: Boolean = true
 
-  private def streamingSession(spark: SparkSession): SparkSession =
-    streamingSession(spark, stateParts(DefaultStateParts))
-
+  /** Child session for the streaming jobs: same SparkContext, own SQLConf,
+    * so the state-partition choice never leaks into the caller's session.
+    * The returned contract frame is rebuilt on the CALLER's session from
+    * the scratch files, which keeps the cross-session boundary at a
+    * parquet handoff. */
   private def streamingSession(spark: SparkSession,
-                               parts: Int): SparkSession = {
+                               parts: Int = DefaultStateParts): SparkSession = {
     val ss = spark.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", parts.toString)
     // split the staged 16 MB row groups across cores (see stagedEvents)
@@ -1093,8 +1071,6 @@ object StreamOps {
     // real drain (MaxPaceBatches + sentinel + no-data batches ≪ 1024)
     // (round-15 advisor item).
     ss.conf.set("spark.sql.streaming.numRecentProgressUpdates", "1024")
-    if (StateProviderClass.nonEmpty)
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass", StateProviderClass)
     ss
   }
 
@@ -1210,7 +1186,6 @@ object StreamOps {
       .option("checkpointLocation", s"$tmp/ckpt")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (b: Dataset[Row], batchId: Long) =>
-        val t0 = System.nanoTime()
         val sess = b.sparkSession
         val carryDf = sess.createDataFrame(
           java.util.Arrays.asList(carry: _*), b.schema)
@@ -1220,7 +1195,6 @@ object StreamOps {
         val emit = if (carryIds.isEmpty) rolled
                    else rolled.filter(!col("event_id").isin(carryIds: _*))
         emit.write.mode(SaveMode.Append).parquet(out)
-        val t1 = System.nanoTime()
         // the carry only feeds the NEXT batch — one file per batch under
         // maxFilesPerTrigger=1, so the last file's batch skips the job
         // (at fixture scale K=1 that is the ONLY batch). Extraction is a
@@ -1255,16 +1229,13 @@ object StreamOps {
               }.take(rollRows - 1)
             }.toArray
         }
-        System.err.println(f"[roll] batch=$batchId window=${(t1 - t0) / 1e9}%.2f carry=${(System.nanoTime() - t1) / 1e9}%.2f")
       }
       .start()
     q.awaitTermination()
-    val tDrain = System.nanoTime()
     val result = spark.read.parquet(out)
       .select("event_id", "event_type", "roll_n", "roll_median", "roll_p90")
       .orderBy("event_id")
     val (frame, rdd) = org.apache.spark.sql.graft.Bridge.localCheckpointed(result)
-    System.err.println(f"[roll] finalize=${(System.nanoTime() - tDrain) / 1e9}%.2f")
     stashLiveResult(spark, "roll", dir, rdd)
     deleteRecursively(tmp)
     scratchRoots.remove(s"roll|$dir")
@@ -1284,33 +1255,11 @@ object StreamOps {
   private[graft] val lastDrainProgress = scala.collection.concurrent.TrieMap
     .empty[String, Seq[(Long, Long, Long, Long)]]
 
-  /** Per-batch (batchId, triggerExecution ms) of the LAST drain per tag —
-    * the in-stream term of the drain cost decomposition (round-17 verdict
-    * item 5): wall − Σ trigger ms = everything OUTSIDE the micro-batches
-    * (staging lookup, new-session build, source file-index, stream
-    * bring-up, provider load, terminal commit, finalize + eager
-    * materialize), which DrainProbe quantifies against the empty-corpus
-    * floor. */
-  private[graft] val lastDrainTriggerMs = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(Long, Long)]]
-
-  /** Record (and print) a join drain's per-batch progress under its tag. */
+  /** Record a drain's per-batch progress under its tag. */
   private def captureDrainProgress(tag: String,
       q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    lastDrainTriggerMs.put(tag, q.recentProgress.toSeq.map { p =>
-      (p.batchId, Option(p.durationMs.get("triggerExecution")).map(_.toLong).getOrElse(0L))
-    })
     lastDrainProgress.put(tag, q.recentProgress.toSeq.map { p =>
       val so = p.stateOperators.headOption
-      // the full per-batch durationMs split (addBatch / queryPlanning /
-      // walCommit / commitOffsets / getBatch / latestOffset) — the
-      // bottom of the drain fixed-cost decomposition (round 17):
-      // DrainProbe reads these lines to attribute the in-trigger term
-      val split = p.durationMs.entrySet().toArray.map(_.toString).sorted.mkString(" ")
-      System.err.println(s"[$tag] batch=${p.batchId} in=${p.numInputRows}" +
-        s" ms=${p.durationMs.get("triggerExecution")}" +
-        s" stateRows=${so.map(_.numRowsTotal).getOrElse(-1L)}" +
-        s" removed=${so.map(_.numRowsRemoved).getOrElse(-1L)} [$split]")
       (p.batchId, p.numInputRows,
         so.map(_.numRowsTotal).getOrElse(-1L), so.map(_.numRowsRemoved).getOrElse(-1L))
     })
@@ -1651,10 +1600,6 @@ object StreamOps {
     "q_rolling_tws_live" -> qRollingTwsLive
   )
 
-  /** The streaming dedup's duplicate counts are order-independent, so the
-    * oracle is the plain per-key aggregate (count - 1 suppressed copies);
-    * the live session windows drain to exactly the batch gap-and-island
-    * sessions, so their oracle IS q_session_window's SQL. */
   /** One truth for both dedup forms (their emission streams are
     * spec-proved equal — a drift between two copies of this string would
     * hash-check them against different truths). */
@@ -1663,6 +1608,10 @@ object StreamOps {
       |FROM events GROUP BY user_id, event_type
       |ORDER BY user_id, event_type""".stripMargin
 
+  /** The streaming dedup's duplicate counts are order-independent, so the
+    * oracle is the plain per-key aggregate (count - 1 suppressed copies);
+    * the live session windows drain to exactly the batch gap-and-island
+    * sessions, so their oracle IS q_session_window's SQL. */
   def oracleSql: Map[String, String] = Map(
     "q_stream_dedup_live" -> dedupOracle,
     // identical semantics through the transformWithState/RocksDB path

@@ -2,10 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins for the round-15 harness hardening (round-14 advisor items): the
-  * executor-classpath absolutization, the overridden-scratch JVM token,
-  * and the probe-corpus derivation sentinel. All pure / filesystem-local —
-  * no Spark session. */
+/** Pins for the harness hardening: the executor-classpath
+  * absolutization, the overridden-scratch JVM token, the probe-corpus
+  * derivation sentinel and the session standard. All pure /
+  * filesystem-local — no Spark session. */
 class HarnessSpec extends AnyFunSuite {
 
   test("absolutizedClassPath: relative entries resolve against the DRIVER's cwd") {
@@ -85,28 +85,16 @@ class HarnessSpec extends AnyFunSuite {
     assert(ScaleProbe.derivationCurrent(probe))
   }
 
-  test("skewGateConfs: default adds nothing; tuned applies the SkewAB-winning trio") {
-    // round-17 verdict item 6: the measured skew adjudication lives as a
-    // session-convention knob — OFF by default so every harness keeps
-    // driver-default comparability, and the tuned trio is exactly the
-    // A/B's winner (32 MB threshold / factor 2 / 16 MB advisory)
-    assert(Sessions.skewGateConfs("") == Nil)
-    assert(Sessions.skewGateConfs("anything-else") == Nil)
-    val tuned = Sessions.skewGateConfs("tuned").toMap
-    assert(tuned ==  Map(
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32m",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16m"))
-    // and the session standard carries exactly what the LIVE env asks for
-    // (round-17 review: asserting "no skew keys in Standard" pinned the
-    // ENVIRONMENT, not the code — a suite run under the documented
-    // SPARK_GRAFT_SKEW_GATE=tuned knob would fail green code)
-    val expected = Sessions.skewGateConfs(
-      sys.env.getOrElse("SPARK_GRAFT_SKEW_GATE", ""))
-    // filter on the FULL tuned key set (round-17 advice: a "skewJoin"
-    // substring filter silently dropped the advisoryPartitionSize conf
-    // from the comparison, verifying only 2 of the 3 knob confs)
-    val knobKeys = Sessions.skewGateConfs("tuned").map(_._1).toSet
-    assert(Sessions.Standard.filter(kv => knobKeys(kv._1)) == expected)
+  test("Sessions.Standard: the exact session-wide key -> value list") {
+    // every harness builds its session from this list, so a session-wide
+    // change must show up here as a visible diff
+    assert(Sessions.Standard == Seq(
+      "spark.ui.enabled" -> "false",
+      "spark.sql.codegen.cache.maxEntries" -> "5000",
+      "spark.io.compression.codec" -> "zstd",
+      "spark.rdd.compress" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.cleaner.periodicGC.interval" -> "60s"))
   }
 }

@@ -642,4 +642,27 @@ class PlanSpec extends SparkSpec {
     // the order-status filter reaches the orders scan
     assert(plan.contains("EqualTo(o_orderstatus,F)"), plan)
   }
+
+  test("no contract query plans a cartesian product or an unaudited single-partition exchange") {
+    // Exchange SinglePartition is legitimate only when it carries a global
+    // scalar aggregate's partial rows (one row per upstream partition, never
+    // the fact table): q_gap_fill's min/max hour bounds, q_tfidf's n_docs
+    // denominator, q_scalar_subquery's scalars, the TPC-H one-row revenue
+    // totals (q6/q14/q17/q19), q15's max-revenue scalar, q22's avg-balance
+    // scalar and q_ann_pq's scalar gate. Any other single partition is a
+    // window or sort with no partitioning, funnelling the query through one
+    // task.
+    val auditedScalarAgg = Set("q_gap_fill", "q_scalar_subquery", "q_tfidf",
+      "q_tpch_q6", "q_tpch_q14", "q_tpch_q15", "q_tpch_q17", "q_tpch_q19",
+      "q_tpch_q22", "q_ann_pq")
+    val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      val plan = fn(spark, sf).queryExecution.executedPlan.toString
+      // the non-broadcast nested-loop join in Spark IS CartesianProduct
+      val cartesian = plan.contains("CartesianProduct")
+      val single = plan.contains("Exchange SinglePartition") && !auditedScalarAgg(name)
+      if (cartesian || single) Some(s"$name: cartesian=$cartesian singlePartition=$single")
+      else None
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
 }

@@ -117,21 +117,6 @@ class TokenizeSpec extends SparkSpec {
     assert(agree >= 19800, s"agreement $agree / 20000")
   }
 
-  test("distributed rank tokenizer equals the window formulation") {
-    // the contract shape: tiebreak = keys ++ ALL measures (a unique tuple —
-    // required by the distributed pivot, and required anyway for the window
-    // form's tokens to be deterministic)
-    val li = graft.Tables.lineitem(spark, sf)
-    val tiebreak = Tokenize.LineitemKeys ++ Tokenize.LineitemCols
-    val outCols = Seq("l_orderkey", "l_linenumber") ++
-      Tokenize.LineitemCols.map(c => s"${c}_token")
-    val a = Tokenize.tokenizeRank(li, Tokenize.LineitemCols, tiebreak)
-      .select(outCols.map(col): _*).collect().map(_.toSeq).sortBy(_.mkString("|"))
-    val b = Tokenize.tokenizeRankDistributed(li, Tokenize.LineitemCols, tiebreak)
-      .select(outCols.map(col): _*).collect().map(_.toSeq).sortBy(_.mkString("|"))
-    assert(a.length == b.length && a.toSeq == b.toSeq)
-  }
-
   test("selection rank tokenizer equals the window formulation (incl. tie-heavy cols)") {
     // l_quantity/l_discount are massively tied (50/11 distinct values), so
     // NTILE boundaries fall INSIDE tie groups and the composite-key

@@ -1,8 +1,14 @@
 #!/bin/bash
 # Dev launcher: run a graft main class directly against compiled classes.
 # Usage: tools/run.sh <mainClass> [args...]   (after `sbt compile`)
+# Spark jars come from $SPARK_HOME/jars, else from the directory build.sbt
+# compiles against (its unmanagedBase).
 set -e
-CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+REPO="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+SPARK_JARS="${SPARK_HOME:+$SPARK_HOME/jars}"
+[ -d "$SPARK_JARS" ] ||
+  SPARK_JARS="$(sed -n 's/^unmanagedBase := file("\(.*\)").*/\1/p' "$REPO/build.sbt")"
+CP="$REPO/target/scala-2.13/classes:$SPARK_JARS/*"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic \
