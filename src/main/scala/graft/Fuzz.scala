@@ -7,6 +7,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.operators.Decimals.dsum
+
 /** Differential fuzz harness against the DuckDB oracle (round-18 verdict
   * item 2). The 140+ contract queries are hand-written; this is the
   * correctness multiplier beyond them: a SEED-PINNED generator composes
@@ -142,8 +144,6 @@ object Fuzz {
 
   /** One generated query: the executable plan and its oracle SQL. */
   final case class Gen(df: DataFrame, sql: String)
-
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(38, 6))).cast("double")
 
   // ------------------------------------------------------------ generator
 

@@ -2,9 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.operators.Decimals.dsum
 
 /** Bucketed-table co-located join: the shuffle-free strategy for joins that
   * repeat on the same key at warehouse scale.
@@ -138,10 +138,6 @@ object Bucketed {
         (oName, lName)
       })
     }
-
-  /** Exact decimal money sum, one double cast at the end (FIXTURES.md §3). */
-  private def dsum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sum(c.cast(DecimalType(38, 6))).cast("double")
 
   /** Revenue by order priority over the CO-LOCATED join: both scans are
     * bucketed on the join key, so the merge join runs with no exchange on

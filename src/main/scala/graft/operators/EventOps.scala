@@ -3,9 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.Tables
+import graft.operators.Decimals.dsum
 
 /** Event-stream operators, batch-first (SURVEY §2C): event-time windowed
   * aggregation (`window(ts, …)`), JSON property extraction (`from_json`),
@@ -19,9 +20,6 @@ import graft.Tables
   * the natural key partitioning for a 100 TB event log.
   */
 object EventOps {
-
-  private def dsum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sum(c.cast(DecimalType(38, 6))).cast("double")
 
   /** Tumbling event-time window aggregate: count + value sum per hour per
     * event type. Uses the `window()` operator (Structured-Streaming-shaped);

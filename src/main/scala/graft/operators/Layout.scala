@@ -154,7 +154,7 @@ object Layout {
     * static pruning at plan time, the same constant-folding convention as
     * the tokenizer boundaries. */
   def qPartitionPrune(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
+    import graft.operators.Decimals.dsum
     val (path, lo) = partitionedEvents(spark, dir)
     val hi = lo.plusDays(6)
     spark.read.parquet(path)
@@ -162,7 +162,7 @@ object Layout {
         col("event_date") <= lit(java.sql.Date.valueOf(hi)))
       .groupBy(col("event_date"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(38, 6))).cast("double").as("sum_value"))
+        dsum(col("value")).as("sum_value"))
       .orderBy("event_date", "event_type")
   }
 

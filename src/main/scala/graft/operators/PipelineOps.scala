@@ -3,9 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.operators.Decimals.dsum
 
 /** Training-data-pipeline operators beyond the round-1 surface (north star,
   * SURVEY §2C): gap-based sessionization, deterministic hash sampling,
@@ -29,8 +29,6 @@ import graft.Tables
   *    twice.
   */
 object PipelineOps {
-
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(38, 6))).cast("double")
 
   /** Session gap threshold: 30 minutes, in integer microseconds. */
   val SessionGapUs: Long = 30L * 60 * 1000 * 1000

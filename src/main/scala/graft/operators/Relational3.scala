@@ -3,9 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.{ModelState, Tables}
+import graft.operators.Decimals.{dsum, splitDsum, splitDsumOut, splitDsumUs}
 
 /** Relational breadth, part 3: as-of join, range (theta) join, pivot,
   * statistical aggregates, grouping sets, arg-min/max, and the approximate
@@ -24,8 +24,6 @@ import graft.{ModelState, Tables}
   *    oracle; accuracy is property-tested against exact results instead.
   */
 object Relational3 {
-
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(38, 6))).cast("double")
 
   /** As-of join: for each purchase event, the most recent prior-or-equal
     * click by the same user. Union + running max(struct(ts, id)) window. */
@@ -74,91 +72,30 @@ object Relational3 {
         "4-NOT SPECIFIED" -> "unspecified", "5-LOW" -> "low"))
       .orderBy("o_orderstatus")
 
-  /** Round-16 A/B hook (verdict "what's wrong" item 4): true (shipped)
-    * sums the stats power sums on SPLIT PRIMITIVE-LONG lanes; false
-    * restores the direct Decimal(38,6) sums for comparison. Both paths
-    * are bit-identical (spec-pinned) — see [[splitDsum]]. */
-  @volatile private[graft] var StatsSumSplitLong: Boolean = true
-
-  /** The addend's exact micros-long, pre-projected under `<name>_us` —
-    * the first half of the SPLIT-LANE exact Decimal(38,6) sum (round 16;
-    * the session drain's long-micros trick, generalized to addends whose
-    * SUM overflows one long): the addend is the SAME per-value HALF_UP
-    * 6-decimal rounding as [[dsum]] (cast to Decimal(38,6) FIRST, scale
-    * ×10⁶ exactly in decimal space, to long — and the per-addend bound
-    * the LANE-SUM analysis assumes is the bound ENFORCED: addends are
-    * capped at |a| ≤ 10¹¹ units = 10¹⁷ µ (round-16 advisor item: the
-    * original ±2⁶³ µ guard allowed |hi_i| up to ~9.2×10⁹, under which
-    * Σhi could silently wrap near 10⁹ large-valued rows — the "safe
-    * beyond 10⁹ rows" claim rested on fixture-specific magnitudes, not
-    * the guard; the fixture's largest power-sum addend, p² ≈ 1.1×10¹⁰
-    * units, sits an order under the cap). An addend past the cap raises
-    * instead of riding the non-ANSI long sum's silent wrap into a
-    * wrong-but-plausible hash mismatch far from the cause.
-    * [[splitDsum]] then splits per row into (div 1e9, mod 1e9): each
-    * lane's group sum is a PRIMITIVE long aggregation — no BigDecimal
-    * merge on the hot path — and cannot overflow under the enforced cap
-    * (|hi_i| ≤ 10⁸ ⟹ Σhi safe to ~9×10¹⁰ rows; |lo_i| < 10⁹ ⟹ Σlo safe
-    * to ~9×10⁹ rows — the binding term, still an order past 10⁹). [[splitDsumOut]] reassembles the EXACT
-    * total with one decimal op per GROUP: Σa = 1e9·Σhi + Σlo holds
-    * identically because Spark's `div`/`%` are a truncation pair
-    * ((a div b)·b + a%b = a for any sign), and total_us/10⁶ has exactly
-    * 6 decimal digits so the final decimal division is representation,
-    * not rounding — the resulting double is bit-identical to the direct
-    * decimal sum's (spec-pinned). StatsAB at 100× for THIS shipped
-    * (guarded) shape: min 5.63 vs 8.58 s — the BigDecimal merge was
-    * most of the query's cost (unguarded read 4.97; the ~0.5 s delta is
-    * the per-row range check's price). */
-  private[graft] def splitDsumUs(c: Column, name: String): Column = {
-    val d = c.cast(DecimalType(38, 6))
-    // the cap the lane-sum overflow analysis assumes — see the scaladoc
-    when(abs(d) > lit(BigDecimal("100000000000")),
-        raise_error(concat(lit(s"splitDsum($name): addend exceeds 1e11-unit lane bound: "),
-          d.cast("string"))).cast("long"))
-      .otherwise((d * lit(1000000)).cast("long"))
-      .as(s"${name}_us")
-  }
-
-  /** The two primitive-long lane sums over a pre-projected `<name>_us`. */
-  private[operators] def splitDsum(name: String): Seq[Column] =
-    Seq(sum(expr(s"${name}_us div 1000000000")).as(s"${name}_hi"),
-      sum(col(s"${name}_us") % lit(1000000000L)).as(s"${name}_lo"))
-
-  /** Reassembled group total as the same double [[dsum]] yields. */
-  private[operators] def splitDsumOut(name: String): Column =
-    ((col(s"${name}_hi").cast(DecimalType(38, 0)) * lit(1000000000L) +
-      col(s"${name}_lo").cast(DecimalType(38, 0))) / lit(1000000))
-      .cast("double").as(name)
-
-  /** Statistical aggregates from exact decimal power sums: variance, stddev,
-    * correlation, covariance — deterministic double formulas. Round 16:
-    * the five Decimal(38,6) sums ride split primitive-long lanes
-    * ([[splitDsum]] — same per-value rounding, bit-identical totals, no
-    * per-row BigDecimal merge), the one cheap exactness-preserving
-    * speedup the round-15 adjudication left open. */
-  def qStatsAgg(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
+  /** Per-`l_returnflag` row count `n` and the five exact Decimal(38,6)
+    * power sums `sq`, `sqq`, `sp`, `spp`, `sqp` (Σq, Σq², Σp, Σp², Σqp),
+    * each on split primitive-long lanes ([[Decimals.splitDsum]]): the
+    * same per-value rounding and bit-identical totals as [[Decimals.dsum]],
+    * without a per-row BigDecimal merge. */
+  private[operators] def statsPowerSums(li: DataFrame): DataFrame = {
     val q = col("l_quantity")
     val p = col("l_extendedprice")
     val sums = Seq("sq" -> q, "sqq" -> (q * q), "sp" -> p,
       "spp" -> (p * p), "sqp" -> (q * p))
-    val grouped =
-      if (StatsSumSplitLong)
-        li.select(col("l_returnflag") +:
-            sums.map { case (n, c) => splitDsumUs(c, n) }: _*)
-          .groupBy("l_returnflag")
-          .agg(count(lit(1)).as("n"),
-            sums.flatMap { case (n, _) => splitDsum(n) }: _*)
-          .select(col("l_returnflag") +: col("n") +:
-            sums.map { case (n, _) => splitDsumOut(n) }: _*)
-      else
-        li.groupBy("l_returnflag")
-          .agg(
-            count(lit(1)).as("n"),
-            dsum(q).as("sq"), dsum(q * q).as("sqq"),
-            dsum(p).as("sp"), dsum(p * p).as("spp"),
-            dsum(q * p).as("sqp"))
-    grouped
+    li.select(col("l_returnflag") +:
+        sums.map { case (n, c) => splitDsumUs(c, n) }: _*)
+      .groupBy("l_returnflag")
+      .agg(count(lit(1)).as("n"),
+        sums.flatMap { case (n, _) => splitDsum(n) }: _*)
+      .select(col("l_returnflag") +: col("n") +:
+        sums.map { case (n, _) => splitDsumOut(n) }: _*)
+  }
+
+  /** Statistical aggregates from exact decimal power sums
+    * ([[statsPowerSums]]): variance, stddev, correlation, covariance —
+    * deterministic double formulas. */
+  def qStatsAgg(spark: SparkSession, dir: String): DataFrame =
+    statsPowerSums(Tables.lineitem(spark, dir))
       .select(
         col("l_returnflag"),
         col("n"),
@@ -169,7 +106,6 @@ object Relational3 {
           (sqrt((col("sqq") - col("sq") * col("sq") / col("n")) / (col("n") - 1)) *
             sqrt((col("spp") - col("sp") * col("sp") / col("n")) / (col("n") - 1))), 6).as("corr_qp"))
       .orderBy("l_returnflag")
-  }
 
   /** GROUPING SETS via the SQL surface (DataFrame API only exposes
     * rollup/cube; arbitrary sets are a SQL-level capability). */

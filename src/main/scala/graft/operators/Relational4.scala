@@ -3,9 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.operators.Decimals.dsum
 
 /** Relational breadth, part 4 (round 2): correlated EXISTS subqueries,
   * salted skew join surfaced through the oracle gate, discrete percentiles,
@@ -25,8 +25,6 @@ import graft.Tables
   *    band join in Dedup).
   */
 object Relational4 {
-
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(38, 6))).cast("double")
 
   /** Correlated EXISTS + NOT EXISTS via the SQL surface. */
   def qExistsSubquery(spark: SparkSession, dir: String): DataFrame = {
@@ -345,7 +343,7 @@ object Relational4 {
     * Uses the native Dataset.unpivot operator (codegen'd Expand). */
   def qUnpivot(spark: SparkSession, dir: String): DataFrame =
     // Round 19 (optimization round): the melted sum rides the
-    // [[Relational3.splitDsumUs]] split primitive-long lanes instead of a
+    // [[Decimals.splitDsumUs]] split primitive-long lanes instead of a
     // per-row Decimal(38,6) accumulate — the same exactness-preserving
     // rewrite StatsAB measured at 1.52× for q_stats_agg (bit-identical
     // totals, spec-pinned there; Relational4Spec pins this query's two
@@ -359,12 +357,12 @@ object Relational4 {
         Array(col("l_quantity"), col("l_extendedprice"), col("l_discount"), col("l_tax")),
         "measure", "value")
       .select(col("measure"), col("value"),
-        Relational3.splitDsumUs(col("value"), "value"))
+        Decimals.splitDsumUs(col("value"), "value"))
       .groupBy("measure")
       .agg(count(lit(1)).as("n"), min(col("value")).as("min_v") +:
-        max(col("value")).as("max_v") +: Relational3.splitDsum("value"): _*)
+        max(col("value")).as("max_v") +: Decimals.splitDsum("value"): _*)
       .select(col("measure"), col("n"),
-        Relational3.splitDsumOut("value").as("sum_v"),
+        Decimals.splitDsumOut("value").as("sum_v"),
         col("min_v"), col("max_v"))
       .orderBy("measure")
 

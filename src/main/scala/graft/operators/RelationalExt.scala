@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.operators.Decimals.dsum
 
 /** Relational breadth, part 2 (SURVEY §2B checklist): window functions
   * (ranking, running frames, lag), rollup/cube grouping sets, set operations,
@@ -18,8 +19,6 @@ import graft.Tables
   * rank tokenizer, which documents the tradeoff).
   */
 object RelationalExt {
-
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(38, 6))).cast("double")
 
   /** Ranking windows per customer: top-3 orders by totalprice. */
   def qWindowRank(spark: SparkSession, dir: String): DataFrame = {
@@ -58,7 +57,7 @@ object RelationalExt {
       .orderBy("returnflag", "linestatus")
 
   /** CUBE grouping sets over orders. Round 20: the money sum rides the
-    * [[Relational3.splitDsumUs]] split primitive-long lanes (the
+    * [[Decimals.splitDsumUs]] split primitive-long lanes (the
     * q_stats_agg/q_unpivot/q1 convention) — the 4× Expand then carries an
     * 8-byte long instead of a 16-byte Decimal buffer and the per-row
     * accumulate is a primitive add. o_totalprice ≤ ~6e5, six orders under
@@ -67,13 +66,13 @@ object RelationalExt {
   def qCube(spark: SparkSession, dir: String): DataFrame =
     Tables.orders(spark, dir)
       .select(col("o_orderstatus"), col("o_orderpriority"),
-        Relational3.splitDsumUs(col("o_totalprice"), "sp"))
+        Decimals.splitDsumUs(col("o_totalprice"), "sp"))
       .cube("o_orderstatus", "o_orderpriority")
-      .agg(count(lit(1)).as("n"), Relational3.splitDsum("sp"): _*)
+      .agg(count(lit(1)).as("n"), Decimals.splitDsum("sp"): _*)
       .select(
         coalesce(col("o_orderstatus"), lit("ALL")).as("orderstatus"),
         coalesce(col("o_orderpriority"), lit("ALL")).as("orderpriority"),
-        col("n"), Relational3.splitDsumOut("sp").as("sum_price"))
+        col("n"), Decimals.splitDsumOut("sp").as("sum_price"))
       .orderBy("orderstatus", "orderpriority")
 
   /** The rounds-1..19 direct Decimal(38,6) form of q_cube — the

@@ -405,7 +405,7 @@ object Similarity {
     * (cells x dims)-key aggregation with map-side combine; no shuffle of
     * the embedding column itself beyond the exploded (cell, dim, v) rows. */
   def qKmeansStep(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
+    import graft.operators.Decimals.dsum
     val e = Tables.embeddings(spark, dir)
     val cents = ivfCentroids(spark, dir)
     val assigned = e.select(cellExpr(cents)(col("embedding")).as("cell"), col("embedding"))
@@ -415,8 +415,7 @@ object Similarity {
         round(col("v0").cast("double"), 6).as("v"))
       .groupBy("cell", "dim")
       .agg(count(lit(1)).as("n"),
-        round(sum(col("v").cast(DecimalType(38, 6))).cast("double") / count(lit(1)), 6)
-          .as("centroid"))
+        round(dsum(col("v")) / count(lit(1)), 6).as("centroid"))
       .select("cell", "dim", "centroid", "n")
       .orderBy("cell", "dim")
   }

@@ -3,9 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.operators.Decimals.dsum
 
 /** The TPC-H gauntlet (round-18 verdict item 3): the partsupp-free TPC-H
   * queries as oracle-checked contract entries. The fixtures are TPC-H-shaped
@@ -45,9 +45,6 @@ import graft.Tables
   * single double ops on both engines (FIXTURES.md §3).
   */
 object TpcH {
-
-  /** Exact money sum: decimal-accumulate then one deterministic double cast. */
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(38, 6))).cast("double")
 
   /** Broadcast admission for the SF-PROPORTIONAL dimensions (round 20,
     * guide §3.1 "pick the strategy deliberately — from data"; r19 verdict

@@ -2,7 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+
+import graft.operators.Decimals.dsum
 
 /** ORC as a second columnar source/sink format (round 15 — the "another
   * source format" axis): Spark's scan machinery is format-agnostic behind
@@ -45,7 +46,7 @@ object OrcSource {
       .filter(col("o_orderstatus") === "O" && col("o_totalprice") > 50000.0)
       .groupBy(trunc(col("o_orderdate").cast("date"), "month").as("month"))
       .agg(count(lit(1)).as("n_orders"),
-        sum(col("o_totalprice").cast(DecimalType(38, 6))).cast("double").as("sum_total"))
+        dsum(col("o_totalprice")).as("sum_total"))
       .orderBy("month")
   }
 

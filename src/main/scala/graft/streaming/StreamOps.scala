@@ -40,12 +40,11 @@ class DedupCountsProcessor(ttl: Option[java.time.Duration] = None)
   }
 }
 
-/** Spark-4 `StatefulProcessor` driving the EVENT-TIME TIMER surface for
-  * real (round 16 — the API adopted by [[DedupCountsProcessor]] runs
-  * `TimeMode.None`, leaving its distinguishing mechanism unexercised):
-  * gap-based session windows per user where the CLOSE of a session is
-  * timer-driven. State is one open session per user — (start_us, last_us,
-  * n_events, sum_us), four longs. Each batch's events (sorted by event
+/** Spark-4 `StatefulProcessor` driving the EVENT-TIME TIMER surface
+  * ([[DedupCountsProcessor]] runs `TimeMode.None`): gap-based session
+  * windows per user where the CLOSE of a session is timer-driven. State
+  * is one open session per user — (start_us, last_us, n_events, sum_us),
+  * four longs. Each batch's events (sorted by event
   * time; the staged replay keeps batches in global (ts, event_id) order,
   * so per-key order is total) either EXTEND the open session (gap from the
   * last event ≤ [[graft.operators.PipelineOps.SessionGapUs]] — equality
@@ -127,8 +126,8 @@ class SessionTimerProcessor extends org.apache.spark.sql.streaming.StatefulProce
 }
 
 /** The bounded per-key ring of [[StreamOps.rollingQuantileStream]] on
-  * Spark 4's LIST state variable (round 16 — completing the named-state
-  * family: ValueState carries the dedup counts and timer sessions,
+  * Spark 4's LIST state variable (completing the named-state family:
+  * ValueState carries the dedup counts and timer sessions,
   * ListState this ring, MapState the per-user sub-keyed stats): the
   * last RollRows−1 (ts-ms, event_id, value) rows per event_type live in
   * an ordered ListState slot — the API's native fit for a ring, where
@@ -154,7 +153,7 @@ class RollingRingProcessor extends org.apache.spark.sql.streaming.StatefulProces
 }
 
 /** Per-user running totals SUB-KEYED by event_type on Spark 4's MAP
-  * state variable (round 16, with [[RollingRingProcessor]]): the state a
+  * state variable: the state a
   * composite flatMapGroupsWithState key cannot give without losing the
   * per-USER grouping — one MapState slot per user holding
   * event_type → (n, exact value micros), point-updated per event
@@ -173,11 +172,11 @@ class UserTypeStatsProcessor extends org.apache.spark.sql.streaming.StatefulProc
       org.apache.spark.sql.Encoders.product[(Long, Long)], TTLConfig.NONE)
   override def handleInputRows(uid: Long, rows: Iterator[StreamOps.UserEvent],
       timerValues: TimerValues): Iterator[StreamOps.TypedStat] = {
-    // local running copy per touched type (round-16 review: containsKey +
-    // getValue per event was two RocksDB point-reads where the first
-    // touch's one suffices — getValue returns null for an absent key) —
-    // the per-event updateValue POINT-WRITES stay, they are the MapState
-    // capability this processor demonstrates
+    // local running copy per touched type: one RocksDB point-read on a
+    // type's first touch (getValue returns null for an absent key), not
+    // containsKey + getValue per event — the per-event updateValue
+    // POINT-WRITES stay, they are the MapState capability this
+    // processor demonstrates
     val local = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
     rows.foreach { e =>
       // exact micros (the HALF_UP 6-decimal convention) — the equality
@@ -205,7 +204,10 @@ class UserTypeStatsProcessor extends org.apache.spark.sql.streaming.StatefulProc
   * These run the SAME logical aggregations as the batch/oracle-checked
   * EventOps queries — correctness of the streaming path is established by
   * equivalence tests against the batch results (MemoryStream + single
-  * processAllAvailable batch; streaming state has no SQL oracle).
+  * processAllAvailable batch; streaming state has no SQL oracle). The
+  * nine LIVE contract queries ([[queries]]) replay a time-ordered staged
+  * copy of the events through one paced drain scaffold, [[stagedDrain]],
+  * and are hash-checked against batch oracles.
   *
   * Scale: watermarks bound state; aggregations shuffle by
   * (window, event_type) / user_id exactly like their batch twins; state
@@ -372,15 +374,15 @@ object StreamOps {
   }
 
   /** Typed input/output of [[SessionTimerProcessor]]: value pre-scaled to
-    * exact micros-longs OUTSIDE the processor (the SessionSumStateLong
-    * convention — cast to Decimal(38,6) first, scale exactly, sum longs). */
+    * exact micros-longs OUTSIDE the processor
+    * ([[graft.operators.Decimals.micros]]), so the state sums longs. */
   case class SessEvent(user_id: Long, ts: java.sql.Timestamp, value_us: Long)
   case class SessionOut(user_id: Long, start_us: Long, end_us: Long,
                         n_events: Long, sum_us: Long)
 
   /** Exact event time in µs from a (µs-precision) SQL timestamp: getTime's
     * ms carries the seconds, getNanos the full sub-second part. The
-    * seconds term must FLOOR (round-16 advisor item): getNanos is always
+    * seconds term must FLOOR: getNanos is always
     * the non-negative sub-second part, so for a PRE-EPOCH fractional
     * instant getTime/1000 truncating toward zero lands one second high
     * (1969-12-31 23:59:59.5 → +500000 µs instead of −500000). Harmless
@@ -428,9 +430,8 @@ object StreamOps {
   }
 
   /** ONE ring-fold shared by the GroupState roller above and the
-    * ListState [[RollingRingProcessor]] (round-16 review: two
-    * hand-maintained copies of the fold could silently diverge between
-    * spec runs — the BucketizeGrid one-shared-impl convention): sorts
+    * ListState [[RollingRingProcessor]], so the two forms cannot
+    * diverge: sorts
     * the batch on (millis, sub-second nanos, id) — equal millis implies
     * equal second, so the nanos field finishes the µs-precision ts order
     * the batch twin's ORDER BY uses — folds each event through the
@@ -442,11 +443,10 @@ object StreamOps {
       : (Vector[(Long, Long, Double)], Vector[RollQuantiles]) = {
     val rollRows = graft.operators.EventOps.RollRows
     // Per-event work is an incrementally-maintained SORTED window —
-    // O(rollRows) arraycopy shift per event, zero allocation — instead
-    // of the first cut's fresh `.map(_._3).sorted` (two collections +
-    // an O(n log n) sort per event): the ListState drain folds 10 M
-    // events SERIALLY per key at the 100× probe, so this loop is a
-    // contract hot path (round 17). Ordering semantics are pinned
+    // O(rollRows) arraycopy shift per event, zero allocation — not a
+    // fresh sort per event: the ListState drain folds 10 M events
+    // SERIALLY per key at the 100× probe, so this loop is a contract
+    // hot path. Ordering semantics are pinned
     // identical: java.lang.Double.compare is the same IEEE total order
     // (NaN greatest, -0.0 < 0.0) as Scala's default Double ordering,
     // and eviction removes ONE instance equal to the evicted value —
@@ -510,131 +510,97 @@ object StreamOps {
         org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
   }
 
-  /** Contract query that ACTUALLY executes Structured Streaming (round-6
-    * verdict task 8 — the rest of this file is spec-proven but was invisible
-    * to the driver's correctness gate): the events parquet is consumed as a
-    * FILE STREAM (Trigger.AvailableNow, so the run terminates), piped
-    * through [[dedupWithCounts]]'s flatMapGroupsWithState state machine, and
-    * each micro-batch's Update-mode emissions land in a scratch parquet via
-    * foreachBatch — the standard stream-to-batch-table bridge. The final
-    * answer keeps only ORDER-INDEPENDENT columns: per-(user_id, event_type)
-    * suppressed-duplicate counts are identical under any arrival order /
-    * micro-batch split (max over emissions of a monotone counter), so this
-    * streaming result is fully hash-checkable against a plain DuckDB
-    * aggregate — a stronger gate than the rows-only self-check the verdict
-    * asked for. first_doc_id IS arrival-order-dependent across shuffled
-    * file-source partitions, so it stays out of the contract output (it is
-    * spec-checked under controlled arrival order in StreamingSpec instead).
+  /** Live exact dedup WITH duplicate counts: the staged events replay
+    * one file per micro-batch through [[dedupWithCounts]]'s
+    * flatMapGroupsWithState state machine keyed by (user_id, event_type),
+    * and each batch's Update-mode emissions land in the scratch sink. The
+    * answer keeps only ORDER-INDEPENDENT columns: per-key suppressed
+    * duplicate counts are identical under any arrival order or
+    * micro-batch split (max over emissions of a monotone counter), so it
+    * is hash-checkable against a plain DuckDB aggregate. first_doc_id is
+    * arrival-order-dependent, so it stays out of the contract output and
+    * is spec-checked under controlled arrival order in StreamingSpec.
     *
-    * Scale: the state store holds two longs per live key exactly as in
-    * [[dedupWithCounts]]; the scratch sink is one row per key per batch it
-    * appeared in, compacted by a map-side-combining groupBy — nothing here
-    * collects to the driver. */
+    * Scale: the state store holds two longs per live key, sharded across
+    * [[statePartsFor]] partitions; the sink holds one row per key per
+    * batch it appeared in, compacted by a map-side-combining groupBy —
+    * nothing here collects to the driver. */
   def qStreamDedupLive(spark: SparkSession, dir: String): DataFrame =
-    dedupDrain(spark, dir, "live", tws = false)
+    dedupLive(spark, dir, "live", tws = false)
 
-  /** [[qStreamDedupLive]] on the MODERN stateful stack (round 15): the
-    * same first-wins dedup-with-counts drain, but through
-    * [[dedupWithCountsTws]] — Spark 4's `transformWithState` /
-    * `StatefulProcessor` — on the ROCKSDB state-store provider, the
-    * API+provider pairing a new deployment would pick (named state
-    * variables with per-state TTL to bound an unbounded fingerprint
-    * space; RocksDB to take state off-heap). The two forms' emission
-    * streams are spec-proved equal, so the oracle is shared verbatim —
-    * this query's value is proving the modern path END-TO-END (file
-    * stream → RocksDB-backed StatefulProcessor → foreachBatch bridge)
-    * under the driver's hash gate, not only in specs. */
+  /** [[qStreamDedupLive]] on the modern stateful stack: the same drain
+    * through [[dedupWithCountsTws]] — Spark 4's `transformWithState` /
+    * `StatefulProcessor` with named state variables — on the RocksDB
+    * state-store provider, the pairing a new deployment would pick. The
+    * two forms' emission streams are spec-proved equal, so the oracle is
+    * shared verbatim; this query proves the modern path end to end
+    * against the DuckDB oracle hash. */
   def qStreamDedupTwsLive(spark: SparkSession, dir: String): DataFrame =
-    dedupDrain(spark, dir, "twslive", tws = true)
+    dedupLive(spark, dir, "twslive", tws = true)
 
-  private def dedupDrain(spark: SparkSession, dir: String, tag: String,
-      tws: Boolean): DataFrame = scratchRoots.synchronized {
-    // The whole run is serialized on [[scratchRoots]]: two concurrent
-    // invocations on the same dir would otherwise share one streaming
-    // checkpointLocation and corrupt each other (round-8 advisor item).
-    import spark.implicits._
-    val path = s"$dir/events.parquet"
-    val rawSchema = spark.read.parquet(path).schema
-    val tmp = scratchFor(tag, dir)
-    val out = s"$tmp/out"
-    val ss = streamingSession(spark)
-    if (tws) // transformWithState runs only on the RocksDB provider
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // events.parquet is a single FILE: for a non-glob path the file-stream
-    // source force-sets basePath to the path itself and then rejects it
-    // ("must be a directory"), so list it via a glob (matches only this
-    // file) with the parent directory pinned as basePath.
-    val stream = ss.readStream.schema(rawSchema)
-      .option("basePath", dir).parquet(s"$dir/events*.parquet")
-      .select(
-        concat(col("user_id").cast("string"), lit("|"), col("event_type")).as("fingerprint"),
-        col("event_id").cast("long").as("doc_id"))
-      .as[DocSeen]
-    val deduped = if (tws) dedupWithCountsTws(stream) else dedupWithCounts(stream)
-    val q = deduped.toDF().writeStream
-      .outputMode("update")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: Dataset[Row], _: Long) =>
-        b.write.mode(SaveMode.Append).parquet(out)
-      }
-      .start()
-    q.awaitTermination()
-    unloadStateStores()
-    val agg = spark.read.parquet(out)
-      .groupBy("fingerprint")
-      // the counter is monotone across a key's emissions: max = final state
-      .agg(max(col("n_duplicates")).as("n_duplicates"))
-      .select(
-        split(col("fingerprint"), "\\|").getItem(0).cast("long").as("user_id"),
-        split(col("fingerprint"), "\\|").getItem(1).as("event_type"),
-        col("n_duplicates"))
-      .orderBy("user_id", "event_type")
-    // Materialize the |keys|-row aggregate EAGERLY before returning: the
-    // frame handed back must not depend on the scratch files, which the
-    // next invocation deletes — a lazily-held previous result would
-    // otherwise silently read the NEW run's output (round-8 advisor item).
-    // Same reclaim pattern as Graph.qPagerank: the previous invocation's
-    // checkpoint blocks are unpersisted here (its returned frame is
-    // invalidated — consume results before re-invoking), the scratch dir
-    // is deleted as soon as the blocks are live, so disk is reclaimed at
-    // the earliest safe point rather than held until the next call.
-    val (frame, rdd) = org.apache.spark.sql.graft.Bridge.localCheckpointed(agg)
-    stashLiveResult(spark, tag, dir, rdd)
-    deleteRecursively(tmp)
-    scratchRoots.remove(s"$tag|$dir")
-    frame
-  }
+  /** Both dedup drains: UPDATE mode over the staged events copy, with
+    * the RocksDB provider only for the transformWithState form. */
+  private def dedupLive(spark: SparkSession, dir: String, tag: String,
+      tws: Boolean): DataFrame =
+    stagedDrain(spark, dir, tag, mode = "update",
+      provider = if (tws) RocksDbProvider else "") { evs =>
+      val ss = evs.sparkSession
+      import ss.implicits._
+      val docs = evs
+        .select(
+          concat(col("user_id").cast("string"), lit("|"), col("event_type")).as("fingerprint"),
+          col("event_id").cast("long").as("doc_id"))
+        .as[DocSeen]
+      (if (tws) dedupWithCountsTws(docs) else dedupWithCounts(docs)).toDF()
+    } { outDf =>
+      outDf
+        .groupBy("fingerprint")
+        // the counter is monotone across a key's emissions: max = final state
+        .agg(max(col("n_duplicates")).as("n_duplicates"))
+        .select(
+          split(col("fingerprint"), "\\|").getItem(0).cast("long").as("user_id"),
+          split(col("fingerprint"), "\\|").getItem(1).as("event_type"),
+          col("n_duplicates"))
+        .orderBy("user_id", "event_type")
+    }
 
-  /** Shared scaffold of every PACED staged-replay drain (round-16 review:
-    * the prologue/epilogue existed as 5 near-identical copies, and the
-    * round-15 drain-recipe pins had to be applied per copy): stage the
-    * corpus ([[stagedEvents]]), lay optional sentinels as the newest file
-    * ([[sentineledReplay]]), derive state partitions from PER-BATCH rows
-    * (round 9/10 — state-store merge/evict work is single-threaded per
-    * partition; 8 partitions left 3/4 of the cores idle at the 100×
-    * probe, 39.8 → 33.3 s at 32), run `plan` over the time-normalized
-    * file stream in APPEND mode through the foreachBatch parquet bridge,
-    * capture per-batch telemetry under `tag`, unload the state-store
-    * providers, and hand the scratch-read result through `finalize` +
-    * the eager-materialize/stash/reclaim epilogue ([[qStreamDedupLive]]'s
-    * scratch-independence contract). The drain correctness argument
-    * shared by every user: staging orders files by (ts, event_id) range,
-    * so batch k+1 rows are never behind batch k's watermark — paced
-    * watermark advance is safe, and state evicts INCREMENTALLY.
+  /** transformWithState runs only on this state-store provider. */
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** The one scaffold every live drain runs on. It stages the corpus
+    * ([[stagedEvents]]), lays optional sentinels as the newest file
+    * ([[sentineledReplay]]), and runs `plan` over the time-normalized
+    * file stream, one staged file per micro-batch, in output `mode` on a
+    * child session ([[streamingSession]]) with `shuffleParts` shuffle
+    * partitions — by default the state-partition count derived from
+    * PER-BATCH rows ([[statePartsFor]]). Each micro-batch goes to `sink`
+    * (by default: append to the scratch parquet at the path it is given).
+    * After the stream ends the scaffold records per-batch telemetry under
+    * `tag` ([[lastDrainProgress]]), unloads the state-store providers,
+    * and returns `finalize` over the scratch output. That result is
+    * materialized eagerly and its blocks stashed ([[stashLiveResult]]),
+    * so the returned frame never reads the scratch files, which are
+    * deleted before return; the previous invocation's stashed blocks are
+    * unpersisted then, so consume a result before re-invoking.
     *
-    * Not on this scaffold: the dedup drains (UPDATE-mode over the raw
-    * events file — [[dedupDrain]], their own shared body) and the
-    * rolling-quantile drain (stateless foreachBatch with a driver-held
-    * carry at the CALLER's shuffle width, no state store). */
+    * The correctness argument shared by every drain: staging orders files
+    * by (ts, event_id) range and the source replays them oldest-first, so
+    * batch k+1 rows are never behind batch k's watermark — paced
+    * watermark advance is safe, and state evicts incrementally. The whole
+    * run is serialized on [[scratchRoots]]: concurrent invocations on one
+    * dir would otherwise share a checkpoint. */
   private def stagedDrain(spark: SparkSession, dir: String, tag: String,
       sentinels: org.apache.spark.sql.types.StructType => Seq[Row] = _ => Nil,
       provider: String = "",
+      mode: String = "append",
+      shuffleParts: Option[Int] = None,
       // set when EVERY batch may legitimately emit nothing (e.g. a join
       // with no matches): the scratch read then cannot infer a schema
       // from zero part files and must be told it
-      outSchema: Option[org.apache.spark.sql.types.StructType] = None)(
+      outSchema: Option[org.apache.spark.sql.types.StructType] = None,
+      sink: (Dataset[Row], Long, String) => Unit =
+        (b, _, out) => b.write.mode(SaveMode.Append).parquet(out))(
       plan: DataFrame => DataFrame)(
       finalize: DataFrame => DataFrame): DataFrame = scratchRoots.synchronized {
     val (stagedDir, stagedFiles, stagedRows) = stagedEvents(spark, dir)
@@ -647,9 +613,8 @@ object StreamOps {
     val sent = sentinels(stagedSchema)
     val in = if (sent.isEmpty) stagedDir
              else sentineledReplay(spark, tmp, stagedDir, stagedSchema, sent)
-    val parts = statePartsFor(
-      perBatchRows(stagedRows, stagedFiles), spark.sparkContext.defaultParallelism)
-    val ss = streamingSession(spark, parts)
+    val ss = streamingSession(spark, shuffleParts.getOrElse(statePartsFor(
+      perBatchRows(stagedRows, stagedFiles), spark.sparkContext.defaultParallelism)))
     if (provider.nonEmpty)
       ss.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
     val raw = ss.readStream.schema(stagedSchema)
@@ -657,16 +622,14 @@ object StreamOps {
       // the staged files' modtimes sit ~1 h behind a freshly-written
       // sentinel and fall further behind as the JVM ages; the source's
       // default 7-day maxFileAge would then silently drop the whole
-      // staged corpus — disable the age filter (self-review round 9)
+      // staged corpus — disable the age filter
       .option("maxFileAge", "3650d")
       .parquet(in.toString)
     val q = plan(stagedTs(raw)).writeStream
-      .outputMode("append")
+      .outputMode(mode)
       .option("checkpointLocation", s"$tmp/ckpt")
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: Dataset[Row], _: Long) =>
-        b.write.mode(SaveMode.Append).parquet(out)
-      }
+      .foreachBatch { (b: Dataset[Row], batchId: Long) => sink(b, batchId, out) }
       .start()
     q.awaitTermination()
     captureDrainProgress(tag, q)
@@ -680,88 +643,51 @@ object StreamOps {
     frame
   }
 
-  /** Live watermarked SESSION-WINDOW aggregation (round-8 verdict item 5 —
-    * the second contract-visible Structured Streaming query, closing the gap
-    * between the spec-only watermark coverage and the contract surface):
-    * the events parquet is consumed as a file stream, aggregated with the
-    * native `session_window` (30-min gap) under an event-time watermark,
-    * and APPEND mode emits each session exactly once — when the watermark
+  /** Live watermarked SESSION-WINDOW aggregation: the staged events
+    * replay one file per micro-batch, aggregated with the native
+    * `session_window` (30-min gap) under an event-time watermark, and
+    * APPEND mode emits each session exactly once — when the watermark
     * passes its end, i.e. genuine late-data state EVICTION, the mechanism
     * StreamingSpec proves under controlled arrival order.
     *
     * Determinism: append mode only flushes sessions the watermark has
     * passed, and the final watermark normally stops at max(ts) − delay, so
-    * every user's trailing session would be withheld in the state store and
-    * the result would be arrival-dependent. The input is therefore STAGED
-    * ([[stagedEvents]]: time-range files replayed oldest-first, one per
-    * micro-batch) plus one SENTINEL row (user_id = −1) whose timestamp
-    * sits 10 gaps past the corpus maximum, as the final batch. The
-    * watermark is global, so the sentinel pushes it past every remaining
-    * session's end; the terminal no-data micro-batch evicts the tail, and
-    * the output — minus the sentinel's own session — is exactly the batch
-    * gap-and-island result, hash-checked against [[graft.operators
-    * .PipelineOps.qSessionWindow]]'s oracle SQL.
+    * every user's trailing session would stay withheld in the state store.
+    * One SENTINEL row (user_id = −1) 10 gaps past the corpus maximum is
+    * therefore the final micro-batch: the watermark is global, so it
+    * pushes the watermark past every remaining session's end, and the
+    * terminal no-data micro-batch evicts the tail. The output — minus the
+    * sentinel's own session — is exactly the batch gap-and-island result,
+    * hash-checked against [[graft.operators.PipelineOps.qSessionWindow]]'s
+    * oracle SQL.
     *
-    * Scale: session state per live (user, session) is the agg buffer (two
-    * longs + a decimal); the watermark bounds it — and because the PACED
-    * replay (round 9) advances the watermark every batch, sessions are
-    * evicted incrementally as their time slice passes: peak state and the
-    * per-batch flush are bounded by [[PaceRowsPerBatch]], not corpus size
-    * (the round-8 one-batch drain held every session in state and emitted
-    * ~1 M rows in one terminal flush at the 100× probe — a replay
-    * artifact, not the operator). The sentinel trick is the standard
-    * stream-drain pattern for bounded replays; a true unbounded
-    * deployment simply has no drain step. */
+    * The sum rides the state store as a long of exact micros
+    * ([[graft.operators.Decimals.micros]]) instead of a 16-byte
+    * Decimal(38,6) buffer on the slow BigDecimal merge path; long/1e6 is
+    * the same double as the Decimal(38,6) sum's (StreamingSpec's paced
+    * batch-oracle test checks it bit for bit against `qSessionWindow`).
+    *
+    * Scale: session state per live (user, session) is the agg buffer;
+    * because the paced replay advances the watermark every batch, sessions
+    * are evicted incrementally as their time slice passes, so peak state
+    * and the per-batch flush are bounded by the pace, not corpus size.
+    * The sentinel is the standard drain pattern for bounded replays; an
+    * unbounded deployment has no drain step. */
   def qSessionWindowLive(spark: SparkSession, dir: String): DataFrame = {
-    // PACED drain (round-9, verdict item 1): the replay consumes the
-    // time-ordered staged copy one file per micro-batch, so the watermark
-    // advances with every batch and sessions are evicted INCREMENTALLY —
-    // peak state is the sessions live within one time slice, and the
-    // terminal flush only emits the trailing tail, not the whole corpus
-    // (spec-asserted from the drain telemetry). One sentinel row 10 gaps
-    // past the corpus max is the final micro-batch, pushing the global
-    // watermark past every real session's end.
     val sentinelUs = corpusMaxUs(spark, dir) +
       10 * graft.operators.PipelineOps.SessionGapUs
-    // State-row width (round-13 verdict item 6): the sum's state buffer
-    // was the one remaining width lever — Decimal(38,6) occupies a
-    // 16-byte UnsafeRow slot AND adds on the slow BigDecimal path
-    // (precision > 18) on every state merge, where the exact same sum can
-    // ride an 8-byte long of MICROS: each value is first cast to
-    // Decimal(38,6) (identical per-value HALF_UP rounding to the
-    // decimal-sum convention — rounding BEFORE scaling; `round(v*1e6)`
-    // would round an already-misrepresented double), scaled by 1e6
-    // exactly in decimal space, and summed as a long. Post-agg, long/1e6
-    // is the correctly-rounded double of micros·10⁻⁶ — the same double
-    // BigDecimal.doubleValue returns, both exact while the micros stay
-    // under 2⁵³ (≈ 9.0e9 in value units, ~4 orders above the corpus-WIDE
-    // sum, far above any per-session sum) — so the output is
-    // bit-identical (confirmed against the batch oracle hash and the
-    // sf0.01 DuckDB lane). SessAB 100× interleaved A/B (4 pass-pairs,
-    // per-pass telemetry, load 10–13): long won EVERY pair — 121→75,
-    // 68→35, 52→39, 40→32 s (min 39.9 vs 32.2) — the BigDecimal merge
-    // path, not just the 8 B of row, was the cost. Long is the shipped
-    // shape; SessionSumStateLong=false keeps the decimal reference form
-    // that StreamingSpec compares it against.
-    val dec6 = org.apache.spark.sql.types.DecimalType(38, 6)
-    val (sumAgg, sumOut) =
-      if (SessionSumStateLong)
-        (sum((col("value").cast(dec6) * lit(1000000)).cast("long")).as("sum_us"),
-          (col("sum_us").cast("double") / 1e6).as("sum_value"))
-      else
-        (sum(col("value").cast(dec6)).cast("double").as("sum_value"),
-          col("sum_value"))
     stagedDrain(spark, dir, "session",
       sentinels = schema => Seq(sentinelRow(schema, sentinelUs))) { evs =>
       evs
         .select(col("user_id"), col("ts"), col("value"))
         .withWatermark("ts", "0 seconds")
         .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"), sumAgg)
+        .agg(count(lit(1)).as("n_events"),
+          sum(graft.operators.Decimals.micros(col("value"))).as("sum_us"))
         .select(col("user_id"),
           unix_micros(col("w.start")).as("start_us"),
           unix_micros(col("w.end")).as("end_us"),
-          col("n_events"), sumOut)
+          col("n_events"), (col("sum_us").cast("double") / 1e6).as("sum_value"))
     } { outDf =>
       outDf
         .filter(col("user_id") =!= -1L)
@@ -772,10 +698,10 @@ object StreamOps {
 
   /** Previous invocation's materialized result blocks, per (context,
     * query, input dir) — reclaimed at the next call (see
-    * [[qStreamDedupLive]]). Keyed by applicationId so a successor
+    * [[stagedDrain]]). Keyed by applicationId so a successor
     * SparkContext in the same JVM never tries to unpersist a dead
-    * context's blocks (round-8 advisor item — stale entries are dropped
-    * without unpersist: the blocks died with their BlockManager). */
+    * context's blocks (stale entries are dropped without unpersist: the
+    * blocks died with their BlockManager). */
   private val liveResult = scala.collection.concurrent.TrieMap
     .empty[String, org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]]
 
@@ -789,14 +715,12 @@ object StreamOps {
     liveResult.put(key, rdd)
   }
 
-  /** Scratch roots for [[qStreamDedupLive]], one per input dir (round-6
-    * verdict item 7: `createTempDirectory` per call leaked a checkpoint +
-    * output parquet per invocation — the bench calls the query 3+ times a
-    * run). Since round 8 the scratch dir is deleted at the END of each
-    * invocation (the returned frame is checkpointed off the scratch files
-    * first); the delete-on-entry in [[scratchFor]] and the JVM shutdown
-    * hook cover crashed runs, so disk use is bounded at one scratch dir
-    * per distinct sf path no matter how many times the query runs. */
+  /** Live drains' scratch roots, one per (tag, input dir). The scratch
+    * dir is deleted at the END of each invocation (the returned frame is
+    * checkpointed off the scratch files first); the delete-on-entry in
+    * [[scratchFor]] and the JVM shutdown hook cover crashed runs, so disk
+    * use is bounded at one scratch dir per drain and input dir no matter
+    * how many times the query runs. */
   private val scratchRoots =
     scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
 
@@ -818,10 +742,8 @@ object StreamOps {
   /** Pure derivation (spec-pinned in StreamingSpec): one state partition
     * per ~250k rows of a MICRO-BATCH — state-store merge/evict work is
     * single-threaded per partition and proportional to a batch's churn,
-    * so the count follows per-batch rows (`min(staged total, pace)`), not
-    * the corpus (round-9 advisor item: the old form read TOTAL staged
-    * rows while claiming per-batch sizing — at 100× that over-provisioned
-    * 32 partitions for 4 M-row batches). Clamped to
+    * so the count follows per-batch rows ([[perBatchRows]]), not the
+    * corpus. Clamped to
     * [[[DefaultStateParts]], cores]: below the floor the per-batch commit
     * overhead already dominates; above the cores there is no one to run
     * the extra stores. */
@@ -830,14 +752,14 @@ object StreamOps {
       math.min(cores.toLong, batchRows / 250000L)).toInt
 
   /** Rows one staged file actually carries = the real micro-batch size
-    * under `maxFilesPerTrigger = 1` (round-10 advisor item: the old
-    * `min(stagedRows, pace)` understated this once the [[MaxPaceBatches]]
-    * cap makes files larger than the pace — exactly the large-corpus
-    * regime the state-partition sizing targets). Spec-pinned. */
+    * under `maxFilesPerTrigger = 1`. Not `min(stagedRows, pace)`: the
+    * [[MaxPaceBatches]] cap makes files larger than the pace in exactly
+    * the large-corpus regime the state-partition sizing targets.
+    * Spec-pinned. */
   private[graft] def perBatchRows(stagedRows: Long, stagedFiles: Int): Long = {
     // ≥ 1 today only by construction of stagedEvents (parquet always writes
     // at least one part file); a future staging change must surface as a
-    // clear error, not an ArithmeticException (round-11 advisor item)
+    // clear error, not an ArithmeticException
     require(stagedFiles > 0, s"perBatchRows: stagedFiles must be > 0, got $stagedFiles")
     (stagedRows + stagedFiles - 1) / stagedFiles
   }
@@ -903,7 +825,7 @@ object StreamOps {
       .coalesce(1).write.parquet(s"$tmp/sentinel")
     // indexed names: coalesce(1) writes one part today, but a second part
     // must land as zz_sentinel_01, not throw FileAlreadyExistsException
-    // mid-drain on a fixed name (round-15 advisor item); zz_ keeps every
+    // mid-drain on a fixed name; zz_ keeps every
     // sentinel part lexicographically last for deterministic listings
     new java.io.File(s"$tmp/sentinel")
       .listFiles((_: java.io.File, n: String) => n.endsWith(".parquet"))
@@ -922,9 +844,9 @@ object StreamOps {
     * on the tiny fixtures and pins hash-equality with the batch
     * oracles).
     *
-    * Why pace at all (round-8 verdict item 1): the one-batch drain
-    * measured a replay artifact — peak state = every session in the
-    * corpus, one terminal flush emitting ~1 M rows — not the operator.
+    * Why pace at all: a one-batch drain measures a replay artifact —
+    * peak state = every session in the corpus, one terminal flush
+    * emitting ~1 M rows at the 100× probe — not the operator.
     * The replay is staged as K time-range files and consumed
     * `maxFilesPerTrigger = 1`, so micro-batch size is bounded by the
     * pace regardless of corpus size — the steady-state shape a
@@ -943,13 +865,11 @@ object StreamOps {
     * scheduling + the window formulation's two shuffles ≈ 2.4 s. */
   private[graft] val PaceFixedBatchSec = 2.4
 
-  /** Pure pace derivation (spec-pinned; round-9 verdict item 3 — the 4 M
-    * constant was host-measured, this is the same sizing expressed as
-    * the derivation it came from): size a batch so its marginal work
+  /** Pure pace derivation (spec-pinned): size a batch so its marginal work
     * ≈ the fixed per-batch cost, i.e. fixed ≈ ½ of batch wall — the
     * trigger-amortization rule (trigger interval × input rate) a
     * production stream is tuned by. rows = cores × per-core-throughput
-    * × fixed-cost-seconds; 32 cores → ~4.4 M rows, the round-9 measured
+    * × fixed-cost-seconds; 32 cores → ~4.4 M rows, the measured 100×
     * sweet spot. Floored at 1 Mi rows so a small-core dev box still
     * amortizes its staging writes. */
   private[graft] def paceRowsFor(cores: Int): Long =
@@ -984,8 +904,7 @@ object StreamOps {
   /** Normalize a staged replay's ts column to TimestampType: probe
     * corpora stage event time as NANOS-long (the session nanosAsLong
     * convention), the sf fixtures as a real timestamp — the ÷1000
-    * nanos→µs unit conversion lives here ONCE, not per drain (round-15
-    * review: three verbatim copies each encoded the unit convention). */
+    * nanos→µs unit conversion lives here ONCE, not per drain. */
   private def stagedTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -994,19 +913,18 @@ object StreamOps {
     }
 
   /** Staging builds this JVM has actually performed — spec-pinned proof
-    * that the staged copy is SHARED across all drains on one dir (round-17
-    * verdict item 5: "verify the per-dir model state is hit across all
-    * drains" — the cache key is (dir, pace), so N drains on one fixture
-    * must cost ONE staging job, not N). */
+    * that the staged copy is SHARED across all drains on one dir: the
+    * cache key is (dir, pace), so N drains on one fixture must cost ONE
+    * staging job, not N. */
   private[graft] val stagedBuildCount = new java.util.concurrent.atomic.AtomicInteger
 
   /** (staged dir, file count, total rows). */
   private def stagedEvents(spark: SparkSession, dir: String): (java.nio.file.Path, Int, Long) =
     stagedCache.synchronized {
       val pace = paceRows(spark)
-      // fingerprint-validated against the SOURCE events dir (round-14
-      // verdict item 2 — the value is a derived staged layout; freshness
-      // is the source's): regenerated events restage the replay files
+      // fingerprint-validated against the SOURCE events dir (the value
+      // is a derived staged layout; freshness is the source's):
+      // regenerated events restage the replay files
       graft.ModelState.validated(stagedCache, s"$dir|$pace",
           Seq(s"$dir/events.parquet"), "StreamOps.stagedEvents")({
         val ev = spark.read.parquet(s"$dir/events.parquet")
@@ -1037,21 +955,13 @@ object StreamOps {
       })
     }
 
-  /** Round-13 (SessAB A/B, verdict item 6 — ADOPTED): when true (the
-    * default), qSessionWindowLive's sum rides the state store as an
-    * 8-byte long of exact micros instead of a 16-byte slow-path
-    * Decimal(38,6) buffer — bit-identical output (see the in-query
-    * comment), and the long shape won every interleaved 100× pass-pair
-    * (min 32.2 vs 39.9 s). False restores the decimal reference shape. */
-  @volatile private[graft] var SessionSumStateLong: Boolean = true
-
-  /** Child session for the streaming jobs: same SparkContext, own SQLConf,
-    * so the state-partition choice never leaks into the caller's session.
+  /** Child session for a drain: same SparkContext, own SQLConf, so the
+    * drain's `parts` shuffle partitions and streaming confs never leak
+    * into the caller's session.
     * The returned contract frame is rebuilt on the CALLER's session from
     * the scratch files, which keeps the cross-session boundary at a
     * parquet handoff. */
-  private def streamingSession(spark: SparkSession,
-                               parts: Int = DefaultStateParts): SparkSession = {
+  private def streamingSession(spark: SparkSession, parts: Int): SparkSession = {
     val ss = spark.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", parts.toString)
     // split the staged 16 MB row groups across cores (see stagedEvents)
@@ -1062,14 +972,13 @@ object StreamOps {
     // NO-DATA micro-batch. That is Spark's default, but an env/conf
     // override would silently withhold entire tails (caught only by the
     // oracle hash downstream), so the dependency is pinned here, on the
-    // drain session only (round-15 advisor item).
+    // drain session only.
     ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     // recentProgress keeps only the last N progress entries (default 100):
     // a paced drain with more micro-batches than that would silently
     // truncate the per-batch telemetry the eviction assertions and the
     // 100x state-plateau narrative read — raise the window far above any
     // real drain (MaxPaceBatches + sentinel + no-data batches ≪ 1024)
-    // (round-15 advisor item).
     ss.conf.set("spark.sql.streaming.numRecentProgressUpdates", "1024")
     ss
   }
@@ -1083,11 +992,11 @@ object StreamOps {
     * query re-registers providers and restarts maintenance on demand;
     * this is the same teardown Spark's own streaming tests use.
     *
-    * SCOPE WARNING (round-8 advisor item): `StateStore.stop()` is
-    * JVM-GLOBAL — it unloads the providers of EVERY streaming query in
-    * the JVM, not just the drain that finished. Every call site sits
-    * inside a `scratchRoots.synchronized` block, which serializes all of
-    * this object's drains, and no other graft code runs concurrent
+    * SCOPE WARNING: `StateStore.stop()` is JVM-GLOBAL — it unloads the
+    * providers of EVERY streaming query in the JVM, not just the drain
+    * that finished. Its one call site, [[stagedDrain]], runs inside
+    * `scratchRoots.synchronized`, which serializes all of this object's
+    * drains, and no other graft code runs concurrent
     * streaming queries; a caller that does must not run them while a
     * live contract query is draining (their state would be unloaded
     * mid-query and reloaded from their checkpoint on the next batch —
@@ -1101,12 +1010,11 @@ object StreamOps {
     graft.ScratchDirs.deleteRecursively(p)
 
   /** Per-invocation streaming scratch root. Names are pid-owned via
-    * [[graft.ScratchDirs.freshRoot]] (round-9 advisor item: the previous
-    * purely (tag, dir)-derived name was cross-process-stable and wiped on
-    * entry, so a second JVM running the same live query on the same input
-    * dir would delete a live drain's checkpoint/output mid-query — the
-    * exact hazard freshRoot's pid-suffix + dead-pid sweep already fixed
-    * for the layout scratch). Lifecycle stays streaming-specific: the
+    * [[graft.ScratchDirs.freshRoot]]: a purely (tag, dir)-derived name
+    * would be cross-process-stable and wiped on entry, so a second JVM
+    * running the same live query on the same input dir would delete a
+    * live drain's checkpoint/output mid-query. Lifecycle stays
+    * streaming-specific: the
     * root is ALSO deleted at the end of each invocation and by this
     * object's shutdown hook; freshRoot's wipe-on-create then only clears
     * this process's own leftovers from a crashed earlier invocation. */
@@ -1117,36 +1025,34 @@ object StreamOps {
     root
   }
 
-  /** LIVE streaming rolling quantiles (round 9 — the third driver-visible
-    * Structured Streaming query, rebuilt as the PACED COMPOSITE-KEY form;
-    * round-8 verdict items 1 + 4): the time-ordered staged events replay
-    * one file per micro-batch, and each batch runs the BATCH TWIN's
-    * composite (event_type, block) window formula
-    * ([[graft.operators.EventOps.rollingQuantile]]) over (carry ∪ batch),
-    * where `carry` is the last RollRows−1 rows per event_type from all
-    * earlier batches — the streaming analogue of the batch twin's block
-    * decomposition, with the micro-batch as the block.
+  /** LIVE streaming rolling quantiles in the PACED COMPOSITE-KEY form:
+    * the time-ordered staged events replay one file per micro-batch, and
+    * each batch runs the BATCH TWIN's composite (event_type, block) window
+    * formula ([[graft.operators.EventOps.rollingQuantile]]) over
+    * (carry ∪ batch), where `carry` is the last RollRows−1 rows per
+    * event_type from all earlier batches — the streaming analogue of the
+    * batch twin's block decomposition, with the micro-batch as the block.
+    * The carry is held on the driver and updated by the drain's per-batch
+    * sink; no state store is involved, so the batch-twin jobs run at the
+    * caller's shuffle width, not the state-partition count.
     *
     * Why not the per-key ring state machine ([[rollingQuantileStream]],
-    * which this query ran through round 8, and which StreamingSpec still
-    * proves)? A trailing-ROW-COUNT frame is defined over each key's total
-    * event order, so `flatMapGroupsWithState` must process a key's rows
-    * SERIALLY — parallelism is capped at key cardinality (a handful of
-    * event_types), and no pacing changes that: the 100× probe measured
-    * the artifact at ratio 21.5 with 31 of 32 cores idle. Splitting a key
-    * into (type, block) SUB-keys inside the state machine cannot work
-    * either: block b's frame needs block b−1's trailing rows, and
-    * flatMapGroupsWithState state is strictly per-key — there is no
-    * cross-key handoff within or across batches. The foreachBatch form
-    * sidesteps the limit because the carry handoff happens BETWEEN
-    * batches (driver-held, `n_types × (RollRows−1)` rows — bounded model
-    * state), while WITHIN a batch the composite-key windows fan out over
-    * every core. Production notes: the carry is the only state, so a
-    * restart-safe deployment persists it per batch id next to the sink
-    * (idempotent re-write); a genuinely per-key-ordered low-latency
-    * stream that cannot batch would need upstream key-space widening
-    * (e.g. per (type, shard) frames) — the frame DEFINITION, not the
-    * engine, is what serializes.
+    * which StreamingSpec still proves)? A trailing-ROW-COUNT frame is
+    * defined over each key's total event order, so `flatMapGroupsWithState`
+    * must process a key's rows SERIALLY — parallelism is capped at key
+    * cardinality (a handful of event_types), and no pacing changes that:
+    * the 100× probe measured it at ratio 21.5 with 31 of 32 cores idle.
+    * Splitting a key into (type, block) SUB-keys inside the state machine
+    * cannot work either: block b's frame needs block b−1's trailing rows,
+    * and flatMapGroupsWithState state is strictly per-key. The sink form
+    * hands the carry over BETWEEN batches (`n_types × (RollRows−1)` rows —
+    * bounded model state), while WITHIN a batch the composite-key windows
+    * fan out over every core. Production notes: the carry is the only
+    * state, so a restart-safe deployment persists it per batch id next to
+    * the sink (idempotent re-write); a per-key-ordered low-latency stream
+    * that cannot batch would need upstream key-space widening (e.g. per
+    * (type, shard) frames) — the frame DEFINITION, not the engine, is what
+    * serializes.
     *
     * Determinism: staging orders batches by (ts, event_id) ranges, so
     * (carry ∪ batch) sees exactly the global window state at every row:
@@ -1155,91 +1061,67 @@ object StreamOps {
     * verbatim, and StreamingSpec pins equality on a forced multi-batch
     * replay.
     *
-    * Scale: per-batch work is the batch twin's (linear, all-core) over ≤
-    * [[PaceRowsPerBatch]] rows; carry is O(types × RollRows). */
-  def qRollingQuantileLive(spark: SparkSession, dir: String): DataFrame = scratchRoots.synchronized {
-    val (stagedDir, nFiles, _) = stagedEvents(spark, dir)
-    val stagedSchema = spark.read.parquet(stagedDir.toString).schema
-    val tmp = scratchFor("roll", dir)
-    val out = s"$tmp/out"
-    // own session only to keep the streaming checkpoint conf isolated;
-    // no state store is involved, and the batch-twin jobs inside
-    // foreachBatch should run at the caller's shuffle width, not the
-    // state-partition count the stateful drains use
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions",
-      spark.conf.get("spark.sql.shuffle.partitions"))
-    // split the staged 16 MB row groups across cores (see stagedEvents)
-    ss.conf.set("spark.sql.files.maxPartitionBytes", (32L * 1024 * 1024).toString)
-    val raw = ss.readStream.schema(stagedSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stagedDir.toString)
-    val withTs = stagedTs(raw)
+    * Scale: per-batch work is the batch twin's (linear, all-core) over one
+    * paced batch; carry is O(types × RollRows). */
+  def qRollingQuantileLive(spark: SparkSession, dir: String): DataFrame = {
+    val (_, nFiles, _) = stagedEvents(spark, dir)
     val rollRows = graft.operators.EventOps.RollRows
     // cross-batch carry: the last RollRows-1 rows per event_type, in
     // (ts, event_id) order. foreachBatch runs batches sequentially on
     // the driver, so plain local state is safe.
     var carry: Array[Row] = Array.empty
-    val q = withTs
-      .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-      .writeStream
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: Dataset[Row], batchId: Long) =>
-        val sess = b.sparkSession
-        val carryDf = sess.createDataFrame(
-          java.util.Arrays.asList(carry: _*), b.schema)
-        val all = carryDf.unionByName(b.toDF())
-        val carryIds = carry.map(_.getLong(0))
-        val rolled = graft.operators.EventOps.rollingQuantile(all)
-        val emit = if (carryIds.isEmpty) rolled
-                   else rolled.filter(!col("event_id").isin(carryIds: _*))
-        emit.write.mode(SaveMode.Append).parquet(out)
-        // the carry only feeds the NEXT batch — one file per batch under
-        // maxFilesPerTrigger=1, so the last file's batch skips the job
-        // (at fixture scale K=1 that is the ONLY batch). Extraction is a
-        // SHUFFLE-FREE map-only pass (round 9 — the first cut's
-        // row_number window re-shuffled and re-sorted the whole batch,
-        // costing as much as the window stage itself, 4.5 s/batch at the
-        // 100× probe): each partition keeps its local last-(RollRows−1)
-        // rows per type in a bounded buffer, the driver merges the ≤
-        // partitions × types × 19 survivors. Order key (millis, nanos,
-        // id) — the same µs-precision total order the window uses.
-        if (batchId < nFiles - 1) {
-          val partTails = all.rdd.mapPartitions { it =>
-            val acc = scala.collection.mutable.Map
-              .empty[String, scala.collection.mutable.TreeSet[(Long, Int, Long, Row)]]
-            it.foreach { r =>
+    def rollBatch(b: Dataset[Row], batchId: Long, out: String): Unit = {
+      val carryDf = b.sparkSession.createDataFrame(
+        java.util.Arrays.asList(carry: _*), b.schema)
+      val all = carryDf.unionByName(b.toDF())
+      val carryIds = carry.map(_.getLong(0))
+      val rolled = graft.operators.EventOps.rollingQuantile(all)
+      val emit = if (carryIds.isEmpty) rolled
+                 else rolled.filter(!col("event_id").isin(carryIds: _*))
+      emit.write.mode(SaveMode.Append).parquet(out)
+      // the carry only feeds the NEXT batch — one file per batch under
+      // maxFilesPerTrigger=1, so the last file's batch skips the job (at
+      // fixture scale K=1 that is the ONLY batch). Extraction is a
+      // SHUFFLE-FREE map-only pass (a row_number window would re-shuffle
+      // and re-sort the whole batch, costing as much as the window stage
+      // itself): each partition keeps its local last-(RollRows−1) rows per
+      // type in a bounded buffer, the driver merges the ≤ partitions ×
+      // types × 19 survivors. Order key (millis, nanos, id) — the same
+      // µs-precision total order the window uses.
+      if (batchId < nFiles - 1) {
+        val partTails = all.rdd.mapPartitions { it =>
+          val acc = scala.collection.mutable.Map
+            .empty[String, scala.collection.mutable.TreeSet[(Long, Int, Long, Row)]]
+          it.foreach { r =>
+            val ts = r.getTimestamp(1)
+            val key = (ts.getTime, ts.getNanos, r.getLong(0), r)
+            val set = acc.getOrElseUpdate(r.getString(2),
+              scala.collection.mutable.TreeSet.empty(
+                Ordering.by((x: (Long, Int, Long, Row)) => (x._1, x._2, x._3))))
+            set += key
+            if (set.size >= rollRows) set -= set.head
+          }
+          acc.valuesIterator.flatMap(_.iterator.map(_._4))
+        }.collect()
+        carry = partTails
+          .groupBy(_.getString(2))
+          .valuesIterator.flatMap { rows =>
+            rows.sortBy { r =>
               val ts = r.getTimestamp(1)
-              val key = (ts.getTime, ts.getNanos, r.getLong(0), r)
-              val set = acc.getOrElseUpdate(r.getString(2),
-                scala.collection.mutable.TreeSet.empty(
-                  Ordering.by((x: (Long, Int, Long, Row)) => (x._1, x._2, x._3))))
-              set += key
-              if (set.size >= rollRows) set -= set.head
-            }
-            acc.valuesIterator.flatMap(_.iterator.map(_._4))
-          }.collect()
-          carry = partTails
-            .groupBy(_.getString(2))
-            .valuesIterator.flatMap { rows =>
-              rows.sortBy { r =>
-                val ts = r.getTimestamp(1)
-                (-ts.getTime, -ts.getNanos, -r.getLong(0))
-              }.take(rollRows - 1)
-            }.toArray
-        }
+              (-ts.getTime, -ts.getNanos, -r.getLong(0))
+            }.take(rollRows - 1)
+          }.toArray
       }
-      .start()
-    q.awaitTermination()
-    val result = spark.read.parquet(out)
-      .select("event_id", "event_type", "roll_n", "roll_median", "roll_p90")
-      .orderBy("event_id")
-    val (frame, rdd) = org.apache.spark.sql.graft.Bridge.localCheckpointed(result)
-    stashLiveResult(spark, "roll", dir, rdd)
-    deleteRecursively(tmp)
-    scratchRoots.remove(s"roll|$dir")
-    frame
+    }
+    stagedDrain(spark, dir, "roll",
+      shuffleParts = Some(spark.conf.get("spark.sql.shuffle.partitions").toInt),
+      sink = rollBatch) { evs =>
+      evs.select(col("event_id"), col("ts"), col("event_type"), col("value"))
+    } { outDf =>
+      outDf
+        .select("event_id", "event_type", "roll_n", "roll_median", "roll_p90")
+        .orderBy("event_id")
+    }
   }
 
   /** Attribution window for the stream-stream join: a purchase matches a
@@ -1247,11 +1129,13 @@ object StreamOps {
   private[graft] val AttributionHours = 6L
 
   /** Per-batch (batchId, inputRows, stateRows, removedRows) of the LAST
-    * drain PER TAG ("session" native windows / "sjoin" inner join /
-    * "sjoinout" outer join / "sesstws" timer sessions / "dedupwm"
-    * within-watermark dedup) — kept so StreamingSpec can ASSERT each
-    * form's state eviction separately (round-15 review: a single
-    * last-writer var made the two join drains' telemetry race). */
+    * drain PER TAG, one tag per live query ("live"/"twslive" dedup,
+    * "session" native windows, "roll" driver-carry rolling quantiles,
+    * "sjoin"/"sjoinout" inner/outer join, "sesstws" timer sessions,
+    * "rolltws" ListState ring, "dedupwm" within-watermark dedup); state
+    * columns read −1 for the stateless "roll" drain. Kept per tag so
+    * StreamingSpec can assert each form's pacing and state eviction
+    * separately. */
   private[graft] val lastDrainProgress = scala.collection.concurrent.TrieMap
     .empty[String, Seq[(Long, Long, Long, Long)]]
 
@@ -1268,9 +1152,7 @@ object StreamOps {
   /** The attribution join's two sides from a (streaming or batch) events
     * frame — views and purchases, each renamed and carrying its own
     * event-time watermark — and the join itself. ONE definition keeps the
-    * inner and outer contract forms pairwise consistent (round-15 review:
-    * the condition/sides existed as verbatim copies, the drift class the
-    * stagedTs extraction just fixed). */
+    * inner and outer contract forms pairwise consistent. */
   private def attributionSides(evs: DataFrame): (DataFrame, DataFrame) = {
     val views = evs.filter(col("event_type") === "view")
       .select(col("user_id"), col("ts").as("view_ts"), col("event_id").as("view_id"))
@@ -1300,10 +1182,8 @@ object StreamOps {
       StructField("purchase_id", LongType), StructField("delay_us", LongType)))
   }
 
-  /** LIVE watermarked STREAM-STREAM interval join (round 15 — the fourth
-    * driver-visible Structured Streaming query, and the one stateful
-    * operator class the surface lacked: state on BOTH sides of a join,
-    * evicted by watermark). View→purchase attribution: every purchase is
+  /** LIVE watermarked STREAM-STREAM interval join — state on BOTH sides
+    * of a join, evicted by watermark. View→purchase attribution: every purchase is
     * joined to the same user's views in the preceding
     * [[AttributionHours]] — the canonical event-correlation shape
     * (ad attribution, error-after-deploy, session stitching across
@@ -1359,7 +1239,7 @@ object StreamOps {
         .orderBy("user_id")
     }
 
-  /** LIVE LEFT-OUTER stream-stream interval join (round 15, with
+  /** LIVE LEFT-OUTER stream-stream interval join (with
     * [[qStreamJoinLive]]): same view→purchase attribution, but views with
     * NO purchase in their 6 h window are EMITTED TOO (null right side) —
     * the conversion-funnel shape ("which views did not convert"). The
@@ -1405,8 +1285,8 @@ object StreamOps {
         // n_rows counts EVERY emitted row (matches + null-extended), so the
         // contract is sensitive to emission MULTIPLICITY — a duplicate
         // unmatched flush, or a matched view spuriously also emitted
-        // null-extended, breaks the oracle hash (round-15 review: the
-        // null-skipping aggregates alone could not see either failure)
+        // null-extended, breaks the oracle hash (the null-skipping
+        // aggregates alone could not see either failure)
         .agg(count(lit(1)).as("n_rows"),
           count(col("purchase_id")).as("n_pairs"), // non-null = matched rows
           countDistinct(col("view_id")).as("n_views"),
@@ -1422,11 +1302,10 @@ object StreamOps {
     }
   }
 
-  /** LIVE timer-driven session windows on the MODERN stateful stack
-    * (round 16 — verdict item 1: `transformWithState` was adopted by the
-    * dedup drain but ran `TimeMode.None`, leaving the API's
-    * distinguishing mechanism — event-time TIMERS — unexercised): the
-    * same gap-and-island sessions as [[qSessionWindowLive]], but computed
+  /** LIVE timer-driven session windows on the MODERN stateful stack —
+    * the transformWithState drain that exercises the API's distinguishing
+    * mechanism, event-time TIMERS (the dedup drain runs `TimeMode.None`):
+    * the same gap-and-island sessions as [[qSessionWindowLive]], but computed
     * by [[SessionTimerProcessor]] under `TimeMode.EventTime` on the
     * ROCKSDB provider — sessions EXTEND/CLOSE inline per event, and the
     * tail closes when each user's registered timer fires as the
@@ -1441,7 +1320,7 @@ object StreamOps {
     *
     * The output is exactly the batch gap-and-island result —
     * `q_session_window`'s oracle verbatim (the sum rides exact
-    * micros-longs, the SessionSumStateLong convention) — so this query
+    * micros-longs, as in [[qSessionWindowLive]]) — so this query
     * hash-proves registerTimer/deleteTimer/handleExpiredTimer END-TO-END
     * under the driver's gate, not only in specs.
     *
@@ -1453,21 +1332,18 @@ object StreamOps {
   def qSessionTwsLive(spark: SparkSession, dir: String): DataFrame = {
     val sentinelUs = corpusMaxUs(spark, dir) +
       10 * graft.operators.PipelineOps.SessionGapUs
-    val dec6 = org.apache.spark.sql.types.DecimalType(38, 6)
     stagedDrain(spark, dir, "sesstws",
       // the sentinel needs a real `value` (0.0): SessEvent.value_us is a
       // primitive long and a null would fail the encoder, not the filter
       sentinels = schema =>
         Seq(sentinelRow(schema, sentinelUs, Map("value" -> 0.0))),
       // transformWithState runs only on the RocksDB provider
-      provider = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") { evs0 =>
+      provider = RocksDbProvider) { evs0 =>
       val ss = evs0.sparkSession
       import ss.implicits._
       evs0
         .select(col("user_id"), col("ts"),
-          // exact micros-longs for the state sum (SessionSumStateLong
-          // convention: round to 6 decimals in decimal space FIRST)
-          (col("value").cast(dec6) * lit(1000000)).cast("long").as("value_us"))
+          graft.operators.Decimals.micros(col("value")).as("value_us"))
         .withWatermark("ts", "0 seconds")
         .as[SessEvent]
         .groupByKey(_.user_id)
@@ -1483,9 +1359,8 @@ object StreamOps {
     }
   }
 
-  /** LIVE rolling quantiles on the LIST state variable (round 17 —
-    * verdict item 4: [[RollingRingProcessor]] proved emission-equal in
-    * specs but never ran under the driver's gate): the same exact
+  /** LIVE rolling quantiles on the LIST state variable
+    * ([[RollingRingProcessor]], spec-proved emission-equal): the same exact
     * trailing-20 median/p90 per event_type as [[qRollingQuantileLive]],
     * but the ring of the last RollRows−1 rows per key lives in an ordered
     * LISTSTATE slot on the ROCKSDB provider, maintained by
@@ -1513,13 +1388,11 @@ object StreamOps {
     * path, and a live deployment re-frames per (key, shard). */
   def qRollingTwsLive(spark: SparkSession, dir: String): DataFrame = {
     stagedDrain(spark, dir, "rolltws",
-      provider = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") { evs =>
+      provider = RocksDbProvider) { evs =>
       val ss = evs.sparkSession
       import ss.implicits._
-      // ONE wiring shared with the spec-proved form (round-17 review:
-      // re-declaring the groupByKey + transformWithState chain here made
-      // the oracle-gated drain and the multiset-equality spec's subject
-      // two hand-maintained copies — the rollFold consolidation hazard)
+      // ONE wiring shared with the spec-proved form, so the oracle-gated
+      // drain and the multiset-equality spec's subject cannot drift
       rollingQuantileStreamTws(
         evs.select(col("event_id"), col("ts"), col("event_type"), col("value"))
           .as[RollEvent])
@@ -1534,10 +1407,8 @@ object StreamOps {
     * the dedup retention (state expiry = event time + delay). */
   private[graft] val DedupEpochUs = 2L * 3600 * 1000000
 
-  /** LIVE `dropDuplicatesWithinWatermark` (round 16 — verdict item 2:
-    * the bounded-state exact dedup an UNBOUNDED key space actually runs
-    * was spec-only, unlike every other streaming op on the contract
-    * surface): heartbeat-style dedup of (user_id, event_type) to one
+  /** LIVE `dropDuplicatesWithinWatermark` — the bounded-state exact
+    * dedup an UNBOUNDED key space actually runs: heartbeat-style dedup of (user_id, event_type) to one
     * emission per 2-hour epoch. The dedup key is (user_id, event_type,
     * epoch_id) with epoch_id = floor(event µs / 2 h), under a 2-hour
     * watermark delay: a key's state expires at its first-arrival time

@@ -38,21 +38,26 @@ class ApproxSpec extends SparkSpec {
   }
 
   test("stats power sums: split-long lanes are bit-identical to the Decimal(38,6) sums") {
-    // round 16 (verdict item 4's "cheap exactness-preserving long path"):
     // the five power sums ride (div 1e9, mod 1e9) primitive-long lanes;
     // the reassembled group totals — and thus every derived var/stddev/
     // covar/corr double — must equal the direct decimal sums on every
-    // row, BITWISE (both paths round each addend to the same HALF_UP
-    // 6-decimal value; the lane split is an exact integer identity)
-    val prev = Relational3.StatsSumSplitLong
-    try {
-      Relational3.StatsSumSplitLong = true
-      val split = Relational3.qStatsAgg(spark, sf).collect().map(_.toSeq).toSeq
-      Relational3.StatsSumSplitLong = false
-      val dec = Relational3.qStatsAgg(spark, sf).collect().map(_.toSeq).toSeq
-      assert(split.nonEmpty && split == dec,
-        s"split-long and decimal stats must match bitwise:\n$split\nvs\n$dec")
-    } finally Relational3.StatsSumSplitLong = prev
+    // row, BITWISE (both round each addend to the same HALF_UP 6-decimal
+    // value; the lane split is an exact integer identity)
+    import org.apache.spark.sql.functions._
+    import Decimals.dsum
+    val li = graft.Tables.lineitem(spark, sf)
+    val q = col("l_quantity")
+    val p = col("l_extendedprice")
+    val split = Relational3.statsPowerSums(li)
+      .orderBy("l_returnflag").collect().map(_.toSeq).toSeq
+    val dec = li.groupBy("l_returnflag")
+      .agg(count(lit(1)).as("n"),
+        dsum(q).as("sq"), dsum(q * q).as("sqq"),
+        dsum(p).as("sp"), dsum(p * p).as("spp"),
+        dsum(q * p).as("sqp"))
+      .orderBy("l_returnflag").collect().map(_.toSeq).toSeq
+    assert(split.nonEmpty && split == dec,
+      s"split-long and decimal power sums must match bitwise:\n$split\nvs\n$dec")
   }
 
   test("split-lane addend cap is ENFORCED: 1e11 units raises, just under passes") {
@@ -63,11 +68,11 @@ class ApproxSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val ok = Seq(math.pow(10, 11) - 1, -(math.pow(10, 11) - 1)).toDF("a")
-      .select(Relational3.splitDsumUs(col("a"), "a")).collect()
+      .select(Decimals.splitDsumUs(col("a"), "a")).collect()
     assert(ok.map(_.getLong(0)).forall(v => math.abs(v) > 0))
     val boom = intercept[Exception] {
       Seq(math.pow(10, 11) + 1e6).toDF("a")
-        .select(Relational3.splitDsumUs(col("a"), "a")).collect()
+        .select(Decimals.splitDsumUs(col("a"), "a")).collect()
     }
     def rootMsg(t: Throwable): String = {
       var c: Throwable = t

@@ -342,6 +342,8 @@ class StreamingSpec extends SparkSpec {
       val rollBatch = graft.operators.EventOps.qRollingQuantile(spark, sf).collect().map(_.toSeq).toSeq
       assert(rollLive.size == rollBatch.size && rollLive == rollBatch,
         "paced rolling quantiles must equal the batch window exactly")
+      val rollProg = StreamOps.lastDrainProgress("roll")
+      assert(rollProg.count(_._2 > 0) >= 3, s"pacing must yield >= 3 data batches: $rollProg")
       val sessLive = StreamOps.qSessionWindowLive(spark, sf).collect().map(_.toSeq).toSeq
       val sessBatch = graft.operators.PipelineOps.qSessionWindow(spark, sf).collect().map(_.toSeq).toSeq
       assert(sessLive.size == sessBatch.size && sessLive == sessBatch,
@@ -349,27 +351,32 @@ class StreamingSpec extends SparkSpec {
     } finally StreamOps.PaceRowsPerBatch = prev
   }
 
-  test("session sum's long-micros state shape is bit-identical to the Decimal(38,6) shape") {
-    // Round-13 adoption (SessAB A/B, verdict item 6): the sum rides the
-    // state store as an 8-byte long of exact micros instead of a 16-byte
-    // slow-path Decimal(38,6). Both shapes round each value HALF_UP to 6
-    // decimals BEFORE summing, and the micros stay far under 2^53, so the
-    // final doubles must be bitwise equal on every row — pinned here
-    // end-to-end through the paced multi-batch drain, not just argued.
-    val prevPace = StreamOps.PaceRowsPerBatch
-    val prevSum = StreamOps.SessionSumStateLong
+  test("paced dedup drains (both state APIs) equal the batch per-key duplicate counts") {
+    // K≈10 paced micro-batches over the staged copy: each key's
+    // suppressed-copy counter is monotone across Update-mode emissions,
+    // so both state APIs must land on count - 1 per (user, type) under
+    // any batch split
+    import org.apache.spark.sql.functions._
+    val batch = graft.Tables.events(spark, sf)
+      .groupBy("user_id", "event_type")
+      .agg((count(lit(1)) - 1).as("n_duplicates"))
+      .orderBy("user_id", "event_type")
+      .collect().map(_.toSeq).toSeq
+    assert(batch.exists(_(2).asInstanceOf[Long] > 0),
+      "fixture must have at least one duplicated (user, type) key")
+    val prev = StreamOps.PaceRowsPerBatch
     try {
       StreamOps.PaceRowsPerBatch = 100
-      StreamOps.SessionSumStateLong = true
-      val longRows = StreamOps.qSessionWindowLive(spark, sf).collect().map(_.toSeq).toSeq
-      StreamOps.SessionSumStateLong = false
-      val decRows = StreamOps.qSessionWindowLive(spark, sf).collect().map(_.toSeq).toSeq
-      assert(longRows.size == decRows.size && longRows == decRows,
-        "long-micros and Decimal(38,6) session sums must match on every row")
-    } finally {
-      StreamOps.PaceRowsPerBatch = prevPace
-      StreamOps.SessionSumStateLong = prevSum
-    }
+      for ((tag, q) <- Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+          org.apache.spark.sql.DataFrame)](
+          "live" -> StreamOps.qStreamDedupLive, "twslive" -> StreamOps.qStreamDedupTwsLive)) {
+        val live = q(spark, sf).collect().map(_.toSeq).toSeq
+        assert(live.size == batch.size && live == batch,
+          s"[$tag] paced dedup counts must equal the batch per-key count - 1")
+        val prog = StreamOps.lastDrainProgress(tag)
+        assert(prog.count(_._2 > 0) >= 3, s"[$tag] pacing must yield >= 3 data batches: $prog")
+      }
+    } finally StreamOps.PaceRowsPerBatch = prev
   }
 
   test("pace and state-partition derivations are pinned (round 10)") {
