@@ -32,8 +32,8 @@ object Pipeline {
 
   /** Full pipeline with per-stage wall-clock timings (O16). Returns
     * (tokenized row count, stage timings in seconds). Boundary `mode`:
-    * "select" (exact, default), "gk" (Greenwald-Khanna sketch), "sample"
-    * (single-pass DKW-bounded sampling — the fast approximate path). */
+    * "select" (exact, default) or "sample" (single-pass DKW-bounded
+    * sampling — the fast approximate path). */
   /** `sink = true` persists tokens to parquet (the full-pipeline shape);
     * `sink = false` materializes every token through the noop sink without
     * writing — the REFERENCE-PARITY shape: etl_benchmark.py:66-81 computes
@@ -76,14 +76,8 @@ object Pipeline {
     }
     val tokenCols = df.columns.toSeq
     val bounds = stage("boundaries") {
-      mode match {
-        case "gk" => Tokenize.quantileBoundsApprox(df, tokenCols, Tokenize.innerProbs(bins))
-        case "sample" => Tokenize.quantileBoundsSample(df, tokenCols, Tokenize.innerProbs(bins))
-        case "sample25" => // i.i.d.-layout fast path: scan 1/4 of partitions
-          Tokenize.quantileBoundsSample(df, tokenCols, Tokenize.innerProbs(bins),
-            partitionFraction = 0.25)
-        case _ => Tokenize.quantileBoundsSelect(df, tokenCols, Tokenize.innerProbs(bins))
-      }
+      if (mode == "sample") Tokenize.quantileBoundsSample(df, tokenCols, Tokenize.innerProbs(bins))
+      else Tokenize.quantileBoundsSelect(df, tokenCols, Tokenize.innerProbs(bins))
     }
     val n = stage(if (sink) "tokenize+sink" else "tokenize") {
       val tokens = tokenCols.map(c => Tokenize.discretize(col(c), bounds(c), bins).as(s"${c}_token"))

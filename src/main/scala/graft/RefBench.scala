@@ -1,9 +1,10 @@
 package graft
 /** Reference-scale pipeline benchmark (the reference's own workload:
   * 10M rows x 20 cols, 100 bins — /root/reference/etl_benchmark.py:10-11).
-  * `tools/run.sh graft.RefBench [approx]` prints per-stage timings for the
-  * exact (selection-based, Tokenize.quantileBoundsSelect) or approximate
-  * (Greenwald-Khanna) boundary path. */
+  * `tools/run.sh graft.RefBench [select|sample][-nosink] [rows] [cols]`
+  * prints per-stage timings for the exact (selection-based,
+  * Tokenize.quantileBoundsSelect) or the sampled (DKW-bounded,
+  * Tokenize.quantileBoundsSample) boundary path. */
 object RefBench {
   def main(args: Array[String]): Unit = {
     val spark = Sessions.local()
@@ -13,12 +14,7 @@ object RefBench {
     // (etl_benchmark.py computes tokenized_data in memory only)
     val raw = args.headOption.getOrElse("select")
     val sink = !(raw.endsWith("-nosink") || raw == "nosink")
-    val mode = raw.stripSuffix("-nosink").stripSuffix("nosink") match {
-      case "approx" | "gk" => "gk"
-      case "sample" => "sample"
-      case "sample25" => "sample25"
-      case _ => "select"
-    }
+    val mode = if (raw.stripSuffix("-nosink") == "sample") "sample" else "select"
     // optional scale override (round-18 verdict item 5: the reference
     // workload one decade up — 100 M x 20 ≈ 16 GB — proves the
     // selection-boundary two-scan term and the tokenize throughput stay

@@ -3,40 +3,39 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.BucketizeExpr
-
 /** Exact per-group order statistics WITHOUT per-group total sorts.
   *
   * The naive distributed plan for "median price per return flag" is a
   * window partitioned by the group key — but a LOW-cardinality key (3
   * flags) shuffles the whole fact table into 3 partitions and fully sorts
-  * each on one task: correct, and a scale-killer at 100x. This is
-  * [[Tokenize.quantileBoundsSelect]]'s selection machinery generalized to a
-  * group key instead of a column set:
+  * each on one task: correct, and a scale-killer at 100x. Here a group's
+  * order statistics are the per-column order statistics of
+  * `when(group = key, value)`, so the per-group quantiles ride the same
+  * columnar selection as the quantile boundaries
+  * ([[Tokenize.selectRanks]]):
   *
-  *  1. one aggregation for per-group non-null counts (groups must be
-  *     FEW — the usual shape of an analytical quantile report; the result
-  *     is collected);
-  *  2. a sample picks per-group value split points;
-  *  3. ONE treeAggregate scan bucket-counts every (group, bucket) into a
-  *     flat array — map-side combined by construction;
-  *  4. a second scan gathers ONLY candidate-bucket values (≈ |ranks| x
-  *     n_g/B rows per group), sorted per bucket, needed offsets emitted.
+  *  1. one aggregation collects every group's key, non-null value count,
+  *     NaN count and row count, and fails with the column named on a null
+  *     key or a NaN value before any selection job or broadcast runs;
+  *  2. the selection runs over one column per group key — small inputs
+  *     are collected and sorted on the driver, larger ones take the
+  *     sample / histogram / gather jobs, which gather only the values in
+  *     the buckets that hold a needed rank.
   *
   * Ranks are 0-based positions in the group's value order; ties make the
   * position's VALUE well-defined regardless of any tiebreak, which is why
   * rank-selection queries (percentile_disc, median) need no composite keys.
   * NaN unsupported; null values ignored (they get no rank).
   *
-  * Choosing the plan by group cardinality: this selection shape wins when
-  * groups are FEW relative to rows (each group would otherwise be a
-  * single-task sort of ~|rows|/|groups| records — the q_group_median
-  * shape, 3 groups over the fact table). When the key is HIGH-cardinality
-  * (|groups| ≈ |rows| / small constant), a window partitioned by the key
-  * is already well-parallelized and is the right plan — that is the
-  * q_window_dist shape (per-customer partitions of ~10 rows). Rule of
-  * thumb: selection when |rows|/|groups| dwarfs a task's comfortable sort
-  * size AND the per-group count table fits the driver; window otherwise.
+  * Groups must be FEW: each is one selection column, so every row
+  * evaluates one `when` per group in each job, and the flat histogram
+  * holds up to `numBuckets` counts per group. This shape wins when
+  * |rows|/|groups| dwarfs a task's comfortable sort size — the
+  * q_group_median shape, 3 groups over the fact table, where each group
+  * would otherwise be a single-task sort. A HIGH-cardinality key
+  * (|groups| ≈ |rows| / small constant) takes a window partitioned by the
+  * key, which is already well-parallelized — the q_window_dist shape
+  * (per-customer partitions of ~10 rows).
   */
 object GroupedQuantiles {
 
@@ -45,122 +44,25 @@ object GroupedQuantiles {
   def selectByRank(df: DataFrame, groupCol: String, valueCol: String,
                    ranksOf: Long => Seq[Long],
                    numBuckets: Int = 8192, sampleSize: Int = 100000,
-                   maxCollect: Long = 64000000L): Map[Any, (Long, Map[Long, Double])] = {
-    val sc = df.sparkSession.sparkContext
-    val proj = df.select(col(groupCol), col(valueCol).cast("double"))
-    val counts: Array[(Any, Long)] = {
-      val raw = proj
-        .groupBy(col(groupCol)).agg(count(col(valueCol)).as("__n"))
-        .collect().map(r => (r.get(0), r.getLong(1)))
-      require(raw.forall(_._1 != null),
-        s"selectByRank: null group key in '$groupCol' — filter null keys or coalesce them to a sentinel first")
-      raw.sortBy(_._1.toString)
+                   maxCollect: Long = 64000000L,
+                   smallCollect: Long = 1000000L): Map[Any, (Long, Map[Long, Double])] = {
+    val v = col(valueCol).cast("double")
+    val groups = df.groupBy(col(groupCol))
+      .agg(count(v), count(when(isnan(v), 1)), count(lit(1))).collect()
+    require(groups.forall(!_.isNullAt(0)),
+      s"selectByRank: null group key in '$groupCol' — filter null keys or coalesce them to a sentinel first")
+    val nan = groups.map(_.getLong(2)).sum
+    require(nan == 0,
+      s"selectByRank: $nan NaN values in '$valueCol' — NaN has no rank; filter first")
+    groups.foreach { g =>
+      val n = g.getLong(1)
+      require(ranksOf(n).forall(p => p >= 0 && p < n), s"rank out of range for group ${g.get(0)} (n=$n)")
     }
-    val g = counts.length
-    val gIdx: Map[Any, Int] = counts.map(_._1).zipWithIndex.toMap
-    val positions: Array[Array[Long]] =
-      counts.map { case (_, n) => ranksOf(n).distinct.sorted.toArray }
-    positions.zip(counts).foreach { case (ps, (key, n)) =>
-      require(ps.forall(p => p >= 0 && p < n), s"rank out of range for group $key (n=$n)")
-    }
-    val total = counts.map(_._2).sum
-    val frac = math.min(1.0, sampleSize.toDouble / math.max(1, total))
-    val sampleRows = proj.sample(withReplacement = false, frac, seed = 42).collect()
-    val splits: Array[Array[Double]] = Array.tabulate(g) { gi =>
-      val vs = sampleRows.iterator
-        .filter(r => !r.isNullAt(0) && gIdx.get(r.get(0)).contains(gi) && !r.isNullAt(1))
-        .map(_.getDouble(1)).toArray
-      java.util.Arrays.sort(vs)
-      if (vs.isEmpty) Array.empty[Double]
-      else {
-        val b = math.min(numBuckets, vs.length)
-        (1 until b).iterator
-          .map(i => vs(((i.toLong * vs.length) / b).toInt.min(vs.length - 1)))
-          .toArray.distinct
-      }
-    }
-    val nb: Array[Int] = splits.map(_.length + 1)
-    val flatOff: Array[Int] = nb.scanLeft(0)(_ + _)
-    val splitsB = sc.broadcast(splits)
-    val gIdxB = sc.broadcast(gIdx)
-    // last slot counts NaN values (scaladoc: NaN unsupported) so a bad
-    // upstream fails with a descriptive message, not silently wrong ranks
-    val histAll: Array[Long] = proj.rdd.treeAggregate(new Array[Long](flatOff(g) + 1))(
-      seqOp = (acc, row) => {
-        if (!row.isNullAt(1)) {
-          val v = row.getDouble(1)
-          if (v != v) acc(acc.length - 1) += 1
-          else gIdxB.value.get(row.get(0)).foreach { gi =>
-            val b = BucketizeExpr.search(splitsB.value(gi), v, Int.MaxValue)
-            acc(flatOff(gi) + b) += 1
-          }
-        }
-        acc
-      },
-      combOp = (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a })
-    require(histAll.last == 0,
-      s"selectByRank: ${histAll.last} NaN values in '$valueCol' — NaN has no rank; filter first")
-    val hist = histAll
-    val cums: Array[Array[Long]] = Array.tabulate(g) { gi =>
-      val cum = new Array[Long](nb(gi) + 1)
-      (0 until nb(gi)).foreach(b => cum(b + 1) = cum(b) + hist(flatOff(gi) + b))
-      cum
-    }
-    val neededOffsets: Array[Map[Int, Array[Long]]] = Array.tabulate(g) { gi =>
-      val cum = cums(gi)
-      positions(gi).toSeq.groupBy { p =>
-        java.util.Arrays.binarySearch(cum, p) match {
-          case i if i >= 0 =>
-            var j = i; while (j < nb(gi) && cum(j + 1) == cum(j)) j += 1; j
-          case i => -i - 2
-        }
-      }.map { case (b, ps) => b -> ps.map(_ - cum(b)).toArray }
-    }
-    val neededBuckets: Array[Array[Int]] = neededOffsets.map(_.keys.toArray.sorted)
-    val candVolume: Long = (0 until g).map { gi =>
-      neededBuckets(gi).map(b => hist(flatOff(gi) + b)).sum
-    }.sum
-    val neededBkB = sc.broadcast(neededBuckets)
-    val cand = proj.rdd.mapPartitions { it =>
-      val sp = splitsB.value
-      val gix = gIdxB.value
-      val nbk = neededBkB.value
-      it.flatMap { row =>
-        if (row.isNullAt(1)) Iterator.empty
-        else gix.get(row.get(0)).iterator.flatMap { gi =>
-          val v = row.getDouble(1)
-          val b = BucketizeExpr.search(sp(gi), v, Int.MaxValue)
-          if (java.util.Arrays.binarySearch(nbk(gi), b) >= 0) Iterator.single((gi, b, v))
-          else Iterator.empty
-        }
-      }
-    }
-    val picked: Map[(Int, Int, Long), Double] =
-      if (candVolume <= maxCollect) {
-        cand.collect().groupBy(t => (t._1, t._2)).flatMap { case ((gi, b), ts) =>
-          val arr = ts.map(_._3)
-          java.util.Arrays.sort(arr)
-          neededOffsets(gi)(b).map(off => (gi, b, off) -> arr(off.toInt))
-        }
-      } else {
-        val neededOffB = sc.broadcast(neededOffsets)
-        val r = cand.groupBy(t => (t._1, t._2)).flatMap { case ((gi, b), ts) =>
-          val arr = ts.iterator.map(_._3).toArray
-          java.util.Arrays.sort(arr)
-          neededOffB.value(gi)(b).iterator.map(off => ((gi, b, off), arr(off.toInt)))
-        }.collect().toMap
-        neededOffB.destroy()
-        r
-      }
-    splitsB.destroy()
-    gIdxB.destroy()
-    neededBkB.destroy()
-    counts.zipWithIndex.map { case ((key, n), gi) =>
-      val cum = cums(gi)
-      val byGlobal: Map[Long, Double] = neededOffsets(gi).toSeq.flatMap { case (b, offs) =>
-        offs.map(off => (cum(b) + off) -> picked((gi, b, off)))
-      }.toMap
-      key -> (n, byGlobal)
-    }.toMap
+    val keys = groups.map(_.get(0))
+    val proj = df.select(keys.indices.map(gi =>
+      when(col(groupCol) === lit(keys(gi)), v).as(s"g$gi")): _*)
+    val sel = Tokenize.selectRanks(proj, groups.map(_.getLong(3)).sum, (_, n) => ranksOf(n),
+      numBuckets, sampleSize, maxCollect, smallCollect)
+    keys.zip(sel).toMap
   }
 }

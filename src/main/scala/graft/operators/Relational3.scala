@@ -259,16 +259,12 @@ object Relational3 {
     def build() = {
       val li = Tables.lineitem(spark, dir)
       val ps = Seq(0.498, 0.502)
-      // Round-13 verdict item 5 (the ~8.6 s first-invocation build at
-      // 100×): the two terms — selectByRank's iterative histogram passes
-      // (driver-blocking between passes, so the cluster idles while the
-      // driver narrows brackets) and the one-shot two-level distinct —
-      // are INDEPENDENT jobs over the same scan. Submitting the distinct
-      // from its own thread overlaps it with the bracket iterations
-      // (Spark schedules concurrent jobs from one session; the shared
-      // parquet scan rides the page cache), so the build wall tends to
-      // max(brackets, distinct) instead of their sum (the build's measured
-      // floor is recorded in SURVEY §2D).
+      // The two terms — selectByRank's selection jobs (driver-blocking
+      // between jobs) and the one-shot two-level distinct — are
+      // INDEPENDENT jobs over the same scan. Submitting the distinct from
+      // its own thread overlaps them (Spark schedules concurrent jobs from
+      // one session), so the build wall tends to max(brackets, distinct)
+      // instead of their sum (measured floor: SURVEY §2D).
       val exactF = scala.concurrent.Future {
         li.select(col("l_returnflag"), col("l_partkey"))
           .filter(col("l_partkey").isNotNull && col("l_returnflag").isNotNull)

@@ -1,9 +1,7 @@
 package graft.operators
 
 import scala.collection.mutable
-import scala.reflect.ClassTag
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -32,11 +30,9 @@ import graft.functions.{BucketizeExpr, BucketizeGrid}
   *     (etl_benchmark.py:74 quantile; :79 bucketize; :82 clamp):
   *      - phase 1 computes per-column boundary vectors: exact via
   *        selection (`quantileBoundsSelect`) or distributed sort
-  *        (`quantileBoundsExact`); approximate via single-pass sampling
-  *        with a DKW rank bound (`quantileBoundsSample` — the fast path) or
-  *        the Greenwald-Khanna sketch (`quantileBoundsApprox` —
-  *        deterministic bound) — either way cols × bins doubles, trivially
-  *        collectable;
+  *        (`quantileBoundsExact`), or approximate via single-pass sampling
+  *        with a DKW rank bound (`quantileBoundsSample` — the fast path) —
+  *        either way cols × bins doubles, trivially collectable;
   *      - phase 2 folds the boundaries into the plan as a constant and
   *        discretizes '''map-only''' with the codegen'd binary-search
   *        expression [[graft.functions.BucketizeExpr]] (both closure
@@ -51,6 +47,13 @@ import graft.functions.{BucketizeExpr, BucketizeGrid}
   * same NaN-last order is what every boundary path implements — see
   * [[quantileBoundsSelect]] — so a NaN-bearing column tokenizes exactly as
   * if sorted by Spark and cut at the same ranks.
+  *
+  * One selection core serves the exact paths: `quantileBoundsSelect` (on
+  * its rank level, `selectRanks`, which [[GroupedQuantiles]] shares) and
+  * `tokenizeRankSelect` each run their own sample / histogram / gather
+  * jobs over their own row form, and share the driver-side bookkeeping —
+  * rank location, gather slots, the collect-or-`reduceByKey` pick and the
+  * broadcasts' lifetime — in [[RankSelection]].
   */
 object Tokenize {
   val DefaultBins = 100
@@ -119,10 +122,8 @@ object Tokenize {
     // unconverted scan for the aggregation passes: primitive getDouble on
     // unsafe rows — no Row boxing (measured ~2x on the two passes)
     val internal = proj.queryExecution.toRdd
-    val tRank0 = System.nanoTime()
     val n = df.count() // parquet metadata count — no column scan
     require(n > 0, "tokenizeRankSelect: empty input")
-    val tCount = devPhase("rank", "count", tRank0)
     // 0-based global position of the first row of NTILE buckets 1..bins-1
     val base = n / bins
     val extra = n % bins
@@ -141,11 +142,10 @@ object Tokenize {
     // buckets because the tiebreak participates in the comparison)
     val frac = math.min(1.0, sampleSize.toDouble / n)
     val sampleRows = proj.sample(withReplacement = false, frac, seed = 42).collect()
-    val tSample = devPhase("rank", "sample", tCount)
     // the sample is the FIRST thing to touch the data, so it is also the
     // first place a null/NaN precondition violation can surface — fail here
-    // with the column name, not an opaque NPE inside keyOf (the full-data
-    // check is the pass-1 histogram's null/NaN slots below)
+    // with the column name, not an opaque NPE in the key build below (the
+    // full-data check is the pass-1 histogram's null/NaN slots)
     sampleRows.foreach { row =>
       var f = 0
       while (f < m - 1) {
@@ -157,14 +157,8 @@ object Tokenize {
         f += 1
       }
     }
-    def keyOf(row: org.apache.spark.sql.Row, ci: Int): Array[Double] = {
-      val out = new Array[Double](m)
-      var f = 0
-      while (f < m) { out(f) = row.getDouble(keyIdx(ci)(f)); f += 1 }
-      out
-    }
     val splits: Array[Array[Double]] = Array.tabulate(k) { ci =>
-      val keys = sampleRows.map(keyOf(_, ci))
+      val keys = sampleRows.map(row => keyIdx(ci).map(row.getDouble))
       java.util.Arrays.sort(keys, lexOrd)
       val b = math.max(1, math.min(numBuckets, keys.length))
       val flat = new Array[Double]((b - 1) * m)
@@ -174,168 +168,98 @@ object Tokenize {
       }
       flat
     }
-    val nb: Array[Int] = splits.map(_.length / m + 1)
-    val flatOff: Array[Int] = nb.scanLeft(0)(_ + _)
-    val splitsB = sc.broadcast(splits)
-    val keyIdxB = sc.broadcast(keyIdx)
-    // grid-bracketed lex search (round 11: the same surgery BucketizeGrid does
-    // for quantileBoundsSelect, lifted to composite keys — the plain
-    // search walked ~13 scattered cache lines of a ~450 KB split matrix
-    // per (row, col) in BOTH passes below)
-    val gidxB = sc.broadcast(splits.map(f =>
-      new VectorBucketizeExpr.CompositeGridIndex(f, m)))
-    // pass 1: flat (col, bucket) histogram — one treeAggregate scan, one
-    // composite binary search + one increment per (row, col). The last two
-    // slots count rows with a null / NaN sort field (precondition
-    // violations -> loud, with a name, over the FULL data).
-    // (round 11: mapPartitions + partition-local accumulator, hoisting
-    // the broadcast reads and per-element closure dispatch out of the
-    // row loop — same shape as the scalar histogram pass)
-    val histAll: Array[Long] = internal.mapPartitions { it =>
-      val sp = splitsB.value
-      val ki = keyIdxB.value
-      val gx = gidxB.value
-      val off = flatOff
-      val acc = new Array[Long](off(k) + 2)
-      while (it.hasNext) {
-        val row = it.next()
-        var f = 0
-        var hasNull = false
-        var hasNaN = false
-        while (f < m - 1) {
-          if (row.isNullAt(f)) hasNull = true
-          else { val v = row.getDouble(f); if (v != v) hasNaN = true }
-          f += 1
+    val flatOff: Array[Int] = splits.map(_.length / m + 1).scanLeft(0)(_ + _)
+    val thresholds: Array[Map[Long, Array[Double]]] = RankSelection.withBroadcasts(sc) { bc =>
+      val splitsB = bc(splits)
+      val keyIdxB = bc(keyIdx)
+      // grid-bracketed lex search (round 11: the same surgery BucketizeGrid does
+      // for quantileBoundsSelect, lifted to composite keys — the plain
+      // search walked ~13 scattered cache lines of a ~450 KB split matrix
+      // per (row, col) in BOTH passes below)
+      val gidxB = bc(splits.map(f => new VectorBucketizeExpr.CompositeGridIndex(f, m)))
+      // pass 1: flat (col, bucket) histogram — one composite binary search +
+      // one increment per (row, col) into a partition-local array. The last
+      // two slots count rows with a null / NaN sort field (precondition
+      // violations -> loud, with a name, over the FULL data).
+      val hist: Array[Long] = internal.mapPartitions { it =>
+        val sp = splitsB.value
+        val ki = keyIdxB.value
+        val gx = gidxB.value
+        val off = flatOff
+        val acc = new Array[Long](off(k) + 2)
+        while (it.hasNext) {
+          val row = it.next()
+          var f = 0
+          var hasNull = false
+          var hasNaN = false
+          while (f < m - 1) {
+            if (row.isNullAt(f)) hasNull = true
+            else { val v = row.getDouble(f); if (v != v) hasNaN = true }
+            f += 1
+          }
+          if (hasNull) acc(acc.length - 2) += 1
+          else if (hasNaN) acc(acc.length - 1) += 1
+          else {
+            var ci = 0
+            while (ci < k) {
+              val br = gx(ci).bracket(row.getDouble(ki(ci)(0)))
+              acc(off(ci) + VectorBucketizeExpr.searchRowIn(
+                sp(ci), m, row, ki(ci), (br >>> 32).toInt, br.toInt)) += 1
+              ci += 1
+            }
+          }
         }
-        if (hasNull) acc(acc.length - 2) += 1
-        else if (hasNaN) acc(acc.length - 1) += 1
-        else {
+        Iterator.single(acc)
+      }.treeReduce { (a, b) =>
+        var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
+      }
+      require(hist(hist.length - 2) == 0,
+        s"tokenizeRankSelect: ${hist(hist.length - 2)} rows have null sort columns")
+      require(hist.last == 0,
+        s"tokenizeRankSelect: ${hist.last} rows have NaN sort columns — binary search and Spark sort order disagree on NaN")
+      val loc = new RankSelection.Located(hist, flatOff, (_, _) => positions.toSeq)
+      val slotB = bc(loc.slots)
+      // pass 2: gather ONLY boundary-bucket rows' composite keys, as
+      // per-partition ref builders keyed by (col, slot); allocates only per
+      // CANDIDATE (the m-double key)
+      val cand = internal.mapPartitions { it =>
+        val sp = splitsB.value
+        val ki = keyIdxB.value
+        val gx = gidxB.value
+        val so = slotB.value
+        val bufs = Array.tabulate(k)(ci => Array.fill(so(ci).count(_ >= 0))(
+          new mutable.ArrayBuilder.ofRef[Array[Double]]))
+        while (it.hasNext) {
+          val row = it.next()
           var ci = 0
           while (ci < k) {
             val br = gx(ci).bracket(row.getDouble(ki(ci)(0)))
-            acc(off(ci) + VectorBucketizeExpr.searchRowIn(
-              sp(ci), m, row, ki(ci), (br >>> 32).toInt, br.toInt)) += 1
+            val b = VectorBucketizeExpr.searchRowIn(
+              sp(ci), m, row, ki(ci), (br >>> 32).toInt, br.toInt)
+            val j = so(ci)(b)
+            if (j >= 0) {
+              val key = new Array[Double](m)
+              var f = 0
+              while (f < m) { key(f) = row.getDouble(ki(ci)(f)); f += 1 }
+              bufs(ci)(j) += key
+            }
             ci += 1
           }
         }
+        Iterator.range(0, k).flatMap(ci =>
+          bufs(ci).indices.iterator
+            .map(j => ((ci, j), bufs(ci)(j).result()))
+            .filter(_._2.nonEmpty))
       }
-      Iterator.single(acc)
-    }.treeReduce { (a, b) =>
-      var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-    }
-    val tHist = devPhase("rank", "hist", tSample)
-    require(histAll(histAll.length - 2) == 0,
-      s"tokenizeRankSelect: ${histAll(histAll.length - 2)} rows have null sort columns")
-    require(histAll.last == 0,
-      s"tokenizeRankSelect: ${histAll.last} rows have NaN sort columns — binary search and Spark sort order disagree on NaN")
-    val hist = histAll
-    // cumulative counts -> (bucket, in-bucket offset) for every position
-    val cums: Array[Array[Long]] = Array.tabulate(k) { ci =>
-      val cum = new Array[Long](nb(ci) + 1)
-      (0 until nb(ci)).foreach(b => cum(b + 1) = cum(b) + hist(flatOff(ci) + b))
-      cum
-    }
-    val neededOffsets: Array[Map[Int, Array[Long]]] = Array.tabulate(k) { ci =>
-      val cum = cums(ci)
-      positions.toSeq.groupBy { p =>
-        java.util.Arrays.binarySearch(cum, p) match {
-          case i if i >= 0 =>
-            var j = i; while (j < nb(ci) && cum(j + 1) == cum(j)) j += 1; j
-          case i => -i - 2
-        }
-      }.map { case (b, ps) => b -> ps.map(_ - cum(b)).toArray }
-    }
-    val neededBuckets: Array[Array[Int]] = neededOffsets.map(_.keys.toArray.sorted)
-    val candVolume: Long = (0 until k).map { ci =>
-      neededBuckets(ci).map(b => hist(flatOff(ci) + b)).sum
-    }.sum
-    val neededBkB = sc.broadcast(neededBuckets)
-    // O(1) membership for the gather pass: bucket -> candidate slot
-    // (round 11; the old per-row binarySearch over neededBuckets paid
-    // log(|positions|) probes per (row, col))
-    val slotOf: Array[Array[Int]] = Array.tabulate(k) { ci =>
-      val a = Array.fill(nb(ci))(-1)
-      neededBuckets(ci).zipWithIndex.foreach { case (b, j) => a(b) = j }
-      a
-    }
-    val slotOfB = sc.broadcast(slotOf)
-    // pass 2: gather ONLY boundary-bucket rows' composite keys, as
-    // per-partition ref builders keyed by (col, bucket) — round 11, the
-    // same rework the scalar gather got in round 10: the per-row
-    // `flatMap { ... Iterator.single((ci, b, key)) }` form allocated an
-    // iterator per (row, col) (240 M at the 100× probe) and boxed every
-    // emit; this form allocates only per CANDIDATE (the m-double key).
-    val cand = internal.mapPartitions { it =>
-      val sp = splitsB.value
-      val ki = keyIdxB.value
-      val gx = gidxB.value
-      val so = slotOfB.value
-      val nbk = neededBkB.value
-      val bufs = Array.tabulate(k)(ci => Array.fill(nbk(ci).length)(
-        new scala.collection.mutable.ArrayBuilder.ofRef[Array[Double]]))
-      while (it.hasNext) {
-        val row = it.next()
-        var ci = 0
-        while (ci < k) {
-          val br = gx(ci).bracket(row.getDouble(ki(ci)(0)))
-          val b = VectorBucketizeExpr.searchRowIn(
-            sp(ci), m, row, ki(ci), (br >>> 32).toInt, br.toInt)
-          val j = so(ci)(b)
-          if (j >= 0) {
-            val key = new Array[Double](m)
-            var f = 0
-            while (f < m) { key(f) = row.getDouble(ki(ci)(f)); f += 1 }
-            bufs(ci)(j) += key
-          }
-          ci += 1
-        }
-      }
-      Iterator.range(0, k).flatMap(ci =>
-        bufs(ci).indices.iterator
-          .map(j => ((ci, nbk(ci)(j)), bufs(ci)(j).result()))
-          .filter(_._2.nonEmpty))
-    }
-    val picked: Map[(Int, Int, Long), Array[Double]] =
-      if (candVolume * m <= maxCollect) {
-        val merged = scala.collection.mutable.HashMap
-          .empty[(Int, Int), scala.collection.mutable.ArrayBuilder.ofRef[Array[Double]]]
-        cand.collect().foreach { case (key, arr) =>
-          merged.getOrElseUpdate(key,
-            new scala.collection.mutable.ArrayBuilder.ofRef[Array[Double]]) ++= arr
-        }
-        merged.iterator.flatMap { case ((ci, b), ab) =>
-          val arr = ab.result()
-          java.util.Arrays.sort(arr, lexOrd)
-          neededOffsets(ci)(b).iterator.map(off => (ci, b, off) -> arr(off.toInt))
-        }.toMap
-      } else {
-        val neededOffB = sc.broadcast(neededOffsets)
-        val r = cand.reduceByKey(_ ++ _).flatMap { case ((ci, b), arr) =>
-          java.util.Arrays.sort(arr, lexOrd)
-          neededOffB.value(ci)(b).iterator.map(off => ((ci, b, off), arr(off.toInt)))
-        }.collect().toMap
-        neededOffB.destroy()
-        r
-      }
-    splitsB.destroy()
-    neededBkB.destroy()
-    slotOfB.destroy()
-    gidxB.destroy()
-    keyIdxB.destroy()
-    devPhase("rank", "gather", tHist)
-    // thresholds per column, ascending by position = ascending by key
-    val thresholds: Array[Seq[Array[Double]]] = Array.tabulate(k) { ci =>
-      val cum = cums(ci)
-      val byGlobal: Map[Long, Array[Double]] =
-        neededOffsets(ci).toSeq.flatMap { case (b, offs) =>
-          offs.map(off => (cum(b) + off) -> picked((ci, b, off)))
-        }.toMap
-      positions.toSeq.map(byGlobal)
+      RankSelection.pick(cand, loc, collect = loc.volume * m <= maxCollect,
+        (a: Array[Array[Double]]) => java.util.Arrays.sort(a, lexOrd), bc)
     }
     // phase 2: MAP-ONLY tokens — boundary keys folded into the plan
     val tokens = cols.zipWithIndex.map { case (c, ci) =>
       val keyCols = (col(c) +: tiebreak.map(col)).map(_.cast("double"))
-      VectorBucketizeExpr.vbucketize(keyCols, thresholds(ci)).as(s"${c}_token")
+      // ascending by position = ascending by key
+      VectorBucketizeExpr.vbucketize(keyCols, positions.toSeq.map(thresholds(ci)))
+        .as(s"${c}_token")
     }
     // The output sort is ORDER BY keys ++ tokens-as-one-packed-long
     // (round 13 — the same convention as the bucketize/rightopen/qcut
@@ -361,6 +285,25 @@ object Tokenize {
 
   /** Inner quantile probabilities 1/bins … (bins-1)/bins. */
   def innerProbs(bins: Int): Seq[Double] = (1 until bins).map(_.toDouble / bins)
+
+  /** The 0-based ranks the quantiles `probs` of `n` sorted values read:
+    * floor and ceil of pos = p·(n−1) — the definition of np.percentile /
+    * torch.quantile (etl_benchmark.py:74) and DuckDB quantile_cont. */
+  private def quantileRanks(probs: Seq[Double], n: Long): Seq[Long] =
+    probs.flatMap { p =>
+      val pos = p * (n - 1)
+      Seq(math.floor(pos).toLong, math.ceil(pos).toLong)
+    }
+
+  /** The quantiles `probs` of `n` sorted values, linearly interpolated
+    * between the values `at` gives for the [[quantileRanks]]. */
+  private def interpolated(probs: Seq[Double], n: Long)(at: Long => Double): Seq[Double] =
+    probs.map { p =>
+      val pos = p * (n - 1)
+      val l = at(math.floor(pos).toLong)
+      val h = at(math.ceil(pos).toLong)
+      l + (h - l) * (pos - math.floor(pos))
+    }
 
   /** ORDER BY keys ++ token columns with the tokens riding the sort
     * exchange as ONE packed long, decoded in the projection ABOVE the Sort
@@ -431,16 +374,6 @@ object Tokenize {
     val counts: Array[Long] = cols.indices.map(countRow.getLong).toArray
     cols.indices.foreach(i =>
       require(counts(i) > 0, s"quantileBoundsExact: no non-null values in ${cols(i)}"))
-    // interpolation positions pos = p*(n-1) per column (numpy/DuckDB
-    // quantile_cont convention)
-    val positions: Array[Seq[(Long, Long, Double)]] = cols.indices.map { ci =>
-      probs.map { p =>
-        val pos = p * (counts(ci) - 1)
-        (math.floor(pos).toLong, math.ceil(pos).toLong, pos - math.floor(pos))
-      }
-    }.toArray
-    val needed: Array[Set[Long]] =
-      positions.map(_.flatMap(t => Seq(t._1, t._2)).toSet)
     // Per-column range-partitioned sort (fully distributed — Spark's sort
     // samples split points and spreads the column over all cores), with the
     // sorted column PERSISTED so zipWithIndex's two passes (partition
@@ -456,9 +389,8 @@ object Tokenize {
     val futs = cols.indices.map { ci =>
       Future {
         val c = cols(ci)
-        val need = needed(ci)
         val vals = df.select(col(c).cast("double")).where(col(c).isNotNull)
-        val neededB = sc.broadcast(need)
+        val neededB = sc.broadcast(quantileRanks(probs, counts(ci)).toSet)
         val sorted = vals.sort(c).rdd
           .persist(StorageLevel.MEMORY_AND_DISK_SER)
         val picked: Map[Long, Double] =
@@ -466,13 +398,8 @@ object Tokenize {
             .filter { case (_, i) => neededB.value.contains(i) }
             .map { case (r, i) => (i, r.getDouble(0)) }
             .collectAsMap().toMap
-          finally sorted.unpersist(blocking = false)
-        neededB.destroy()
-        c -> positions(ci).map { case (lo, hi, frac) =>
-          val l = picked(lo)
-          val h = picked(hi)
-          l + (h - l) * frac
-        }
+          finally { sorted.unpersist(blocking = false); neededB.destroy() }
+        c -> interpolated(probs, counts(ci))(picked)
       }
     }
     try Await.result(Future.sequence(futs), Duration.Inf).toMap
@@ -546,14 +473,18 @@ object Tokenize {
     *  - '''Job 2, histogram.''' One scan counts every column's values per
     *    bucket (grid-bracketed lower_bound) into a partition-local flat
     *    (col, bucket) array; tree-reduced. The per-column non-null counts
-    *    are its row sums. The driver turns the cumulative counts into a
-    *    (bucket, in-bucket offset) for every needed position.
+    *    are its row sums. The driver ([[RankSelection.Located]]) turns the
+    *    cumulative counts into a (bucket, in-bucket offset) for every
+    *    needed position.
     *  - '''Job 3, gather.''' A second scan keeps only the values that fall
     *    in a needed bucket (≈ |probs|·n/B per column) as primitive arrays
-    *    keyed by (col, bucket). Up to `maxCollect` candidates are collected
-    *    and sorted per bucket on the driver; above it each bucket is sorted
-    *    on the executors after a reduceByKey and only the needed offsets
-    *    come back.
+    *    keyed by (col, gather slot). Up to `maxCollect` candidates are
+    *    collected and sorted per bucket on the driver; above it each bucket
+    *    is sorted on the executors after a reduceByKey and only the needed
+    *    offsets come back ([[RankSelection.pick]]).
+    *
+    * The counting and picking run at the rank level, [[selectRanks]]; this
+    * method adds the floor/ceil interpolation.
     *
     * The result is byte-identical to [[quantileBoundsExact]] (equality
     * spec). Values equal to a split share a bucket, so ties never split
@@ -574,47 +505,47 @@ object Tokenize {
                            numBuckets: Int = 8192, sampleSize: Int = 200000,
                            maxCollect: Long = 64000000L,
                            smallCollect: Long = 1000000L): Map[String, Seq[Double]] = {
-    val spark = df.sparkSession
-    val sc = spark.sparkContext
-    val k = cols.size
-    // the exact (floor, ceil, frac) interpolation positions for a column
-    // with n non-null values
-    def positionsFor(n: Long): Seq[(Long, Long, Double)] =
-      probs.map { p =>
-        val pos = p * (n - 1)
-        (math.floor(pos).toLong, math.ceil(pos).toLong, pos - math.floor(pos))
-      }
-    val tPhase0 = System.nanoTime()
-    def phase(tag: String, since: Long): Long = devPhase("qsel", tag, since)
+    val t0 = System.nanoTime()
     val footer = footerCount(df)
     val totalRows = footer.getOrElse(df.count())
+    devPhase("qsel", s"count(footer=${footer.isDefined})", t0)
     val proj = df.select(cols.map(c => col(c).cast("double")): _*)
+    val sel = selectRanks(proj, totalRows, { (ci, n) =>
+      require(n > 0, s"quantileBoundsSelect: no non-null values in ${cols(ci)}")
+      quantileRanks(probs, n)
+    }, numBuckets, sampleSize, maxCollect, smallCollect)
+    cols.indices.map { ci =>
+      val (n, at) = sel(ci)
+      cols(ci) -> interpolated(probs, n)(at)
+    }.toMap
+  }
+
+  /** The rank level of exact selection, under [[quantileBoundsSelect]] and
+    * [[GroupedQuantiles.selectByRank]]: for every column of `proj` (all
+    * doubles; `totalRows` rows), its non-null count `n` and its value at
+    * each 0-based rank `ranksOf(column index, n)` names, NaN last. Sizing,
+    * the three jobs and the NaN order are as [[quantileBoundsSelect]]
+    * describes; the driver bookkeeping is [[RankSelection]]'s. */
+  private[operators] def selectRanks(proj: DataFrame, totalRows: Long,
+      ranksOf: (Int, Long) => Seq[Long], numBuckets: Int, sampleSize: Int,
+      maxCollect: Long, smallCollect: Long): Array[(Long, Map[Long, Double])] = {
+    val k = proj.columns.length
+    var t = System.nanoTime()
+    def phase(tag: String): Unit = t = devPhase("qsel", tag, t)
     if (totalRows <= smallCollect) {
       val rows = proj.collect()
-      return cols.indices.map { ci =>
+      Array.tabulate(k) { ci =>
         val vs = rows.iterator.filterNot(_.isNullAt(ci)).map(_.getDouble(ci)).toArray
-        require(vs.nonEmpty, s"quantileBoundsSelect: no non-null values in ${cols(ci)}")
         java.util.Arrays.sort(vs)
-        cols(ci) -> positionsFor(vs.length).map { case (lo, hi, fr) =>
-          val l = vs(lo.toInt)
-          val h = vs(hi.toInt)
-          l + (h - l) * fr
-        }
-      }.toMap
-    }
-    val batches = Bridge.columnarBatches(proj)
-    val nPart = batches.getNumPartitions
-    val visit = math.min(nPart, 64)
-    val stride = math.max(1, nPart / visit)
-    val perPartCap = math.max(256, sampleSize / visit)
-    val held = mutable.ArrayBuffer.empty[Broadcast[_]]
-    def broadcast[T: ClassTag](v: T): Broadcast[T] = {
-      val b = sc.broadcast(v)
-      held += b
-      b
-    }
-    try {
-      val tCount = phase(s"count(footer=${footer.isDefined})", tPhase0)
+        val n = vs.length.toLong
+        (n, ranksOf(ci, n).iterator.map(r => r -> vs(r.toInt)).toMap)
+      }
+    } else RankSelection.withBroadcasts(proj.sparkSession.sparkContext) { bc =>
+      val batches = Bridge.columnarBatches(proj)
+      val nPart = batches.getNumPartitions
+      val visit = math.min(nPart, 64)
+      val stride = math.max(1, nPart / visit)
+      val perPartCap = math.max(256, sampleSize / visit)
       // job 1: per sampled partition, per column, the head rows' values,
       // sorted on the executor (the reader stops after the head batches)
       val runs: Array[Array[Array[Double]]] = batches.mapPartitionsWithIndex { (pid, it) =>
@@ -648,7 +579,7 @@ object Tokenize {
           })
         }
       }.collect()
-      val tSample = phase("sample", tCount)
+      phase("sample")
       val grids: Array[BucketizeGrid] = Array.tabulate(k) { ci =>
         // Arrays.sort detects the concatenated sorted runs and merges them
         val vs = Array.concat(runs.map(_(ci)).toIndexedSeq: _*)
@@ -658,10 +589,9 @@ object Tokenize {
           .map(i => vs(((i.toLong * vs.length) / b).toInt.min(vs.length - 1)))
           .toArray.distinct)
       }
-      val nb: Array[Int] = grids.map(_.n + 1)
-      val flatOff: Array[Int] = nb.scanLeft(0)(_ + _)
-      val gridB = broadcast(grids)
-      val tSplits = phase("splits", tSample)
+      val flatOff: Array[Int] = grids.map(_.n + 1).scanLeft(0)(_ + _)
+      val gridB = bc(grids)
+      phase("splits")
       // job 2: flat (col, bucket) histogram — per value one grid-bracketed
       // search and one increment into a partition-local array
       val hist: Array[Long] = batches.mapPartitions { it =>
@@ -689,53 +619,16 @@ object Tokenize {
       }.treeReduce { (a, b) =>
         var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
       }
-      val tHist = phase("hist", tSplits)
-      // cumulative counts -> (bucket, in-bucket offset) for every needed pos
-      val cums: Array[Array[Long]] = cols.indices.map { ci =>
-        val cum = new Array[Long](nb(ci) + 1)
-        (0 until nb(ci)).foreach(b => cum(b + 1) = cum(b) + hist(flatOff(ci) + b))
-        cum
-      }.toArray
-      val counts: Array[Long] = cums.map(_.last)
-      cols.indices.foreach(i =>
-        require(counts(i) > 0, s"quantileBoundsSelect: no non-null values in ${cols(i)}"))
-      val positions: Array[Seq[(Long, Long, Double)]] =
-        counts.map(positionsFor)
-      val needPos: Array[Array[Long]] =
-        positions.map(_.flatMap(t => Seq(t._1, t._2)).distinct.sorted.toArray)
-      val neededOffsets: Array[Map[Int, Array[Long]]] = cols.indices.map { ci =>
-        val cum = cums(ci)
-        needPos(ci).toSeq.groupBy { p =>
-          java.util.Arrays.binarySearch(cum, p) match {
-            case i if i >= 0 =>
-              var j = i; while (j < nb(ci) && cum(j + 1) == cum(j)) j += 1; j
-            case i => -i - 2
-          }
-        }.map { case (b, ps) => b -> ps.map(_ - cum(b)).toArray }
-      }.toArray
-      // gather membership: per col, the sorted needed buckets and a
-      // bucket -> buffer-slot table (−1 = not needed), so the per-value
-      // test is one int read
-      val neededBuckets: Array[Array[Int]] =
-        neededOffsets.map(_.keys.toArray.sorted)
-      val bucketSlot: Array[Array[Int]] = cols.indices.map { ci =>
-        val slot = Array.fill(nb(ci))(-1)
-        neededBuckets(ci).iterator.zipWithIndex.foreach { case (b, j) => slot(b) = j }
-        slot
-      }.toArray
-      val candVolume: Long = cols.indices.map { ci =>
-        neededBuckets(ci).map(b => hist(flatOff(ci) + b)).sum
-      }.sum
-      val neededBkB = broadcast(neededBuckets)
-      val bucketSlotB = broadcast(bucketSlot)
+      phase("hist")
+      val loc = new RankSelection.Located(hist, flatOff, ranksOf)
+      val slotB = bc(loc.slots)
       // job 3: gather the candidate-bucket values as per-partition
-      // primitive arrays keyed by (col, bucket)
+      // primitive arrays keyed by (col, slot)
       val cand = batches.mapPartitions { it =>
         val gx = gridB.value
-        val nbk = neededBkB.value
-        val slot = bucketSlotB.value
+        val slot = slotB.value
         val bufs = Array.tabulate(k)(ci =>
-          Array.fill(nbk(ci).length)(new mutable.ArrayBuilder.ofDouble))
+          Array.fill(slot(ci).count(_ >= 0))(new mutable.ArrayBuilder.ofDouble))
         while (it.hasNext) {
           val batch = it.next()
           val m = batch.numRows
@@ -758,39 +651,13 @@ object Tokenize {
           }
         }
         Iterator.range(0, k).flatMap(ci =>
-          bufs(ci).indices.iterator.map(j => ((ci, nbk(ci)(j)), bufs(ci)(j).result())))
+          bufs(ci).indices.iterator.map(j => ((ci, j), bufs(ci)(j).result())))
       }
-      val picked: Map[(Int, Int, Long), Double] =
-        if (candVolume <= maxCollect) {
-          val merged = mutable.HashMap.empty[(Int, Int), mutable.ArrayBuilder.ofDouble]
-          cand.collect().foreach { case (key, arr) =>
-            merged.getOrElseUpdate(key, new mutable.ArrayBuilder.ofDouble) ++= arr
-          }
-          merged.iterator.flatMap { case ((ci, b), ab) =>
-            val arr = ab.result()
-            java.util.Arrays.sort(arr)
-            neededOffsets(ci)(b).iterator.map(off => (ci, b, off) -> arr(off.toInt))
-          }.toMap
-        } else {
-          val neededOffB = broadcast(neededOffsets)
-          cand.reduceByKey(_ ++ _).flatMap { case ((ci, b), arr) =>
-            java.util.Arrays.sort(arr)
-            neededOffB.value(ci)(b).iterator.map(off => ((ci, b, off), arr(off.toInt)))
-          }.collect().toMap
-        }
-      phase("gather", tHist)
-      cols.indices.map { ci =>
-        val cum = cums(ci)
-        val byGlobal: Map[Long, Double] = neededOffsets(ci).toSeq.flatMap { case (b, offs) =>
-          offs.map(off => (cum(b) + off) -> picked((ci, b, off)))
-        }.toMap
-        cols(ci) -> positions(ci).map { case (lo, hi, fr) =>
-          val l = byGlobal(lo)
-          val h = byGlobal(hi)
-          l + (h - l) * fr
-        }
-      }.toMap
-    } finally held.foreach(_.destroy())
+      val picked = RankSelection.pick(cand, loc, collect = loc.volume <= maxCollect,
+        (a: Array[Double]) => java.util.Arrays.sort(a), bc)
+      phase("gather")
+      loc.counts.zip(picked)
+    }
   }
 
   /** Memo cache for driver-contract queries: the same (sfDir, cols, bins)
@@ -811,26 +678,12 @@ object Tokenize {
         .map { case (c, bs) => c -> bs.map(round6d) }
     })
 
-  /** Phase 1 (single-pass variant): approximate boundaries via
-    * Greenwald-Khanna (`approx_percentile` sketch) — mergeable, no sort,
-    * deterministic error bound. Measured caveat: the per-value
-    * QuantileSummaries insert makes it ~8x SLOWER than exact selection on
-    * the reference workload — [[quantileBoundsSample]] is the fast
-    * single-pass path; GK remains for deterministic-bound requirements. */
-  def quantileBoundsApprox(df: DataFrame, cols: Seq[String], probs: Seq[Double],
-                           relativeError: Double = 1e-3): Map[String, Seq[Double]] = {
-    val bounds = df.stat.approxQuantile(cols.toArray, probs.toArray, relativeError)
-    cols.zip(bounds.map(_.toSeq)).toMap
-  }
-
   /** Phase 1, approximate, ONE data pass: uniform row sample -> driver-side
     * per-column sorts -> interpolated quantiles of the sample.
     *
     * The scan is map-only (Bernoulli keep + packed per-partition primitive
-    * column buffers — no Row boxing, no shuffle, no per-value sketch
-    * insert), which is why it beats both the GK sketch (per-value
-    * QuantileSummaries cost) and exact selection (two passes + candidate
-    * shuffle) on wall clock. Rank error: by Dvoretzky-Kiefer-Wolfowitz,
+    * column buffers — no Row boxing, no shuffle), which is why it beats
+    * exact selection (two passes + candidate shuffle) on wall clock. Rank error: by Dvoretzky-Kiefer-Wolfowitz,
     * P(sup_p |rank(b_p)/n - p| > eps) <= 2·exp(-2·s·eps²) — at the default
     * s=1M, eps=0.003 holds with probability ~1-3e-8; property-tested in
     * TokenizeSpec. This is the 100 TB default when boundaries feed a
@@ -839,41 +692,29 @@ object Tokenize {
     * sort (`Arrays.parallelSort` IEEE-754 total order) — the engine-wide
     * NaN-last policy (round 12) holds here with no extra code. */
   def quantileBoundsSample(df: DataFrame, cols: Seq[String], probs: Seq[Double],
-                           sampleSize: Int = 1000000, seed: Long = 42,
-                           partitionFraction: Double = 1.0): Map[String, Seq[Double]] = {
+                           sampleSize: Int = 1000000, seed: Long = 42): Map[String, Seq[Double]] = {
     val k = cols.size
     val n = df.count()
     require(n > 0, "quantileBoundsSample: empty input")
-    require(partitionFraction > 0 && partitionFraction <= 1.0)
     val proj = df.select(cols.map(c => col(c).cast("double")): _*)
     val rdd = proj.queryExecution.toRdd
-    // systematic partition skip: an UNTOUCHED partition iterator never
-    // opens its parquet pages, so scan cost scales with the kept fraction.
-    // Only sound when values are not correlated with file position (i.i.d.
-    // layout) — the default 1.0 keeps the row-level Bernoulli unbiased.
-    val keepEvery =
-      if (partitionFraction >= 1.0) 1
-      else math.max(1, math.round(1.0 / partitionFraction).toInt)
-    val rowFrac = math.min(1.0, sampleSize.toDouble * keepEvery / n)
+    val rowFrac = math.min(1.0, sampleSize.toDouble / n)
     // pack per-partition primitive column buffers; collect returns
     // partitions-many packs of double[] per column
     val packs: Array[Array[Array[Double]]] =
       rdd.mapPartitionsWithIndex { (idx, it) =>
-        if (idx % keepEvery != 0) Iterator.empty
-        else {
-          val rnd = new java.util.Random(seed ^ (idx * 0x9E3779B97F4A7C15L))
-          val bufs = Array.fill(k)(new scala.collection.mutable.ArrayBuilder.ofDouble)
-          it.foreach { row =>
-            if (rowFrac >= 1.0 || rnd.nextDouble() < rowFrac) {
-              var ci = 0
-              while (ci < k) {
-                if (!row.isNullAt(ci)) bufs(ci) += row.getDouble(ci)
-                ci += 1
-              }
+        val rnd = new java.util.Random(seed ^ (idx * 0x9E3779B97F4A7C15L))
+        val bufs = Array.fill(k)(new mutable.ArrayBuilder.ofDouble)
+        it.foreach { row =>
+          if (rowFrac >= 1.0 || rnd.nextDouble() < rowFrac) {
+            var ci = 0
+            while (ci < k) {
+              if (!row.isNullAt(ci)) bufs(ci) += row.getDouble(ci)
+              ci += 1
             }
           }
-          Iterator.single(bufs.map(_.result()))
         }
+        Iterator.single(bufs.map(_.result()))
       }.collect()
     cols.indices.map { ci =>
       val total = packs.iterator.map(_(ci).length).sum
@@ -882,12 +723,7 @@ object Tokenize {
       var off = 0
       packs.foreach { p => System.arraycopy(p(ci), 0, vs, off, p(ci).length); off += p(ci).length }
       java.util.Arrays.parallelSort(vs)
-      cols(ci) -> probs.map { p =>
-        val pos = p * (vs.length - 1)
-        val lo = vs(math.floor(pos).toInt)
-        val hi = vs(math.ceil(pos).toInt)
-        lo + (hi - lo) * (pos - math.floor(pos))
-      }
+      cols(ci) -> interpolated(probs, vs.length)(i => vs(i.toInt))
     }.toMap
   }
 
@@ -940,12 +776,9 @@ object Tokenize {
 
   /** Full two-phase boundary tokenizer over `cols`, keeping `keep` columns. */
   def tokenizeByBounds(df: DataFrame, cols: Seq[String], keep: Seq[String],
-                       bins: Int = DefaultBins, approx: Boolean = false): DataFrame = {
-    val probs = innerProbs(bins)
-    val bounds0 =
-      if (approx) quantileBoundsApprox(df, cols, probs)
-      else quantileBoundsExact(df, cols, probs)
-    val bounds = bounds0.map { case (c, bs) => c -> bs.map(round6d) }
+                       bins: Int = DefaultBins): DataFrame = {
+    val bounds = quantileBoundsExact(df, cols, innerProbs(bins))
+      .map { case (c, bs) => c -> bs.map(round6d) }
     val tokens = cols.map(c => discretize(col(c), bounds(c), bins).as(s"${c}_token"))
     df.select(keep.map(col) ++ tokens: _*)
   }

@@ -17,9 +17,11 @@ class GroupedQuantilesSpec extends SparkSpec {
     val df = rows.toDF("g", "v", "id")
     def ranks(n: Long): Seq[Long] =
       Seq(0L, (n + 1) / 2 - 1, math.ceil(0.9 * n).toLong - 1, n - 1)
+    // smallCollect = 0: the 20k rows take the sample/histogram/gather jobs,
+    // not the driver sort; maxCollect 4 forces the distributed pick
     for (maxCollect <- Seq(64000000L, 4L)) {
       val res = GroupedQuantiles.selectByRank(df, "g", "v", ranks,
-        numBuckets = 32, sampleSize = 1000, maxCollect = maxCollect)
+        numBuckets = 32, sampleSize = 1000, maxCollect = maxCollect, smallCollect = 0)
       val byGroup = rows.groupBy(_._1)
       assert(res.keySet == byGroup.keySet)
       byGroup.foreach { case (g, rs) =>
@@ -40,5 +42,23 @@ class GroupedQuantilesSpec extends SparkSpec {
     val res = GroupedQuantiles.selectByRank(df, "g", "v", n => Seq(0L, n - 1))
     assert(res("a")._1 == 2 && res("a")._2(0L) == 1.0 && res("a")._2(1L) == 3.0)
     assert(res("b")._1 == 1 && res("b")._2(0L) == 5.0)
+  }
+
+  test("a NaN value fails with the value column named") {
+    import spark.implicits._
+    val df = Seq(("a", 1.0), ("a", Double.NaN), ("b", 2.0)).toDF("g", "price")
+    val err = intercept[IllegalArgumentException] {
+      GroupedQuantiles.selectByRank(df, "g", "price", n => Seq(0L), smallCollect = 0)
+    }
+    assert(err.getMessage.contains("1 NaN values in 'price'"), err.getMessage)
+  }
+
+  test("a null group key fails with the group column named") {
+    import spark.implicits._
+    val df = Seq((Some("a"), 1.0), (None, 2.0), (Some("b"), 3.0)).toDF("flag", "v")
+    val err = intercept[IllegalArgumentException] {
+      GroupedQuantiles.selectByRank(df, "flag", "v", n => Seq(0L), smallCollect = 0)
+    }
+    assert(err.getMessage.contains("null group key in 'flag'"), err.getMessage)
   }
 }

@@ -458,30 +458,53 @@ class TokenizeSpec extends SparkSpec {
     assert(columnar("c").last.isNaN && !columnar("c").head.isNaN)
   }
 
-  test("quantileBoundsSelect names an all-null column and releases its broadcasts") {
-    import org.apache.spark.sql.functions._
+  // broadcast value blocks made by code, not Spark's own task-binary
+  // broadcasts (byte arrays, released only by the context cleaner)
+  private def userBroadcasts: Set[org.apache.spark.storage.BlockId] = {
+    val bm = org.apache.spark.SparkEnv.get.blockManager
+    bm.getMatchingBlockIds {
+      case org.apache.spark.storage.BroadcastBlockId(_, "") => true
+      case _ => false
+    }.filter(id => bm.getLocalValues(id) // toList releases the read lock
+      .exists(_.data.toList.exists(!_.isInstanceOf[Array[Byte]]))).toSet
+  }
+
+  /** Runs `f`, expecting an IllegalArgumentException, and checks that every
+    * broadcast made meanwhile is released; returns the message. */
+  private def failsReleasingBroadcasts(f: => Any): String = {
     import org.scalatest.concurrent.Eventually._
     import org.scalatest.time.SpanSugar._
-    val df = spark.range(5000).select(col("id").cast("double").as("v"),
-      lit(null).cast("double").as("empty"))
-    // broadcast value blocks made by code, not Spark's own task-binary
-    // broadcasts (byte arrays, released only by the context cleaner)
-    val bm = org.apache.spark.SparkEnv.get.blockManager
-    def userBroadcasts: Set[org.apache.spark.storage.BlockId] =
-      bm.getMatchingBlockIds {
-        case org.apache.spark.storage.BroadcastBlockId(_, "") => true
-        case _ => false
-      }.filter(id => bm.getLocalValues(id) // toList releases the read lock
-        .exists(_.data.toList.exists(!_.isInstanceOf[Array[Byte]]))).toSet
     val before = userBroadcasts
-    val err = intercept[IllegalArgumentException] {
-      quantileBoundsSelect(df, Seq("v", "empty"), Seq(0.5), numBuckets = 8, smallCollect = 0)
-    }
-    assert(err.getMessage.contains("no non-null values in empty"), err.getMessage)
+    val err = intercept[IllegalArgumentException](f)
     // destroy() removes the blocks asynchronously
     eventually(timeout(5.seconds)) {
       assert((userBroadcasts -- before).isEmpty)
     }
+    err.getMessage
+  }
+
+  test("quantileBoundsSelect names an all-null column and releases its broadcasts") {
+    import org.apache.spark.sql.functions._
+    val df = spark.range(5000).select(col("id").cast("double").as("v"),
+      lit(null).cast("double").as("empty"))
+    val msg = failsReleasingBroadcasts {
+      quantileBoundsSelect(df, Seq("v", "empty"), Seq(0.5), numBuckets = 8, smallCollect = 0)
+    }
+    assert(msg.contains("no non-null values in empty"), msg)
+  }
+
+  test("tokenizeRankSelect fails on a NaN key the sample missed and releases its broadcasts") {
+    import org.apache.spark.sql.functions._
+    // one NaN row in 20k and a ~1-row sample: the sample check passes, so
+    // the histogram's full-data NaN slot is what fails, after the
+    // broadcasts exist
+    val df = spark.range(20000).select(col("id"),
+      when(col("id") === 12345, lit(Double.NaN))
+        .otherwise(pmod(col("id") * 2654435761L, lit(1000003)).cast("double")).as("v"))
+    val msg = failsReleasingBroadcasts {
+      tokenizeRankSelect(df, Seq("v"), Seq("id", "v"), bins = 10, numBuckets = 8, sampleSize = 1)
+    }
+    assert(msg.contains("tokenizeRankSelect: 1 rows have NaN sort columns"), msg)
   }
 
   test("q_tokenize_nan: injected NaN lands the top bin, clean rows match the bucketize query (round 12)") {
