@@ -24,9 +24,9 @@ import org.apache.spark.sql.SparkSession
   *    neutral within the host band (CodecAB), so the tighter codec is
   *    free where it doesn't win.
   *  - `rdd.compress = true` — serialized-at-rest RDD blocks (the
-  *    memory-tight-regime edge checkpoint in Graph, the sorted column in
-  *    Tokenize.quantileBoundsExact — the ONLY serialized persists in the
-  *    engine; deserialized MEMORY_AND_DISK blocks are untouched by this flag)
+  *    memory-tight-regime edge checkpoint in Graph — the ONLY serialized
+  *    persist in the engine; deserialized MEMORY_AND_DISK blocks are
+  *    untouched by this flag)
   *    compress through the session codec (zstd). Round 18: the 1000×
   *    pagerank checkpoint is ~29 GB raw serialized (1.2 B two-long edge
   *    rows) — mostly EVICTED to disk past the 19 GiB pool — vs ~4×

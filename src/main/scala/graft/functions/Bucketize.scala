@@ -27,11 +27,11 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * codegen: the generated Java is a tight branch-free-ish binary-search loop
   * over a referenced `double[]`, O(log bins) per value, zero allocation.
   *
-  * Null -> null. NaN -> the TOP bin, `bins - 1` (round 12 — previously bin
-  * 0, the accidental result of IEEE `<` never holding for NaN). NaN-last is
+  * Null -> null. NaN -> the TOP bin, `bins - 1`, not the bin 0 that IEEE
+  * `<` never holding for NaN would give. NaN-last is
   * the np.digitize convention (NaN treated as larger than every boundary)
   * and, decisively, Spark's OWN sort/agg ordering — the engine's quantile
-  * boundary paths (Tokenize.quantileBoundsSelect and friends, round 12)
+  * boundary paths (Tokenize.quantileBoundsSelect and friends)
   * rank NaN last, so the tokenizer must agree or a NaN-bearing column
   * would bucket its NaN opposite to where the boundary computation counted
   * them. The reference has no NaN policy (SURVEY §2A fine print); ours is
@@ -51,8 +51,8 @@ case class BucketizeExpr(child: Expression, bounds: Seq[Double], bins: Int,
     else BucketizeGrid.searchRightOpen(grid, input.asInstanceOf[Double], bins)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // ONE search implementation for the interpreted and generated paths
-    // (round 13): the generated Java is a static call into
+    // ONE search implementation for the interpreted and generated paths:
+    // the generated Java is a static call into
     // [[BucketizeGrid]] — monomorphic and small, so C2 inlines it into the
     // whole-stage loop — instead of an inlined full-range binary search.
     // The grid bracket replaces ~log2(bins) scattered double-array probes
@@ -70,21 +70,24 @@ case class BucketizeExpr(child: Expression, bounds: Seq[Double], bins: Int,
     copy(child = newChild)
 }
 
-/** Grid-bracketed boundary search state, shared by [[BucketizeExpr]] and
-  * the exact quantile selection passes (`Tokenize.quantileBoundsSelect`,
-  * which calls [[BucketizeGrid.search]] unclamped). A plain binary search
-  * over a large boundary array walks ~log2(n) scattered cache lines per
-  * value; a uniform grid of G = 4n cells over [bounds.head, bounds.last]
-  * with per-cell lower_bound brackets cuts that to one multiply, two int
-  * reads and a ≤2-step search when the boundaries are spread like the
-  * data (equi-depth splits are). Brackets are widened ±1 cell so fp
-  * rounding at a cell edge can never exclude the true index: exactness
-  * never depends on the grid. One instance serves BOTH closure
-  * conventions: the bracket [bnd(gi−1), bnd(gi+2)) contains every index
-  * whose boundary value could equal v (duplicates of v share v's cell, so
-  * a run of equal boundaries never escapes the widened bracket), and the
-  * convention's comparator runs only inside it. Falls back to the
-  * full-range loop when cells are under one ulp wide (degenerate spans). */
+/** Grid-bracketed boundary search state, shared by [[BucketizeExpr]], the
+  * exact quantile selection passes (`Tokenize.quantileBoundsSelect`, which
+  * calls [[BucketizeGrid.search]] unclamped) and the rank tokenizer's
+  * composite-key passes (`Tokenize.tokenizeRankSelect`, over the split
+  * rows' first fields, through [[bracket]]). A plain binary search over a
+  * large boundary array walks ~log2(n) scattered cache lines per value; a
+  * uniform grid of G = 4n cells over [bounds.head, bounds.last] with
+  * per-cell lower_bound brackets cuts that to one multiply, two int reads
+  * and a ≤2-step search when the boundaries are spread like the data
+  * (equi-depth splits are). Brackets are widened ±1 cell so fp rounding at
+  * a cell edge can never exclude the true index: exactness never depends
+  * on the grid. One bracket serves every comparator: [bnd(gi−1), bnd(gi+2))
+  * contains every index whose boundary could equal v (duplicates of v
+  * share v's cell, so a run of equal boundaries never escapes the widened
+  * bracket), and the caller's comparator runs only inside it. Falls back
+  * to the full range when cells are under one ulp wide (degenerate spans):
+  * there a cell edge's 0.5-ulp rounding spans several cells and the ±1
+  * margin could exclude the true index. */
 final class BucketizeGrid(val bounds: Array[Double]) extends Serializable {
   val n: Int = bounds.length
   val lo0: Double = if (n > 0) bounds(0) else 0.0
@@ -97,6 +100,31 @@ final class BucketizeGrid(val bounds: Array[Double]) extends Serializable {
     * unconditionally (fp rounding of the top edge must never cut the last
     * bracket short). */
   val bnd: Array[Int] = BucketizeGrid.cellLowerBounds(bounds, lo0, hi0, G)
+
+  /** The cell of a v in [lo0, hi0] when `gridOk`; its bracket runs from
+    * [[bracketLo]] until [[bracketHi]]: bounds below it are < v, bounds
+    * from its end on are > v. Three small methods, not one packed result,
+    * so the scalar searches inline them to the instructions of
+    * written-out code. */
+  private def cellOf(v: Double): Int = {
+    val gi = ((v - lo0) * inv).toInt
+    if (gi < 0) 0 else if (gi > G - 1) G - 1 else gi
+  }
+  private def bracketLo(gi: Int): Int = bnd(if (gi == 0) 0 else gi - 1)
+  private def bracketHi(gi: Int): Int = bnd(if (gi + 2 > G) G else gi + 2)
+
+  /** The bracket [lo, hi) for any v, packed as lo << 32 | hi so the
+    * per-row loops allocate nothing: empty at 0 below lo0, empty at n above
+    * hi0, and the whole range for NaN, which orders against no bound, or
+    * when the grid is off. A search whose first comparison is on v — the
+    * composite-key search, whose first field is v — equals its full-range
+    * result when started on this bracket. */
+  def bracket(v: Double): Long =
+    if (v != v) n.toLong
+    else if (v < lo0) 0L
+    else if (v > hi0) (n.toLong << 32) | n
+    else if (!gridOk) n.toLong
+    else { val gi = cellOf(v); (bracketLo(gi).toLong << 32) | bracketHi(gi) }
 }
 
 object BucketizeGrid {
@@ -135,12 +163,7 @@ object BucketizeGrid {
     else if (v <= g.lo0) return 0
     else if (v > g.hi0) lo = hi
     else {
-      if (g.gridOk) {
-        var gi = ((v - g.lo0) * g.inv).toInt
-        if (gi < 0) gi = 0 else if (gi > g.G - 1) gi = g.G - 1
-        lo = g.bnd(if (gi == 0) 0 else gi - 1)
-        hi = g.bnd(if (gi + 2 > g.G) g.G else gi + 2)
-      }
+      if (g.gridOk) { val gi = g.cellOf(v); lo = g.bracketLo(gi); hi = g.bracketHi(gi) }
       val b = g.bounds
       while (lo < hi) {
         val mid = (lo + hi) >>> 1
@@ -159,12 +182,7 @@ object BucketizeGrid {
     else if (v < g.lo0) return 0
     else if (v >= g.hi0) lo = hi
     else {
-      if (g.gridOk) {
-        var gi = ((v - g.lo0) * g.inv).toInt
-        if (gi < 0) gi = 0 else if (gi > g.G - 1) gi = g.G - 1
-        lo = g.bnd(if (gi == 0) 0 else gi - 1)
-        hi = g.bnd(if (gi + 2 > g.G) g.G else gi + 2)
-      }
+      if (g.gridOk) { val gi = g.cellOf(v); lo = g.bracketLo(gi); hi = g.bracketHi(gi) }
       val b = g.bounds
       while (lo < hi) {
         val mid = (lo + hi) >>> 1

@@ -125,19 +125,15 @@ object VectorBucketizeExpr {
     lo
   }
 
-  /** InternalRow-based variant for aggregation passes over
-    * `queryExecution.toRdd`: the key is read straight out of the unsafe row
-    * via a field-index permutation — primitive reads, zero allocation. */
-  def searchRow(thr: Array[Double], m: Int, row: InternalRow,
-                idx: Array[Int]): Int =
-    searchRowIn(thr, m, row, idx, 0, thr.length / m)
-
-  /** [[searchRow]] restricted to a caller-proved bracket [lo0, hi0) — the
-    * [[CompositeGridIndex]] fast path for the rank tokenizer's two
-    * aggregation passes (round 11; same idea as [[BucketizeGrid]]): the
-    * grid brackets by the FIRST key field, this finishes the lexicographic
-    * search inside the bracket. Exactly equal to the full-range search for
-    * any bracket containing the answer (property-pinned). */
+  /** [[search]] over an `InternalRow` restricted to a caller-proved bracket
+    * [lo0, hi0), for the rank tokenizer's aggregation passes over
+    * `queryExecution.toRdd`: the key is read straight out of the unsafe
+    * row via a field-index permutation — primitive reads, zero
+    * allocation. The passes take the bracket from a
+    * [[BucketizeGrid.bracket]] over the threshold rows' first fields, and
+    * this finishes the lexicographic search inside it; (0, T) is the
+    * full-range search. Exactly equal to the full-range search for any
+    * bracket containing the answer (property-pinned). */
   def searchRowIn(thr: Array[Double], m: Int, row: InternalRow,
                   idx: Array[Int], lo0: Int, hi0: Int): Int = {
     var lo = lo0
@@ -154,70 +150,6 @@ object VectorBucketizeExpr {
       if (cmp <= 0) lo = mid + 1 else hi = mid
     }
     lo
-  }
-
-  /** Grid bracket for [[searchRowIn]] over a lexicographically-ascending
-    * flat T×m threshold matrix (round 11, the scalar [[BucketizeGrid]] lifted
-    * to composite keys): first components are non-decreasing, so a uniform
-    * grid over [first(0), first(T-1)] with per-cell lower_bound brackets
-    * confines the lex search for any key to the cells its FIRST field can
-    * land in (±1 cell so fp rounding at a cell edge never excludes the
-    * answer; bnd(G) pinned to T unconditionally — the same two edge rules
-    * the scalar BucketizeGrid carries). For a
-    * continuous first field the bracket is a couple of entries; for a
-    * low-cardinality first field it is that value's tie run — the lex
-    * search then starts where the field-0 probes would have ended.
-    * Degenerate spans (inv non-finite) fall back to the full range, and
-    * so does a NaN first field (round-11 advisor item: the range tests
-    * `v0 < lo0` / `v0 > hi0` are both false for NaN, so without the
-    * guard the grid would hand back an arbitrary interior bracket that
-    * disagrees with the full-range search — unreachable from
-    * tokenizeRankSelect, whose pass 1 rejects NaN, but this class is
-    * package-public). */
-  final class CompositeGridIndex(flat: Array[Double], m: Int) extends Serializable {
-    private val t = flat.length / m
-    private val lo0 = if (t > 0) flat(0) else 0.0
-    private val hi0 = if (t > 0) flat((t - 1) * m) else 0.0
-    private val G = math.max(1, math.min(1 << 16, 4 * t))
-    private val inv = if (t > 0 && hi0 > lo0) G / (hi0 - lo0) else 0.0
-    // grid only when a cell is >= 1 ulp wide: below that a cell edge's
-    // 0.5-ulp fp rounding spans multiple cells and the ±1-cell margin can
-    // exclude the true index (caught by the round-11 property test on
-    // ulp-adjacent firsts; same rule as BucketizeGrid)
-    private val gridOk = java.lang.Double.isFinite(inv) && inv > 0.0 &&
-      (hi0 - lo0) / G >= math.ulp(math.max(math.abs(lo0), math.abs(hi0)))
-    private def lbFirst(v: Double): Int = {
-      var lo = 0
-      var hi = t
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (flat(mid * m) < v) lo = mid + 1 else hi = mid
-      }
-      lo
-    }
-    private val bnd: Array[Int] = {
-      val b = new Array[Int](G + 1)
-      var g = 0
-      while (g < G) { b(g) = lbFirst(lo0 + g * (hi0 - lo0) / G); g += 1 }
-      b(G) = t
-      b
-    }
-    /** Bracket [lo, hi) for a key whose first field is v0, packed as
-      * (lo << 32 | hi) — no allocation in the per-row hot loop. Every
-      * threshold row below lo is lex <= the key, every row at/above hi is
-      * lex > it, so searchRowIn(lo, hi) equals the full-range search. */
-    def bracket(v0: Double): Long = {
-      if (t == 0) return 0L
-      if (v0 != v0) return t.toLong // NaN: full range (0, t)
-      if (v0 < lo0) return 0L // all rows have first >= lo0 > v0
-      if (v0 > hi0) return (t.toLong << 32) | t.toLong // all rows lex < key
-      if (!gridOk) return t.toLong // (0, t)
-      var gi = ((v0 - lo0) * inv).toInt
-      if (gi < 0) gi = 0 else if (gi > G - 1) gi = G - 1
-      val lo = bnd(if (gi == 0) 0 else gi - 1)
-      val hi = bnd(if (gi + 2 > G) G else gi + 2)
-      (lo.toLong << 32) | hi.toLong
-    }
   }
 
   /** Column-level API: key children (cast to double upstream) against a

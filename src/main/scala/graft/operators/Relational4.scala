@@ -262,8 +262,8 @@ object Relational4 {
     // (1) per-(block, name) profile: cnt, min key k1, second-min key k2.
     // grp and stats are referenced several times below; each is a tiny
     // bounded aggregate (≤ blocks × D rows), so they are MATERIALIZED
-    // eagerly (localCheckpoint, the tokenizeRank convention — blocks
-    // reclaimed by ContextCleaner) — without this the shared lineage
+    // eagerly (localCheckpoint — blocks reclaimed by ContextCleaner) —
+    // without this the shared lineage
     // re-executes per use and the corpus is scanned ~8×, not the three
     // passes this funnel is built around (grp, grp2, final join).
     val grp = p.groupBy("p_brand", "p_size", "p_name")

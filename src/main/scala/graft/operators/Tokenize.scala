@@ -3,7 +3,6 @@ package graft.operators
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
@@ -17,43 +16,45 @@ import graft.functions.{BucketizeExpr, BucketizeGrid}
   *
   * Spark-first formulations, with different scale profiles:
   *
-  *  1. '''Rank-based''' — `pd.qcut(labels=False)` semantics (token =
-  *     NTILE(bins) - 1 over a total order (value, tiebreak…)), two
-  *     spec-equal implementations: `tokenizeRank` (window form — compact,
-  *     null-tolerant, bit-stable oracle reference, but one single-partition
-  *     sort per column) and '''`tokenizeRankSelect`''' (the contract scale
-  *     path: bucket-boundary rows located by selection, tokens map-only —
-  *     measured at 7.3 s vs 52.8 s for the window form at 10 M×4).
+  *  1. '''Rank-based''' (`tokenizeRankSelect`) — `pd.qcut(labels=False)`
+  *     semantics: token = NTILE(bins) - 1 over a total order (value,
+  *     tiebreak…). The bucket-boundary rows are located by selection and
+  *     the tokens are map-only; the window form `NTILE … OVER (ORDER BY …)`,
+  *     one single-partition sort per column, stays in the tests as the
+  *     reference the selection path is proved equal to.
   *
-  *  2. '''Boundary-based, two-phase''' (`tokenizeByBounds`) — the 100 TB
-  *     path, mirroring the reference's precompute-boundaries-once design
-  *     (etl_benchmark.py:74 quantile; :79 bucketize; :82 clamp):
+  *  2. '''Boundary-based, two-phase''' — the 100 TB path, mirroring the
+  *     reference's precompute-boundaries-once design (etl_benchmark.py:74
+  *     quantile; :79 bucketize; :82 clamp):
   *      - phase 1 computes per-column boundary vectors: exact via
-  *        selection (`quantileBoundsSelect`) or distributed sort
-  *        (`quantileBoundsExact`), or approximate via single-pass sampling
-  *        with a DKW rank bound (`quantileBoundsSample` — the fast path) —
-  *        either way cols × bins doubles, trivially collectable;
+  *        selection (`quantileBoundsSelect`), or approximate via single-pass
+  *        sampling with a DKW rank bound (`quantileBoundsSample` — the fast
+  *        path) — either way cols × bins doubles, trivially collectable;
   *      - phase 2 folds the boundaries into the plan as a constant and
-  *        discretizes '''map-only''' with the codegen'd binary-search
-  *        expression [[graft.functions.BucketizeExpr]] (both closure
-  *        conventions). The fact table is never shuffled or sorted.
+  *        discretizes '''map-only''' (`discretize`) with the codegen'd
+  *        binary-search expression [[graft.functions.BucketizeExpr]] (both
+  *        closure conventions). The fact table is never shuffled or sorted.
   *        `tokenizeQcutDrop` adds pandas' duplicates='drop' edge collapse.
   *
   * Closure convention (SURVEY §2A fine print 1): a value equal to a boundary
   * goes in the '''lower''' bin (strict `b < v` count), matching
-  * torch.bucketize(right=False) - 1. Nulls: token null. NaN: '''top bin'''
-  * (round 12 — NaN ranks LAST engine-wide, the np.digitize convention and
-  * Spark's own sort/agg ordering; the reference has no NaN policy). The
-  * same NaN-last order is what every boundary path implements — see
-  * [[quantileBoundsSelect]] — so a NaN-bearing column tokenizes exactly as
-  * if sorted by Spark and cut at the same ranks.
+  * torch.bucketize(right=False) - 1. Nulls: token null. NaN: '''top bin''':
+  * NaN ranks LAST engine-wide, the np.digitize convention and Spark's own
+  * sort/agg ordering (the reference has no NaN policy). Every boundary path
+  * implements the same NaN-last order — see [[quantileBoundsSelect]] — so a
+  * NaN-bearing column tokenizes exactly as if sorted by Spark and cut at the
+  * same ranks.
+  *
+  * Every path sizes its input one way, [[inputRows]]: a bare parquet scan
+  * from its footers, anything else with one `count()` job.
   *
   * One selection core serves the exact paths: `quantileBoundsSelect` (on
   * its rank level, `selectRanks`, which [[GroupedQuantiles]] shares) and
   * `tokenizeRankSelect` each run their own sample / histogram / gather
   * jobs over their own row form, and share the driver-side bookkeeping —
   * rank location, gather slots, the collect-or-`reduceByKey` pick and the
-  * broadcasts' lifetime — in [[RankSelection]].
+  * broadcasts' lifetime — in [[RankSelection]]. Both bracket their
+  * per-value searches with [[graft.functions.BucketizeGrid]].
   */
 object Tokenize {
   val DefaultBins = 100
@@ -62,36 +63,14 @@ object Tokenize {
   val LineitemCols: Seq[String] = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
   val LineitemKeys: Seq[String] = Seq("l_orderkey", "l_linenumber")
 
-  /** Rank-based tokenizer: token_c = ntile(bins) over (c, tiebreak…) - 1.
-    *
-    * `tiebreak` must make the window order TOTAL over every column that can
-    * differ between rows sharing the same tiebreak prefix — in the driver
-    * data (l_orderkey, l_linenumber) is NOT unique (~23% duplicate keys),
-    * so the default lineitem tiebreak is keys ++ all measure columns. The
-    * output is ordered by tiebreak + token columns (fully deterministic:
-    * rows tying on every sort field are bit-identical and interchangeable).
-    */
-  def tokenizeRank(df: DataFrame, cols: Seq[String], tiebreak: Seq[String],
-                   bins: Int = DefaultBins): DataFrame = {
-    val keyCols = tiebreak.map(col)
-    val tokens = cols.map { c =>
-      val w = Window.orderBy(col(c) +: keyCols: _*)
-      (ntile(bins).over(w) - 1).as(s"${c}_token")
-    }
-    val outKeys = tiebreak.filterNot(cols.contains).map(col)
-    val outOrder = outKeys ++ cols.map(c => col(s"${c}_token"))
-    df.select(outKeys ++ tokens: _*).orderBy(outOrder: _*)
-  }
-
-  /** Rank tokenizer, selection-based — the preferred scale path and the
-    * contract `q_tokenize_rank` plan. The fact table is NEVER globally
-    * sorted; instead the ~(bins-1) NTILE bucket-boundary ROWS per column are
-    * located by position (the same sample→histogram→gather machinery as
-    * [[quantileBoundsSelect]], lifted to composite (value, tiebreak…) keys
-    * so ties split across buckets exactly as the window's total order
-    * does), and every row's token is then a MAP-ONLY
-    * [[graft.functions.VectorBucketizeExpr]] count of boundary keys at or
-    * below its own key:
+  /** Rank tokenizer, selection-based — the contract `q_tokenize_rank`
+    * plan. The fact table is NEVER globally sorted; instead the ~(bins-1)
+    * NTILE bucket-boundary ROWS per column are located by position (the
+    * same sample→histogram→gather machinery as [[quantileBoundsSelect]],
+    * lifted to composite (value, tiebreak…) keys so ties split across
+    * buckets exactly as the window's total order does), and every row's
+    * token is then a MAP-ONLY [[graft.functions.VectorBucketizeExpr]]
+    * count of boundary keys at or below its own key:
     *
     *   token(row) = #{ bucket starts j=1..bins-1 : key(start_j) <= key(row) }
     *
@@ -100,11 +79,13 @@ object Tokenize {
     * and no full sort of the fact table per column — the shape that wins on
     * a 1000-executor cluster (boundary keys broadcast as plan constants).
     *
-    * Requirements: `tiebreak` must be a unique total order — it is also
-    * the output ordering, applied below the token projection; all key
+    * Requirements: `tiebreak` must be a unique total order; all key
     * columns non-null, NaN-free, and order-preserving under a double cast
-    * (integers < 2^53; the driver corpus qualifies — checked with one
-    * aggregate). Token equality with [[tokenizeRank]] is spec-proved. */
+    * (integers < 2^53; the driver corpus qualifies). Nulls and NaN fail
+    * loudly, naming the column, from the sample or from the histogram's
+    * full-data count. The output is ordered by the tiebreak's non-token
+    * columns, then the tokens. Token equality with the window form
+    * `NTILE(bins) OVER (ORDER BY c, tiebreak…) - 1` is spec-proved. */
   def tokenizeRankSelect(df: DataFrame, cols: Seq[String], tiebreak: Seq[String],
                          bins: Int = DefaultBins, numBuckets: Int = 8192,
                          sampleSize: Int = 100000,
@@ -122,7 +103,7 @@ object Tokenize {
     // unconverted scan for the aggregation passes: primitive getDouble on
     // unsafe rows — no Row boxing (measured ~2x on the two passes)
     val internal = proj.queryExecution.toRdd
-    val n = df.count() // parquet metadata count — no column scan
+    val n = inputRows(df)
     require(n > 0, "tokenizeRankSelect: empty input")
     // 0-based global position of the first row of NTILE buckets 1..bins-1
     val base = n / bins
@@ -172,11 +153,14 @@ object Tokenize {
     val thresholds: Array[Map[Long, Array[Double]]] = RankSelection.withBroadcasts(sc) { bc =>
       val splitsB = bc(splits)
       val keyIdxB = bc(keyIdx)
-      // grid-bracketed lex search (round 11: the same surgery BucketizeGrid does
-      // for quantileBoundsSelect, lifted to composite keys — the plain
-      // search walked ~13 scattered cache lines of a ~450 KB split matrix
-      // per (row, col) in BOTH passes below)
-      val gidxB = bc(splits.map(f => new VectorBucketizeExpr.CompositeGridIndex(f, m)))
+      // Both passes bracket their lex search with a grid over the split
+      // rows' FIRST fields (non-decreasing, as the rows are lex-sorted):
+      // every split row below the bracket has a smaller first field, every
+      // one from its end a larger one, so the search finishes inside it.
+      // A plain search walks ~13 scattered cache lines of a ~450 KB split
+      // matrix per (row, col).
+      val gidxB = bc(splits.map(f =>
+        new BucketizeGrid(Array.tabulate(f.length / m)(i => f(i * m)))))
       // pass 1: flat (col, bucket) histogram — one composite binary search +
       // one increment per (row, col) into a partition-local array. The last
       // two slots count rows with a null / NaN sort field (precondition
@@ -261,16 +245,14 @@ object Tokenize {
       VectorBucketizeExpr.vbucketize(keyCols, positions.toSeq.map(thresholds(ci)))
         .as(s"${c}_token")
     }
-    // The output sort is ORDER BY keys ++ tokens-as-one-packed-long
-    // (round 13 — the same convention as the bucketize/rightopen/qcut
-    // trio, closing the round-12 verdict's top item). Round 8 sorted by
-    // the full raw tiebreak BELOW the token projection so the range
-    // partitioner's sampling pass read the bare scan; that kept the
-    // tokens single-evaluation but left a 6–7-slot ≈ 56 B sort row — at
-    // the 100× probe ~9 s of the query's 11.4 s wall was that sort. The
-    // packed form sorts 3 fields ≈ 32 B (keys + one long) at the price
-    // of the sampling pass re-evaluating the 4 binary searches, which is
-    // map-only codegen and far cheaper than the wider exchange.
+    // The output sort is ORDER BY keys ++ tokens-as-one-packed-long, the
+    // convention of the bucketize/rightopen/qcut queries. Sorting by the
+    // full raw tiebreak below the token projection would keep the tokens
+    // single-evaluation but sort a 6–7-slot ≈ 56 B row (at the 100× probe
+    // ~9 s of the query's 11.4 s wall); the packed form sorts 3 fields
+    // ≈ 32 B (keys + one long) at the price of the range partitioner's
+    // sampling pass re-evaluating the 4 binary searches, which is map-only
+    // codegen and far cheaper than the wider exchange.
     //
     // Order equivalence vs the oracle: (l_orderkey, l_linenumber) is NOT
     // unique (60k rows / 45.8k distinct pairs), so keys + tokens is not
@@ -289,7 +271,7 @@ object Tokenize {
   /** The 0-based ranks the quantiles `probs` of `n` sorted values read:
     * floor and ceil of pos = p·(n−1) — the definition of np.percentile /
     * torch.quantile (etl_benchmark.py:74) and DuckDB quantile_cont. */
-  private def quantileRanks(probs: Seq[Double], n: Long): Seq[Long] =
+  private[operators] def quantileRanks(probs: Seq[Double], n: Long): Seq[Long] =
     probs.flatMap { p =>
       val pos = p * (n - 1)
       Seq(math.floor(pos).toLong, math.ceil(pos).toLong)
@@ -297,7 +279,7 @@ object Tokenize {
 
   /** The quantiles `probs` of `n` sorted values, linearly interpolated
     * between the values `at` gives for the [[quantileRanks]]. */
-  private def interpolated(probs: Seq[Double], n: Long)(at: Long => Double): Seq[Double] =
+  private[operators] def interpolated(probs: Seq[Double], n: Long)(at: Long => Double): Seq[Double] =
     probs.map { p =>
       val pos = p * (n - 1)
       val l = at(math.floor(pos).toLong)
@@ -307,7 +289,7 @@ object Tokenize {
 
   /** ORDER BY keys ++ token columns with the tokens riding the sort
     * exchange as ONE packed long, decoded in the projection ABOVE the Sort
-    * (round 12 — the q_fuzzy_pairs narrow-sort convention). An UnsafeRow
+    * (the q_fuzzy_pairs narrow-sort convention). An UnsafeRow
     * spends a full 8-byte slot per field, so 4 token ints cost 32 B of
     * sort row where one packed long costs 8: the 60 M-row contract sorts
     * shrink ~56 → 32 B/row, and the comparator walks 3 fields, not 6.
@@ -316,16 +298,15 @@ object Tokenize {
     * token occupies its own 15-bit lane (disjoint bit ranges → lex order
     * over lanes == numeric order of the packed long) as `token + 1`, with
     * 0 reserved for null — 0 sorts below every real lane value, matching
-    * Spark's ASC NULLS FIRST. Lanes are 15 bits (round-13 advisor fix),
-    * not 16, so even 4 fully-loaded lanes occupy bits 0–59 and the long's
-    * SIGN BIT is structurally unreachable — with 16-bit lanes a first-lane
-    * `token + 1 ≥ 32768` would have set bit 63 and silently inverted the
+    * Spark's ASC NULLS FIRST. Lanes are 15 bits, not 16, so even 4
+    * fully-loaded lanes occupy bits 0–59 and the long's SIGN BIT is
+    * structurally unreachable — with 16-bit lanes a first-lane
+    * `token + 1 ≥ 32768` would set bit 63 and silently invert the
     * global order. Preconditions: ≤ 4 token columns (driver-side
     * `require`), each an integer in [0, 32766] so `token + 1` fits its
-    * 15-bit lane — and the data-level bound IS runtime-enforced
-    * (round-13 verdict item 2: the lanes combine with `+`, so an
-    * out-of-range token would CARRY into the neighboring lane and
-    * silently mis-order; the old code only documented the bound): each
+    * 15-bit lane — and the data-level bound IS runtime-enforced, because
+    * the lanes combine with `+` and an out-of-range token would CARRY into
+    * the neighboring lane and silently mis-order: each
     * lane value is checked per row with a codegen `when`/`raise_error`
     * before packing, so a future caller with bins > 32767 fails loudly
     * instead of producing a wrong global order. Cost: one branch per
@@ -353,62 +334,9 @@ object Tokenize {
       }: _*)
   }
 
-  /** Phase 1, exact: distributed sort + select-by-position quantiles with
-    * linear interpolation at pos = p*(n-1) — the same definition as
-    * np.percentile / torch.quantile (etl_benchmark.py:74) and DuckDB
-    * quantile_cont. One range-partitioned sort per column (fully
-    * distributed), then only the ~2×|probs| rows at quantile positions are
-    * collected. Replaces the builtin exact `percentile` aggregate, which is
-    * a non-codegen TypedImperativeAggregate measured ~10x slower at sf0.1.
-    * NaN ranks last here for free — Spark's sort order — which is the
-    * engine-wide NaN policy the other boundary paths match (round 12).
-    */
-  def quantileBoundsExact(df: DataFrame, cols: Seq[String],
-                          probs: Seq[Double]): Map[String, Seq[Double]] = {
-    import org.apache.spark.storage.StorageLevel
-    val spark = df.sparkSession
-    val sc = spark.sparkContext
-    // one aggregation job for all per-column non-null counts
-    val countRow = df.agg(count(col(cols.head)).as(cols.head),
-      cols.tail.map(c => count(col(c)).as(c)): _*).head()
-    val counts: Array[Long] = cols.indices.map(countRow.getLong).toArray
-    cols.indices.foreach(i =>
-      require(counts(i) > 0, s"quantileBoundsExact: no non-null values in ${cols(i)}"))
-    // Per-column range-partitioned sort (fully distributed — Spark's sort
-    // samples split points and spreads the column over all cores), with the
-    // sorted column PERSISTED so zipWithIndex's two passes (partition
-    // counts, then extraction of the ~2|probs| quantile rows) reuse one
-    // sort instead of re-running it. Columns run concurrently with a small
-    // cap — each holds a serialized cache of its column until released.
-    // (A melted single-shuffle variant was measured strictly worse: it
-    // inflates record count x|cols| and record rate dominates sort cost.)
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val es = java.util.concurrent.Executors.newFixedThreadPool(math.min(cols.size, 4))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(es)
-    val futs = cols.indices.map { ci =>
-      Future {
-        val c = cols(ci)
-        val vals = df.select(col(c).cast("double")).where(col(c).isNotNull)
-        val neededB = sc.broadcast(quantileRanks(probs, counts(ci)).toSet)
-        val sorted = vals.sort(c).rdd
-          .persist(StorageLevel.MEMORY_AND_DISK_SER)
-        val picked: Map[Long, Double] =
-          try sorted.zipWithIndex()
-            .filter { case (_, i) => neededB.value.contains(i) }
-            .map { case (r, i) => (i, r.getDouble(0)) }
-            .collectAsMap().toMap
-          finally { sorted.unpersist(blocking = false); neededB.destroy() }
-        c -> interpolated(probs, counts(ci))(picked)
-      }
-    }
-    try Await.result(Future.sequence(futs), Duration.Inf).toMap
-    finally es.shutdown()
-  }
-
   /** Dev-only phase timing for the selection passes — prints ONLY under
-    * -Dgraft.qsel.verbose=true (set by the QselProbe harness);
-    * contract queries emit nothing to stderr (round-10 verdict item 3). */
+    * -Dgraft.qsel.verbose=true (set by the QselProbe harness), so contract
+    * queries emit nothing to stderr. */
   private def devPhase(label: String, tag: String, since: Long): Long = {
     val now = System.nanoTime()
     if (java.lang.Boolean.getBoolean("graft.qsel.verbose"))
@@ -416,40 +344,19 @@ object Tokenize {
     now
   }
 
-  /** Driver-side footer row count for a DataFrame that is a BARE parquet
-    * scan (no filters — column pruning cannot change the row count, so a
-    * plain LogicalRelation is the exact condition): sums
-    * `ParquetFileReader.getRecordCount` over the relation's listed files.
-    * None for any other plan shape → caller falls back to a column-less
-    * `count()` scan job. At warehouse scale this is the difference
-    * between a metadata read and a cluster job per boundary computation. */
-  private def footerCount(df: DataFrame): Option[Long] = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    df.queryExecution.optimizedPlan match {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[
-            org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat] =>
-          val conf = df.sparkSession.sessionState.newHadoopConf()
-          var total = 0L
-          fs.location.listFiles(Nil, Nil).foreach(_.files.foreach { st =>
-            val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile
-                .fromStatus(st.fileStatus, conf))
-            try total += rd.getRecordCount finally rd.close()
-          })
-          Some(total)
-        case _ => None
-      }
-      case _ => None
-    }
-  }
+  /** Rows of `df` — the one sizing rule of every path here: summed from
+    * the parquet footers of a bare parquet scan ([[graft.Tables.footerCount]],
+    * no job), else one column-less `count()` job. */
+  private def inputRows(df: DataFrame): Long =
+    graft.Tables.footerCount(df).getOrElse(df.count())
 
   /** Phase 1, exact, selection-based — the preferred scale path. Finds the
     * exact values at the quantile positions (pos = p·(n−1), interpolated
     * between floor and ceil) without a global sort:
     *
-    *  - '''Sizing, driver.''' A bare parquet scan is counted from its
-    *    footers (no job); any other input pays one column-less `count()`.
+    *  - '''Sizing, driver.''' [[inputRows]]: a bare parquet scan is
+    *    counted from its footers (no job); any other input pays one
+    *    column-less `count()`.
     *    Inputs of at most `smallCollect` TOTAL rows (not non-null rows: a
     *    mostly-null wide input is still big to collect) are collected and
     *    sorted on the driver, where three jobs would cost more than they
@@ -486,8 +393,8 @@ object Tokenize {
     * The counting and picking run at the rank level, [[selectRanks]]; this
     * method adds the floor/ceil interpolation.
     *
-    * The result is byte-identical to [[quantileBoundsExact]] (equality
-    * spec). Values equal to a split share a bucket, so ties never split
+    * The result is byte-identical to the sort-based exact quantiles
+    * (equality spec). Values equal to a split share a bucket, so ties never split
     * across buckets and a tie-heavy column degrades into a few big buckets.
     *
     * NaN ranks '''last''', as in Spark's sort and `Arrays.sort(double[])`:
@@ -506,9 +413,8 @@ object Tokenize {
                            maxCollect: Long = 64000000L,
                            smallCollect: Long = 1000000L): Map[String, Seq[Double]] = {
     val t0 = System.nanoTime()
-    val footer = footerCount(df)
-    val totalRows = footer.getOrElse(df.count())
-    devPhase("qsel", s"count(footer=${footer.isDefined})", t0)
+    val totalRows = inputRows(df)
+    devPhase("qsel", "count", t0)
     val proj = df.select(cols.map(c => col(c).cast("double")): _*)
     val sel = selectRanks(proj, totalRows, { (ci, n) =>
       require(n > 0, s"quantileBoundsSelect: no non-null values in ${cols(ci)}")
@@ -664,9 +570,8 @@ object Tokenize {
     * boundary vectors are reused across q_tokenize_bucketize /
     * q_token_histogram / repeated bench invocations within a JVM.
     * Fingerprint-validated against the lineitem dir on every lookup
-    * ([[graft.ModelState.validated]], round-14 verdict item 2): regenerated
-    * parquet rebuilds the boundaries instead of tokenizing new data with
-    * old split points. */
+    * ([[graft.ModelState.validated]]): regenerated parquet rebuilds the
+    * boundaries instead of tokenizing new data with old split points. */
   private val boundsCache = scala.collection.concurrent.TrieMap
     .empty[(String, Seq[String], Int), (String, Map[String, Seq[Double]])]
 
@@ -690,11 +595,12 @@ object Tokenize {
     * tokenizer (bin-edge jitter of ~eps rank is immaterial); exact
     * selection remains the bit-exact path. NaN sorts last in the driver
     * sort (`Arrays.parallelSort` IEEE-754 total order) — the engine-wide
-    * NaN-last policy (round 12) holds here with no extra code. */
+    * NaN-last policy holds here with no extra code. The sample scan is the
+    * only job: the sampling rate comes from [[inputRows]]. */
   def quantileBoundsSample(df: DataFrame, cols: Seq[String], probs: Seq[Double],
                            sampleSize: Int = 1000000, seed: Long = 42): Map[String, Seq[Double]] = {
     val k = cols.size
-    val n = df.count()
+    val n = inputRows(df)
     require(n > 0, "quantileBoundsSample: empty input")
     val proj = df.select(cols.map(c => col(c).cast("double")): _*)
     val rdd = proj.queryExecution.toRdd
@@ -746,8 +652,8 @@ object Tokenize {
     * full bins+1 quantile EDGES (including min/max), rounded to the shared
     * 6-decimal grid, with duplicate edges COLLAPSED — on a low-cardinality
     * column (l_discount: 11 distinct values) many quantile edges coincide
-    * and the surviving bins renumber densely, unlike [[tokenizeByBounds]]
-    * which keeps empty bins (torch semantics). */
+    * and the surviving bins renumber densely, unlike the inner-boundary
+    * tokenizers, which keep empty bins (torch semantics). */
   def qcutDropEdges(df: DataFrame, cols: Seq[String],
                     bins: Int = DefaultBins): Map[String, Seq[Double]] = {
     val probs = (0 to bins).map(_.toDouble / bins)
@@ -755,31 +661,22 @@ object Tokenize {
       .map { case (c, es) => c -> es.map(round6d).distinct }
   }
 
-  /** qcut-with-drop tokenizer: token = bin among the COLLAPSED edges.
-    * With edges e_0 < … < e_m, value v gets `#{inner edge < v}` (right
-    * closed, the qcut interval convention; `rightClosed = false` gives the
-    * Numba/Bucketizer left-closed convention instead), clamped to
-    * [0, m-1]. A fully-constant column collapses to a single edge and
-    * tokenizes to bin 0 (explicit policy; pandas returns no bins). */
+  /** qcut-with-drop tokenizer: token = bin among the COLLAPSED `edges`
+    * ([[qcutDropEdges]]). With edges e_0 < … < e_m, value v gets
+    * `#{inner edge < v}` (right closed, the qcut interval convention;
+    * `rightClosed = false` gives the Numba/Bucketizer left-closed
+    * convention instead), clamped to [0, m-1]. A fully-constant column
+    * collapses to a single edge and tokenizes to bin 0 (explicit policy;
+    * pandas returns no bins). */
   def tokenizeQcutDrop(df: DataFrame, cols: Seq[String], keep: Seq[String],
-                       bins: Int = DefaultBins, rightClosed: Boolean = true,
-                       edgesOverride: Map[String, Seq[Double]] = Map.empty): DataFrame = {
-    val edges = if (edgesOverride.nonEmpty) edgesOverride else qcutDropEdges(df, cols, bins)
+                       edges: Map[String, Seq[Double]],
+                       rightClosed: Boolean = true): DataFrame = {
     val tokens = cols.map { c =>
       val es = edges(c)
       val inner = es.slice(1, es.size - 1)
       BucketizeExpr.bucketize(col(c).cast("double"), inner,
         math.max(es.size - 1, 1), rightClosed).as(s"${c}_token")
     }
-    df.select(keep.map(col) ++ tokens: _*)
-  }
-
-  /** Full two-phase boundary tokenizer over `cols`, keeping `keep` columns. */
-  def tokenizeByBounds(df: DataFrame, cols: Seq[String], keep: Seq[String],
-                       bins: Int = DefaultBins): DataFrame = {
-    val bounds = quantileBoundsExact(df, cols, innerProbs(bins))
-      .map { case (c, bs) => c -> bs.map(round6d) }
-    val tokens = cols.map(c => discretize(col(c), bounds(c), bins).as(s"${c}_token"))
     df.select(keep.map(col) ++ tokens: _*)
   }
 
@@ -827,11 +724,11 @@ object Tokenize {
       // Fail crisply if a larger fixture ever pushes this entry into the
       // genuinely-sampled regime: past 1M rows the boundaries become
       // partition-layout-dependent and the quantile_cont oracle would
-      // flake as a silent hash mismatch. (The count is metadata-speed on
-      // parquet; the library path quantileBoundsSample itself stays total
+      // flake as a silent hash mismatch. (The count is read from the
+      // footers; the library path quantileBoundsSample itself stays total
       // at every scale — only this hash-checked contract entry pins the
       // deterministic regime.)
-      val n = li.count()
+      val n = graft.Tables.rowCount(spark, dir, "lineitem")
       require(n <= 1000000L,
         s"q_quantile_bounds_sample's oracle is only deterministic at n <= sampleSize (1M); " +
           s"got n=$n — raise sampleSize in the entry or use the rows-only DKW-checked path")
@@ -870,7 +767,7 @@ object Tokenize {
           Seq(s"$dir/lineitem.parquet"), "Tokenize.qcutEdges")(
         qcutDropEdges(li, LineitemCols, DefaultBins))
       orderByKeysThenPackedTokens(
-        tokenizeQcutDrop(li, LineitemCols, LineitemKeys, edgesOverride = edges),
+        tokenizeQcutDrop(li, LineitemCols, LineitemKeys, edges),
         LineitemKeys, LineitemCols.map(c => s"${c}_token"))
     },
     "q_token_histogram" -> { (spark, dir) =>
@@ -884,9 +781,9 @@ object Tokenize {
         .orderBy("token")
     },
     "q_tokenize_nan" -> { (spark, dir) =>
-      // The NaN-last policy in the ORACLE LANE (round 12 — the policy was
-      // property-tested but no contract query could reach it: the driver
-      // fixtures carry no NaN). NaN is injected DETERMINISTICALLY into the
+      // The NaN-last policy in the ORACLE LANE: the driver fixtures carry
+      // no NaN, so without this query the policy is only property-tested.
+      // NaN is injected DETERMINISTICALLY into the
       // tokenized value ((l_orderkey + l_linenumber) % 7 = 3, ~14% of
       // rows); boundaries derive from the CLEAN column — by design, and
       // provably necessarily: DuckDB's own quantile_cont over NaN-bearing
@@ -899,8 +796,8 @@ object Tokenize {
       // boundary, verified: 'nan' > 1e308 is TRUE), with NO special-casing
       // in the oracle SQL — the two engines agree because both define
       // NaN-last, which is the point of the policy. Output order is the
-      // raw full tiebreak (the q_tokenize_rank convention: a unique total
-      // order of CLEAN columns, sorted below the projection).
+      // raw full tiebreak: a unique total order of CLEAN columns, sorted
+      // below the projection.
       val li = graft.Tables.lineitem(spark, dir)
       val bounds = cachedLineitemBounds(spark, dir, LineitemCols, DefaultBins)
       val injected = when(
@@ -946,8 +843,8 @@ object Tokenize {
          |FROM b, generate_series(1, ${DefaultBins + 1}) t(gs)
          |ORDER BY col_name, p_idx""".stripMargin
     Map(
-      // ORDER BY keys + token aliases (round 13, previously the full raw
-      // tiebreak): matches the Spark side's packed-token sort. Ties under
+      // ORDER BY keys + token aliases, matching the Spark side's
+      // packed-token sort. Ties under
       // (keys, tokens) are rows whose entire projected output is
       // identical, so both engines hash the same regardless of tie order.
       "q_tokenize_rank" ->

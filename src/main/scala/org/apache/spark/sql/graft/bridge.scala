@@ -16,14 +16,9 @@ object Bridge {
   /** Resolve a Column back to its Catalyst expression (classic backend). */
   def expression(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
 
-  /** The InternalRow RDD of a DataFrame (no per-row Row conversion —
-    * primitive field access in tight per-partition loops). */
-  def internalRdd(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
-    df.queryExecution.toRdd
-
   /** The DataFrame's rows as `ColumnarBatch`es, one batch stream per
-    * partition of [[internalRdd]] (same partitions, same row order). When
+    * partition of `df.queryExecution.toRdd` (same partitions, same row
+    * order). When
     * the executed plan only converts a columnar child to rows —
     * `WholeStageCodegen(ColumnarToRow(InputAdapter(child)))` or a bare
     * `ColumnarToRow(child)`, e.g. a vectorized parquet scan — the child's
@@ -134,11 +129,10 @@ object Bridge {
     * with this context — the driver plus each executor JVM. The reported
     * max is what the JVM registered at startup (execution pool empty), i.e.
     * ≈ (heap − 300 MB reserved) × memoryFraction — exactly the derivation
-    * graft's footprint heuristics used to re-compute from the DRIVER's
-    * Runtime.maxMemory, which is wrong the moment executors are separate
-    * JVMs with their own heaps (round-13 advisor caveat on
-    * `Graph.vertexBroadcastable`, made real by the round-14 multi-executor
-    * runs). Reading the registry instead means the heuristics see the
+    * graft's footprint heuristics would otherwise re-compute from the
+    * DRIVER's Runtime.maxMemory, which is wrong the moment executors are
+    * separate JVMs with their own heaps (`Graph.vertexBroadcastable` under
+    * local-cluster). Reading the registry instead means the heuristics see the
     * actual per-JVM pools on ANY deployment: local (one driver entry),
     * local-cluster, or a standalone/YARN/K8s cluster.
     * `BlockManagerMaster.getMemoryStatus` is `private[spark]` — same

@@ -374,7 +374,7 @@ class PlanSpec extends SparkSpec {
 
   test("boundary tokenizer is map-only over the fact table (no exchange)") {
     val li = Tables.lineitem(spark, sf)
-    val bounds = operators.Tokenize.quantileBoundsExact(
+    val bounds = operators.TokenizeReference.quantileBoundsExact(
       li, Seq("l_quantity"), operators.Tokenize.innerProbs(100))
     val df = li.select(operators.Tokenize.discretize(
       org.apache.spark.sql.functions.col("l_quantity"), bounds("l_quantity")).as("t"))

@@ -36,7 +36,7 @@ class VectorBucketizeSpec extends SparkSpec {
     }
   }
 
-  test("CompositeGridIndex bracket + searchRowIn == full-range searchRow (round 11)") {
+  test("BucketizeGrid bracket + searchRowIn == full-range searchRowIn") {
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     val rnd = new scala.util.Random(11)
     val m = 3
@@ -63,9 +63,10 @@ class VectorBucketizeSpec extends SparkSpec {
       Array.empty[Double])
     val idx = Array(0, 1, 2)
     for (flat <- mats) {
-      val gx = new VectorBucketizeExpr.CompositeGridIndex(flat, m)
       val t = flat.length / m
-      val firsts = (0 until t).map(i => flat(i * m))
+      val firsts = Array.tabulate(t)(i => flat(i * m))
+      // the rank tokenizer's grid: over the split rows' first fields
+      val gx = new BucketizeGrid(firsts)
       val probes = Iterator.fill(5000)(Array(
           rnd.nextGaussian() * 100, rnd.nextDouble(), rnd.nextDouble())) ++
         firsts.iterator.map(f => Array(f, rnd.nextDouble(), rnd.nextDouble())) ++
@@ -73,14 +74,13 @@ class VectorBucketizeSpec extends SparkSpec {
         firsts.iterator.map(f => Array(math.nextDown(f), 1.0, 1.0)) ++
         Iterator(Array(Double.NegativeInfinity, 0.0, 0.0),
           Array(Double.PositiveInfinity, 0.0, 0.0),
-          // round-11 advisor item: a NaN first field must take the
-          // full-range fallback — the grid's range tests are both false
-          // for NaN and an interior bracket would disagree with the
-          // full-range search
+          // a NaN first field must take the full-range fallback — the
+          // grid's range tests are both false for NaN and an interior
+          // bracket would disagree with the full-range search
           Array(Double.NaN, 0.5, 0.5))
       for (key <- probes) {
         val row = new GenericInternalRow(key.map(v => v: Any))
-        val full = VectorBucketizeExpr.searchRow(flat, m, row, idx)
+        val full = VectorBucketizeExpr.searchRowIn(flat, m, row, idx, 0, t)
         val br = gx.bracket(key(0))
         val fast = VectorBucketizeExpr.searchRowIn(
           flat, m, row, idx, (br >>> 32).toInt, br.toInt)

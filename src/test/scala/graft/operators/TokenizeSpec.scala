@@ -7,6 +7,7 @@ import graft.functions.{BucketizeExpr, BucketizeGrid}
 
 class TokenizeSpec extends SparkSpec {
   import Tokenize._
+  import TokenizeReference._
 
   private lazy val randDf = {
     val cols = (0 until 3).map(i => randn(42 + i).as(s"col_$i"))
@@ -78,7 +79,8 @@ class TokenizeSpec extends SparkSpec {
     // Its Bucketizer intervals are left-closed => compare rightClosed=false.
     val df = spark.range(20000)
       .select(col("id"), (floor(randn(7) * 1.5) / 10.0).as("v"))
-    val ours = tokenizeQcutDrop(df, Seq("v"), Seq("id"), bins = 10, rightClosed = false)
+    val ours = tokenizeQcutDrop(df, Seq("v"), Seq("id"), qcutDropEdges(df, Seq("v"), bins = 10),
+      rightClosed = false)
     val qd = new org.apache.spark.ml.feature.QuantileDiscretizer()
       .setInputCol("v").setOutputCol("qd_bin").setNumBuckets(10).setRelativeError(0.0)
     val theirs = qd.fit(df).transform(df).select(col("id"), col("qd_bin").cast("int"))
@@ -126,7 +128,7 @@ class TokenizeSpec extends SparkSpec {
     val tiebreak = Tokenize.LineitemKeys ++ Tokenize.LineitemCols
     val outCols = Seq("l_orderkey", "l_linenumber") ++
       Tokenize.LineitemCols.map(c => s"${c}_token")
-    val a = Tokenize.tokenizeRank(li, Tokenize.LineitemCols, tiebreak)
+    val a = tokenizeRank(li, Tokenize.LineitemCols, tiebreak)
       .select(outCols.map(col): _*).collect().map(_.toSeq).sortBy(_.mkString("|"))
     for (maxCollect <- Seq(64000000L, 8L)) {
       val b = Tokenize.tokenizeRankSelect(li, Tokenize.LineitemCols, tiebreak,
@@ -501,10 +503,34 @@ class TokenizeSpec extends SparkSpec {
     val df = spark.range(20000).select(col("id"),
       when(col("id") === 12345, lit(Double.NaN))
         .otherwise(pmod(col("id") * 2654435761L, lit(1000003)).cast("double")).as("v"))
-    val msg = failsReleasingBroadcasts {
-      tokenizeRankSelect(df, Seq("v"), Seq("id", "v"), bins = 10, numBuckets = 8, sampleSize = 1)
+    var msg = ""
+    val run = ran {
+      msg = failsReleasingBroadcasts {
+        tokenizeRankSelect(df, Seq("v"), Seq("id", "v"), bins = 10, numBuckets = 8, sampleSize = 1)
+      }
     }
     assert(msg.contains("tokenizeRankSelect: 1 rows have NaN sort columns"), msg)
+    // not a parquet scan: sized by the count() fallback
+    assert(run.actions.contains("count"), run)
+  }
+
+  test("a bare parquet scan is sized from its footers: no count job on any tokenizer path") {
+    val dir = java.nio.file.Files.createTempDirectory("tokfooter").toString
+    spark.range(30000).select(col("id"),
+        pmod(col("id") * 2654435761L, lit(1000003)).cast("double").as("v"))
+      .repartition(3).write.parquet(s"$dir/t")
+    val df = spark.read.parquet(s"$dir/t")
+    val probs = Seq(0.0, 0.5, 1.0)
+    // the sample scan is the only job
+    val sample = ran(quantileBoundsSample(df, Seq("v"), probs))
+    assert(sample.jobs.size == 1 && sample.actions.isEmpty, sample)
+    val select = ran(quantileBoundsSelect(df, Seq("v"), probs, smallCollect = 0))
+    val rank = ran(tokenizeRankSelect(df, Seq("v"), Seq("id", "v"), bins = 10))
+    for ((what, run) <- Seq("select" -> select, "rank" -> rank))
+      assert(run.jobs.nonEmpty && !run.actions.contains("count"), s"$what: $run")
+    // a filtered scan is not bare: the count() fallback sizes it
+    val filtered = ran(quantileBoundsSample(df.filter(col("id") > 0), Seq("v"), probs))
+    assert(filtered.actions == Seq("count"), filtered)
   }
 
   test("q_tokenize_nan: injected NaN lands the top bin, clean rows match the bucketize query (round 12)") {
