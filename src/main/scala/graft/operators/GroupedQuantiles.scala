@@ -43,7 +43,7 @@ object GroupedQuantiles {
     * rank). `ranksOf` maps a group's count to the positions it needs. */
   def selectByRank(df: DataFrame, groupCol: String, valueCol: String,
                    ranksOf: Long => Seq[Long],
-                   numBuckets: Int = 8192, sampleSize: Int = 100000,
+                   numBuckets: Int = 8192,
                    maxCollect: Long = 64000000L,
                    smallCollect: Long = 1000000L): Map[Any, (Long, Map[Long, Double])] = {
     val v = col(valueCol).cast("double")
@@ -62,7 +62,7 @@ object GroupedQuantiles {
     val proj = df.select(keys.indices.map(gi =>
       when(col(groupCol) === lit(keys(gi)), v).as(s"g$gi")): _*)
     val sel = Tokenize.selectRanks(proj, groups.map(_.getLong(3)).sum, (_, n) => ranksOf(n),
-      numBuckets, sampleSize, maxCollect, smallCollect)
+      numBuckets, maxCollect, smallCollect)
     keys.zip(sel).toMap
   }
 }

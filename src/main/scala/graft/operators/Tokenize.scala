@@ -2,9 +2,12 @@ package graft.operators
 
 import scala.collection.mutable
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.vectorized.ColumnVector
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{BucketizeExpr, BucketizeGrid}
 
@@ -334,16 +337,6 @@ object Tokenize {
       }: _*)
   }
 
-  /** Dev-only phase timing for the selection passes — prints ONLY under
-    * -Dgraft.qsel.verbose=true (set by the QselProbe harness), so contract
-    * queries emit nothing to stderr. */
-  private def devPhase(label: String, tag: String, since: Long): Long = {
-    val now = System.nanoTime()
-    if (java.lang.Boolean.getBoolean("graft.qsel.verbose"))
-      System.err.println(f"[$label] $tag=${(now - since) / 1e9}%.2f")
-    now
-  }
-
   /** Rows of `df` — the one sizing rule of every path here: summed from
     * the parquet footers of a bare parquet scan ([[graft.Tables.footerCount]],
     * no job), else one column-less `count()` job. */
@@ -361,37 +354,50 @@ object Tokenize {
     *    mostly-null wide input is still big to collect) are collected and
     *    sorted on the driver, where three jobs would cost more than they
     *    save. Larger inputs take the three jobs below.
-    *  - '''Source.''' Every job reads the cast projection as
-    *    `ColumnarBatch`es ([[org.apache.spark.sql.graft.Bridge.columnarBatches]]):
+    *  - '''Source, decoded once per call.''' The cast projection is read as
+    *    `ColumnarBatch`es ([[org.apache.spark.sql.graft.Bridge.columnarBatches]]:
     *    a vectorized parquet scan hands over its own double vectors, any
-    *    other plan goes through Spark's `RowToColumnarExec`. Each job has one
-    *    column-at-a-time loop over `ColumnVector.getDouble`.
-    *  - '''Job 1, sample.''' Up to 64 evenly strided partitions decode only
-    *    their first ~sampleSize/64 rows; each returns, per column, its
-    *    null- and NaN-free values sorted. The driver concatenates those
-    *    sorted runs, picks ≤ numBuckets − 1 distinct equi-depth split points
-    *    per column and builds one [[graft.functions.BucketizeGrid]] per
-    *    column. The splits come from partition heads, not a full-scan
-    *    Bernoulli sample, because they only steer bucket granularity and
-    *    never the result: a head sample costs ~2% of a scan, and a biased
-    *    one (a value-clustered file) only enlarges the candidate buckets,
-    *    which the `maxCollect` guard absorbs. [[quantileBoundsSample]] keeps
-    *    its full-scan sample because there the sample IS the answer.
-    *  - '''Job 2, histogram.''' One scan counts every column's values per
-    *    bucket (grid-bracketed lower_bound) into a partition-local flat
-    *    (col, bucket) array; tree-reduced. The per-column non-null counts
-    *    are its row sums. The driver ([[RankSelection.Located]]) turns the
-    *    cumulative counts into a (bucket, in-bucket offset) for every
-    *    needed position.
-    *  - '''Job 3, gather.''' A second scan keeps only the values that fall
-    *    in a needed bucket (≈ |probs|·n/B per column) as primitive arrays
-    *    keyed by (col, gather slot). Up to `maxCollect` candidates are
-    *    collected and sorted per bucket on the driver; above it each bucket
-    *    is sorted on the executors after a reduceByKey and only the needed
-    *    offsets come back ([[RankSelection.pick]]).
+    *    other plan goes through Spark's `RowToColumnarExec`) and each batch
+    *    becomes one exact-size `double[]` of non-null values per column.
+    *    Those arrays are persisted `MEMORY_ONLY` for the length of the call
+    *    and unpersisted (blocking) before it returns or throws, so nothing
+    *    outlives the call or is shared between calls. One array per batch,
+    *    not one per column, keeps them far below the G1 humongous-object
+    *    size. A block that does not fit or is evicted is decoded again from
+    *    the source by its lineage; nothing spills to disk, and the result
+    *    never depends on what stayed cached.
+    *  - '''Job 1, `boundaries.sample`.''' Decodes every task into the
+    *    cache and returns, per column, every s-th non-null value of the
+    *    task, NaN dropped (s = `totalRows` / (4·numBuckets), no RNG). A
+    *    dense column thus yields ~4 values per bucket: fewer made the
+    *    bucket sizes vary enough to slow the next two jobs, more only cost
+    *    the sample's sort and transfer. A sparse column yields fewer
+    *    values and so fewer buckets, each holding about s values, so its
+    *    buckets stay about as large as a dense column's. The driver
+    *    picks ≤ numBuckets − 1 distinct equi-depth split points per column
+    *    and builds one [[graft.functions.BucketizeGrid]] per column. The
+    *    splits only steer how coarse the buckets are, never the result: a
+    *    biased sample only enlarges the candidate buckets, which the
+    *    `maxCollect` guard absorbs. [[quantileBoundsSample]] keeps its
+    *    full-scan Bernoulli sample because there the sample IS the answer.
+    *  - '''Job 2, `boundaries.hist`.''' Over the cache, counts every
+    *    column's values per bucket (grid-bracketed lower_bound) into a
+    *    partition-local flat (col, bucket) array; tree-reduced. The
+    *    per-column non-null counts are its row sums. The driver
+    *    ([[RankSelection.Located]]) turns the cumulative counts into a
+    *    (bucket, in-bucket offset) for every needed position.
+    *  - '''Job 3, `boundaries.gather`.''' Over the cache, keeps only the
+    *    values that fall in a needed bucket (≈ |probs|·n/B per column) as
+    *    primitive arrays keyed by (col, gather slot). Up to `maxCollect`
+    *    candidates are collected and sorted per bucket on the driver;
+    *    above it each bucket is sorted on the executors after a
+    *    reduceByKey and only the needed offsets come back
+    *    ([[RankSelection.pick]]).
     *
-    * The counting and picking run at the rank level, [[selectRanks]]; this
-    * method adds the floor/ceil interpolation.
+    * The three jobs run under those call sites (the names their stages
+    * carry in listeners and the UI); the caller's call site is restored
+    * afterwards. The counting and picking run at the rank level,
+    * [[selectRanks]]; this method adds the floor/ceil interpolation.
     *
     * The result is byte-identical to the sort-based exact quantiles
     * (equality spec). Values equal to a split share a bucket, so ties never split
@@ -409,35 +415,60 @@ object Tokenize {
     * Every broadcast the call makes is destroyed before it returns or
     * throws. */
   def quantileBoundsSelect(df: DataFrame, cols: Seq[String], probs: Seq[Double],
-                           numBuckets: Int = 8192, sampleSize: Int = 200000,
+                           numBuckets: Int = 8192,
                            maxCollect: Long = 64000000L,
                            smallCollect: Long = 1000000L): Map[String, Seq[Double]] = {
-    val t0 = System.nanoTime()
     val totalRows = inputRows(df)
-    devPhase("qsel", "count", t0)
     val proj = df.select(cols.map(c => col(c).cast("double")): _*)
     val sel = selectRanks(proj, totalRows, { (ci, n) =>
       require(n > 0, s"quantileBoundsSelect: no non-null values in ${cols(ci)}")
       quantileRanks(probs, n)
-    }, numBuckets, sampleSize, maxCollect, smallCollect)
+    }, numBuckets, maxCollect, smallCollect)
     cols.indices.map { ci =>
       val (n, at) = sel(ci)
       cols(ci) -> interpolated(probs, n)(at)
     }.toMap
   }
 
+  /** Runs `f`'s jobs under the call site `name`, then restores the
+    * caller's call site (a job group or other local property is left as
+    * it is). */
+  private def underCallSite[T](sc: SparkContext, name: String)(f: => T): T = {
+    val keys = Seq("callSite.short", "callSite.long")
+    val saved = keys.map(sc.getLocalProperty)
+    keys.foreach(sc.setLocalProperty(_, name))
+    try f finally keys.zip(saved).foreach { case (key, v) => sc.setLocalProperty(key, v) }
+  }
+
+  /** The first `m` rows' non-null values of `vec`, in row order, as an
+    * exact-size array. The nulls are counted over those rows, not read
+    * from `numNulls`, which a constant vector reports for its capacity. */
+  private def nonNullValues(vec: ColumnVector, m: Int): Array[Double] = {
+    var nulls = 0
+    var r = 0
+    if (vec.hasNull) while (r < m) { if (vec.isNullAt(r)) nulls += 1; r += 1 }
+    val out = new Array[Double](m - nulls)
+    var j = 0
+    r = 0
+    while (r < m) {
+      if (nulls == 0 || !vec.isNullAt(r)) { out(j) = vec.getDouble(r); j += 1 }
+      r += 1
+    }
+    out
+  }
+
   /** The rank level of exact selection, under [[quantileBoundsSelect]] and
     * [[GroupedQuantiles.selectByRank]]: for every column of `proj` (all
     * doubles; `totalRows` rows), its non-null count `n` and its value at
     * each 0-based rank `ranksOf(column index, n)` names, NaN last. Sizing,
-    * the three jobs and the NaN order are as [[quantileBoundsSelect]]
-    * describes; the driver bookkeeping is [[RankSelection]]'s. */
+    * the per-call cache, the three jobs and the NaN order are as
+    * [[quantileBoundsSelect]] describes; the driver bookkeeping is
+    * [[RankSelection]]'s. */
   private[operators] def selectRanks(proj: DataFrame, totalRows: Long,
-      ranksOf: (Int, Long) => Seq[Long], numBuckets: Int, sampleSize: Int,
+      ranksOf: (Int, Long) => Seq[Long], numBuckets: Int,
       maxCollect: Long, smallCollect: Long): Array[(Long, Map[Long, Double])] = {
     val k = proj.columns.length
-    var t = System.nanoTime()
-    def phase(tag: String): Unit = t = devPhase("qsel", tag, t)
+    val sc = proj.sparkSession.sparkContext
     if (totalRows <= smallCollect) {
       val rows = proj.collect()
       Array.tabulate(k) { ci =>
@@ -446,123 +477,117 @@ object Tokenize {
         val n = vs.length.toLong
         (n, ranksOf(ci, n).iterator.map(r => r -> vs(r.toInt)).toMap)
       }
-    } else RankSelection.withBroadcasts(proj.sparkSession.sparkContext) { bc =>
-      val batches = Bridge.columnarBatches(proj)
-      val nPart = batches.getNumPartitions
-      val visit = math.min(nPart, 64)
-      val stride = math.max(1, nPart / visit)
-      val perPartCap = math.max(256, sampleSize / visit)
-      // job 1: per sampled partition, per column, the head rows' values,
-      // sorted on the executor (the reader stops after the head batches)
-      val runs: Array[Array[Array[Double]]] = batches.mapPartitionsWithIndex { (pid, it) =>
-        if (pid % stride != 0) Iterator.empty
-        else {
-          val bufs = Array.fill(k)(new mutable.ArrayBuilder.ofDouble)
-          var left = perPartCap
-          while (left > 0 && it.hasNext) {
-            val batch = it.next()
-            val m = math.min(batch.numRows, left)
+    } else RankSelection.withBroadcasts(sc) { bc =>
+      // per batch, per column: the batch's non-null values
+      val decoded = Bridge.columnarBatches(proj).map { batch =>
+        Array.tabulate(k)(ci => nonNullValues(batch.column(ci), batch.numRows))
+      }.persist(StorageLevel.MEMORY_ONLY)
+      try {
+        val stride = math.max(1L, totalRows / (4L * numBuckets))
+        // job 1: decode into the cache; per column, every stride-th
+        // non-null value of the task (NaN splits would be unordered),
+        // sorted on the executor
+        val runs: Array[Array[Array[Double]]] = underCallSite(sc, "boundaries.sample") {
+          decoded.mapPartitions { it =>
+            val bufs = Array.fill(k)(new mutable.ArrayBuilder.ofDouble)
+            val next = Array.fill(k)(stride / 2) // next sampled index in the chunk
+            while (it.hasNext) {
+              val chunk = it.next()
+              var ci = 0
+              while (ci < k) {
+                val a = chunk(ci)
+                val buf = bufs(ci)
+                var p = next(ci)
+                while (p < a.length) {
+                  val v = a(p.toInt)
+                  if (v == v) buf += v
+                  p += stride
+                }
+                next(ci) = p - a.length
+                ci += 1
+              }
+            }
+            Iterator.single(bufs.map { b =>
+              val a = b.result()
+              java.util.Arrays.sort(a)
+              a
+            })
+          }.collect()
+        }
+        val grids: Array[BucketizeGrid] = Array.tabulate(k) { ci =>
+          // Arrays.sort detects the concatenated sorted runs and merges them
+          val vs = Array.concat(runs.map(_(ci)).toIndexedSeq: _*)
+          java.util.Arrays.sort(vs)
+          val b = math.min(numBuckets, vs.length)
+          new BucketizeGrid((1 until b).iterator
+            .map(i => vs(((i.toLong * vs.length) / b).toInt.min(vs.length - 1)))
+            .toArray.distinct)
+        }
+        val flatOff: Array[Int] = grids.map(_.n + 1).scanLeft(0)(_ + _)
+        val gridB = bc(grids)
+        // job 2: flat (col, bucket) histogram — per value one grid-bracketed
+        // search and one increment into a partition-local array
+        val hist: Array[Long] = underCallSite(sc, "boundaries.hist") {
+          decoded.mapPartitions { it =>
+            val gx = gridB.value
+            val off = flatOff
+            val acc = new Array[Long](off(k))
+            while (it.hasNext) {
+              val chunk = it.next()
+              var ci = 0
+              while (ci < k) {
+                val a = chunk(ci)
+                val g = gx(ci)
+                val base = off(ci)
+                var r = 0
+                while (r < a.length) {
+                  acc(base + BucketizeGrid.search(g, a(r), Int.MaxValue)) += 1
+                  r += 1
+                }
+                ci += 1
+              }
+            }
+            Iterator.single(acc)
+          }.treeReduce { (a, b) =>
+            var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
+          }
+        }
+        val loc = new RankSelection.Located(hist, flatOff, ranksOf)
+        val slotB = bc(loc.slots)
+        // job 3: gather the candidate-bucket values as per-partition
+        // primitive arrays keyed by (col, slot)
+        val cand = decoded.mapPartitions { it =>
+          val gx = gridB.value
+          val slot = slotB.value
+          val bufs = Array.tabulate(k)(ci =>
+            Array.fill(slot(ci).count(_ >= 0))(new mutable.ArrayBuilder.ofDouble))
+          while (it.hasNext) {
+            val chunk = it.next()
             var ci = 0
             while (ci < k) {
-              val vec = batch.column(ci)
-              val buf = bufs(ci)
+              val a = chunk(ci)
+              val g = gx(ci)
+              val sl = slot(ci)
+              val bf = bufs(ci)
               var r = 0
-              while (r < m) {
-                if (!vec.isNullAt(r)) {
-                  val v = vec.getDouble(r)
-                  if (v == v) buf += v // NaN splits would be unordered
-                }
+              while (r < a.length) {
+                val v = a(r)
+                val j = sl(BucketizeGrid.search(g, v, Int.MaxValue))
+                if (j >= 0) bf(j) += v
                 r += 1
               }
               ci += 1
             }
-            left -= m
           }
-          Iterator.single(bufs.map { b =>
-            val a = b.result()
-            java.util.Arrays.sort(a)
-            a
-          })
+          Iterator.range(0, k).flatMap(ci =>
+            bufs(ci).indices.iterator.map(j => ((ci, j), bufs(ci)(j).result())))
         }
-      }.collect()
-      phase("sample")
-      val grids: Array[BucketizeGrid] = Array.tabulate(k) { ci =>
-        // Arrays.sort detects the concatenated sorted runs and merges them
-        val vs = Array.concat(runs.map(_(ci)).toIndexedSeq: _*)
-        java.util.Arrays.sort(vs)
-        val b = math.min(numBuckets, vs.length)
-        new BucketizeGrid((1 until b).iterator
-          .map(i => vs(((i.toLong * vs.length) / b).toInt.min(vs.length - 1)))
-          .toArray.distinct)
-      }
-      val flatOff: Array[Int] = grids.map(_.n + 1).scanLeft(0)(_ + _)
-      val gridB = bc(grids)
-      phase("splits")
-      // job 2: flat (col, bucket) histogram — per value one grid-bracketed
-      // search and one increment into a partition-local array
-      val hist: Array[Long] = batches.mapPartitions { it =>
-        val gx = gridB.value
-        val off = flatOff
-        val acc = new Array[Long](off(k))
-        while (it.hasNext) {
-          val batch = it.next()
-          val m = batch.numRows
-          var ci = 0
-          while (ci < k) {
-            val vec = batch.column(ci)
-            val g = gx(ci)
-            val base = off(ci)
-            var r = 0
-            while (r < m) {
-              if (!vec.isNullAt(r))
-                acc(base + BucketizeGrid.search(g, vec.getDouble(r), Int.MaxValue)) += 1
-              r += 1
-            }
-            ci += 1
-          }
+        val picked = underCallSite(sc, "boundaries.gather") {
+          RankSelection.pick(cand, loc, collect = loc.volume <= maxCollect,
+            (a: Array[Double]) => java.util.Arrays.sort(a), bc)
         }
-        Iterator.single(acc)
-      }.treeReduce { (a, b) =>
-        var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-      }
-      phase("hist")
-      val loc = new RankSelection.Located(hist, flatOff, ranksOf)
-      val slotB = bc(loc.slots)
-      // job 3: gather the candidate-bucket values as per-partition
-      // primitive arrays keyed by (col, slot)
-      val cand = batches.mapPartitions { it =>
-        val gx = gridB.value
-        val slot = slotB.value
-        val bufs = Array.tabulate(k)(ci =>
-          Array.fill(slot(ci).count(_ >= 0))(new mutable.ArrayBuilder.ofDouble))
-        while (it.hasNext) {
-          val batch = it.next()
-          val m = batch.numRows
-          var ci = 0
-          while (ci < k) {
-            val vec = batch.column(ci)
-            val g = gx(ci)
-            val sl = slot(ci)
-            val bf = bufs(ci)
-            var r = 0
-            while (r < m) {
-              if (!vec.isNullAt(r)) {
-                val v = vec.getDouble(r)
-                val j = sl(BucketizeGrid.search(g, v, Int.MaxValue))
-                if (j >= 0) bf(j) += v
-              }
-              r += 1
-            }
-            ci += 1
-          }
-        }
-        Iterator.range(0, k).flatMap(ci =>
-          bufs(ci).indices.iterator.map(j => ((ci, j), bufs(ci)(j).result())))
-      }
-      val picked = RankSelection.pick(cand, loc, collect = loc.volume <= maxCollect,
-        (a: Array[Double]) => java.util.Arrays.sort(a), bc)
-      phase("gather")
-      loc.counts.zip(picked)
+        loc.counts.zip(picked)
+      } finally decoded.unpersist(blocking = true)
     }
   }
 

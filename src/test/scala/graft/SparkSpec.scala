@@ -26,22 +26,26 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Runs `f` and returns what it ran. Its jobs are told apart by a job
     * group set for the call, its actions by the window they fall in.
-    * Listener events arrive asynchronously but in order, so a marker job
-    * run afterwards marks the end of `f`'s events. */
+    * Listener events arrive asynchronously but in order, so marker jobs
+    * run before and afterwards mark the start and the end of `f`'s events
+    * (an action that finished before the call may still be in the queue
+    * when the listeners register). */
   def ran(f: => Any): Ran = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
     val sc = spark.sparkContext
     val group = s"ran-${System.nanoTime()}"
+    val start = s"$group-start"
     val marker = s"$group-marker"
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val done = new java.util.concurrent.CountDownLatch(1)
-    @volatile var open = true
+    @volatile var open = false
     val jobListener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `start` => open = true
           case `group` => jobs.add(e.stageInfos.maxBy(_.stageId).name)
           case `marker` => open = false; done.countDown()
           case _ =>
@@ -56,6 +60,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     sc.addSparkListener(jobListener)
     spark.listenerManager.register(actionListener)
     try {
+      sc.setJobGroup(start, start)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       sc.setJobGroup(group, group)
       try f finally sc.clearJobGroup()
       sc.setJobGroup(marker, marker)

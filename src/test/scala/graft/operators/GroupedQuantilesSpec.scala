@@ -21,7 +21,7 @@ class GroupedQuantilesSpec extends SparkSpec {
     // not the driver sort; maxCollect 4 forces the distributed pick
     for (maxCollect <- Seq(64000000L, 4L)) {
       val res = GroupedQuantiles.selectByRank(df, "g", "v", ranks,
-        numBuckets = 32, sampleSize = 1000, maxCollect = maxCollect, smallCollect = 0)
+        numBuckets = 32, maxCollect = maxCollect, smallCollect = 0)
       val byGroup = rows.groupBy(_._1)
       assert(res.keySet == byGroup.keySet)
       byGroup.foreach { case (g, rs) =>

@@ -446,11 +446,14 @@ class TokenizeSpec extends SparkSpec {
         assert(x == y || (x.isNaN && y.isNaN), s"$label: $x != $y")
       }
     }
+    val cached = persistentRdds
     val columnar = quantileBoundsSelect(df, cols, probs, numBuckets = 64, smallCollect = 0)
     val distributedGather = quantileBoundsSelect(df, cols, probs, numBuckets = 64,
       smallCollect = 0, maxCollect = 0)
     val rowRooted = quantileBoundsSelect(df.repartition(3), cols, probs, numBuckets = 64,
       smallCollect = 0)
+    // the per-call decode cache is gone once each call returns
+    assert(persistentRdds == cached)
     cols.foreach { c =>
       val b = brute(c)
       same(columnar(c), b, s"columnar source, $c")
@@ -458,6 +461,93 @@ class TokenizeSpec extends SparkSpec {
       same(rowRooted(c), b, s"row-rooted plan, $c")
     }
     assert(columnar("c").last.isNaN && !columnar("c").head.isNaN)
+    // value-clustered files: each holds one disjoint, sorted value range
+    // (nulls in the first, NaN in the last), so a sample drawn from any
+    // file's head is as biased as it can be; the splits only steer the
+    // bucket sizes, so every bucket count must still be exact
+    spark.read.parquet(s"$dir/t").repartitionByRange(4, col("a")).sortWithinPartitions("a")
+      .write.parquet(s"$dir/clustered")
+    val clustered = spark.read.parquet(s"$dir/clustered")
+    assert(clustered.inputFiles.length == 4)
+    val clusteredBrute = brute("a")
+    for (numBuckets <- Seq(4, 64, 8192))
+      same(quantileBoundsSelect(clustered, Seq("a"), probs, numBuckets = numBuckets,
+        smallCollect = 0)("a"), clusteredBrute, s"value-clustered files, numBuckets=$numBuckets")
+    assert(persistentRdds == cached)
+  }
+
+  test("selection reads a partition column, one constant vector per file, exactly") {
+    val dir = java.nio.file.Files.createTempDirectory("qselpartcol").toString
+    spark.range(50000).select(col("id").cast("double").as("v"),
+        when(pmod(col("id"), lit(5)) === 0, lit(null))
+          .otherwise(pmod(col("id"), lit(7)).cast("double")).as("p"))
+      .write.partitionBy("p").parquet(s"$dir/t")
+    val df = spark.read.parquet(s"$dir/t")
+    // a double partition column needs no cast, so the passes read the
+    // scan's own batches
+    assert(df.schema("p").dataType == org.apache.spark.sql.types.DoubleType)
+    val plan = df.select(col("v"), col("p")).queryExecution.executedPlan
+    assert(plan.children.exists(_.isInstanceOf[org.apache.spark.sql.execution.ColumnarToRowExec]),
+      plan.treeString)
+    val probs = (0 to 20).map(_.toDouble / 20)
+    val sel = quantileBoundsSelect(df, Seq("v", "p"), probs, numBuckets = 16, smallCollect = 0)
+    val exact = quantileBoundsExact(df, Seq("v", "p"), probs)
+    Seq("v", "p").foreach(c => assert(sel(c) == exact(c), s"select != sort for $c"))
+  }
+
+  private def persistentRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("the selection jobs run under their phase names and restore the caller's call site") {
+    val dir = java.nio.file.Files.createTempDirectory("qselphases").toString
+    spark.range(30000).select(pmod(col("id") * 2654435761L, lit(1000003)).cast("double").as("v"))
+      .repartition(3).write.parquet(s"$dir/t")
+    val df = spark.read.parquet(s"$dir/t")
+    val sc = spark.sparkContext
+    sc.setCallSite("caller")
+    try {
+      // collected and distributed pick: the gather is one job either way
+      for (maxCollect <- Seq(64000000L, 0L)) {
+        val run = ran(quantileBoundsSelect(df, Seq("v"), Seq(0.1, 0.5, 0.9),
+          smallCollect = 0, maxCollect = maxCollect))
+        assert(run.jobs == Seq("boundaries.sample", "boundaries.hist", "boundaries.gather"), run)
+        assert(sc.getLocalProperty("callSite.short") == "caller")
+        assert(sc.getLocalProperty("callSite.long") == null)
+      }
+    } finally sc.clearCallSite()
+  }
+
+  /** Bytes read through Hadoop's local file system by every thread of
+    * this JVM (local-mode executors included). */
+  @scala.annotation.nowarn("cat=deprecation")
+  private def localBytesRead: Long = {
+    import scala.jdk.CollectionConverters._
+    org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+      .filter(_.getScheme == "file").map(_.getBytesRead).sum
+  }
+
+  test("exact selection reads its parquet input once per call") {
+    val dir = java.nio.file.Files.createTempDirectory("qselonce").toString
+    // incompressible values in four files
+    spark.range(400000).select((0 until 4).map(i => randn(60 + i).as(s"c$i")): _*)
+      .repartition(4).write.parquet(s"$dir/t")
+    val df = spark.read.parquet(s"$dir/t")
+    val files = new java.io.File(s"$dir/t").listFiles.filter(_.getName.endsWith(".parquet"))
+    assert(files.length == 4)
+    val size = files.map(_.length).sum
+    // parquet's vectored reads bypass the file system's byte counters;
+    // plain reads of the same column chunks are counted
+    val hc = spark.sparkContext.hadoopConfiguration
+    val vectored = "parquet.hadoop.vectored.io.enabled"
+    val prev = Option(hc.get(vectored))
+    hc.setBoolean(vectored, false)
+    val before = localBytesRead
+    try quantileBoundsSelect(df, df.columns.toSeq, innerProbs(100), smallCollect = 0)
+    finally prev.fold(hc.unset(vectored))(hc.set(vectored, _))
+    val read = localBytesRead - before
+    info(s"read $read bytes of a $size-byte table")
+    // one decode serves the sample, histogram and gather jobs; re-reading
+    // the files for each job reads at least twice their size
+    assert(read > 0 && read < 1.5 * size, s"read $read bytes of a $size-byte table")
   }
 
   // broadcast value blocks made by code, not Spark's own task-binary
@@ -472,12 +562,15 @@ class TokenizeSpec extends SparkSpec {
   }
 
   /** Runs `f`, expecting an IllegalArgumentException, and checks that every
-    * broadcast made meanwhile is released; returns the message. */
+    * broadcast made and every RDD persisted meanwhile is released; returns
+    * the message. */
   private def failsReleasingBroadcasts(f: => Any): String = {
     import org.scalatest.concurrent.Eventually._
     import org.scalatest.time.SpanSugar._
     val before = userBroadcasts
+    val cached = persistentRdds
     val err = intercept[IllegalArgumentException](f)
+    assert(persistentRdds == cached, "an RDD persisted by the call outlived it")
     // destroy() removes the blocks asynchronously
     eventually(timeout(5.seconds)) {
       assert((userBroadcasts -- before).isEmpty)
