@@ -67,7 +67,7 @@ object HostMeter {
     } catch { case scala.util.control.NonFatal(_) => false }
 
   /** The untimed pre-sample collection every measurement harness shares
-    * (Bench, BenchSome, ScaleProbe, the probes via [[timed]]): pay the
+    * (Bench, ScaleProbe, the probes via [[timed]]): pay the
     * accumulated GC debt OUTSIDE the timer — the round-14 fix for the
     * phase-locked periodic-GC artifact — with heap shrink pinned off so
     * the collection cannot charge page re-commit to the next timed

@@ -23,11 +23,12 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
   * Null in any child -> null. NaN in a key field is a PRECONDITION
   * violation, rejected LOUDLY upstream: the lexicographic compare treats
   * NaN as tying every threshold (IEEE `<`/`>` both false), which is not an
-  * order, so Tokenize.tokenizeRankSelect's pass-1 histogram counts NaN sort
-  * fields and aborts before this expression ever sees one (the scalar
-  * paths define NaN-last instead — see Tokenize's NaN policy — but a
-  * composite key has no single "last": NaN in a middle field would make
-  * ordering non-transitive).
+  * order, so Tokenize.tokenizeRankSelect's first job counts the null and
+  * NaN sort fields over the full data, and the call fails before any
+  * search, here or in its own passes ([[VectorBucketizeExpr.searchColumnsIn]]),
+  * sees one (the scalar paths define NaN-last instead — see Tokenize's
+  * NaN policy — but a composite key has no single "last": NaN in a middle
+  * field would make ordering non-transitive).
   */
 case class VectorBucketizeExpr(children: Seq[Expression], thresholds: Array[Double])
     extends Expression {
@@ -125,17 +126,16 @@ object VectorBucketizeExpr {
     lo
   }
 
-  /** [[search]] over an `InternalRow` restricted to a caller-proved bracket
-    * [lo0, hi0), for the rank tokenizer's aggregation passes over
-    * `queryExecution.toRdd`: the key is read straight out of the unsafe
-    * row via a field-index permutation — primitive reads, zero
-    * allocation. The passes take the bracket from a
+  /** [[search]] of row `r` of a decoded batch, one row-aligned `double[]`
+    * per field: key field f is `fields(idx(f))(r)`, read with no
+    * allocation. The search is restricted to a caller-proved bracket
+    * [lo0, hi0): the rank tokenizer's passes take it from a
     * [[BucketizeGrid.bracket]] over the threshold rows' first fields, and
     * this finishes the lexicographic search inside it; (0, T) is the
     * full-range search. Exactly equal to the full-range search for any
     * bracket containing the answer (property-pinned). */
-  def searchRowIn(thr: Array[Double], m: Int, row: InternalRow,
-                  idx: Array[Int], lo0: Int, hi0: Int): Int = {
+  def searchColumnsIn(thr: Array[Double], m: Int, fields: Array[Array[Double]],
+                      idx: Array[Int], r: Int, lo0: Int, hi0: Int): Int = {
     var lo = lo0
     var hi = hi0
     while (lo < hi) {
@@ -144,7 +144,7 @@ object VectorBucketizeExpr {
       var cmp = 0
       while (cmp == 0 && f < m) {
         val t = thr(mid * m + f)
-        val k = row.getDouble(idx(f))
+        val k = fields(idx(f))(r)
         if (t < k) cmp = -1 else if (t > k) cmp = 1 else f += 1
       }
       if (cmp <= 0) lo = mid + 1 else hi = mid

@@ -330,7 +330,6 @@ object Graph {
     // join side would re-shuffle. With coalescing off for these two
     // materializations, Bridge.localCheckpointed preserves the clean
     // partitioning and the per-round joins consume both frames in place.
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
     val (eCkpt, degD, n, bcast, mat) = liveCkpt.synchronized {
       // drop entries left by a stopped context (round-8 advisor item);
       // the unpersist is best-effort — a dead context's blocks died with

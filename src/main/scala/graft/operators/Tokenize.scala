@@ -2,12 +2,10 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.vectorized.ColumnVector
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{BucketizeExpr, BucketizeGrid}
 
@@ -31,8 +29,8 @@ import graft.functions.{BucketizeExpr, BucketizeGrid}
   *     quantile; :79 bucketize; :82 clamp):
   *      - phase 1 computes per-column boundary vectors: exact via
   *        selection (`quantileBoundsSelect`), or approximate via single-pass
-  *        sampling with a DKW rank bound (`quantileBoundsSample` — the fast
-  *        path) — either way cols × bins doubles, trivially collectable;
+  *        sampling with a DKW rank bound (`quantileBoundsSample`) — either
+  *        way cols × bins doubles, trivially collectable;
   *      - phase 2 folds the boundaries into the plan as a constant and
   *        discretizes '''map-only''' (`discretize`) with the codegen'd
   *        binary-search expression [[graft.functions.BucketizeExpr]] (both
@@ -51,15 +49,20 @@ import graft.functions.{BucketizeExpr, BucketizeGrid}
   * Every path sizes its input one way, [[inputRows]]: a bare parquet scan
   * from its footers, anything else with one `count()` job.
   *
-  * One selection core serves the exact paths: `quantileBoundsSelect` (on
-  * its rank level, `selectRanks`, which [[GroupedQuantiles]] shares) and
-  * `tokenizeRankSelect` each run their own sample / histogram / gather
-  * jobs over their own row form, and share the driver-side bookkeeping —
-  * rank location, gather slots, the collect-or-`reduceByKey` pick and the
-  * broadcasts' lifetime — in [[RankSelection]]. Both bracket their
-  * per-value searches with [[graft.functions.BucketizeGrid]].
+  * The exact paths have one shape: `quantileBoundsSelect` (on its rank
+  * level, `selectRanks`, which [[GroupedQuantiles]] shares) and
+  * `tokenizeRankSelect` decode their input once per call into a cache of
+  * primitive arrays and run a strided sample, a histogram and a gather
+  * over it, under the call sites `boundaries.*` and `rank.*`. Each keeps
+  * its own decode and inner loops (a double search, or a composite-key
+  * search); [[RankSelection]] holds the rest: the call's broadcasts and
+  * cache, the job names, the sample rule, rank location and the
+  * collect-or-`reduceByKey` pick. Both bracket their per-value searches
+  * with [[graft.functions.BucketizeGrid]].
   */
 object Tokenize {
+  import RankSelection.underCallSite
+
   val DefaultBins = 100
 
   /** Default tokenizer targets (FIXTURES.md): lineitem numeric measures. */
@@ -69,43 +72,57 @@ object Tokenize {
   /** Rank tokenizer, selection-based — the contract `q_tokenize_rank`
     * plan. The fact table is NEVER globally sorted; instead the ~(bins-1)
     * NTILE bucket-boundary ROWS per column are located by position (the
-    * same sample→histogram→gather machinery as [[quantileBoundsSelect]],
-    * lifted to composite (value, tiebreak…) keys so ties split across
-    * buckets exactly as the window's total order does), and every row's
-    * token is then a MAP-ONLY [[graft.functions.VectorBucketizeExpr]]
-    * count of boundary keys at or below its own key:
+    * same decode-once sample → histogram → gather shape as
+    * [[quantileBoundsSelect]], lifted to composite (value, tiebreak…) keys
+    * so ties split across buckets exactly as the window's total order
+    * does), and every row's token is then a MAP-ONLY
+    * [[graft.functions.VectorBucketizeExpr]] count of boundary keys at or
+    * below its own key:
     *
     *   token(row) = #{ bucket starts j=1..bins-1 : key(start_j) <= key(row) }
     *
     * which is exactly the row's NTILE bucket because composite keys are
-    * unique. Cost: 2 scans + a candidate-sized shuffle + the output sort,
-    * and no full sort of the fact table per column — the shape that wins on
-    * a 1000-executor cluster (boundary keys broadcast as plan constants).
+    * unique. No full sort of the fact table per column — the shape that
+    * wins on a 1000-executor cluster (boundary keys broadcast as plan
+    * constants).
+    *
+    *  - '''Source, decoded once per call.''' The tiebreak (which contains
+    *    every tokenized column) cast to double is read as `ColumnarBatch`es
+    *    ([[org.apache.spark.sql.graft.Bridge.columnarBatches]]) into one
+    *    row-aligned `double[]` per field per batch, cached for the call
+    *    ([[RankSelection.withCall]]). Column c's key is c, then the
+    *    tiebreak, read through a field-index permutation.
+    *  - '''Job 1, `rank.sample`.''' Decodes every task into the cache,
+    *    counts the null and NaN sort fields over the full data, and
+    *    returns every s-th row ([[RankSelection.stride]]). The driver fails
+    *    on any null or NaN, naming the column, before any broadcast, and
+    *    picks ≤ numBuckets − 1 equi-depth composite split points per column
+    *    from the lex-sorted sample.
+    *  - '''Job 2, `rank.hist`.''' Over the cache, one grid-bracketed
+    *    composite search per (row, column) into a flat (column, bucket)
+    *    histogram; the driver locates the bucket starts' positions in it.
+    *  - '''Job 3, `rank.gather`.''' Over the cache, keeps the composite
+    *    keys of the rows in the buckets that hold a bucket start and picks
+    *    the starts ([[RankSelection.pick]]).
     *
     * Requirements: `tiebreak` must be a unique total order; all key
     * columns non-null, NaN-free, and order-preserving under a double cast
-    * (integers < 2^53; the driver corpus qualifies). Nulls and NaN fail
-    * loudly, naming the column, from the sample or from the histogram's
-    * full-data count. The output is ordered by the tiebreak's non-token
-    * columns, then the tokens. Token equality with the window form
-    * `NTILE(bins) OVER (ORDER BY c, tiebreak…) - 1` is spec-proved. */
+    * (integers < 2^53; the driver corpus qualifies). The output is ordered
+    * by the tiebreak's non-token columns, then the tokens. Token equality
+    * with the window form `NTILE(bins) OVER (ORDER BY c, tiebreak…) - 1` is
+    * spec-proved. */
   def tokenizeRankSelect(df: DataFrame, cols: Seq[String], tiebreak: Seq[String],
                          bins: Int = DefaultBins, numBuckets: Int = 8192,
-                         sampleSize: Int = 100000,
                          maxCollect: Long = 64000000L): DataFrame = {
     import graft.functions.VectorBucketizeExpr
     val sc = df.sparkSession.sparkContext
     val k = cols.size
-    val m = 1 + tiebreak.size
-    // one row layout serves every column: the tiebreak (which contains all
-    // tokenized cols) cast to double; column c's key = c, then the tiebreak
+    val t = tiebreak.size
+    val m = 1 + t
     val proj = df.select(tiebreak.map(c => col(c).cast("double")): _*)
     val tbIdx = tiebreak.zipWithIndex.toMap
     val keyIdx: Array[Array[Int]] =
       cols.map(c => (tbIdx(c) +: tiebreak.indices).toArray).toArray
-    // unconverted scan for the aggregation passes: primitive getDouble on
-    // unsafe rows — no Row boxing (measured ~2x on the two passes)
-    val internal = proj.queryExecution.toRdd
     val n = inputRows(df)
     require(n > 0, "tokenizeRankSelect: empty input")
     // 0-based global position of the first row of NTILE buckets 1..bins-1
@@ -122,124 +139,109 @@ object Tokenize {
       while (c == 0 && f < m) { c = java.lang.Double.compare(a(f), b(f)); f += 1 }
       c
     }
-    // sample-derived composite split points per column (ties split across
-    // buckets because the tiebreak participates in the comparison)
-    val frac = math.min(1.0, sampleSize.toDouble / n)
-    val sampleRows = proj.sample(withReplacement = false, frac, seed = 42).collect()
-    // the sample is the FIRST thing to touch the data, so it is also the
-    // first place a null/NaN precondition violation can surface — fail here
-    // with the column name, not an opaque NPE in the key build below (the
-    // full-data check is the pass-1 histogram's null/NaN slots)
-    sampleRows.foreach { row =>
-      var f = 0
-      while (f < m - 1) {
-        require(!row.isNullAt(f),
-          s"tokenizeRankSelect: null in sort column '${tiebreak(f)}' — keys must be non-null")
-        val v = row.getDouble(f)
-        require(v == v,
-          s"tokenizeRankSelect: NaN in sort column '${tiebreak(f)}' — binary search and Spark sort order disagree on NaN")
-        f += 1
+    val thresholds: Array[Map[Long, Array[Double]]] = RankSelection.withCall(sc) { call =>
+      // per batch: each field's values, row-aligned (0 in a null slot),
+      // and per field its null count, then its NaN count
+      val decoded = call.cache(Bridge.columnarBatches(proj).map { batch =>
+        val bad = new Array[Long](2 * t)
+        val fields = Array.tabulate(t) { f =>
+          val vec = batch.column(f)
+          val a = new Array[Double](batch.numRows)
+          var r = 0
+          while (r < a.length) {
+            if (vec.isNullAt(r)) bad(f) += 1
+            else { a(r) = vec.getDouble(r); if (a(r) != a(r)) bad(t + f) += 1 }
+            r += 1
+          }
+          a
+        }
+        (fields, bad)
+      })
+      val stride = RankSelection.stride(n, numBuckets)
+      // job 1: decode into the cache; the task's null and NaN counts and
+      // every stride-th row
+      val firsts = underCallSite(sc, "rank.sample") {
+        decoded.mapPartitions { it =>
+          val bad = new Array[Long](2 * t)
+          val rows = new mutable.ArrayBuilder.ofRef[Array[Double]]
+          var next = stride / 2
+          it.foreach { case (fields, b) =>
+            b.indices.foreach(i => bad(i) += b(i))
+            next = RankSelection.strided(fields(0).length, next, stride)(r => rows += fields.map(_(r)))
+          }
+          Iterator.single((bad, rows.result()))
+        }.collect()
       }
-    }
-    val splits: Array[Array[Double]] = Array.tabulate(k) { ci =>
-      val keys = sampleRows.map(row => keyIdx(ci).map(row.getDouble))
-      java.util.Arrays.sort(keys, lexOrd)
-      val b = math.max(1, math.min(numBuckets, keys.length))
-      val flat = new Array[Double]((b - 1) * m)
-      (1 until b).foreach { i =>
-        val src = keys(((i.toLong * keys.length) / b).toInt.min(keys.length - 1))
-        System.arraycopy(src, 0, flat, (i - 1) * m, m)
+      val bad = firsts.map(_._1).transpose.map(_.sum)
+      tiebreak.indices.foreach { f =>
+        require(bad(f) == 0, s"tokenizeRankSelect: ${bad(f)} rows have null sort columns " +
+          s"('${tiebreak(f)}') — keys must be non-null")
+        require(bad(t + f) == 0, s"tokenizeRankSelect: ${bad(t + f)} rows have NaN sort columns " +
+          s"('${tiebreak(f)}') — binary search and Spark sort order disagree on NaN")
       }
-      flat
-    }
-    val flatOff: Array[Int] = splits.map(_.length / m + 1).scanLeft(0)(_ + _)
-    val thresholds: Array[Map[Long, Array[Double]]] = RankSelection.withBroadcasts(sc) { bc =>
-      val splitsB = bc(splits)
-      val keyIdxB = bc(keyIdx)
+      // composite split points per column (ties split across buckets
+      // because the tiebreak participates in the comparison)
+      val sample = firsts.flatMap(_._2)
+      val splits: Array[Array[Double]] = Array.tabulate(k) { ci =>
+        val keys = sample.map(row => keyIdx(ci).map(row(_)))
+        java.util.Arrays.sort(keys, lexOrd)
+        RankSelection.splitIndices(keys.length, numBuckets).flatMap(keys(_)).toArray
+      }
+      val flatOff: Array[Int] = splits.map(_.length / m + 1).scanLeft(0)(_ + _)
+      val splitsB = call.broadcast(splits)
+      val keyIdxB = call.broadcast(keyIdx)
       // Both passes bracket their lex search with a grid over the split
       // rows' FIRST fields (non-decreasing, as the rows are lex-sorted):
       // every split row below the bracket has a smaller first field, every
       // one from its end a larger one, so the search finishes inside it.
       // A plain search walks ~13 scattered cache lines of a ~450 KB split
       // matrix per (row, col).
-      val gidxB = bc(splits.map(f =>
+      val gidxB = call.broadcast(splits.map(f =>
         new BucketizeGrid(Array.tabulate(f.length / m)(i => f(i * m)))))
-      // pass 1: flat (col, bucket) histogram — one composite binary search +
-      // one increment per (row, col) into a partition-local array. The last
-      // two slots count rows with a null / NaN sort field (precondition
-      // violations -> loud, with a name, over the FULL data).
-      val hist: Array[Long] = internal.mapPartitions { it =>
-        val sp = splitsB.value
-        val ki = keyIdxB.value
-        val gx = gidxB.value
-        val off = flatOff
-        val acc = new Array[Long](off(k) + 2)
-        while (it.hasNext) {
-          val row = it.next()
-          var f = 0
-          var hasNull = false
-          var hasNaN = false
-          while (f < m - 1) {
-            if (row.isNullAt(f)) hasNull = true
-            else { val v = row.getDouble(f); if (v != v) hasNaN = true }
-            f += 1
-          }
-          if (hasNull) acc(acc.length - 2) += 1
-          else if (hasNaN) acc(acc.length - 1) += 1
-          else {
-            var ci = 0
-            while (ci < k) {
-              val br = gx(ci).bracket(row.getDouble(ki(ci)(0)))
-              acc(off(ci) + VectorBucketizeExpr.searchRowIn(
-                sp(ci), m, row, ki(ci), (br >>> 32).toInt, br.toInt)) += 1
-              ci += 1
-            }
-          }
-        }
-        Iterator.single(acc)
-      }.treeReduce { (a, b) =>
-        var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-      }
-      require(hist(hist.length - 2) == 0,
-        s"tokenizeRankSelect: ${hist(hist.length - 2)} rows have null sort columns")
-      require(hist.last == 0,
-        s"tokenizeRankSelect: ${hist.last} rows have NaN sort columns — binary search and Spark sort order disagree on NaN")
-      val loc = new RankSelection.Located(hist, flatOff, (_, _) => positions.toSeq)
-      val slotB = bc(loc.slots)
-      // pass 2: gather ONLY boundary-bucket rows' composite keys, as
-      // per-partition ref builders keyed by (col, slot); allocates only per
-      // CANDIDATE (the m-double key)
-      val cand = internal.mapPartitions { it =>
-        val sp = splitsB.value
-        val ki = keyIdxB.value
-        val gx = gidxB.value
-        val so = slotB.value
-        val bufs = Array.tabulate(k)(ci => Array.fill(so(ci).count(_ >= 0))(
-          new mutable.ArrayBuilder.ofRef[Array[Double]]))
-        while (it.hasNext) {
-          val row = it.next()
+      // job 2: flat (col, bucket) histogram — one composite search and one
+      // increment per (row, col) into a partition-local array
+      val hist = underCallSite(sc, "rank.hist") {
+        RankSelection.histogram(decoded, flatOff(k)) { case ((fields, _), acc) =>
+          val (sp, ki, gx) = (splitsB.value, keyIdxB.value, gidxB.value)
           var ci = 0
           while (ci < k) {
-            val br = gx(ci).bracket(row.getDouble(ki(ci)(0)))
-            val b = VectorBucketizeExpr.searchRowIn(
-              sp(ci), m, row, ki(ci), (br >>> 32).toInt, br.toInt)
-            val j = so(ci)(b)
-            if (j >= 0) {
-              val key = new Array[Double](m)
-              var f = 0
-              while (f < m) { key(f) = row.getDouble(ki(ci)(f)); f += 1 }
-              bufs(ci)(j) += key
+            val idx = ki(ci)
+            var r = 0
+            while (r < fields(0).length) {
+              val br = gx(ci).bracket(fields(idx(0))(r))
+              acc(flatOff(ci) + VectorBucketizeExpr.searchColumnsIn(
+                sp(ci), m, fields, idx, r, (br >>> 32).toInt, br.toInt)) += 1
+              r += 1
             }
             ci += 1
           }
         }
-        Iterator.range(0, k).flatMap(ci =>
-          bufs(ci).indices.iterator
-            .map(j => ((ci, j), bufs(ci)(j).result()))
-            .filter(_._2.nonEmpty))
       }
-      RankSelection.pick(cand, loc, collect = loc.volume * m <= maxCollect,
-        (a: Array[Array[Double]]) => java.util.Arrays.sort(a, lexOrd), bc)
+      val loc = new RankSelection.Located(hist, flatOff, (_, _) => positions.toSeq)
+      val slotB = call.broadcast(loc.slots)
+      // job 3: gather ONLY boundary-bucket rows' composite keys; allocates
+      // only per CANDIDATE (the m-double key)
+      val cand = RankSelection.gather[(Array[Array[Double]], Array[Long]), Array[Double]](
+          decoded, slotB) { case ((fields, _), bufs) =>
+        val (sp, ki, gx, so) = (splitsB.value, keyIdxB.value, gidxB.value, slotB.value)
+        var ci = 0
+        while (ci < k) {
+          val idx = ki(ci)
+          var r = 0
+          while (r < fields(0).length) {
+            val br = gx(ci).bracket(fields(idx(0))(r))
+            val j = so(ci)(VectorBucketizeExpr.searchColumnsIn(
+              sp(ci), m, fields, idx, r, (br >>> 32).toInt, br.toInt))
+            if (j >= 0) bufs(ci)(j) += Array.tabulate(m)(f => fields(idx(f))(r))
+            r += 1
+          }
+          ci += 1
+        }
+      }
+      underCallSite(sc, "rank.gather") {
+        RankSelection.pick(cand, loc, collect = loc.volume * m <= maxCollect,
+          (a: Array[Array[Double]]) => java.util.Arrays.sort(a, lexOrd), call)
+      }
     }
     // phase 2: MAP-ONLY tokens — boundary keys folded into the plan
     val tokens = cols.zipWithIndex.map { case (c, ci) =>
@@ -339,9 +341,11 @@ object Tokenize {
 
   /** Rows of `df` — the one sizing rule of every path here: summed from
     * the parquet footers of a bare parquet scan ([[graft.Tables.footerCount]],
-    * no job), else one column-less `count()` job. */
+    * no job), else one column-less `count()` job under the call site
+    * `input.count`. */
   private def inputRows(df: DataFrame): Long =
-    graft.Tables.footerCount(df).getOrElse(df.count())
+    graft.Tables.footerCount(df).getOrElse(
+      underCallSite(df.sparkSession.sparkContext, "input.count")(df.count()))
 
   /** Phase 1, exact, selection-based — the preferred scale path. Finds the
     * exact values at the quantile positions (pos = p·(n−1), interpolated
@@ -351,35 +355,30 @@ object Tokenize {
     *    counted from its footers (no job); any other input pays one
     *    column-less `count()`.
     *    Inputs of at most `smallCollect` TOTAL rows (not non-null rows: a
-    *    mostly-null wide input is still big to collect) are collected and
-    *    sorted on the driver, where three jobs would cost more than they
-    *    save. Larger inputs take the three jobs below.
+    *    mostly-null wide input is still big to collect) are collected
+    *    (`boundaries.collect`) and sorted on the driver, where three jobs
+    *    would cost more than they save. Larger inputs take the three jobs
+    *    below.
     *  - '''Source, decoded once per call.''' The cast projection is read as
     *    `ColumnarBatch`es ([[org.apache.spark.sql.graft.Bridge.columnarBatches]]:
     *    a vectorized parquet scan hands over its own double vectors, any
     *    other plan goes through Spark's `RowToColumnarExec`) and each batch
-    *    becomes one exact-size `double[]` of non-null values per column.
-    *    Those arrays are persisted `MEMORY_ONLY` for the length of the call
-    *    and unpersisted (blocking) before it returns or throws, so nothing
-    *    outlives the call or is shared between calls. One array per batch,
-    *    not one per column, keeps them far below the G1 humongous-object
-    *    size. A block that does not fit or is evicted is decoded again from
-    *    the source by its lineage; nothing spills to disk, and the result
-    *    never depends on what stayed cached.
+    *    becomes one exact-size `double[]` of non-null values per column,
+    *    cached for the length of the call ([[RankSelection.withCall]]: it
+    *    is unpersisted before the call returns or throws, and a block that
+    *    does not fit is decoded again by its lineage). One array per
+    *    batch, not one per column, keeps them far below the G1
+    *    humongous-object size.
     *  - '''Job 1, `boundaries.sample`.''' Decodes every task into the
     *    cache and returns, per column, every s-th non-null value of the
-    *    task, NaN dropped (s = `totalRows` / (4·numBuckets), no RNG). A
-    *    dense column thus yields ~4 values per bucket: fewer made the
-    *    bucket sizes vary enough to slow the next two jobs, more only cost
-    *    the sample's sort and transfer. A sparse column yields fewer
-    *    values and so fewer buckets, each holding about s values, so its
-    *    buckets stay about as large as a dense column's. The driver
-    *    picks ≤ numBuckets − 1 distinct equi-depth split points per column
-    *    and builds one [[graft.functions.BucketizeGrid]] per column. The
-    *    splits only steer how coarse the buckets are, never the result: a
-    *    biased sample only enlarges the candidate buckets, which the
-    *    `maxCollect` guard absorbs. [[quantileBoundsSample]] keeps its
-    *    full-scan Bernoulli sample because there the sample IS the answer.
+    *    task, NaN dropped ([[RankSelection.stride]]: ~4 per bucket for a
+    *    dense column). A sparse column yields fewer values and so fewer
+    *    buckets, each holding about s values, so its buckets stay about as
+    *    large as a dense column's. The driver picks ≤ numBuckets − 1
+    *    distinct equi-depth split points per column and builds one
+    *    [[graft.functions.BucketizeGrid]] per column. [[quantileBoundsSample]]
+    *    keeps its full-scan Bernoulli sample because there the sample IS
+    *    the answer.
     *  - '''Job 2, `boundaries.hist`.''' Over the cache, counts every
     *    column's values per bucket (grid-bracketed lower_bound) into a
     *    partition-local flat (col, bucket) array; tree-reduced. The
@@ -413,7 +412,7 @@ object Tokenize {
     * TokenizeSpec against a NaN-last brute force.
     *
     * Every broadcast the call makes is destroyed before it returns or
-    * throws. */
+    * throws, and its cache is unpersisted. */
   def quantileBoundsSelect(df: DataFrame, cols: Seq[String], probs: Seq[Double],
                            numBuckets: Int = 8192,
                            maxCollect: Long = 64000000L,
@@ -428,16 +427,6 @@ object Tokenize {
       val (n, at) = sel(ci)
       cols(ci) -> interpolated(probs, n)(at)
     }.toMap
-  }
-
-  /** Runs `f`'s jobs under the call site `name`, then restores the
-    * caller's call site (a job group or other local property is left as
-    * it is). */
-  private def underCallSite[T](sc: SparkContext, name: String)(f: => T): T = {
-    val keys = Seq("callSite.short", "callSite.long")
-    val saved = keys.map(sc.getLocalProperty)
-    keys.foreach(sc.setLocalProperty(_, name))
-    try f finally keys.zip(saved).foreach { case (key, v) => sc.setLocalProperty(key, v) }
   }
 
   /** The first `m` rows' non-null values of `vec`, in row order, as an
@@ -470,124 +459,100 @@ object Tokenize {
     val k = proj.columns.length
     val sc = proj.sparkSession.sparkContext
     if (totalRows <= smallCollect) {
-      val rows = proj.collect()
+      val rows = underCallSite(sc, "boundaries.collect")(proj.collect())
       Array.tabulate(k) { ci =>
         val vs = rows.iterator.filterNot(_.isNullAt(ci)).map(_.getDouble(ci)).toArray
         java.util.Arrays.sort(vs)
         val n = vs.length.toLong
         (n, ranksOf(ci, n).iterator.map(r => r -> vs(r.toInt)).toMap)
       }
-    } else RankSelection.withBroadcasts(sc) { bc =>
+    } else RankSelection.withCall(sc) { call =>
       // per batch, per column: the batch's non-null values
-      val decoded = Bridge.columnarBatches(proj).map { batch =>
+      val decoded = call.cache(Bridge.columnarBatches(proj).map { batch =>
         Array.tabulate(k)(ci => nonNullValues(batch.column(ci), batch.numRows))
-      }.persist(StorageLevel.MEMORY_ONLY)
-      try {
-        val stride = math.max(1L, totalRows / (4L * numBuckets))
-        // job 1: decode into the cache; per column, every stride-th
-        // non-null value of the task (NaN splits would be unordered),
-        // sorted on the executor
-        val runs: Array[Array[Array[Double]]] = underCallSite(sc, "boundaries.sample") {
-          decoded.mapPartitions { it =>
-            val bufs = Array.fill(k)(new mutable.ArrayBuilder.ofDouble)
-            val next = Array.fill(k)(stride / 2) // next sampled index in the chunk
-            while (it.hasNext) {
-              val chunk = it.next()
-              var ci = 0
-              while (ci < k) {
-                val a = chunk(ci)
-                val buf = bufs(ci)
-                var p = next(ci)
-                while (p < a.length) {
-                  val v = a(p.toInt)
-                  if (v == v) buf += v
-                  p += stride
-                }
-                next(ci) = p - a.length
-                ci += 1
-              }
-            }
-            Iterator.single(bufs.map { b =>
-              val a = b.result()
-              java.util.Arrays.sort(a)
-              a
-            })
-          }.collect()
-        }
-        val grids: Array[BucketizeGrid] = Array.tabulate(k) { ci =>
-          // Arrays.sort detects the concatenated sorted runs and merges them
-          val vs = Array.concat(runs.map(_(ci)).toIndexedSeq: _*)
-          java.util.Arrays.sort(vs)
-          val b = math.min(numBuckets, vs.length)
-          new BucketizeGrid((1 until b).iterator
-            .map(i => vs(((i.toLong * vs.length) / b).toInt.min(vs.length - 1)))
-            .toArray.distinct)
-        }
-        val flatOff: Array[Int] = grids.map(_.n + 1).scanLeft(0)(_ + _)
-        val gridB = bc(grids)
-        // job 2: flat (col, bucket) histogram — per value one grid-bracketed
-        // search and one increment into a partition-local array
-        val hist: Array[Long] = underCallSite(sc, "boundaries.hist") {
-          decoded.mapPartitions { it =>
-            val gx = gridB.value
-            val off = flatOff
-            val acc = new Array[Long](off(k))
-            while (it.hasNext) {
-              val chunk = it.next()
-              var ci = 0
-              while (ci < k) {
-                val a = chunk(ci)
-                val g = gx(ci)
-                val base = off(ci)
-                var r = 0
-                while (r < a.length) {
-                  acc(base + BucketizeGrid.search(g, a(r), Int.MaxValue)) += 1
-                  r += 1
-                }
-                ci += 1
-              }
-            }
-            Iterator.single(acc)
-          }.treeReduce { (a, b) =>
-            var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-          }
-        }
-        val loc = new RankSelection.Located(hist, flatOff, ranksOf)
-        val slotB = bc(loc.slots)
-        // job 3: gather the candidate-bucket values as per-partition
-        // primitive arrays keyed by (col, slot)
-        val cand = decoded.mapPartitions { it =>
-          val gx = gridB.value
-          val slot = slotB.value
-          val bufs = Array.tabulate(k)(ci =>
-            Array.fill(slot(ci).count(_ >= 0))(new mutable.ArrayBuilder.ofDouble))
+      })
+      val stride = RankSelection.stride(totalRows, numBuckets)
+      // job 1: decode into the cache; per column, every stride-th non-null
+      // value of the task (NaN splits would be unordered), sorted on the
+      // executor
+      val runs: Array[Array[Array[Double]]] = underCallSite(sc, "boundaries.sample") {
+        decoded.mapPartitions { it =>
+          val bufs = Array.fill(k)(new mutable.ArrayBuilder.ofDouble)
+          val next = Array.fill(k)(stride / 2)
           while (it.hasNext) {
             val chunk = it.next()
             var ci = 0
             while (ci < k) {
               val a = chunk(ci)
-              val g = gx(ci)
-              val sl = slot(ci)
-              val bf = bufs(ci)
-              var r = 0
-              while (r < a.length) {
-                val v = a(r)
-                val j = sl(BucketizeGrid.search(g, v, Int.MaxValue))
-                if (j >= 0) bf(j) += v
-                r += 1
+              val buf = bufs(ci)
+              next(ci) = RankSelection.strided(a.length, next(ci), stride) { p =>
+                val v = a(p)
+                if (v == v) buf += v
               }
               ci += 1
             }
           }
-          Iterator.range(0, k).flatMap(ci =>
-            bufs(ci).indices.iterator.map(j => ((ci, j), bufs(ci)(j).result())))
+          Iterator.single(bufs.map { b =>
+            val a = b.result()
+            java.util.Arrays.sort(a)
+            a
+          })
+        }.collect()
+      }
+      val grids: Array[BucketizeGrid] = Array.tabulate(k) { ci =>
+        // Arrays.sort detects the concatenated sorted runs and merges them
+        val vs = Array.concat(runs.map(_(ci)).toIndexedSeq: _*)
+        java.util.Arrays.sort(vs)
+        new BucketizeGrid(RankSelection.splitIndices(vs.length, numBuckets).map(vs(_))
+          .toArray.distinct)
+      }
+      val flatOff: Array[Int] = grids.map(_.n + 1).scanLeft(0)(_ + _)
+      val gridB = call.broadcast(grids)
+      // job 2: flat (col, bucket) histogram — per value one grid-bracketed
+      // search and one increment into a partition-local array
+      val hist = underCallSite(sc, "boundaries.hist") {
+        RankSelection.histogram(decoded, flatOff(k)) { (chunk, acc) =>
+          val gx = gridB.value
+          var ci = 0
+          while (ci < k) {
+            val a = chunk(ci)
+            val g = gx(ci)
+            val base = flatOff(ci)
+            var r = 0
+            while (r < a.length) {
+              acc(base + BucketizeGrid.search(g, a(r), Int.MaxValue)) += 1
+              r += 1
+            }
+            ci += 1
+          }
         }
-        val picked = underCallSite(sc, "boundaries.gather") {
-          RankSelection.pick(cand, loc, collect = loc.volume <= maxCollect,
-            (a: Array[Double]) => java.util.Arrays.sort(a), bc)
+      }
+      val loc = new RankSelection.Located(hist, flatOff, ranksOf)
+      val slotB = call.broadcast(loc.slots)
+      // job 3: gather the candidate-bucket values
+      val cand = RankSelection.gather[Array[Array[Double]], Double](decoded, slotB) { (chunk, bufs) =>
+        val (gx, slot) = (gridB.value, slotB.value)
+        var ci = 0
+        while (ci < k) {
+          val a = chunk(ci)
+          val g = gx(ci)
+          val sl = slot(ci)
+          val bf = bufs(ci)
+          var r = 0
+          while (r < a.length) {
+            val v = a(r)
+            val j = sl(BucketizeGrid.search(g, v, Int.MaxValue))
+            if (j >= 0) bf(j) += v
+            r += 1
+          }
+          ci += 1
         }
-        loc.counts.zip(picked)
-      } finally decoded.unpersist(blocking = true)
+      }
+      val picked = underCallSite(sc, "boundaries.gather") {
+        RankSelection.pick(cand, loc, collect = loc.volume <= maxCollect,
+          (a: Array[Double]) => java.util.Arrays.sort(a), call)
+      }
+      loc.counts.zip(picked)
     }
   }
 
@@ -611,9 +576,9 @@ object Tokenize {
   /** Phase 1, approximate, ONE data pass: uniform row sample -> driver-side
     * per-column sorts -> interpolated quantiles of the sample.
     *
-    * The scan is map-only (Bernoulli keep + packed per-partition primitive
-    * column buffers — no Row boxing, no shuffle), which is why it beats
-    * exact selection (two passes + candidate shuffle) on wall clock. Rank error: by Dvoretzky-Kiefer-Wolfowitz,
+    * The scan is map-only: a Bernoulli keep over the projection's
+    * columnar batches into packed per-partition primitive column buffers,
+    * no Row boxing, no shuffle. Rank error: by Dvoretzky-Kiefer-Wolfowitz,
     * P(sup_p |rank(b_p)/n - p| > eps) <= 2·exp(-2·s·eps²) — at the default
     * s=1M, eps=0.003 holds with probability ~1-3e-8; property-tested in
     * TokenizeSpec. This is the 100 TB default when boundaries feed a
@@ -628,21 +593,25 @@ object Tokenize {
     val n = inputRows(df)
     require(n > 0, "quantileBoundsSample: empty input")
     val proj = df.select(cols.map(c => col(c).cast("double")): _*)
-    val rdd = proj.queryExecution.toRdd
     val rowFrac = math.min(1.0, sampleSize.toDouble / n)
     // pack per-partition primitive column buffers; collect returns
     // partitions-many packs of double[] per column
     val packs: Array[Array[Array[Double]]] =
-      rdd.mapPartitionsWithIndex { (idx, it) =>
+      Bridge.columnarBatches(proj).mapPartitionsWithIndex { (idx, it) =>
         val rnd = new java.util.Random(seed ^ (idx * 0x9E3779B97F4A7C15L))
         val bufs = Array.fill(k)(new mutable.ArrayBuilder.ofDouble)
-        it.foreach { row =>
-          if (rowFrac >= 1.0 || rnd.nextDouble() < rowFrac) {
-            var ci = 0
-            while (ci < k) {
-              if (!row.isNullAt(ci)) bufs(ci) += row.getDouble(ci)
-              ci += 1
+        it.foreach { batch =>
+          var r = 0
+          while (r < batch.numRows) {
+            if (rowFrac >= 1.0 || rnd.nextDouble() < rowFrac) {
+              var ci = 0
+              while (ci < k) {
+                val vec = batch.column(ci)
+                if (!vec.isNullAt(r)) bufs(ci) += vec.getDouble(r)
+                ci += 1
+              }
             }
+            r += 1
           }
         }
         Iterator.single(bufs.map(_.result()))
@@ -734,9 +703,9 @@ object Tokenize {
         .orderBy("col_name", "p_idx")
     },
     "q_quantile_bounds_sample" -> { (spark, dir) =>
-      // Contract entry for the engine's FASTEST bounds path
-      // ([[quantileBoundsSample]]: one map-only scan, DKW-bounded — 3.3-4 s
-      // vs 12.5 s exact on 10 M×20). Hash-checkable against DuckDB
+      // Contract entry for the sampled bounds path
+      // ([[quantileBoundsSample]]: one map-only scan, DKW-bounded).
+      // Hash-checkable against DuckDB
       // `quantile_cont` because at n <= sampleSize (every driver verify /
       // bench scale) the Bernoulli keep short-circuits (`rowFrac >= 1.0`
       // keeps EVERY row, no RNG draw), so the "sample" is deterministically

@@ -36,8 +36,7 @@ class VectorBucketizeSpec extends SparkSpec {
     }
   }
 
-  test("BucketizeGrid bracket + searchRowIn == full-range searchRowIn") {
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+  test("BucketizeGrid bracket + searchColumnsIn == full-range searchColumnsIn") {
     val rnd = new scala.util.Random(11)
     val m = 3
     def mat(firsts: Array[Double]): Array[Double] = {
@@ -79,11 +78,12 @@ class VectorBucketizeSpec extends SparkSpec {
           // bracket would disagree with the full-range search
           Array(Double.NaN, 0.5, 0.5))
       for (key <- probes) {
-        val row = new GenericInternalRow(key.map(v => v: Any))
-        val full = VectorBucketizeExpr.searchRowIn(flat, m, row, idx, 0, t)
+        // the key as row 1 of a decoded batch, one array per field
+        val fields = key.map(v => Array(-1.0, v, -1.0))
+        val full = VectorBucketizeExpr.searchColumnsIn(flat, m, fields, idx, 1, 0, t)
         val br = gx.bracket(key(0))
-        val fast = VectorBucketizeExpr.searchRowIn(
-          flat, m, row, idx, (br >>> 32).toInt, br.toInt)
+        val fast = VectorBucketizeExpr.searchColumnsIn(
+          flat, m, fields, idx, 1, (br >>> 32).toInt, br.toInt)
         assert(fast == full, s"mismatch at key=${key.mkString(",")} t=$t")
       }
     }

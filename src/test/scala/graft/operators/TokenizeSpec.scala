@@ -130,11 +130,25 @@ class TokenizeSpec extends SparkSpec {
       Tokenize.LineitemCols.map(c => s"${c}_token")
     val a = tokenizeRank(li, Tokenize.LineitemCols, tiebreak)
       .select(outCols.map(col): _*).collect().map(_.toSeq).sortBy(_.mkString("|"))
-    for (maxCollect <- Seq(64000000L, 8L)) {
-      val b = Tokenize.tokenizeRankSelect(li, Tokenize.LineitemCols, tiebreak,
-          numBuckets = 64, sampleSize = 500, maxCollect = maxCollect)
+    def selected(df: org.apache.spark.sql.DataFrame, numBuckets: Int, maxCollect: Long) =
+      Tokenize.tokenizeRankSelect(df, Tokenize.LineitemCols, tiebreak,
+          numBuckets = numBuckets, maxCollect = maxCollect)
         .select(outCols.map(col): _*).collect().map(_.toSeq).sortBy(_.mkString("|"))
+    for (maxCollect <- Seq(64000000L, 8L)) {
+      val b = selected(li, 64, maxCollect)
       assert(a.length == b.length && a.toSeq == b.toSeq, s"maxCollect=$maxCollect")
+    }
+    // value-clustered files: each holds one sorted range of the tie-heavy
+    // l_quantity, so every task's strided sample covers only its own range
+    val dir = java.nio.file.Files.createTempDirectory("rankclustered").toString
+    li.repartitionByRange(4, col("l_quantity")).sortWithinPartitions("l_quantity")
+      .write.parquet(s"$dir/t")
+    val clustered = spark.read.parquet(s"$dir/t")
+    assert(clustered.inputFiles.length == 4)
+    for (numBuckets <- Seq(4, 64)) {
+      val b = selected(clustered, numBuckets, 64000000L)
+      assert(a.length == b.length && a.toSeq == b.toSeq,
+        s"value-clustered files, numBuckets=$numBuckets")
     }
   }
 
@@ -499,10 +513,15 @@ class TokenizeSpec extends SparkSpec {
 
   test("the selection jobs run under their phase names and restore the caller's call site") {
     val dir = java.nio.file.Files.createTempDirectory("qselphases").toString
-    spark.range(30000).select(pmod(col("id") * 2654435761L, lit(1000003)).cast("double").as("v"))
+    spark.range(30000).select(col("id"),
+        pmod(col("id") * 2654435761L, lit(1000003)).cast("double").as("v"))
       .repartition(3).write.parquet(s"$dir/t")
     val df = spark.read.parquet(s"$dir/t")
     val sc = spark.sparkContext
+    def restored(): Unit = {
+      assert(sc.getLocalProperty("callSite.short") == "caller")
+      assert(sc.getLocalProperty("callSite.long") == null)
+    }
     sc.setCallSite("caller")
     try {
       // collected and distributed pick: the gather is one job either way
@@ -510,9 +529,18 @@ class TokenizeSpec extends SparkSpec {
         val run = ran(quantileBoundsSelect(df, Seq("v"), Seq(0.1, 0.5, 0.9),
           smallCollect = 0, maxCollect = maxCollect))
         assert(run.jobs == Seq("boundaries.sample", "boundaries.hist", "boundaries.gather"), run)
-        assert(sc.getLocalProperty("callSite.short") == "caller")
-        assert(sc.getLocalProperty("callSite.long") == null)
+        restored()
+        val rank = ran(tokenizeRankSelect(df, Seq("v"), Seq("id", "v"), bins = 10,
+          maxCollect = maxCollect))
+        assert(rank.jobs == Seq("rank.sample", "rank.hist", "rank.gather"), rank)
+        restored()
       }
+      // the two Dataset actions: the count() that sizes an input that is
+      // not a bare parquet scan, and the small-input collect
+      val counted = ran(quantileBoundsSelect(df.filter(col("id") > 0), Seq("v"), Seq(0.5)))
+      assert(counted.actions == Seq("count", "collect"), counted)
+      assert(counted.jobs.toSet == Set("input.count", "boundaries.collect"), counted)
+      restored()
     } finally sc.clearCallSite()
   }
 
@@ -526,6 +554,8 @@ class TokenizeSpec extends SparkSpec {
   }
 
   test("exact selection reads its parquet input once per call") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
     val dir = java.nio.file.Files.createTempDirectory("qselonce").toString
     // incompressible values in four files
     spark.range(400000).select((0 until 4).map(i => randn(60 + i).as(s"c$i")): _*)
@@ -539,26 +569,46 @@ class TokenizeSpec extends SparkSpec {
     val hc = spark.sparkContext.hadoopConfiguration
     val vectored = "parquet.hadoop.vectored.io.enabled"
     val prev = Option(hc.get(vectored))
-    hc.setBoolean(vectored, false)
-    val before = localBytesRead
-    try quantileBoundsSelect(df, df.columns.toSeq, innerProbs(100), smallCollect = 0)
-    finally prev.fold(hc.unset(vectored))(hc.set(vectored, _))
-    val read = localBytesRead - before
-    info(s"read $read bytes of a $size-byte table")
     // one decode serves the sample, histogram and gather jobs; re-reading
     // the files for each job reads at least twice their size
-    assert(read > 0 && read < 1.5 * size, s"read $read bytes of a $size-byte table")
+    def readOnce(what: String)(f: => Any): Unit = {
+      val before = localBytesRead
+      hc.setBoolean(vectored, false)
+      try f finally prev.fold(hc.unset(vectored))(hc.set(vectored, _))
+      val read = localBytesRead - before
+      info(s"$what read $read bytes of a $size-byte table")
+      assert(read > 0 && read < 1.5 * size, s"$what read $read bytes of a $size-byte table")
+    }
+    readOnce("quantileBoundsSelect") {
+      quantileBoundsSelect(df, df.columns.toSeq, innerProbs(100), smallCollect = 0)
+    }
+    val broadcasts = userBroadcasts
+    val cached = persistentRdds
+    var run: Ran = null
+    readOnce("tokenizeRankSelect") {
+      run = ran(tokenizeRankSelect(df, Seq("c0", "c1"), df.columns.toSeq))
+    }
+    // no count and no Dataset sample: the three selection jobs only
+    assert(run.jobs == Seq("rank.sample", "rank.hist", "rank.gather") && run.actions.isEmpty, run)
+    assert(persistentRdds == cached, "the decode cache outlived the call")
+    eventually(timeout(5.seconds)) {
+      assert((userBroadcasts -- broadcasts).isEmpty)
+    }
   }
 
-  // broadcast value blocks made by code, not Spark's own task-binary
-  // broadcasts (byte arrays, released only by the context cleaner)
+  // broadcast value blocks made by code, not Spark's own: task binaries
+  // (byte arrays) and a file scan's Hadoop configuration, both released
+  // only by the context cleaner
   private def userBroadcasts: Set[org.apache.spark.storage.BlockId] = {
     val bm = org.apache.spark.SparkEnv.get.blockManager
     bm.getMatchingBlockIds {
       case org.apache.spark.storage.BroadcastBlockId(_, "") => true
       case _ => false
     }.filter(id => bm.getLocalValues(id) // toList releases the read lock
-      .exists(_.data.toList.exists(!_.isInstanceOf[Array[Byte]]))).toSet
+      .exists(_.data.toList.exists {
+        case _: Array[Byte] | _: org.apache.spark.util.SerializableConfiguration => false
+        case _ => true
+      })).toSet
   }
 
   /** Runs `f`, expecting an IllegalArgumentException, and checks that every
@@ -588,23 +638,31 @@ class TokenizeSpec extends SparkSpec {
     assert(msg.contains("no non-null values in empty"), msg)
   }
 
-  test("tokenizeRankSelect fails on a NaN key the sample missed and releases its broadcasts") {
+  test("tokenizeRankSelect names a NaN or null key column and releases its broadcasts and cache") {
     import org.apache.spark.sql.functions._
-    // one NaN row in 20k and a ~1-row sample: the sample check passes, so
-    // the histogram's full-data NaN slot is what fails, after the
-    // broadcasts exist
-    val df = spark.range(20000).select(col("id"),
-      when(col("id") === 12345, lit(Double.NaN))
+    // one bad row in 20k, not a sampled one: the first job counts null and
+    // NaN sort fields over the full data, and the call fails before the
+    // histogram
+    def withBad(bad: org.apache.spark.sql.Column) = spark.range(20000).select(col("id"),
+      when(col("id") === 12345, bad)
         .otherwise(pmod(col("id") * 2654435761L, lit(1000003)).cast("double")).as("v"))
     var msg = ""
     val run = ran {
       msg = failsReleasingBroadcasts {
-        tokenizeRankSelect(df, Seq("v"), Seq("id", "v"), bins = 10, numBuckets = 8, sampleSize = 1)
+        tokenizeRankSelect(withBad(lit(Double.NaN)), Seq("v"), Seq("id", "v"), bins = 10,
+          numBuckets = 8)
       }
     }
-    assert(msg.contains("tokenizeRankSelect: 1 rows have NaN sort columns"), msg)
+    assert(msg.contains("tokenizeRankSelect: 1 rows have NaN sort columns ('v')"), msg)
     // not a parquet scan: sized by the count() fallback
     assert(run.actions.contains("count"), run)
+    // the three selection jobs stop at the first
+    assert(run.jobs.count(_.startsWith("rank.")) == 1, run)
+    val nullMsg = failsReleasingBroadcasts {
+      tokenizeRankSelect(withBad(lit(null).cast("double")), Seq("v"), Seq("id", "v"),
+        bins = 10, numBuckets = 8)
+    }
+    assert(nullMsg.contains("tokenizeRankSelect: 1 rows have null sort columns ('v')"), nullMsg)
   }
 
   test("a bare parquet scan is sized from its footers: no count job on any tokenizer path") {
