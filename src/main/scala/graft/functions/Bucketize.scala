@@ -76,23 +76,40 @@ case class BucketizeExpr(child: Expression, bounds: Seq[Double], bins: Int,
   * composite-key passes (`Tokenize.tokenizeRankSelect`, over the split
   * rows' first fields, through [[bracket]]). A plain binary search over a
   * large boundary array walks ~log2(n) scattered cache lines per value; a
-  * uniform grid of G = 4n cells over [bounds.head, bounds.last] with
-  * per-cell lower_bound brackets cuts that to one multiply, two int reads
-  * and a ≤2-step search when the boundaries are spread like the data
-  * (equi-depth splits are). Brackets are widened ±1 cell so fp rounding at
-  * a cell edge can never exclude the true index: exactness never depends
-  * on the grid. One bracket serves every comparator: [bnd(gi−1), bnd(gi+2))
-  * contains every index whose boundary could equal v (duplicates of v
-  * share v's cell, so a run of equal boundaries never escapes the widened
-  * bracket), and the caller's comparator runs only inside it. Falls back
-  * to the full range when cells are under one ulp wide (degenerate spans):
-  * there a cell edge's 0.5-ulp rounding spans several cells and the ±1
-  * margin could exclude the true index. */
+  * uniform grid over [bounds.head, bounds.last] with per-cell lower_bound
+  * brackets cuts that to one multiply, two int reads and a ≤2-step search
+  * when the boundaries are spread like the data (equi-depth splits are).
+  * Brackets are widened ±1 cell so fp rounding at a cell edge can never
+  * exclude the true index: exactness never depends on the grid. One
+  * bracket serves every comparator: [bnd(gi−1), bnd(gi+2)) contains every
+  * index whose boundary could equal v (duplicates of v share v's cell, so
+  * a run of equal boundaries never escapes the widened bracket), and the
+  * caller's comparator runs only inside it. Falls back to the full range
+  * when cells are under one ulp wide (degenerate spans): there a cell
+  * edge's 0.5-ulp rounding spans several cells and the ±1 margin could
+  * exclude the true index.
+  *
+  * Cells: G = min(2^16, max(4n, 4096)). The selection grids (n = 8,191)
+  * get 4n cells; 8n cells did not speed up their histogram. The floor is
+  * for short bound lists: over the 99 bounds of a 100-bin tokenizer,
+  * 4n = 396 cells leave most values a one- or two-step search with
+  * branches the CPU cannot predict, while at 4,096 cells (a 16 KB `bnd`)
+  * most values fall in a bracket that holds no bound, and the search loop
+  * does not run.
+  *
+  * A gather that keeps only the values of a few needed buckets asks the
+  * grid first ([[candidateMask]]): one cell computation and one mask read
+  * per value, and only the values of flagged cells are searched.
+  *
+  * A grid serializes only its `bounds` and is rebuilt on read, so a
+  * broadcast or a task binary does not carry the 4G + 4 byte `bnd`.
+  * `bnd` is a plain val, not a lazy one: a lazy val would put an
+  * initialization check in every per-value search. */
 final class BucketizeGrid(val bounds: Array[Double]) extends Serializable {
   val n: Int = bounds.length
   val lo0: Double = if (n > 0) bounds(0) else 0.0
   val hi0: Double = if (n > 0) bounds(n - 1) else 0.0
-  val G: Int = math.max(1, math.min(1 << 16, 4 * n))
+  val G: Int = math.min(1 << 16, math.max(4 * n, 4096))
   val inv: Double = if (n > 0 && hi0 > lo0) G / (hi0 - lo0) else 0.0
   val gridOk: Boolean = java.lang.Double.isFinite(inv) && inv > 0.0 &&
     (hi0 - lo0) / G >= math.ulp(math.max(math.abs(lo0), math.abs(hi0)))
@@ -125,9 +142,46 @@ final class BucketizeGrid(val bounds: Array[Double]) extends Serializable {
     else if (v > hi0) (n.toLong << 32) | n
     else if (!gridOk) n.toLong
     else { val gi = cellOf(v); (bracketLo(gi).toLong << 32) | bracketHi(gi) }
+
+  /** v's entry in a [[candidateMask]]: 0 for NaN, 1 for every other value
+    * when the grid is off, else 1 + v's cell (values outside [lo0, hi0]
+    * take the end cells, whose brackets reach buckets 0 and n). */
+  def maskCell(v: Double): Int = if (v != v) 0 else if (!gridOk) 1 else 1 + cellOf(v)
+
+  /** Which values a gather must search, decided before any comparison.
+    * `slot(b) >= 0` marks bucket b (0..n) as needed. Entry 1 + gi is true
+    * iff a needed bucket lies in cell gi's widened bracket, ends included:
+    * a search started on that bracket, a plain lower_bound or a
+    * composite-key search whose first field is v, ends inside it, so a
+    * value whose entry is false never lands in a needed bucket. Entry 0,
+    * NaN's, is true iff bucket n is needed ([[BucketizeGrid.search]] sends
+    * NaN there). A grid that is off has one cell, always true. */
+  def candidateMask(slot: Array[Int]): Array[Boolean] = {
+    require(slot.length == n + 1, s"candidateMask: ${slot.length} slots for ${n + 1} buckets")
+    // before(b) = the number of needed buckets below b
+    val before = new Array[Int](n + 2)
+    var b = 0
+    while (b <= n) { before(b + 1) = before(b) + (if (slot(b) >= 0) 1 else 0); b += 1 }
+    val mask = new Array[Boolean](if (gridOk) G + 1 else 2)
+    mask(0) = slot(n) >= 0
+    if (!gridOk) mask(1) = true
+    else {
+      var gi = 0
+      while (gi < G) { mask(1 + gi) = before(bracketHi(gi) + 1) > before(bracketLo(gi)); gi += 1 }
+    }
+    mask
+  }
+
+  private def writeReplace(): AnyRef = new BucketizeGrid.Bounds(bounds)
 }
 
 object BucketizeGrid {
+  /** A grid's serialized form: its bounds; reading it builds the grid. */
+  @SerialVersionUID(1L)
+  private final class Bounds(bounds: Array[Double]) extends Serializable {
+    private def readResolve(): AnyRef = new BucketizeGrid(bounds)
+  }
+
   /** The grid's `bnd` table in one forward sweep, O(G + n): the edge
     * expression is monotone in g (each fp step rounds monotonically), so
     * the lower_bound cursor never moves back. The one non-monotone edge is

@@ -8,6 +8,8 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.storage.StorageLevel
 
+import graft.functions.BucketizeGrid
+
 /** The shared scaffold of exact rank selection, used by the scalar path
   * ([[Tokenize.selectRanks]], under the quantile boundaries and the
   * per-group quantiles) and the composite-key rank tokenizer
@@ -31,7 +33,16 @@ import org.apache.spark.storage.StorageLevel
   *    the caller's per-chunk loop;
   *  - [[Located]] turns the histogram into cumulative counts, locates every
   *    needed 0-based rank as a (bucket, in-bucket offset), and builds the
-  *    bucket → gather-slot tables the gather job reads;
+  *    bucket → gather-slot tables the gather job reads, and, over the
+  *    grids the histogram searched, one candidate mask per column
+  *    ([[Located.candidateMasks]]). The gather searches only the values
+  *    whose grid cell the mask admits: about 1% of the values fall in a
+  *    needed bucket, and a search for the rest would only prove that
+  *    again. Per-bucket offsets from a counting sort in the histogram
+  *    job would do the same, but for 8,192 buckets they outweigh the
+  *    ~4,096 values of a cached batch, and a recomputed block would have
+  *    to rebuild them; the masks are one boolean per cell (about 32 K per
+  *    column) and change nothing in the cache;
   *  - [[pick]] sorts each needed bucket's candidates and reads the ranks
   *    at their offsets, on the driver or, above the collect budget, on the
   *    executors after a `reduceByKey`. */
@@ -158,6 +169,11 @@ private[operators] object RankSelection {
       offsets(ci).iterator.zipWithIndex.foreach { case ((b, _), j) => slot(b) = j }
       slot
     }
+    /** Per column, the [[graft.functions.BucketizeGrid.candidateMask]] of
+      * its needed buckets over `grids(ci)`, the grid the histogram
+      * searched: the gather job searches only the values it admits. */
+    def candidateMasks(grids: Array[BucketizeGrid]): Array[Array[Boolean]] =
+      Array.tabulate(k)(ci => grids(ci).candidateMask(slots(ci)))
     /** Per column and slot, the needed in-bucket offsets. */
     val slotOffsets: Array[Array[Array[Long]]] = offsets.map(_.map(_._2).toArray)
     /** Per column and slot, the rank of the bucket's first value. */

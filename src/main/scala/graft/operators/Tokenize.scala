@@ -58,7 +58,8 @@ import graft.functions.{BucketizeExpr, BucketizeGrid}
   * search); [[RankSelection]] holds the rest: the call's broadcasts and
   * cache, the job names, the sample rule, rank location and the
   * collect-or-`reduceByKey` pick. Both bracket their per-value searches
-  * with [[graft.functions.BucketizeGrid]].
+  * with [[graft.functions.BucketizeGrid]], and both gathers search only
+  * the values its candidate mask admits.
   */
 object Tokenize {
   import RankSelection.underCallSite
@@ -103,7 +104,11 @@ object Tokenize {
     *    histogram; the driver locates the bucket starts' positions in it.
     *  - '''Job 3, `rank.gather`.''' Over the cache, keeps the composite
     *    keys of the rows in the buckets that hold a bucket start and picks
-    *    the starts ([[RankSelection.pick]]).
+    *    the starts ([[RankSelection.pick]]). A row is searched only if the
+    *    column's candidate mask admits the grid cell of its first field:
+    *    the composite search ends inside that cell's bracket, ends
+    *    included, as the scalar one does, so the same mask
+    *    ([[RankSelection.Located.candidateMasks]]) is exact here.
     *
     * Requirements: `tiebreak` must be a unique total order; all key
     * columns non-null, NaN-free, and order-preserving under a double cast
@@ -196,8 +201,8 @@ object Tokenize {
       // one from its end a larger one, so the search finishes inside it.
       // A plain search walks ~13 scattered cache lines of a ~450 KB split
       // matrix per (row, col).
-      val gidxB = call.broadcast(splits.map(f =>
-        new BucketizeGrid(Array.tabulate(f.length / m)(i => f(i * m)))))
+      val gidx = splits.map(f => new BucketizeGrid(Array.tabulate(f.length / m)(i => f(i * m))))
+      val gidxB = call.broadcast(gidx)
       // job 2: flat (col, bucket) histogram — one composite search and one
       // increment per (row, col) into a partition-local array
       val hist = underCallSite(sc, "rank.hist") {
@@ -219,20 +224,29 @@ object Tokenize {
       }
       val loc = new RankSelection.Located(hist, flatOff, (_, _) => positions.toSeq)
       val slotB = call.broadcast(loc.slots)
-      // job 3: gather ONLY boundary-bucket rows' composite keys; allocates
-      // only per CANDIDATE (the m-double key)
+      val maskB = call.broadcast(loc.candidateMasks(gidx))
+      // job 3: gather ONLY boundary-bucket rows' composite keys; searches
+      // only the rows whose first field's cell the mask admits, and
+      // allocates only per CANDIDATE (the m-double key)
       val cand = RankSelection.gather[(Array[Array[Double]], Array[Long]), Array[Double]](
           decoded, slotB) { case ((fields, _), bufs) =>
-        val (sp, ki, gx, so) = (splitsB.value, keyIdxB.value, gidxB.value, slotB.value)
+        val (sp, ki, gx, so, mx) =
+          (splitsB.value, keyIdxB.value, gidxB.value, slotB.value, maskB.value)
         var ci = 0
         while (ci < k) {
           val idx = ki(ci)
+          val g = gx(ci)
+          val mk = mx(ci)
+          val first = fields(idx(0))
           var r = 0
-          while (r < fields(0).length) {
-            val br = gx(ci).bracket(fields(idx(0))(r))
-            val j = so(ci)(VectorBucketizeExpr.searchColumnsIn(
-              sp(ci), m, fields, idx, r, (br >>> 32).toInt, br.toInt))
-            if (j >= 0) bufs(ci)(j) += Array.tabulate(m)(f => fields(idx(f))(r))
+          while (r < first.length) {
+            val v = first(r)
+            if (mk(g.maskCell(v))) {
+              val br = g.bracket(v)
+              val j = so(ci)(VectorBucketizeExpr.searchColumnsIn(
+                sp(ci), m, fields, idx, r, (br >>> 32).toInt, br.toInt))
+              if (j >= 0) bufs(ci)(j) += Array.tabulate(m)(f => fields(idx(f))(r))
+            }
             r += 1
           }
           ci += 1
@@ -387,11 +401,16 @@ object Tokenize {
     *    (bucket, in-bucket offset) for every needed position.
     *  - '''Job 3, `boundaries.gather`.''' Over the cache, keeps only the
     *    values that fall in a needed bucket (≈ |probs|·n/B per column) as
-    *    primitive arrays keyed by (col, gather slot). Up to `maxCollect`
-    *    candidates are collected and sorted per bucket on the driver;
-    *    above it each bucket is sorted on the executors after a
-    *    reduceByKey and only the needed offsets come back
-    *    ([[RankSelection.pick]]).
+    *    primitive arrays keyed by (col, gather slot). It decides membership
+    *    before any comparison: each column's candidate mask
+    *    ([[RankSelection.Located.candidateMasks]]) flags the grid cells
+    *    whose widened bracket holds a needed bucket, and only the values
+    *    of flagged cells (a few percent of them) are searched again. The
+    *    histogram's search ends inside the bracket, so the mask never
+    *    drops a candidate. Up to `maxCollect` candidates are collected and
+    *    sorted per bucket on the driver; above it each bucket is sorted on
+    *    the executors after a reduceByKey and only the needed offsets come
+    *    back ([[RankSelection.pick]]).
     *
     * The three jobs run under those call sites (the names their stages
     * carry in listeners and the UI); the caller's call site is restored
@@ -529,20 +548,25 @@ object Tokenize {
       }
       val loc = new RankSelection.Located(hist, flatOff, ranksOf)
       val slotB = call.broadcast(loc.slots)
-      // job 3: gather the candidate-bucket values
+      val maskB = call.broadcast(loc.candidateMasks(grids))
+      // job 3: gather the candidate-bucket values; a value is searched only
+      // if the mask admits its cell
       val cand = RankSelection.gather[Array[Array[Double]], Double](decoded, slotB) { (chunk, bufs) =>
-        val (gx, slot) = (gridB.value, slotB.value)
+        val (gx, slot, mx) = (gridB.value, slotB.value, maskB.value)
         var ci = 0
         while (ci < k) {
           val a = chunk(ci)
           val g = gx(ci)
           val sl = slot(ci)
+          val mk = mx(ci)
           val bf = bufs(ci)
           var r = 0
           while (r < a.length) {
             val v = a(r)
-            val j = sl(BucketizeGrid.search(g, v, Int.MaxValue))
-            if (j >= 0) bf(j) += v
+            if (mk(g.maskCell(v))) {
+              val j = sl(BucketizeGrid.search(g, v, Int.MaxValue))
+              if (j >= 0) bf(j) += v
+            }
             r += 1
           }
           ci += 1

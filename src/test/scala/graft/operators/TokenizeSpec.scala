@@ -9,6 +9,10 @@ class TokenizeSpec extends SparkSpec {
   import Tokenize._
   import TokenizeReference._
 
+  /** Two bounds 100 ulps apart: grid-safe at 4n = 8 cells, under one ulp
+    * per cell at the 4,096-cell floor, so the floor turns the grid off. */
+  private val floorOffSpan = Array(1.0, 1.0 + 100 * math.ulp(1.0))
+
   private lazy val randDf = {
     val cols = (0 until 3).map(i => randn(42 + i).as(s"col_$i"))
     spark.range(20000).select(col("id") +: cols: _*)
@@ -257,7 +261,10 @@ class TokenizeSpec extends SparkSpec {
       Array.fill(200)(rnd.nextInt(8).toDouble).sorted, // massive duplicate runs
       Array(1.0, 2.0, 2.0, 3.5),
       Array.fill(64)(7.5), // all-equal bounds (zero span -> full-range path)
-      Array(0.0),
+      Array.empty[Double], // n = 0: the 4,096-cell floor over no bounds
+      Array(0.0), // n = 1
+      Array(-1.5, 2.5), // n = 2: 4,096 cells over two bounds
+      floorOffSpan, // grid-safe at 4n cells, under one ulp per cell at 4,096
       Iterator.iterate(1.0)(math.nextUp).take(64).toArray, // ulp-adjacent
       Array(0.0, Double.MinPositiveValue), // denormal span
       (1 until 100).map(_ / 100.0).toArray)
@@ -400,13 +407,21 @@ class TokenizeSpec extends SparkSpec {
     }
     val narrow = Iterator.iterate(1.0)(math.nextUp).take(64).toArray // < 1 ulp per cell
     assert(!new BucketizeGrid(narrow).gridOk)
+    // the cell rule: 4n cells for the selection grids, a 4,096-cell floor
+    assert(new BucketizeGrid(Array.tabulate(8191)(_.toDouble)).G == 4 * 8191)
+    assert(new BucketizeGrid(Array.tabulate(99)(_.toDouble)).G == 4096)
+    assert(new BucketizeGrid(Array(-1.5, 2.5)).gridOk)
+    assert((floorOffSpan(1) - floorOffSpan(0)) / 8 >= math.ulp(floorOffSpan(1)))
+    assert(!new BucketizeGrid(floorOffSpan).gridOk)
     val boundSets: Seq[Array[Double]] = Seq(
       Array.fill(8191)(rnd.nextGaussian()).sorted,
       Array.fill(5000)(rnd.nextDouble() * 1e6).sorted,
       Array.fill(2000)(rnd.nextInt(5).toDouble).sorted, // duplicate-heavy
       Array.fill(64)(7.5), // all equal: zero span
-      Array(3.25), // single split
-      Array.empty[Double],
+      Array(3.25), // single split, n = 1
+      Array.empty[Double], // n = 0
+      Array(-1.5, 2.5), // n = 2
+      floorOffSpan,
       narrow,
       Array(0.0, Double.MinPositiveValue), // denormal span
       Array(-1e308, 0.0, 1e308), // span overflows to Infinity: NaN edge at cell 0
@@ -420,6 +435,94 @@ class TokenizeSpec extends SparkSpec {
       }
       assert(g.bnd(g.G) == bounds.length)
     }
+  }
+
+  test("a BucketizeGrid serializes only its bounds and reads back equal") {
+    def roundTrip(g: BucketizeGrid): (BucketizeGrid, Int) = {
+      val bytes = new java.io.ByteArrayOutputStream
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(g)
+      out.close()
+      val in = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes.toByteArray))
+      (in.readObject().asInstanceOf[BucketizeGrid], bytes.size)
+    }
+    val rnd = new scala.util.Random(31)
+    for (bounds <- Seq(Array.fill(99)(rnd.nextGaussian()).sorted,
+                       Array.fill(8191)(rnd.nextGaussian()).sorted,
+                       Array.empty[Double], floorOffSpan)) {
+      val g = new BucketizeGrid(bounds)
+      val (r, size) = roundTrip(g)
+      assert(r ne g)
+      assert(r.bounds.sameElements(bounds))
+      assert(r.G == g.G && r.gridOk == g.gridOk && r.bnd.sameElements(g.bnd))
+      // the bounds and a few hundred bytes of framing, no bnd table
+      assert(size < 8 * bounds.length + 1024, s"$size bytes for n=${bounds.length}")
+      val probes = Iterator.fill(2000)(rnd.nextGaussian() * 3) ++ bounds.iterator ++
+        Iterator(Double.NegativeInfinity, Double.PositiveInfinity, 0.0, -0.0, Double.NaN)
+      for (v <- probes) {
+        assert(BucketizeGrid.search(r, v, 100) == BucketizeGrid.search(g, v, 100))
+        assert(BucketizeGrid.searchRightOpen(r, v, 100) == BucketizeGrid.searchRightOpen(g, v, 100))
+        assert(r.bracket(v) == g.bracket(v))
+      }
+    }
+  }
+
+  test("a candidate mask admits every value whose bracket holds a needed bucket") {
+    val rnd = new scala.util.Random(41)
+    val grids: Seq[Array[Double]] = Seq(
+      Array.fill(8191)(rnd.nextGaussian()).distinct.sorted, // random, selection-sized
+      Array.fill(99)(rnd.nextGaussian()).sorted, // random, bucketize-sized
+      Array.fill(500)(rnd.nextInt(6).toDouble).sorted, // duplicate-heavy
+      Array.fill(40)(7.5), // all equal
+      Array(3.25), // single split
+      Array.empty[Double],
+      floorOffSpan, // sub-ulp cells: the grid is off
+      Iterator.iterate(1.0)(math.nextUp).take(64).toArray, // sub-ulp cells
+      Array(-1e308, 0.0, 1e308), // span overflows to Infinity
+      Array(Double.NegativeInfinity, 0.0, 1.0),
+      Array(0.0, 1.0, Double.PositiveInfinity))
+    for (bounds <- grids) {
+      val g = new BucketizeGrid(bounds)
+      val n = g.n
+      val edges = if (!g.gridOk) Iterator.empty else (0 to g.G).iterator.flatMap { c =>
+        val e = g.lo0 + c * (g.hi0 - g.lo0) / g.G
+        Iterator(e, math.nextUp(e), math.nextDown(e))
+      }
+      val probes = (Iterator.fill(3000)(rnd.nextGaussian() * 3) ++
+        bounds.iterator ++ bounds.iterator.map(math.nextUp) ++
+        bounds.iterator.map(math.nextDown) ++ edges ++
+        Iterator(0.0, -0.0, Double.NegativeInfinity, Double.PositiveInfinity, Double.NaN)).toArray
+      // needed-bucket sets: none, each end alone, one random bucket, and
+      // random sparse and dense subsets
+      val one = rnd.nextInt(n + 1)
+      val neededSets: Seq[Array[Boolean]] =
+        Seq(Array.fill(n + 1)(false), Array.tabulate(n + 1)(_ == 0),
+          Array.tabulate(n + 1)(_ == n), Array.tabulate(n + 1)(_ == one)) ++
+        Seq(0.01, 0.1, 0.5).map(p => Array.fill(n + 1)(rnd.nextDouble() < p))
+      for (needed <- neededSets) {
+        val slot = Array.tabulate(n + 1)(b => if (needed(b)) b else -1)
+        val mask = g.candidateMask(slot)
+        for (v <- probes) {
+          val admitted = mask(g.maskCell(v))
+          val b = BucketizeGrid.search(g, v, Int.MaxValue)
+          assert(!needed(b) || admitted, s"search: v=$v bucket $b n=$n")
+          // the rank tokenizer's composite search may end anywhere in
+          // the bracket, ends included (its first field is never NaN)
+          if (v == v) {
+            val br = g.bracket(v)
+            for (c <- (br >>> 32).toInt to br.toInt)
+              assert(!needed(c) || admitted, s"bracket: v=$v bucket $c n=$n")
+          }
+        }
+      }
+    }
+    // the mask is what spares the gather its searches: with ~1% of the
+    // buckets needed, few gaussian values are admitted
+    val g = new BucketizeGrid(grids.head)
+    val slot = Array.tabulate(g.n + 1)(b => if (b % 100 == 50) b else -1)
+    val mask = g.candidateMask(slot)
+    val admitted = Iterator.fill(20000)(rnd.nextGaussian()).count(v => mask(g.maskCell(v)))
+    assert(admitted < 2000, s"$admitted of 20000 admitted")
   }
 
   test("selection quantiles read a columnar parquet source exactly, NaN last, as a row-rooted plan does") {
