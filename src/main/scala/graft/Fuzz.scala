@@ -184,7 +184,7 @@ object Fuzz {
     * computed columns stay null-safe on both engines). */
   private def genSource(rng: Rng, spark: SparkSession, dir: String)
       : (DataFrame, String, Seq[Col], Seq[String]) = {
-    def load(t: Tbl): DataFrame = spark.read.parquet(s"$dir/${t.name}.parquet")
+    def load(t: Tbl): DataFrame = Tables(spark, dir, t.name)
     if (rng.bool(0.35)) {
       val t = rng.pick(Seq(lineitem, orders, customer, part, supplier, nation))
       (load(t), t.name, t.cols, t.unique)

@@ -91,8 +91,16 @@ private[graft] object ModelState {
   def validated[K, V](m: scala.collection.concurrent.TrieMap[K, (String, V)],
                       key: K, sources: Seq[String], what: String)
                      (build: => V,
-                      onStale: V => Unit = (_: V) => ()): V = {
-    val fp = sources.map(dirFingerprint).mkString(";")
+                      onStale: V => Unit = (_: V) => ()): V =
+    validatedBy(m, key, sources.map(dirFingerprint).mkString(";"), what)(build, onStale)
+
+  /** [[validated]] for a caller that already holds its source's
+    * fingerprint, e.g. the length and modification time of a file it has
+    * just listed: the same freshness rule, without a second stat walk. */
+  def validatedBy[K, V](m: scala.collection.concurrent.TrieMap[K, (String, V)],
+                        key: K, fp: String, what: String)
+                       (build: => V,
+                        onStale: V => Unit = (_: V) => ()): V =
     m.get(key) match {
       case Some((cached, v)) if cached == fp => v
       case prior =>
@@ -106,7 +114,6 @@ private[graft] object ModelState {
         m.put(key, (fp, fresh))
         fresh
     }
-  }
 
   /** Pure core (spec-pinned): drop entries whose key prefix is not
     * `appId|`; the eviction callback is best-effort. */

@@ -927,7 +927,7 @@ object StreamOps {
       // regenerated events restage the replay files
       graft.ModelState.validated(stagedCache, s"$dir|$pace",
           Seq(s"$dir/events.parquet"), "StreamOps.stagedEvents")({
-        val ev = spark.read.parquet(s"$dir/events.parquet")
+        val ev = graft.Tables(spark, dir, "events")
           .select("event_id", "ts", "user_id", "event_type", "value")
         val rows = graft.Tables.rowCount(spark, dir, "events") // footer metadata, no job
         val k = math.max(1L, math.min(MaxPaceBatches.toLong, (rows + pace - 1) / pace)).toInt

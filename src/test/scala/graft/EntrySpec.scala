@@ -26,11 +26,12 @@ class EntrySpec extends SparkSpec {
   }
 
   test("model-state registries rebuild on regenerated parquet (round-14 verdict item 2, end-to-end)") {
-    // Tables.rowCount is the registry every layout/format derivation
-    // reads; it routes through ModelState.validated like all the others,
-    // so this is the one end-to-end pin needed on top of ModelStateSpec's
-    // helper-contract tests: regenerate the parquet IN THE SAME app and
-    // the lookup must re-derive instead of serving the old count.
+    // Tables.rowCount is the count every layout/format derivation reads;
+    // its footer cache checks freshness through ModelState.validatedBy,
+    // the rule every registry shares, so this is the one end-to-end pin
+    // needed on top of ModelStateSpec's helper-contract tests: regenerate
+    // the parquet IN THE SAME app and the lookup must re-derive instead
+    // of serving the old count.
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_regen").toString
     (1L to 5L).toDF("k").coalesce(1).write.mode("overwrite").parquet(s"$dir/t.parquet")
