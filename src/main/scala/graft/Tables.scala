@@ -30,7 +30,7 @@ import org.apache.spark.sql.types.StructType
   * decides what a NANOS timestamp becomes. The same entries give
   * [[rowCount]] and [[footerCount]] their row counts. Reads stay lazy and
   * vectorized; Catalyst pushes filters and column pruning into the scan.
-  * Inference itself (CSV, JSON, `mergeSchema`) is a capability of
+  * Inference itself (the CSV and JSON lanes) is a capability of
   * [[graft.sources]] and does not come through here.
   */
 object Tables {

@@ -9,12 +9,11 @@ import graft.Tables
   * payloads + typed metadata structs, with decode / feature-extract /
   * frame-sample stages.
   *
-  * The actual image/audio codecs are NOT in this container (builder
-  * contract), so the "decode" is a deterministic byte-lane feature
-  * extractor — but it is a REAL Catalyst plan: a codegen
-  * [[graft.functions.ByteFeaturesExpr]] inside whole-stage codegen, binary
-  * column in, fixed-width vector out, map-only (the round-4 RDD
-  * mapPartitions stage with boxed Rows is gone). A real codec with native
+  * No image/audio codec ships with the engine, so the "decode" is a
+  * deterministic byte-lane feature extractor — but it is a REAL Catalyst
+  * plan: a codegen [[graft.functions.ByteFeaturesExpr]] inside whole-stage
+  * codegen, binary column in, fixed-width vector out, map-only (no RDD
+  * mapPartitions stage with boxed Rows). A real codec with native
   * library state would instead ride `mapInPandas`/`mapPartitions` batches —
   * that shape stays documented here as the integration point — but
   * byte-level feature extraction itself belongs in an expression.
@@ -37,14 +36,6 @@ object Multimodal {
         lit("text/plain").as("mime"),
         col("n_chars").cast("long").as("size_bytes"),
         col("lang").as("tag")).as("meta"))
-
-  /** Feature extraction as a map-only projection: the codegen byte-lane
-    * expression (exact long lane sums, one divide — engine-deterministic
-    * doubles). */
-  def extractFeatures(media: DataFrame): DataFrame =
-    media.select(col("media_id"),
-      graft.functions.ByteFeaturesExpr.byteFeatures(col("payload"), FeatureDim)
-        .as("features"))
 
   /** Frame sampling: every k-th fixed-size chunk of the payload (the video
     * frame-sample shape: offset arithmetic only, no decode). */

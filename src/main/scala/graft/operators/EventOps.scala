@@ -103,7 +103,7 @@ object EventOps {
   }
 
   /** Rolling-window row count for [[qRollingQuantile]] (shared with the
-    * streaming twin, StreamOps.rollingQuantileStream). */
+    * streaming twins' ring fold, StreamOps.rollFold). */
   private[graft] val RollRows = 20
 
   /** Block size (power of two) for [[rollingQuantile]]'s composite-key
@@ -126,9 +126,9 @@ object EventOps {
     * both engines; whatever side of an integer `p·n` lands on, both
     * engines agree, and the selected value is an exact element.
     *
-    * 100 TB shape — composite-key windows with boundary carry (the shape
-    * the round-4 scaladoc promised; an event_type-only partition funnels
-    * the whole stream onto a handful of partitions):
+    * 100 TB shape — composite-key windows with boundary carry (an
+    * event_type-only partition would funnel the whole stream onto a
+    * handful of partitions):
     *  1. row_number within (event_type, hour-of-ts) — composite key;
     *  2. per-hour counts → exclusive prefix per type (an hours-sized frame,
     *     not an events-sized one) broadcast back ⇒ global per-type row

@@ -25,13 +25,13 @@ import graft.Tables
   * double op per value on each side): an 8-byte primitive sum where the
   * DECIMAL(38,6) the oracle SQL writes is a 16-byte BigDecimal-backed
   * aggregation — same rational number, associative on both engines,
-  * bit-identical after the cast to double (round 8). This quantized
+  * bit-identical after the cast to double. This quantized
   * PageRank differs from the fp-exact value by < 1e-6 per edge per round,
   * and is BIT-identical across engines (the same pattern as the money-sum
   * DECIMAL convention).
   *
-  * 100 TB shape (round-8 surgery; the 100x probe showed the checkpoint
-  * materialization bytes, not the exchange count, dominate): the
+  * 100 TB shape (the 100x probe showed the checkpoint materialization
+  * bytes, not the exchange count, dominate): the
   * materialized edge list carries ONLY (src, dst) — degree lives in a
   * separate |V|-row checkpointed frame, so the per-edge row is two longs
   * instead of three, and the per-round division+rounding runs over |V|
@@ -44,7 +44,7 @@ import graft.Tables
   * task. At cluster scale both checkpoints bucket by node id; the rank
   * frame is |V| rows — orders of magnitude smaller than the |E|-row edge
   * list that dominates the join. When |V| itself is broadcast-sized
-  * (round 12, [[vertexBroadcastable]] — the common case: vertex sets are
+  * ([[vertexBroadcastablePool]] — the common case: vertex sets are
   * typically orders of magnitude smaller than edge sets), the checkpoint
   * partitions by dst instead and each round runs with ZERO shuffle
   * exchanges: broadcast contribution fan-out + an aggregation that
@@ -69,9 +69,8 @@ object Graph {
     * joins and the checkpoint materializes, and at 100x it is 120 M rows —
     * two ~8-byte longs per row shuffle, sort and hash ~3x smaller/faster
     * than two rendered strings. The string form exists only in
-    * [[qPagerank]]'s final |V|-row projection (round 7; the 100x probe
-    * showed the checkpoint materialization, not the exchanges, dominates
-    * at scale). */
+    * [[qPagerank]]'s final |V|-row projection (the 100x probe showed the
+    * checkpoint materialization, not the exchanges, dominates at scale). */
   private def edges(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
     val o = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
@@ -88,29 +87,29 @@ object Graph {
     when(id % 2 === 0, concat(lit("c"), (id / 2).cast("long")))
       .otherwise(concat(lit("s"), ((id - 1) / 2).cast("long")))
 
-  /** The edge list hash-clustered on src, LAZY (pre-checkpoint). The
-    * union's two branches hang off the same distinct-pairs subplan, so the
-    * distinct exchange is REUSED across branches (PlanSpec asserts it) and
-    * the lineitem⋈orders source join runs once. No degree fold here
-    * (round 8): degree is a property of the NODE, so materializing it per
-    * edge row paid 8 bytes × 2|E| and a window sort for a value the
-    * |V|-row degree frame carries for free. */
-  private[graft] def partitionedEdges(spark: SparkSession, dir: String): DataFrame =
-    edges(spark, dir).repartition(edgePartitions(spark, dir), col("src"))
-
-  private[graft] def edgePartitions(spark: SparkSession, dir: String): Int = {
+  /** The edge list as [[buildCheckpoint]] materializes it, LAZY: hash-
+    * clustered on dst under the broadcast strategy, on src otherwise, into
+    * [[edgePartitionsFor]] partitions; returned with the storage format
+    * ([[edgeSerializedForPool]]) the checkpoint uses. The union's two
+    * branches hang off the same distinct-pairs subplan, so the distinct
+    * exchange is REUSED across branches (PlanSpec asserts it) and the
+    * lineitem⋈orders source join runs once. No degree fold here: degree
+    * is a property of the NODE, so materializing it per edge row would pay
+    * 8 bytes × 2|E| and a window sort for a value the |V|-row degree frame
+    * carries for free. */
+  private[graft] def edgeLayout(spark: SparkSession, dir: String,
+      bcast: Boolean): (DataFrame, Boolean) = {
     val liRows = Tables.rowCount(spark, dir, "lineitem") // footer metadata, no job
-    edgePartitionsFor(liRows, spark.sparkContext.defaultParallelism,
-      edgeSerializedForPool(liRows, clusterPools(spark)._1))
+    val serialized = edgeSerializedForPool(liRows, clusterPools(spark)._1)
+    val parts = edgePartitionsFor(liRows, spark.sparkContext.defaultParallelism, serialized)
+    (edges(spark, dir).repartition(parts, col(if (bcast) "dst" else "src")), serialized)
   }
 
   /** The memory pools the footprint heuristics must respect, read from the
     * context's block-manager registry ([[org.apache.spark.sql.graft.Bridge
-    * .memoryPools]]) instead of the driver JVM's Runtime.maxMemory
-    * (round-13 advisor caveat, made real by round-14's multi-executor
-    * runs — under `local-cluster[2,16,8192]` the driver's 32 g heap says
-    * nothing about the two 7 g executor pools that actually store the
-    * checkpoint):
+    * .memoryPools]]) instead of the driver JVM's Runtime.maxMemory — under
+    * `local-cluster[2,16,8192]` the driver's 32 g heap says nothing about
+    * the two 7 g executor pools that actually store the checkpoint:
     *  - `aggregate` = sum of EXECUTOR pools — what the spread-out edge
     *    checkpoint competes for ([[edgeSerializedForPool]] compares
     *    total-vs-total);
@@ -119,8 +118,8 @@ object Graph {
     *    rows before rebroadcast), so the binding constraint is the
     *    smallest JVM ([[vertexBroadcastablePool]]).
     * In local mode the registry holds exactly the driver entry, whose
-    * registered pool is the same (heap − 300 MB) × 0.6 derivation the old
-    * code computed — both values collapse to it and behavior is unchanged.
+    * registered pool is the (heap − 300 MB) × 0.6 derivation of
+    * [[unifiedPoolOf]] — both values collapse to it.
     * Split is a pure function ([[poolSplit]], spec-pinned); the fallback
     * (registry briefly empty at startup) derives the driver pool locally,
     * which under-estimates a cluster and thus fails CONSERVATIVE
@@ -138,7 +137,8 @@ object Graph {
 
   /** (heap − 300 MB reserved) × 0.6 — Spark's default unified-pool size for
     * a JVM of `heapBytes`; the registered block-manager max is this same
-    * number, so heap-based spec pins and registry-based call sites agree. */
+    * number, so specs that pin the pool forms at a given heap size see
+    * what the registry-based call sites see. */
   private[graft] def unifiedPoolOf(heapBytes: Long): Long =
     ((heapBytes - (300L << 20)) * 0.6).toLong
 
@@ -177,75 +177,53 @@ object Graph {
   private val TargetEdgesPerPartition = 1000000L
 
   /** Whether the per-round contribution frame (|V| rows of two longs)
-    * should be BROADCAST instead of shuffle-hash-joined (round 12, verdict
-    * item 4). When it is, the edge checkpoint partitions by DST and every
-    * iteration becomes exchange-free: the fan-out is a map-side broadcast
-    * join streamed over the checkpoint in place, and the dst-aggregation's
-    * required distribution is already the checkpoint's partitioning — so
-    * the per-round shuffle of partially-combined (dst, c) rows disappears
+    * should be BROADCAST instead of shuffle-hash-joined. When it is, the
+    * edge checkpoint partitions by DST and every iteration becomes
+    * exchange-free: the fan-out is a map-side broadcast join streamed over
+    * the checkpoint in place, and the dst-aggregation's required
+    * distribution is already the checkpoint's partitioning — so the
+    * per-round shuffle of partially-combined (dst, c) rows disappears
     * entirely (at 100× that exchange carried ~32 tasks × up-to-|V|
     * combiner rows ≈ half the edge count per round). Broadcast is only
-    * sound while every executor can hold a |V|-row hashed relation:
-    * ~64 B/entry (dense long-key slot + 2-long UnsafeRow + headers) — and
-    * not one relation but [[PrRounds]] + 1 of them AT ONCE: the final
-    * action executes all rounds in a single plan, so every round's
-    * contribution broadcast plus the degree broadcast are live in the
-    * block manager simultaneously (ReuseExchange collapses the degree
-    * copies but each round's contribution frame is distinct). The
-    * round-18 1000× probe measured exactly this: 16 M vertices under a
-    * 19 GiB pool — the old single-relation estimate (1.0 GiB ≤ pool/8 =
-    * 2.4 GiB) said broadcast, and the BroadcastExchange build died with
-    * "Not enough memory to build and broadcast" because 4 relations plus
-    * the collect/build transient had to coexist with the serialized edge
-    * checkpoint saturating storage. The (PrRounds+1)-relation working set
-    * is capped at 1/8 of the unified pool so it never crowds the
-    * join/aggregation memory or the checkpoint's storage residency, and
-    * at 64 M rows absolute (well under Spark's 512 M-row / 8 GB broadcast
-    * hard limits). Above that the
+    * sound while every JVM can hold a |V|-row hashed relation: ~64 B/entry
+    * (dense long-key slot + 2-long UnsafeRow + headers) — and not one
+    * relation but [[PrRounds]] + 1 of them AT ONCE: the final action
+    * executes all rounds in a single plan, so every round's contribution
+    * broadcast plus the degree broadcast are live in the block manager
+    * simultaneously (ReuseExchange collapses the degree copies but each
+    * round's contribution frame is distinct). The 1000× probe measured
+    * exactly this: 16 M vertices under a 19 GiB pool — a single-relation
+    * estimate (1.0 GiB ≤ pool/8 = 2.4 GiB) said broadcast, and the
+    * BroadcastExchange build died with "Not enough memory to build and
+    * broadcast" because 4 relations plus the collect/build transient had
+    * to coexist with the serialized edge checkpoint saturating storage.
+    * The (PrRounds+1)-relation working set is capped at 1/8 of the
+    * unified pool so it never crowds the join/aggregation memory or the
+    * checkpoint's storage residency, and at 64 M rows absolute (well under
+    * Spark's 512 M-row / 8 GB broadcast hard limits). Above that the
     * src-partitioned shuffle-hash shape takes over — it scales to any |V|.
-    * vUpper is the customer+supplier footer row-count sum: every node is
-    * one customer or one supplier, so it bounds |V| with no job. Pure
-    * function of (rows, heap) — spec-pinned, re-invocations agree by
-    * construction (the [[edgeSerializedFor]] convention).
     *
-    * CLUSTER CAVEAT (round-13 advisor): the caller passes the DRIVER
-    * JVM's maxMemory, which in local mode IS the single pool every role
-    * shares — the bound is exact there. On a real cluster the relation
-    * must fit BOTH the driver (broadcast(contrib) collects |V| rows to
-    * the driver before rebroadcast) and every EXECUTOR's unified pool,
-    * which are configured independently — a deployment with a small
-    * driver and large executors (or the reverse) should derive the bound
-    * from min(driver heap, spark.executor.memory × memory fraction)
-    * instead of Runtime.maxMemory alone. The conservative 1/8-of-pool and
-    * 64 M-row absolute caps keep a margin precisely because the two pools
-    * can differ; unlike [[edgeSerializedFor]] (where total-vs-total is
-    * the identical inequality on a cluster) this check is per-JVM, not
-    * aggregate. Round 14: the caveat is retired — the call site now passes
-    * [[clusterPools]]' minPerJvm (min over driver and every registered
-    * executor pool) to [[vertexBroadcastablePool]]; this heap-based form
-    * remains as the local-mode spec pin. */
-  private[graft] def vertexBroadcastable(vUpper: Long, maxHeapBytes: Long): Boolean =
-    vertexBroadcastablePool(vUpper, unifiedPoolOf(maxHeapBytes))
-
-  /** Pool-based core: `minJvmPoolBytes` is the SMALLEST unified pool the
-    * hashed relations must fit (every executor, plus the driver that
-    * collects the rows before rebroadcast). Budgets the full working set —
-    * [[PrRounds]] + 1 simultaneously-live relations — not one (round-18
-    * 1000× probe: see [[vertexBroadcastable]]). */
+    * vUpper is the customer+supplier footer row-count sum: every node is
+    * one customer or one supplier, so it bounds |V| with no job.
+    * `minJvmPoolBytes` is the SMALLEST unified pool the relations must fit
+    * ([[clusterPools]]' minPerJvm): every executor, plus the driver, which
+    * collects the rows before rebroadcast. The check is per-JVM, not
+    * aggregate, because driver and executor pools are configured
+    * independently. Pure function of (rows, pool) — spec-pinned,
+    * re-invocations agree by construction. */
   private[graft] def vertexBroadcastablePool(vUpper: Long, minJvmPoolBytes: Long): Boolean = {
     val estBytes = vUpper * 64L * (PrRounds + 1)
     vUpper <= (64L << 20) && estBytes <= minJvmPoolBytes / 8
   }
 
-  /** Round-19 MIDDLE tier (the r18 verdict's "decouple the live-broadcast
-    * count from PrRounds"): when each round's rank frame is MATERIALIZED
+  /** The MIDDLE tier: when each round's rank frame is MATERIALIZED
     * (localCheckpoint) before the next round plans, every executing job
     * holds at most TWO live hashed relations — the current round's
     * contribution frame plus the (reused) degree frame — instead of
     * [[PrRounds]] + 1, so the broadcast strategy's ×2 budget admits vertex
-    * sets the fused-plan ×(PrRounds+1) budget rejects. The r18 1000× probe
-    * measured exactly that boundary: |V| = 16 M under a 19 GiB pool died in
-    * the fused plan's BroadcastExchange build (4 relations + the
+    * sets the fused-plan ×(PrRounds+1) budget rejects. The 1000× probe
+    * measured exactly that boundary: |V| = 16 M under a 19 GiB pool died
+    * in the fused plan's BroadcastExchange build (4 relations + the
     * collect/build transient co-resident with the edge checkpoint) but is
     * admissible at 2 — and the broadcast shape's zero-per-round-exchange
     * iteration (7.90 vs 11.71 s at 100×) becomes reachable one more decade
@@ -262,55 +240,41 @@ object Graph {
   /** Whether the edge checkpoint should store SERIALIZED blocks: true iff
     * the estimated deserialized footprint (~100 B per edge row: UnsafeRow
     * object + backing byte[] + array-slot headers around 24 payload bytes)
-    * would take more than ~80% of the JVM's unified memory pool
-    * (0.6 × (heap − 300 MB reserved), Spark's defaults). Measured A/B at
-    * 100x (~100 M edge rows): deserialized is ~1.7x faster per iteration
-    * when it fits (11.8 s vs 19.7 s at 32 GiB — zero-copy reads) but
-    * thrashes then dies when it does not (87 s limp, then task failure at
-    * 8 GiB), while serialized (~40 B/row, evictable to disk) runs
-    * everywhere — so the format follows the resource constraint rather
-    * than either being hardcoded. In local mode maxMemory IS the whole
-    * "cluster"; a cluster deployment compares the same two totals in
-    * aggregate (the checkpoint spreads across executors, so total bytes
-    * vs summed executor pools is the identical inequality). Pure function
-    * of (rows, heap) — spec-pinned, re-invocations agree by construction.
-    * Round 14: call sites pass [[clusterPools]]' aggregate executor pool
-    * to [[edgeSerializedForPool]] (the summed-pools inequality, now read
-    * from the block-manager registry); this heap-based form remains as
-    * the local-mode spec pin. */
-  private[graft] def edgeSerializedFor(lineitemRows: Long, maxHeapBytes: Long): Boolean =
-    edgeSerializedForPool(lineitemRows, unifiedPoolOf(maxHeapBytes))
-
-  /** Pool-based core: `aggregatePoolBytes` is the summed unified pools of
-    * the JVMs that store checkpoint blocks (executors; the driver in
-    * local mode). */
+    * would take more than ~80% of `aggregatePoolBytes`, the summed unified
+    * pools of the JVMs that store checkpoint blocks ([[clusterPools]]'
+    * aggregate: the executors; the driver in local mode). The checkpoint
+    * spreads across executors, so total bytes vs summed pools is the right
+    * inequality on a cluster too. Measured A/B at 100x (~100 M edge rows):
+    * deserialized is ~1.7x faster per iteration when it fits (11.8 s vs
+    * 19.7 s at 32 GiB — zero-copy reads) but thrashes then dies when it
+    * does not (87 s limp, then task failure at 8 GiB), while serialized
+    * (~40 B/row, evictable to disk) runs everywhere — so the format
+    * follows the resource constraint rather than either being hardcoded.
+    * Pure function of (rows, pool) — spec-pinned, re-invocations agree by
+    * construction. */
   private[graft] def edgeSerializedForPool(lineitemRows: Long, aggregatePoolBytes: Long): Boolean = {
     val estDeserialized = 2 * lineitemRows * 100L // upper bound: 2|E| <= 2*|lineitem|
     estDeserialized > aggregatePoolBytes * 8 / 10
   }
 
   /** Checkpointed (edge frame, degree frame, |V|) per (context, dir) —
-    * built once per JVM and REUSED across invocations (round 8): the edge
-    * list is deterministic per input dir, i.e. MODEL STATE, the same
-    * convention as quantile boundaries, IVF centroids, and the bucketed
-    * layouts. One live copy per (context, dir) also bounds block-manager
-    * usage exactly like round 7's reclaim-on-entry did (that fix rebuilt
-    * the checkpoint every call to keep ≤ 1 copy live; reuse keeps the same
-    * ≤ 1 bound and deletes the rebuild — the dominant per-invocation cost
-    * — and with it the previous "prior results are invalidated by
-    * re-invocation" API landmine: returned frames stay valid across
-    * re-invocations AS LONG AS the source dir's content is unchanged.
-    * Since round 15's fingerprint validation, regenerating the source
-    * parquet makes the next invocation rebuild and unpersist the stale
-    * blocks (onStale below) — frames built from the REPLACED data are
-    * invalidated by design (serving them would resurrect deleted data);
-    * consume prior results before regenerating inputs. */
+    * built once per JVM and REUSED across invocations: the edge list is
+    * deterministic per input dir, i.e. MODEL STATE, the same convention as
+    * quantile boundaries, IVF centroids, and the bucketed layouts. One live
+    * copy per (context, dir) bounds block-manager usage without a rebuild
+    * per call — the dominant per-invocation cost — and returned frames
+    * stay valid across re-invocations AS LONG AS the source dir's content
+    * is unchanged. The entry is fingerprint-validated: regenerating the
+    * source parquet makes the next invocation rebuild and unpersist the
+    * stale blocks (onStale below) — frames built from the REPLACED data
+    * are invalidated by design (serving them would resurrect deleted
+    * data); consume prior results before regenerating inputs. */
   private val liveCkpt = scala.collection.concurrent.TrieMap.empty[String,
     (String, (DataFrame, DataFrame, Long, Boolean, Boolean, Seq[org.apache.spark.rdd.RDD[_]]))]
 
   /** Source tables the checkpoint derives from — the fingerprint scope of
-    * the registry entry ([[graft.ModelState.validated]], round-14 verdict
-    * item 2): edges read lineitem⋈orders; the format/strategy heuristics
+    * the registry entry ([[graft.ModelState.validated]]): edges read
+    * lineitem⋈orders; the format/strategy heuristics
     * read customer+supplier row counts. Regenerating any of the four
     * rebuilds the checkpoint (and unpersists the stale blocks). */
   private def ckptSources(dir: String): Seq[String] =
@@ -331,9 +295,8 @@ object Graph {
     // materializations, Bridge.localCheckpointed preserves the clean
     // partitioning and the per-round joins consume both frames in place.
     val (eCkpt, degD, n, bcast, mat) = liveCkpt.synchronized {
-      // drop entries left by a stopped context (round-8 advisor item);
-      // the unpersist is best-effort — a dead context's blocks died with
-      // its BlockManager
+      // drop entries left by a stopped context; the unpersist is
+      // best-effort — a dead context's blocks died with its BlockManager
       graft.ModelState.evictStale(liveCkpt, spark)(
         _._2._6.foreach(_.unpersist(blocking = false)))
       val (e, d, nn, bc, m, _) = graft.ModelState.validated(
@@ -341,7 +304,7 @@ object Graph {
         val vUpper = Tables.rowCount(spark, dir, "customer") +
           Tables.rowCount(spark, dir, "supplier") // footer metadata, no job
         val minPool = clusterPools(spark)._2
-        // three admission tiers (round 19): fused broadcast (one plan,
+        // three admission tiers: fused broadcast (one plan,
         // PrRounds+1 live relations), per-round-MATERIALIZED broadcast
         // (2 live relations — admits another decade of |V|), shuffle-hash
         // (any |V|). Both broadcast tiers key the checkpoint by dst.
@@ -357,14 +320,14 @@ object Graph {
   }
 
   /** Materialize the (edge checkpoint, degree frame, |V|) triple for one
-    * iteration strategy. Storage format is FOOTPRINT-derived (see
-    * [[edgeSerializedFor]]): serialized blocks when the deserialized edge
-    * list would crowd the unified pool, the zero-copy deserialized form
-    * otherwise; the partition count follows the format (see
-    * [[edgePartitionsFor]]). The iteration STRATEGY fixes the checkpoint's
-    * partitioning key (see [[vertexBroadcastable]]): dst under broadcast so
-    * every round's aggregation is exchange-free, src for the shuffle-hash
-    * shape. The degree frame stays deserialized (|V| rows): under
+    * iteration strategy over [[edgeLayout]]. Storage format is
+    * FOOTPRINT-derived (see [[edgeSerializedForPool]]): serialized blocks
+    * when the deserialized edge list would crowd the unified pool, the
+    * zero-copy deserialized form otherwise; the partition count follows
+    * the format (see [[edgePartitionsFor]]). The iteration STRATEGY fixes
+    * the checkpoint's partitioning key (see [[vertexBroadcastablePool]]):
+    * dst under broadcast so every round's aggregation is exchange-free,
+    * src for the shuffle-hash shape. The degree frame stays deserialized (|V| rows): under
     * src-partitioning its groupBy key IS the carried partitioning key (no
     * exchange); under dst-partitioning the build pays ONE
     * map-side-combined |V|-bounded exchange — a one-time cost the
@@ -376,17 +339,32 @@ object Graph {
     val prevCoalesce = spark.conf.get(coalesceKey)
     try {
       spark.conf.set(coalesceKey, "false")
-      val liRows = Tables.rowCount(spark, dir, "lineitem") // footer metadata, no job
-      val serialized = edgeSerializedForPool(liRows, clusterPools(spark)._1)
-      val parts = edgePartitionsFor(liRows,
-        spark.sparkContext.defaultParallelism, serialized)
-      val (e, eRdd) = org.apache.spark.sql.graft.Bridge.localCheckpointed(
-        edges(spark, dir).repartition(parts, col(if (bcast) "dst" else "src")), serialized)
+      val (layout, serialized) = edgeLayout(spark, dir, bcast)
+      val (e, eRdd) = org.apache.spark.sql.graft.Bridge.localCheckpointed(layout, serialized)
       val (d, dRdd) = org.apache.spark.sql.graft.Bridge
         .localCheckpointed(e.groupBy("src").agg(count(lit(1)).as("deg")))
       (e, d, dRdd.count(), Seq(eRdd, dRdd)) // |V|: one row per distinct src
     } finally spark.conf.set(coalesceKey, prevCoalesce)
   }
+
+  /** Leftover per-round rank checkpoints from the PREVIOUS materialized
+    * iteration of each context: the last intermediate round's blocks stay
+    * live in the lineage of the frame the caller is still consuming, so
+    * they are reclaimed at the START of the next materialized iterate —
+    * the same deterministic-unpersist convention as the dedup rounds.
+    * CONSUMPTION CONTRACT: because the key is
+    * per-context (not per-invocation — a per-invocation key would leak the
+    * prior call's blocks forever), a second materialize=true iterate()
+    * reclaims the previous call's final-round localCheckpoint blocks, and
+    * localCheckpoint TRUNCATES lineage — a still-unconsumed frame from the
+    * prior call then fails irrecoverably instead of recomputing. Same
+    * consume-before-reinvoke contract as [[liveCkpt]] (whose scaladoc
+    * states it for the edge checkpoint): fully consume a materialized
+    * iterate's result before starting the next one on the same context.
+    * Every in-repo caller (qPagerank via the bench/oracle single-action
+    * paths, GraphSpec's sequential tier pins) already does. */
+  private val lastRoundCkpt = scala.collection.concurrent.TrieMap
+    .empty[String, Seq[org.apache.spark.rdd.RDD[_]]]
 
   /** The [[PrRounds]] power iterations + final projection over an already
     * materialized (edge checkpoint, degree frame, |V|) triple. Split from
@@ -402,33 +380,14 @@ object Graph {
     * sorted) and pays one map-side-combined exchange for the
     * dst-aggregation.
     *
-    * `bcast = true` (broadcast-sized |V|, see [[vertexBroadcastable]]):
+    * `bcast = true` (broadcast-sized |V|, see [[vertexBroadcastablePool]]):
     * the checkpoint carries hashpartitioning(dst); the contribution frame
     * broadcasts, the fan-out join is map-side over the checkpoint in
     * place, and the dst-aggregation inherits the checkpoint's partitioning
-    * — ZERO shuffle exchanges per round (the round-12 probe's per-round
+    * — ZERO shuffle exchanges per round (the 100× probe's per-round
     * decomposition put the combiner exchange at ~32 × |V| rows ≈ half the
     * edge count; the one-time degree-build exchange repays it threefold at
     * [[PrRounds]] = 3). */
-  /** Leftover per-round rank checkpoints from the PREVIOUS materialized
-    * iteration of each context: the last intermediate round's blocks stay
-    * live in the lineage of the frame the caller is still consuming, so
-    * they are reclaimed at the START of the next materialized iterate —
-    * the same deterministic-unpersist convention as the dedup rounds.
-    * CONSUMPTION CONTRACT (round-20 advisor item): because the key is
-    * per-context (not per-invocation — a per-invocation key would leak the
-    * prior call's blocks forever), a second materialize=true iterate()
-    * reclaims the previous call's final-round localCheckpoint blocks, and
-    * localCheckpoint TRUNCATES lineage — a still-unconsumed frame from the
-    * prior call then fails irrecoverably instead of recomputing. Same
-    * consume-before-reinvoke contract as [[liveCkpt]] (whose scaladoc
-    * states it for the edge checkpoint): fully consume a materialized
-    * iterate's result before starting the next one on the same context.
-    * Every in-repo caller (qPagerank via the bench/oracle single-action
-    * paths, GraphSpec's sequential tier pins) already does. */
-  private val lastRoundCkpt = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[org.apache.spark.rdd.RDD[_]]]
-
   private[graft] def iterate(eCkpt: DataFrame, degD: DataFrame, n: Long,
       bcast: Boolean = false, materialize: Boolean = false): DataFrame = {
     val spark = eCkpt.sparkSession
@@ -467,7 +426,7 @@ object Graph {
         // same exact sum k/1e6.
         .agg(round(lit(teleport) + lit(Damping) * (sum(col("c")).cast("double") / 1e6), 6)
           .as("rank"))
-      // Round-19 materialized-broadcast tier: checkpoint every
+      // Materialized-broadcast tier: checkpoint every
       // INTERMEDIATE round's |V|-row rank frame so the next round's job
       // plans against a leaf — at most the CURRENT round's contribution
       // broadcast plus the degree broadcast are ever live (the ×2 budget

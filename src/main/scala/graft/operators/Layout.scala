@@ -40,49 +40,19 @@ object Layout {
 
   /** 32-bit Morton code of (a, b): a's bits on even positions, b's on odd.
     * Inputs are masked to 16 bits; longs throughout (no sign issues). The
-    * CONTRACT-query code (16-bit domain documented + oracle-matched); the
-    * generic write path uses [[zvalue64]] so real key spaces don't alias. */
+    * contract query's 16-bit domain is documented and oracle-matched; keys
+    * wider than 16 bits alias, so a layout over real key spaces needs a
+    * wider ladder (one more shift-or-mask rung per doubling). */
   def zvalue(a: Column, b: Column): Column =
     spread(a.cast("long")).bitwiseOR(shiftleft(spread(b.cast("long")), 1))
-
-  /** Spread the low 32 bits of `x` to the even bit positions of a 64-bit
-    * word — the 5-step ladder one rung wider than [[spread]]. */
-  private def spread64(x: Column): Column = {
-    val m = Seq(0x0000FFFF0000FFFFL, 0x00FF00FF00FF00FFL,
-      0x0F0F0F0F0F0F0F0FL, 0x3333333333333333L, 0x5555555555555555L)
-    val shifts = Seq(16, 8, 4, 2, 1)
-    shifts.zip(m).foldLeft(x.bitwiseAND(lit(0xFFFFFFFFL))) { case (acc, (s, mask)) =>
-      acc.bitwiseOR(shiftleft(acc, s)).bitwiseAND(lit(mask))
-    }
-  }
-
-  /** 62-bit Morton code for the generic write path: 31 bits PER DIMENSION
-    * (~2.1 B distinct keys each — enough for any single-table surrogate key
-    * at 100 TB), result always non-negative so long ordering == z ordering.
-    * NON-NULL keys outside [0, 2^31) RAISE at runtime instead of silently
-    * aliasing into a 16-bit torus the way the old masked path did; a NULL
-    * key yields a NULL z-value (the row lands in the null range partition —
-    * one dirty row must not kill a whole compaction job, and the
-    * raise_error branch would otherwise null-propagate into a contentless
-    * exception). */
-  def zvalue64(a: Column, b: Column): Column = {
-    val lim = 1L << 31
-    def checked(c: Column): Column = {
-      val l = c.cast("long")
-      when(l.isNull, lit(null).cast("long"))
-        .when(l >= 0 && l < lim, l)
-        .otherwise(
-          raise_error(concat(lit("zorder key out of [0, 2^31): "), l.cast("string"))))
-    }
-    spread64(checked(a)).bitwiseOR(shiftleft(spread64(checked(b)), 1))
-  }
 
   /** Z-order clustering manifest over lineitem's (l_partkey, l_suppkey) —
     * the two join/filter dimensions a part-supplier workload prunes on.
     * Emits each row's z-value and its range-partition id (top 2·ZPartBits
     * z-bits). The partition id IS the file assignment: writing with
-    * `repartitionByRange(zval)` puts each zpart in its own file(s), and the
-    * quadrant property (see LayoutSpec) bounds every file's min/max stats. */
+    * `repartitionByRange(zval)` + `sortWithinPartitions(zval)` puts each
+    * zpart in its own file(s), and the quadrant property (see LayoutSpec)
+    * bounds every file's min/max stats. */
   def qZorderCluster(spark: SparkSession, dir: String): DataFrame = {
     Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_linenumber"),
@@ -91,23 +61,12 @@ object Layout {
       .orderBy("l_orderkey", "l_linenumber")
   }
 
-  /** The write path the manifest describes: range-partition by z-value into
-    * ~2^(2·ZPartBits) files, z-sorted within each, so parquet footer stats
-    * on BOTH dims are tight per row group. Used by LayoutSpec; at scale this
-    * is the compaction job's output layout. */
-  def zorderWrite(df: DataFrame, dimA: String, dimB: String, path: String): Unit =
-    df.withColumn("__z", zvalue64(col(dimA), col(dimB)))
-      .repartitionByRange(1 << (2 * ZPartBits), col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode(SaveMode.Overwrite).parquet(path)
-
   // --------------------------------------------- hive-partitioned pruning
 
   /** Per-dir date-partitioned events copy: (path, min event date).
-    * Fingerprint-validated against the SOURCE events dir (round-14 verdict
-    * item 2 — the value is a derived layout, so freshness is the source's,
-    * not the copy's): regenerated events rebuild the partitioned copy. */
+    * Fingerprint-validated against the SOURCE events dir (the value is a
+    * derived layout, so freshness is the source's, not the copy's):
+    * regenerated events rebuild the partitioned copy. */
   private val partRegistry = scala.collection.concurrent.TrieMap
     .empty[String, (String, (String, java.time.LocalDate))]
 
@@ -123,7 +82,7 @@ object Layout {
       // context, but a fresh context must not trust state computed by a
       // dead one (same convention as Bucketed/Graph)
       val ctxKey = s"${spark.sparkContext.applicationId}|$dir"
-      // drop entries left by a stopped context (round-8 advisor item)
+      // drop entries left by a stopped context
       graft.ModelState.evictStale(partRegistry, spark)(_ => ())
       graft.ModelState.validated(partRegistry, ctxKey,
           Seq(s"$dir/events.parquet"), "Layout.partitionedEvents")({

@@ -31,7 +31,7 @@ object Similarity {
   val TopK = 5
   val NQueries = 5
 
-  /** LSH plane-count scaling (round-4): a FIXED plane count p gives 2^p
+  /** LSH plane-count scaling: a FIXED plane count p gives 2^p
     * buckets forever, so within-bucket candidate pairs are O(n²/2^p) —
     * still quadratic in n. Instead the plane count grows with the corpus:
     * the smallest p in [MinPlanes, MaxPlanes] with n <= TargetBucket * 2^p,
@@ -44,7 +44,7 @@ object Similarity {
   val MinPlanes = 8
 
   /** Ladder ceiling. 16 held the occupancy promise only to 64·2^16 ≈
-    * 4.2 M vectors — the round-9 100× probe (6 M) crossed it silently,
+    * 4.2 M vectors — the 100× probe (6 M) crossed it silently,
     * occupancy drifting to ~91. 20 covers ~67 M vectors; past that a
     * real deployment re-derives the constant, it does not live with a
     * quadratic drift. No oracle-checked scale reaches 4.2 M, so every
@@ -95,10 +95,10 @@ object Similarity {
   }
 
   /** Signed projection of `embedding` onto plane `p`, as the codegen'd
-    * [[graft.functions.DotProductExpr]] against the ±1f sign vector
-    * (round 9 — the previous 64-term `element_at` tree × np planes was
-    * the bench-visible cost of every LSH consumer; one fused loop per
-    * plane replaces ~640-1024 expression nodes per row). Bit-identical
+    * [[graft.functions.DotProductExpr]] against the ±1f sign vector (a
+    * 64-term `element_at` tree × np planes was the bench-visible cost of
+    * every LSH consumer; one fused loop per plane replaces ~640-1024
+    * expression nodes per row). Bit-identical
     * to the oracle's fixed-order ±CAST(embedding[d] AS DOUBLE) sum:
     * `(double) e_d * (double) ±1.0f` is exactly ±e_d, the accumulation
     * order is the same left fold, and the only representable difference
@@ -111,17 +111,17 @@ object Similarity {
   /** Map-only size-scaled LSH bucket id: `np = planesFor(corpus count)`
     * planes — see the TargetBucket scaladoc for the O(n·TargetBucket)
     * candidate math. The count is one parquet-metadata job at plan build. */
-  private def lshBucket(np: Int): Column =
+  private[graft] def lshBucket(np: Int): Column =
     (0 until np)
       .map(p => when(projection(p) > 0, lit(1 << p)).otherwise(0))
       .reduce(_ + _)
 
   /** Corpus size per input dir — a pure data property cached for the JVM
-    * (round 8; same convention as StreamOps.maxEventUs), so the four LSH
-    * consumers stop paying a count job per invocation. Fingerprint-
-    * validated on every lookup ([[graft.ModelState.validated]], round-14
-    * verdict item 2): a regenerated embeddings table re-counts instead of
-    * sizing the LSH plane count for a corpus that no longer exists. */
+    * (same convention as StreamOps.maxEventUs), so the four LSH
+    * consumers pay no count job per invocation. Fingerprint-validated on
+    * every lookup ([[graft.ModelState.validated]]): a regenerated
+    * embeddings table re-counts instead of sizing the LSH plane count for
+    * a corpus that no longer exists. */
   private val nEmbCache =
     scala.collection.concurrent.TrieMap.empty[String, (String, Long)]
 
@@ -129,11 +129,6 @@ object Similarity {
     graft.ModelState.validated(nEmbCache, dir,
       Seq(s"$dir/embeddings.parquet"), "Similarity.nEmbeddings")(
       Tables.embeddings(spark, dir).count())
-
-  /** Bucket ids for an arbitrary embedding frame at an explicit plane count
-    * (spec hook: proves the recall property survives higher plane counts). */
-  private[graft] def bucketOf(df: DataFrame, np: Int): DataFrame =
-    df.withColumn("bucket", lshBucket(np))
 
   /** LSH bucket assignment + bucket occupancy: map-only np-bit bucket id per
     * vector; the bucket histogram shows the partition-pruning structure a
@@ -192,28 +187,16 @@ object Similarity {
   val NProbe = 2
   val IvfQueryLo = 100
 
-  /** IVF-style ANN (the other standard scale path besides LSH): a small set
-    * of coarse centroids partitions the corpus into cells; a probe searches
-    * only the `NProbe` cells nearest the query.
-    *
-    * Centroid choice is deterministic (the vectors with vec_id < NSeeds —
-    * a stand-in for k-means output, which has no cross-engine oracle), and
-    * centroids are collected once (NSeeds x Dim floats) and folded into the
-    * plan as constants, so cell assignment is MAP-ONLY over the corpus —
-    * exactly how a 100 TB scan assigns cells with broadcast centroids, with
-    * no shuffle and no per-row join. The probe side is a broadcast equi-join
-    * on cell id. Ranking: round-6 cosine, centroid/vector-id tiebreaks.
-    */
   /** NSeeds x Dim centroid constants (vec_id < NSeeds — deterministic
     * k-means seed stand-in), collected once PER DIR and cached for the
-    * JVM (round 9, same convention as [[nEmbCache]] — the per-invocation
-    * collect was a small but repeated scan job charged to qAnnIvf,
+    * JVM (same convention as [[nEmbCache]] — a per-invocation collect
+    * would be a small but repeated scan job charged to qAnnIvf,
     * qKmeansStep and qAnnRecall on every bench pass). */
   private val centCache = scala.collection.concurrent.TrieMap
     .empty[String, (String, Array[(Int, Array[Float])])]
 
   private def ivfCentroids(spark: SparkSession, dir: String): Array[(Int, Array[Float])] =
-    // fingerprint-validated (round-14 verdict item 2): regenerated
+    // fingerprint-validated: regenerated
     // embeddings re-collect the seed centroids instead of assigning cells
     // against a dead corpus's vectors
     graft.ModelState.validated(centCache, dir,
@@ -246,6 +229,18 @@ object Similarity {
     -best.getField("negid")
   }
 
+  /** IVF-style ANN (the other standard scale path besides LSH): a small set
+    * of coarse centroids partitions the corpus into cells; a probe searches
+    * only the `NProbe` cells nearest the query.
+    *
+    * Centroid choice is deterministic (the vectors with vec_id < NSeeds —
+    * a stand-in for k-means output, which has no cross-engine oracle), and
+    * centroids are collected once (NSeeds x Dim floats) and folded into the
+    * plan as constants, so cell assignment is MAP-ONLY over the corpus —
+    * exactly how a 100 TB scan assigns cells with broadcast centroids, with
+    * no shuffle and no per-row join. The probe side is a broadcast equi-join
+    * on cell id. Ranking: round-6 cosine, centroid/vector-id tiebreaks.
+    */
   def qAnnIvf(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     val cents = ivfCentroids(spark, dir)
@@ -295,14 +290,14 @@ object Similarity {
     bruteTopKIn(spark, dir, Seq((lo, hi)), k, score, asc)
 
   /** Multi-range variant: ONE corpus scan scores every query range at
-    * once (round 8 — `qAnnRecall` needed two disjoint query sets, and two
-    * bruteTopK calls meant two full corpus scans). Top-k stays the rank
+    * once (`qAnnRecall` needs two disjoint query sets, and two bruteTopK
+    * calls would mean two full corpus scans). Top-k stays the rank
     * WINDOW: a bounded typed-Aggregator top-k (map-side ≤ k rows per
     * partition) was built and MEASURED here and lost — the udaf path
     * deserializes every (sim, vec_id) row into JVM objects, which costs
     * more than the codegen'd sort it avoids at this k/corpus shape
     * (q_ann_recall 3.1 → 4.1 s, q_ann_pq 1.5 → 2.0 s; reverted). */
-  private def bruteTopKIn(spark: SparkSession, dir: String,
+  private[graft] def bruteTopKIn(spark: SparkSession, dir: String,
                           ranges: Seq[(Long, Long)], k: Int,
                           score: (Column, Column) => Column = cosSim,
                           asc: Boolean = false): DataFrame = {
@@ -322,15 +317,8 @@ object Similarity {
       .select("query_id", "vec_id")
   }
 
-  /** Spec hook: the full-set brute top-k (DedupSimilaritySpec pins the
-    * FULL-query-set recall property the subsampled driver gate no longer
-    * exercises). */
-  private[graft] def bruteTopKInSpec(spark: SparkSession, dir: String,
-      ranges: Seq[(Long, Long)], k: Int): DataFrame =
-    bruteTopKIn(spark, dir, ranges, k)
-
-  /** True iff `id` is in the md5-subsampled recall-gate query set
-    * (round-8 verdict item 3): selected when the first 4 hex chars of
+  /** True iff `id` is in the md5-subsampled recall-gate query set:
+    * selected when the first 4 hex chars of
     * md5("annrecall|<id>") mod 4 == 0. Over the contract's 10 fixed
     * candidate ids this keeps 1, 4 (lsh) and 103, 104 (ivf) — the query
     * ids are compile-time constants, so the subset is the SAME at every
@@ -355,22 +343,23 @@ object Similarity {
     * vec_id tiebreaks). LSH probes its own query set (vec_id < NQueries);
     * IVF probes vec_id in [IvfQueryLo, IvfQueryLo+NQueries).
     *
-    * Round 8: the exact top-3 for BOTH query sets comes from ONE corpus
+    * The exact top-3 for BOTH query sets comes from ONE corpus
     * scan ([[bruteTopKIn]] with both ranges), and the plan references that
     * subplan exactly once — the brute frame (3 rows/query, every query
     * present) LEFT-joins the broadcast union of the two approx result
     * sets, so recall per (method, query) is `sum(hit)/3` in a single small
-    * aggregation. The previous two-branch shape re-ran the brute scan per
-    * method (a pushed-down range filter under each branch split the shared
-    * exchange). Intersection symmetry makes the two formulations equal:
+    * aggregation. A two-branch shape would re-run the brute scan per
+    * method (a pushed-down range filter under each branch splits the
+    * shared exchange). Intersection symmetry makes the two formulations equal:
     * |brute ∩ approx| counted from either side, queries with no approx
     * rows coalesce to 0.
     *
-    * Round 9: the gate runs on the md5-SUBSAMPLED query set
+    * The gate runs on the md5-SUBSAMPLED query set
     * ([[lshGateIds]]/[[ivfGateIds]], ~40% of the 10 candidates) — the
     * brute scan is linear in queries × corpus, so gating a deterministic
     * subsample keeps the driver-visible recall check while shedding the
-    * proportional scan cost (this query was the bench ceiling at 3.5 s).
+    * proportional scan cost (on the full set this query was the bench
+    * ceiling at 3.5 s).
     * The FULL-set recall property remains pinned at spec level
     * (DedupSimilaritySpec "ann recall full query set"); the subsample
     * filter also pushes into both approx subplans, so their probe work
@@ -535,9 +524,8 @@ object Similarity {
   }
 
   /** The PQ self-gate's exact core surfaced as its own oracle-checked
-    * query (round-14 verdict item 3 — the `q_sketch_gate_exact` pattern
-    * from round 12): exact squared-L2 top-k over the PQ query range, the
-    * ground-truth frame [[qAnnPq]]'s recall gate joins against, now
+    * query (the `q_sketch_gate_exact` pattern): exact squared-L2 top-k
+    * over the PQ query range, the ground-truth frame [[qAnnPq]]'s recall gate joins against, now
     * hash-checked cell-by-cell against DuckDB instead of living only
     * inside a rows-only query's self-gate. Same plan shape as
     * [[bruteTopKIn]] (broadcast query side, one map-only corpus scan, rank
@@ -562,7 +550,7 @@ object Similarity {
 
   def qAnnPq(spark: SparkSession, dir: String): DataFrame = {
     val pqTop = pqAdcTop(spark, dir)
-    // Self-gate (the q_approx_sketches pattern, verdict r4 #7): exact float
+    // Self-gate (the q_approx_sketches pattern): exact float
     // L2 top-k over the same corpus in the same plan, then per-row
     // membership + the average recall@k against its spec-pinned floor — the
     // rows-only CORRECTNESS entry carries its own evidence instead of pure
@@ -726,7 +714,7 @@ object Similarity {
         val rsimSql =
           s"round(${dotSql("pp.q_emb", "a.embedding")} / (sqrt(${dotSql("pp.q_emb", "pp.q_emb")}) * sqrt(${dotSql("a.embedding", "a.embedding")})), 6)"
         // the gate's md5-subsampled query ids, generated from the SAME
-        // computed lists as the Spark plan (round 9)
+        // computed lists as the Spark plan
         val lshIn = lshGateIds.mkString(", ")
         val ivfIn = ivfGateIds.mkString(", ")
         def brute(pref: String, ids: String): String =
@@ -774,10 +762,10 @@ object Similarity {
     )
   }
 
-  // ------------------------------------------------- dynamic oracle (r18)
+  // ------------------------------------------------------ dynamic oracle
 
   /** Per-dir oracle entries that embed MODEL-STATE LITERALS trained from
-    * the target dir's data (round-18 verdict item 1). The static
+    * the target dir's data. The static
     * `oracleSql` map cannot carry `q_ann_pq`: its codebooks are K-means
     * state trained on the first [[PqTrainN]] vectors OF THE DIR BEING
     * VERIFIED, so the literals differ per scale factor. `Verify` (which

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.Decimals.dsum
 
-/** The TPC-H gauntlet (round-18 verdict item 3): the partsupp-free TPC-H
+/** The TPC-H gauntlet: the partsupp-free TPC-H
   * queries as oracle-checked contract entries. The fixtures are TPC-H-shaped
   * (TESTDATA.md; `q1_pricing_summary` IS Q1) but the schema is TRIMMED — no
   * partsupp table, no l_commitdate/l_receiptdate/l_shipmode, no
@@ -28,7 +28,7 @@ import graft.operators.Decimals.dsum
   *
   * Spark-first notes: fixed-size dimension sides (region/nation) are
   * `broadcast()`-hinted unconditionally; SF-proportional dims (supplier/
-  * part/customer) go through the size-gated [[dim]] hint (round 20 — the
+  * part/customer) go through the size-gated [[dim]] hint (the
   * hint only while the relation fits the broadcast budget, unhinted for
   * AQE above it); fact⋈fact (lineitem⋈orders) shuffles on the join
   * key once; correlated EXISTS/NOT EXISTS are expressed as left_semi /
@@ -46,10 +46,9 @@ import graft.operators.Decimals.dsum
   */
 object TpcH {
 
-  /** Broadcast admission for the SF-PROPORTIONAL dimensions (round 20,
-    * guide §3.1 "pick the strategy deliberately — from data"; r19 verdict
-    * item 2): customer/supplier/part grow linearly with SF (~15 B customer
-    * rows at the 100 TB target), so the unconditional `broadcast()` hint
+  /** Broadcast admission for the SF-PROPORTIONAL dimensions (pick the
+    * join strategy from data): customer/supplier/part grow linearly with
+    * SF (~15 B customer rows at the 100 TB target), so the unconditional `broadcast()` hint
     * that wins at sf0.1 becomes a guaranteed driver/executor OOM at scale —
     * a hint overrides BOTH the size estimate and AQE. The gate admits the
     * hint only while the relation's optimizer-estimated scan bytes fit a
@@ -60,7 +59,7 @@ object TpcH {
     * [[Graph.vertexBroadcastablePool]]) and at 2 GiB absolute (well under
     * Spark's 8 GB / 512 M-row broadcast hard limits). Below the budget the
     * EXPLICIT hint stays — post-filter size estimates are unreliable
-    * (guide §3.1) and these dims are known small relative to the fact at
+    * and these dims are known small relative to the fact at
     * every admitted SF; above it the join is left unhinted so AQE picks
     * the strategy from runtime sizes. nation (25 rows) / region (5) and
     * the single-row scalar frames stay unconditionally hinted — they do
@@ -257,9 +256,8 @@ object TpcH {
   def q13(spark: SparkSession, dir: String): DataFrame = {
     val c = Tables.customer(spark, dir)
     val o = Tables.orders(spark, dir)
-    // Round 19 (optimization round, guide §2.3 "aggregate before you
-    // shuffle"): count orders per custkey FIRST, then left-join the counts
-    // to customer — the join and every exchange now carry a 12-byte
+    // Aggregate before the shuffle: count orders per custkey FIRST, then
+    // left-join the counts to customer — the join and every exchange now carry a 12-byte
     // (custkey, count) row instead of the full order row, and at scale the
     // fact side is pre-reduced by the map-side partial count instead of
     // being sort-merge-shuffled wholesale. The per-custkey re-aggregation
@@ -329,8 +327,8 @@ object TpcH {
       .agg((dsum(col("l_extendedprice")) / 7.0).as("avg_yearly"))
   }
 
-  /** Q18 — large volume customers. Round 19 (optimization round, guide
-    * §2.4 "remove shuffles outright"): the HAVING subquery's per-order
+  /** Q18 — large volume customers, with its shuffles removed outright:
+    * the HAVING subquery's per-order
     * quantity sum and the output's sum_qty are THE SAME aggregate — the
     * output groups the li⋈o⋈c rows by (c_custkey, c_name, o_orderkey,
     * o_orderdate, o_totalprice), and since o_orderkey is unique in orders
@@ -338,11 +336,12 @@ object TpcH {
     * So aggregate lineitem ONCE, filter > 250 (a Θ(qualifying-orders)
     * frame), and join it to orders + customer: 2 lineitem scans → 1, the
     * semi join and the second fact-wide aggregation (the 1000× spill
-    * term — ~150 M-group hash sets at 600 M rows, r18-measured 153 s
+    * term — ~150 M-group hash sets at 600 M rows, measured at 153 s,
     * SUPER-linear) are gone. The qualifying side is left UNHINTED so AQE
     * picks broadcast from its actual runtime size (scale-adaptive, not a
-    * local[32] constant). Rows/hash identical — oracle SQL unchanged;
-    * TpcHSpec pins old-form == new-form equality. */
+    * local[32] constant). Rows/hash identical to the verbatim shape —
+    * OptimizedFormsSpec holds it equal to the semi-join form in
+    * `TpcHReference`. */
   def q18(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
     val big = li.groupBy(col("l_orderkey").as("bo_key"))
@@ -353,25 +352,6 @@ object TpcH {
       .join(dim(c), col("o_custkey") === col("c_custkey"))
       .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
         col("o_orderdate"), col("o_totalprice"), col("sum_qty"))
-      .orderBy(col("o_totalprice").desc, col("o_orderdate"), col("o_orderkey"))
-      .limit(100)
-  }
-
-  /** The round-18 verbatim-shape Q18 (aggregate → semi join → re-aggregate),
-    * kept as the equivalence reference for the optimized [[q18]] — TpcHSpec
-    * asserts row-for-row equality between the two forms. */
-  private[graft] def q18SemiJoinForm(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val big = li.groupBy(col("l_orderkey").as("bo_key"))
-      .agg(sum(col("l_quantity")).as("bq")).filter(col("bq") > 250)
-      .select("bo_key")
-    val o = Tables.orders(spark, dir)
-    val c = Tables.customer(spark, dir)
-    li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(big, col("o_orderkey") === col("bo_key"), "left_semi")
-      .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-      .groupBy("c_custkey", "c_name", "o_orderkey", "o_orderdate", "o_totalprice")
-      .agg(sum(col("l_quantity")).as("sum_qty"))
       .orderBy(col("o_totalprice").desc, col("o_orderdate"), col("o_orderkey"))
       .limit(100)
   }
@@ -411,8 +391,7 @@ object TpcH {
     val s = Tables.supplier(spark, dir)
     val n = Tables.nation(spark, dir)
     val late = col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS")
-    // Round 19 (optimization round, guide §2.3/§2.4): both correlated
-    // subqueries are per-ORDER set predicates over the same fact —
+    // Both correlated subqueries are per-ORDER set predicates over the same fact —
     //   EXISTS(other supplier in the order)        ⟺ the order has ≥ 2
     //     distinct suppliers                        ⟺ min(skey) ≠ max(skey);
     //   NOT EXISTS(other LATE supplier in the order)⟺ the order's late lines
@@ -421,14 +400,15 @@ object TpcH {
     //     late-only lane agree (min/max skip the when()'s nulls).
     // Both reduce to four min/max window aggregates over ONE pass of the
     // joined fact partitioned by l_orderkey — replacing the semi + anti
-    // joins whose r18-measured 1000× cost was three fact-wide exchanges
+    // joins whose measured 1000× cost was three fact-wide exchanges
     // (158.8 s, SUPER-linear spill past the 19 GiB pool). When the planner
     // shuffles li⋈o (the at-scale shape) the window inherits the join's
     // hashpartitioning(l_orderkey) and its sort, so the whole derivation
     // adds ZERO exchanges; under a broadcast li⋈o (small SFs) it costs the
     // one exchange+sort the semi/anti pair also needed. Rows/hash identical
-    // — oracle SQL unchanged (still the EXISTS/NOT EXISTS formulation);
-    // TpcHSpec pins old-form == new-form equality.
+    // — the oracle SQL keeps the EXISTS/NOT EXISTS formulation, and
+    // OptimizedFormsSpec holds this equal to the semi+anti form in
+    // `TpcHReference`.
     val w = Window.partitionBy("l_orderkey")
     li.join(o, col("l_orderkey") === col("o_orderkey"))
       .select(col("l_orderkey"), col("l_suppkey"), late.as("late"))
@@ -443,32 +423,6 @@ object TpcH {
         col("min_late") === col("max_late"))
       .join(dim(s), col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
-      .groupBy("s_name", "n_name")
-      .agg(count(lit(1)).as("numwait"))
-      .orderBy(col("numwait").desc, col("s_name"))
-      .limit(100)
-  }
-
-  /** The round-18 verbatim-shape Q21 (stacked semi + anti joins on the
-    * fact), kept as the equivalence reference for the optimized [[q21]] —
-    * TpcHSpec asserts row-for-row equality between the two forms. */
-  private[graft] def q21SemiAntiForm(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val o = Tables.orders(spark, dir).filter(col("o_orderstatus") === "F")
-    val s = Tables.supplier(spark, dir)
-    val n = Tables.nation(spark, dir)
-    val l2 = li.select(col("l_orderkey").as("l2_okey"), col("l_suppkey").as("l2_skey"))
-    val l3 = li.select(col("l_orderkey").as("l3_okey"), col("l_suppkey").as("l3_skey"),
-      col("l_shipdate").as("l3_ship"))
-    li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .filter(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"))
-      .join(broadcast(s), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
-      .join(l2, col("l2_okey") === col("l_orderkey") &&
-        col("l2_skey") =!= col("l_suppkey"), "left_semi")
-      .join(l3, col("l3_okey") === col("l_orderkey") &&
-        col("l3_skey") =!= col("l_suppkey") &&
-        col("l3_ship") > col("o_orderdate") + expr("INTERVAL 60 DAYS"), "left_anti")
       .groupBy("s_name", "n_name")
       .agg(count(lit(1)).as("numwait"))
       .orderBy(col("numwait").desc, col("s_name"))

@@ -10,7 +10,8 @@ import graft.functions.TypeProbeExpr
 /** Schema inference — the generalized form of the reference repo's title
   * capability. The reference's "schema inference" is parquet
   * footer-self-description (/root/reference/etl_benchmark.py:27, SURVEY
-  * §1.3); for schemaless formats we expose Spark's samplers plus a custom
+  * §1.3); for schemaless formats the CSV and JSONL lanes ([[CsvSource]],
+  * [[JsonSource]]) run Spark's own samplers, and this object adds a custom
   * tightest-type inferencer for string columns and for semi-structured JSON
   * object columns.
   *
@@ -26,12 +27,6 @@ import graft.functions.TypeProbeExpr
   */
 object SchemaInfer {
 
-  def inferCsv(spark: SparkSession, path: String): StructType =
-    spark.read.option("header", "true").option("inferSchema", "true").csv(path).schema
-
-  def inferJson(spark: SparkSession, path: String): StructType =
-    spark.read.json(path).schema
-
   /** Marker rung for fixed-point decimals: the concrete (p,s) is computed
     * from the data (max integer digits / max fraction digits) when this
     * rung wins. */
@@ -44,9 +39,9 @@ object SchemaInfer {
     * DATE precedes TIMESTAMP (tightest first) and its rung is a STRICT
     * 'yyyy-MM-dd' shape check: Spark's cast string->date truncates
     * '2020-01-01 12:34:56' to a date while DuckDB rejects it, so a bare
-    * try_cast rung would diverge between engines — and before round 6 the
-    * date rung sat after timestamp, making it unreachable (every date
-    * string parses as midnight timestamp in both engines). */
+    * try_cast rung would diverge between engines — and a date rung placed
+    * after timestamp would be unreachable (every date string parses as
+    * midnight timestamp in both engines). */
   private val Ladder: Seq[DataType] =
     Seq(LongType, DecimalMarker, DoubleType, BooleanType, DateType, TimestampNTZType)
 
@@ -60,7 +55,7 @@ object SchemaInfer {
     * the single-scan path pays one. The per-value saving (1 confirmed rung
     * vs the 6-rung ladder) is small next to the cast-to-string cost, so the
     * crossover is well past the cap — measured at sf0.1 the sampled path
-    * was 2.0× SLOWER than one full-ladder scan (round-6 verdict). */
+    * was 2.0× SLOWER than one full-ladder scan. */
   val SingleScanFactor = 10L
 
   /** The rung-shape grammar, stated as regexes. These are the SEMANTIC
@@ -114,9 +109,9 @@ object SchemaInfer {
     * unwound an exception per failing row — 30 s at sf0.1; (2) the regex
     * formulation (LongPattern/DecimalPattern/DoublePattern/DatePattern +
     * IN-list, kept below as spec/oracle ground truth) was ~20x cheaper —
-    * 2.3 s with 5 rungs, but 8.6 s once the round-6 DECIMAL widths and
-    * 6th column arrived, 4 regexes + 2 regex extractions per value;
-    * (3) round 7 folds every shape check into ONE codegen byte-walk
+    * 2.3 s with 5 rungs, but 8.6 s once the DECIMAL widths and the 6th
+    * column arrived, 4 regexes + 2 regex extractions per value;
+    * (3) every shape check folded into ONE codegen byte-walk
     * ([[graft.functions.TypeProbeExpr]], bit-tested here) — 1.5 s,
     * scan+cast floor, with a property spec proving bit-for-bit agreement
     * with the regex semantics the DuckDB oracle still runs. Date VALIDITY
@@ -294,17 +289,6 @@ object SchemaInfer {
 
   private def try_cast(c: Column, t: DataType): Column = c.try_cast(t.sql)
 
-  /** Schema-evolution read: union parquet directories written at different
-    * schema versions into one frame with the merged (superset) schema —
-    * rows from older files carry null in the columns they predate. This is
-    * the ingest posture a long-lived 100 TB corpus needs: writers add
-    * columns over time and readers must keep consuming every vintage
-    * without a rewrite (`mergeSchema` pays a footer read per file, so at
-    * scale the merged schema would be pinned in a catalog; semantics are
-    * identical). */
-  def readEvolved(spark: SparkSession, paths: String*): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(paths: _*)
-
   /** Apply inferred types: returns df with string columns cast to their
     * tightest parseable type. */
   def applyInferred(df: DataFrame, inferred: Map[String, DataType]): DataFrame =
@@ -341,7 +325,7 @@ object SchemaInfer {
     * c_orderkey/c_linenumber bigint, c_quantity decimal(3,1) (exact money
     * rung — '17.0' strings), c_returnflag string, c_shipdate timestamp
     * (the rendered strings carry a time part), c_shipday date (strict
-    * 'yyyy-MM-dd' — the rung the round-5 ladder order made unreachable). */
+    * 'yyyy-MM-dd' — reachable because the date rung precedes timestamp). */
   def qSchemaInfer(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val li = graft.Tables.lineitem(spark, dir).select(

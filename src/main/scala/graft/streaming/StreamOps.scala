@@ -7,24 +7,18 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 /** Spark-4 `StatefulProcessor` backing [[StreamOps.dedupWithCountsTws]]:
   * one named ValueState slot per fingerprint holding (first doc_id,
   * suppressed copies) — the same two longs the flatMapGroupsWithState
-  * form carries, declared through the modern handle API (which is where
-  * TTL and timers would attach). Top-level class: processor instances are
+  * form carries, declared through the handle API. No TTL: the live drain
+  * needs exact oracle equality, and a wall-clock expiry would re-admit
+  * keys by host timing. Top-level class: processor instances are
   * serialized to executors, and a nested class would drag the enclosing
   * object's state along. */
-class DedupCountsProcessor(ttl: Option[java.time.Duration] = None)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
+class DedupCountsProcessor extends org.apache.spark.sql.streaming.StatefulProcessor[
     String, StreamOps.DocSeen, StreamOps.DedupRecord] {
   import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
   @transient private var state: ValueState[(Long, Long)] = _
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    // per-state TTL is the production lever that bounds an unbounded
-    // fingerprint space: an entry expires `ttl` after its last update
-    // (wall clock — TTL requires TimeMode.ProcessingTime), after which
-    // the key re-admits as first-seen. The contract drain passes None
-    // (exact oracle equality); StreamingSpec drives the TTL path.
     state = getHandle.getValueState[(Long, Long)]("firstAndCopies",
-      org.apache.spark.sql.Encoders.product[(Long, Long)],
-      ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE))
+      org.apache.spark.sql.Encoders.product[(Long, Long)], TTLConfig.NONE)
   override def handleInputRows(fp: String, rows: Iterator[StreamOps.DocSeen],
       timerValues: TimerValues): Iterator[StreamOps.DedupRecord] = {
     // same fold as dedupWithCounts: "no state yet" is exists() itself, so
@@ -125,16 +119,13 @@ class SessionTimerProcessor extends org.apache.spark.sql.streaming.StatefulProce
     } else Iterator.empty
 }
 
-/** The bounded per-key ring of [[StreamOps.rollingQuantileStream]] on
-  * Spark 4's LIST state variable (completing the named-state family:
-  * ValueState carries the dedup counts and timer sessions,
-  * ListState this ring, MapState the per-user sub-keyed stats): the
-  * last RollRows−1 (ts-ms, event_id, value) rows per event_type live in
-  * an ordered ListState slot — the API's native fit for a ring, where
-  * the ValueState form must serialize the whole Vector per update. Same
-  * fold, same Type-1 selection, emission-equal to the
-  * flatMapGroupsWithState form (spec-proved as multisets across
-  * triggers on RocksDB). */
+/** The bounded per-key trailing-row ring behind `q_rolling_tws_live`, on
+  * Spark 4's LIST state variable: the last RollRows−1 (ts-ms, event_id,
+  * value) rows per event_type live in an ordered ListState slot — the
+  * API's native fit for a ring, where a ValueState form must serialize
+  * the whole Vector per update. The fold is [[StreamOps.rollFold]];
+  * StreamingSpec holds the emissions equal, as multisets across triggers
+  * on RocksDB, to a flatMapGroupsWithState roller over the same fold. */
 class RollingRingProcessor extends org.apache.spark.sql.streaming.StatefulProcessor[
     String, StreamOps.RollEvent, StreamOps.RollQuantiles] {
   import org.apache.spark.sql.streaming.{ListState, TimeMode, TimerValues, TTLConfig}
@@ -152,62 +143,16 @@ class RollingRingProcessor extends org.apache.spark.sql.streaming.StatefulProces
   }
 }
 
-/** Per-user running totals SUB-KEYED by event_type on Spark 4's MAP
-  * state variable: the state a
-  * composite flatMapGroupsWithState key cannot give without losing the
-  * per-USER grouping — one MapState slot per user holding
-  * event_type → (n, exact value micros), point-updated per event
-  * (`updateValue`) without rewriting the user's other types, which is
-  * the API's whole point versus a ValueState[Map[...]] blob. Update-mode
-  * emission: one record per (user, type) touched in the batch; the last
-  * record per pair equals the batch groupBy truth (spec-proved across
-  * triggers on RocksDB). */
-class UserTypeStatsProcessor extends org.apache.spark.sql.streaming.StatefulProcessor[
-    Long, StreamOps.UserEvent, StreamOps.TypedStat] {
-  import org.apache.spark.sql.streaming.{MapState, TimeMode, TimerValues, TTLConfig}
-  @transient private var stats: MapState[String, (Long, Long)] = _
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    stats = getHandle.getMapState[String, (Long, Long)]("perType",
-      org.apache.spark.sql.Encoders.STRING,
-      org.apache.spark.sql.Encoders.product[(Long, Long)], TTLConfig.NONE)
-  override def handleInputRows(uid: Long, rows: Iterator[StreamOps.UserEvent],
-      timerValues: TimerValues): Iterator[StreamOps.TypedStat] = {
-    // local running copy per touched type: one RocksDB point-read on a
-    // type's first touch (getValue returns null for an absent key), not
-    // containsKey + getValue per event — the per-event updateValue
-    // POINT-WRITES stay, they are the MapState capability this
-    // processor demonstrates
-    val local = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
-    rows.foreach { e =>
-      // exact micros (the HALF_UP 6-decimal convention) — the equality
-      // with the spec's fold is integer, not float-order-dependent
-      val us = BigDecimal(e.value).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-        .*(BigDecimal(1000000)).toLongExact
-      val (n, s) = local.getOrElse(e.event_type,
-        Option(stats.getValue(e.event_type)).getOrElse((0L, 0L)))
-      val next = (n + 1, s + us)
-      local(e.event_type) = next
-      stats.updateValue(e.event_type, next)
-    }
-    // built eagerly from the local copy: no state re-reads, and the
-    // returned iterator may be consumed after this call returns
-    local.toVector.map { case (t, (n, s)) =>
-      StreamOps.TypedStat(uid, t, n, s)
-    }.iterator
-  }
-}
-
-/** Structured Streaming operators (SURVEY §2C): the batch EventOps plans
-  * re-expressed as streams with event-time watermarks, plus stateful
-  * operators (session windows, custom per-key state).
-  *
-  * These run the SAME logical aggregations as the batch/oracle-checked
-  * EventOps queries — correctness of the streaming path is established by
-  * equivalence tests against the batch results (MemoryStream + single
-  * processAllAvailable batch; streaming state has no SQL oracle). The
-  * nine LIVE contract queries ([[queries]]) replay a time-ordered staged
-  * copy of the events through one paced drain scaffold, [[stagedDrain]],
-  * and are hash-checked against batch oracles.
+/** Structured Streaming contract queries (SURVEY §2C): the nine LIVE
+  * queries ([[queries]]) replay a time-ordered staged copy of the events
+  * through one paced drain scaffold, [[stagedDrain]], and are
+  * hash-checked against batch oracles. Their stateful cores — dedup with
+  * counts (flatMapGroupsWithState and transformWithState), watermarked
+  * and timer-driven session windows, within-watermark dedup, the
+  * trailing-row quantile ring and the stream-stream interval joins — run
+  * the same logical computation as their batch twins; StreamingSpec
+  * proves each core against the batch result under controlled triggers
+  * (streaming state has no SQL oracle).
   *
   * Scale: watermarks bound state; aggregations shuffle by
   * (window, event_type) / user_id exactly like their batch twins; state
@@ -215,95 +160,6 @@ class UserTypeStatsProcessor extends org.apache.spark.sql.streaming.StatefulProc
   * design.
   */
 object StreamOps {
-
-  /** Tumbling hourly aggregate with a 2h watermark (append mode capable). */
-  def hourlyAgg(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-      .select(col("window.start").as("hour"), col("event_type"), col("n"), col("sum_value"))
-
-  /** Streaming exact dedup on (user_id, event_type); watermark bounds the
-    * dedup state exactly like batch first-event-per-key. */
-  def dedupByKey(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .dropDuplicates(Seq("user_id", "event_type"))
-
-  /** Event-time session windows per user: 30-minute inactivity gap. */
-  def sessionize(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(session_window(col("ts"), "30 minutes").as("s"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("session_value"))
-      .select(col("s.start").as("session_start"), col("s.end").as("session_end"),
-        col("user_id"), col("n_events"), col("session_value"))
-
-  /** Stream-static enrichment join: each event joined to a static dimension
-    * (broadcast per micro-batch — no stream state, the standard pattern for
-    * enriching a 100 TB/day event stream with reference data). */
-  def enrich(events: DataFrame, dim: DataFrame, key: String): DataFrame =
-    events.join(broadcast(dim), Seq(key), "left")
-
-  /** Streaming two-phase tokenizer — the reference's core capability under
-    * Structured Streaming. Boundaries are MODEL STATE: computed once from a
-    * batch snapshot (train side — any of the Tokenize phase-1 algorithms),
-    * folded into the plan as constants, and every micro-batch then
-    * discretizes map-only with the same codegen'd
-    * [[graft.functions.BucketizeExpr]] as the batch path. A stateless
-    * streaming projection: no watermark, no state store, unbounded
-    * throughput — exactly how a 100 TB/day feature pipeline serves a
-    * precomputed quantile binning. Spec-proved batch-equal per micro-batch.
-    */
-  def tokenizeStream(stream: DataFrame, bounds: Map[String, Seq[Double]],
-                     keep: Seq[String],
-                     bins: Int = graft.operators.Tokenize.DefaultBins): DataFrame = {
-    val tokens = bounds.keys.toSeq.sorted.map(c =>
-      graft.operators.Tokenize.discretize(col(c), bounds(c), bins).as(s"${c}_token"))
-    stream.select(keep.map(col) ++ tokens: _*)
-  }
-
-  /** Streaming corpus-ingest front-end: the QualityOps curation chain under
-    * Structured Streaming. Normalize -> content fingerprint -> cross-batch
-    * exact dedup -> repetition filter -> length-weighted deterministic
-    * sample, emitting per-doc curation stats.
-    *
-    * Everything except the dedup is a stateless map-only projection/filter
-    * (no watermark, no state store — unbounded throughput, the shape of a
-    * document-ingest stream at 100 TB/day). The exact dedup holds one
-    * fingerprint per distinct document in the state store; that state is
-    * the genuinely unbounded piece of any streaming content dedup — at
-    * corpus scale it is bounded operationally (TTL/watermark on an ingest
-    * timestamp, or fingerprint-space sharding), which the documents fixture
-    * has no event-time column to express.
-    *
-    * The plan is input-agnostic: applied to a batch frame it IS the batch
-    * twin, which is how the spec proves stream/batch equality per
-    * micro-batch. */
-  def ingestDocs(docs: DataFrame): DataFrame = {
-    import graft.operators.QualityOps.ngrams
-    val norm = trim(regexp_replace(
-      regexp_replace(lower(col("text")), "[^a-z0-9 ]", ""), " +", " "))
-    val w = split(col("norm_text"), " ")
-    val g3 = ngrams(w, 3)
-    val sampleKey = conv(
-      substring(md5(concat(lit("wsmp|"), col("doc_id").cast("string"))), 1, 4), 16, 10)
-      .cast("long")
-    docs
-      .select(col("doc_id"), norm.as("norm_text"))
-      .withColumn("fingerprint", md5(col("norm_text")))
-      .dropDuplicates(Seq("fingerprint"))
-      .select(
-        col("doc_id"), col("fingerprint"),
-        size(w).as("n_tokens"),
-        round((size(g3) - size(array_distinct(g3))).cast("double") / size(g3), 6)
-          .as("dup_3gram_frac"),
-        length(col("norm_text")).as("n_chars"),
-        sampleKey.as("sample_key"))
-      .filter(col("dup_3gram_frac") <= 0.02)
-      .filter(col("sample_key") < least(lit(65536L), col("n_chars") * lit(60L)))
-  }
 
   case class DocSeen(fingerprint: String, doc_id: Long)
   case class DedupRecord(fingerprint: String, first_doc_id: Long, n_duplicates: Long)
@@ -352,25 +208,18 @@ object StreamOps {
 
   /** [[dedupWithCounts]] re-expressed on Spark 4's `transformWithState`
     * API ([[DedupCountsProcessor]]) — the successor to
-    * flatMapGroupsWithState: NAMED typed state variables
-    * (value/list/map), per-state TTL, and event/processing-time timers,
-    * running on the RocksDB state-store provider. Identical first-wins +
+    * flatMapGroupsWithState with NAMED typed state variables, running on
+    * the RocksDB state-store provider. Identical first-wins +
     * suppressed-copy-count semantics: StreamingSpec runs BOTH forms on
     * the same multi-trigger input and asserts their full Update-mode
     * emission streams are equal as multisets (every per-batch record,
-    * not just final state). The per-state TTL hook is the production lever that bounds
-    * an unbounded fingerprint space operationally — the thing the
-    * GroupState form can only approximate with per-key timeouts — passed
-    * NONE here so the equality is exact. */
-  def dedupWithCountsTws(docs: Dataset[DocSeen],
-      ttl: Option[java.time.Duration] = None): Dataset[DedupRecord] = {
+    * not just final state). */
+  def dedupWithCountsTws(docs: Dataset[DocSeen]): Dataset[DedupRecord] = {
     import docs.sparkSession.implicits._
-    val timeMode =
-      if (ttl.isDefined) org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-      else org.apache.spark.sql.streaming.TimeMode.None()
     docs
       .groupByKey(_.fingerprint)
-      .transformWithState(new DedupCountsProcessor(ttl), timeMode, OutputMode.Update())
+      .transformWithState(new DedupCountsProcessor,
+        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
   }
 
   /** Typed input/output of [[SessionTimerProcessor]]: value pre-scaled to
@@ -404,34 +253,9 @@ object StreamOps {
   case class RollQuantiles(event_id: Long, event_type: String, roll_n: Int,
                            roll_median: Double, roll_p90: Double)
 
-  /** Streaming twin of `EventOps.qRollingQuantile`: exact trailing-20-row
-    * median/p90 per event_type, maintained ACROSS micro-batches with a
-    * bounded ring of the last 19 (ts, event_id, value) rows per key — the
-    * custom per-key state Spark's built-in windows can't express (windowed
-    * aggs are event-time buckets, not row-count frames). State is O(20)
-    * per event_type forever; each incoming event emits one output row, so
-    * the stream is append-shaped. Events are processed in (ts, event_id)
-    * order within each batch; with in-order arrival across batches the
-    * output equals the batch window exactly (StreamingSpec proves it on a
-    * 3-trigger split). Quantiles are Type-1 discrete selection ceil(p·n) —
-    * identical to the batch twin and its oracle, no interpolation. */
-  def rollingQuantileStream(events: Dataset[RollEvent]): Dataset[RollQuantiles] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[Vector[(Long, Long, Double)], RollQuantiles](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (key: String, batch: Iterator[RollEvent], state: GroupState[Vector[(Long, Long, Double)]]) =>
-          val (next, out) = rollFold(key,
-            state.getOption.getOrElse(Vector.empty), batch.toVector)
-          state.update(next)
-          out.iterator
-      }
-  }
-
-  /** ONE ring-fold shared by the GroupState roller above and the
-    * ListState [[RollingRingProcessor]], so the two forms cannot
-    * diverge: sorts
+  /** The ring fold of the ListState [[RollingRingProcessor]] (and of
+    * the flatMapGroupsWithState roller StreamingSpec compares it with, so
+    * the two forms cannot diverge): sorts
     * the batch on (millis, sub-second nanos, id) — equal millis implies
     * equal second, so the nanos field finishes the µs-precision ts order
     * the batch twin's ORDER BY uses — folds each event through the
@@ -488,26 +312,15 @@ object StreamOps {
     (buf.takeRight(rollRows - 1).toVector, out.result())
   }
 
-  /** [[rollingQuantileStream]] on the LIST state variable
-    * ([[RollingRingProcessor]]) — spec-proved emission-equal. */
+  /** Exact trailing-RollRows median/p90 per event_type on the LIST state
+    * variable ([[RollingRingProcessor]]): the streaming twin of
+    * `EventOps.qRollingQuantile`, spec-proved equal to the batch window. */
   def rollingQuantileStreamTws(events: Dataset[RollEvent]): Dataset[RollQuantiles] = {
     import events.sparkSession.implicits._
     events
       .groupByKey(_.event_type)
       .transformWithState(new RollingRingProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-  }
-
-  case class TypedStat(user_id: Long, event_type: String, n: Long, sum_us: Long)
-
-  /** Per-user totals sub-keyed by event_type on the MAP state variable
-    * ([[UserTypeStatsProcessor]]) — spec-proved against the batch fold. */
-  def runningUserTypeStats(events: Dataset[UserEvent]): Dataset[TypedStat] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .transformWithState(new UserTypeStatsProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
   }
 
   /** Live exact dedup WITH duplicate counts: the staged events replay
@@ -1036,9 +849,9 @@ object StreamOps {
     * sink; no state store is involved, so the batch-twin jobs run at the
     * caller's shuffle width, not the state-partition count.
     *
-    * Why not the per-key ring state machine ([[rollingQuantileStream]],
-    * which StreamingSpec still proves)? A trailing-ROW-COUNT frame is
-    * defined over each key's total event order, so `flatMapGroupsWithState`
+    * Why not the per-key ring state machine ([[RollingRingProcessor]],
+    * which `q_rolling_tws_live` runs)? A trailing-ROW-COUNT frame is
+    * defined over each key's total event order, so a per-key state machine
     * must process a key's rows SERIALLY — parallelism is capped at key
     * cardinality (a handful of event_types), and no pacing changes that:
     * the 100× probe measured it at ratio 21.5 with 31 of 32 cores idle.
@@ -1557,27 +1370,4 @@ object StreamOps {
         |       MAX(delay_us) AS max_delay_us
         |FROM j GROUP BY user_id ORDER BY user_id""".stripMargin
   )
-
-  case class UserEvent(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
-                       event_type: String, value: Double)
-  case class UserStats(user_id: Long, n_events: Long, total_value: Double)
-
-  /** Custom per-key state via mapGroupsWithState: running per-user totals
-    * (the `KeyValueGroupedDataset` escape hatch for state Spark's built-in
-    * operators can't express). */
-  def runningUserStats(events: Dataset[UserEvent]): Dataset[UserStats] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[UserStats, UserStats](GroupStateTimeout.NoTimeout) {
-        (uid: Long, batch: Iterator[UserEvent], state: GroupState[UserStats]) =>
-          val prev = state.getOption.getOrElse(UserStats(uid, 0L, 0.0))
-          val (n, v) = batch.foldLeft((prev.n_events, prev.total_value)) {
-            case ((cn, cv), e) => (cn + 1, cv + e.value)
-          }
-          val next = UserStats(uid, n, v)
-          state.update(next)
-          next
-      }
-  }
 }

@@ -131,7 +131,7 @@ object Bridge {
     * ≈ (heap − 300 MB reserved) × memoryFraction — exactly the derivation
     * graft's footprint heuristics would otherwise re-compute from the
     * DRIVER's Runtime.maxMemory, which is wrong the moment executors are
-    * separate JVMs with their own heaps (`Graph.vertexBroadcastable` under
+    * separate JVMs with their own heaps (`Graph.vertexBroadcastablePool` under
     * local-cluster). Reading the registry instead means the heuristics see the
     * actual per-JVM pools on ANY deployment: local (one driver entry),
     * local-cluster, or a standalone/YARN/K8s cluster.

@@ -25,7 +25,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_orc_scan pushes predicates into the ORC reader and prunes its columns") {
-    // format parity (round 15): the ORC scan must carry the same
+    // format parity: the ORC scan must carry the same
     // pushdown/pruning posture as the parquet scans — search-argument
     // row-group skipping and a 3-column ReadSchema
     val plan = formatted(sources.OrcSource.qOrcScan(spark, sf))
@@ -41,7 +41,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_csv_scan pushes predicates to the CSV parser, prunes columns, and infers types") {
-    // text-format parity (round 16): CSV carries the same posture —
+    // text-format parity: CSV carries the same posture —
     // PushedFilters reach the parser (SPARK-30323: non-matching rows are
     // skipped before full row construction) and unreferenced fields are
     // never converted. What CSV scans CANNOT push: there is no row-group
@@ -63,7 +63,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_json_scan pushes the top-level filter, keeps the nested one, prunes, and infers types") {
-    // JSONL-format parity (round 17, the format axis' last member): the
+    // JSONL-format parity (the format axis' last member): the
     // top-level equality reaches the JSON parser (SPARK-32346:
     // JsonFilters aborts row materialization on the first failing
     // pushed predicate), unreferenced top-level fields are never
@@ -95,8 +95,7 @@ class PlanSpec extends SparkSpec {
     // The DRIVER's contract session runs Spark defaults, where
     // spark.sql.adaptive.enabled is TRUE — so every plan this suite
     // asserts must hold under runtime re-planning, and the spec session
-    // must not quietly differ (round-15 verdict item 6: the engine never
-    // asserted the AQE interaction either way). Pin the posture...
+    // must not quietly differ. Pin the posture...
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true",
       "plan assertions must run under the driver-default ADAPTIVE posture")
     // ...and assert a representative shape on the FINAL adaptive plan,
@@ -136,7 +135,7 @@ class PlanSpec extends SparkSpec {
     val plan = formatted(operators.Relational.qJoinStar(spark, sf))
     val broadcasts = plan.linesIterator.count(_.contains("BroadcastHashJoin"))
     assert(broadcasts >= 3, s"expected >=3 broadcast joins, got $broadcasts")
-    // round 10: the fact⋈fact hop reads the bucketed layout — both fact
+    // the fact⋈fact hop reads the bucketed layout — both fact
     // scans co-located on orderkey, merge join with ZERO pre-join
     // exchanges; the only exchanges left are the nation aggregation and
     // the output sort (count DETAIL headers, see q_bucketed_join)
@@ -165,8 +164,8 @@ class PlanSpec extends SparkSpec {
       s"distance table is a tiny cross join:\n$plan")
     // per-(block,name) argmin funnel: partial+final codegen HashAggregate
     // — the packed-long (dist << 48 | key) min exists precisely so the
-    // argmin never falls back to a SortAggregate (round-10 advisor item:
-    // assert the absence, not just a count). The grp/grp2 profile
+    // argmin never falls back to a SortAggregate (assert the absence, not
+    // just a count). The grp/grp2 profile
     // aggregates run at construction (localCheckpoint) and are not in
     // this plan.
     assert(!plan.contains("SortAggregate"),
@@ -231,10 +230,9 @@ class PlanSpec extends SparkSpec {
     // 8-byte slot per field, so the 4 token ints must be packed into one
     // long below the Sort (sort row ~56 -> 32 B at 60 M rows) and decoded
     // in the projection above it. The Sort's input schema must carry no
-    // *_token column and exactly 3 fields (2 keys + the packed long) —
-    // round 13 extends the pin from the trio to q_tokenize_rank, whose
-    // sort previously carried the 6-column raw tiebreak (~9 s of its
-    // 11.4 s 100x wall).
+    // *_token column and exactly 3 fields (2 keys + the packed long) — the
+    // pin covers q_tokenize_rank too, whose sort would otherwise carry the
+    // 6-column raw tiebreak (~9 s of its 11.4 s 100x wall).
     for (q <- Seq("q_tokenize_rank", "q_tokenize_bucketize",
         "q_tokenize_rightopen", "q_tokenize_qcut")) {
       val plan = formatted(SparkEntry.queries(q)(spark, sf))
@@ -423,7 +421,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("pagerank edge materialization computes the source join once") {
-    // qPagerank checkpoints partitionedEdges in ONE job. The undirected
+    // qPagerank checkpoints Graph.edgeLayout in ONE job. The undirected
     // union's two branches hang off the same distinct-pairs subplan; they
     // stay byte-identical plans and the distinct exchange is reused — the
     // fact join must appear ONCE in the physical plan, not once per
@@ -431,7 +429,8 @@ class PlanSpec extends SparkSpec {
     // join (and its shuffle) twice per materialization.
     // Reuse fires during ADAPTIVE execution (the static explain still shows
     // both branches), so drive this queryExecution and read the final plan.
-    val df = operators.Graph.partitionedEdges(spark, sf)
+    // the broadcast strategy's layout: the one qPagerank runs at fixture |V|
+    val (df, _) = operators.Graph.edgeLayout(spark, sf, bcast = true)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("isFinalPlan=true"), "expected the AQE final plan:\n" + plan)
@@ -442,7 +441,7 @@ class PlanSpec extends SparkSpec {
   test("pagerank iterations: edge checkpoint streams in place — no sort, no re-shuffle (round 8)") {
     // The returned frame's plan is everything AFTER the two checkpoints:
     // PrRounds iterations + the final projection. At fixture scale |V| is
-    // broadcast-sized, so the round-12 strategy applies: every per-round
+    // broadcast-sized, so the broadcast strategy applies: every per-round
     // join is a map-side BROADCAST join over the dst-partitioned
     // checkpoint, the dst-aggregation inherits that partitioning, and the
     // ONLY shuffle exchange in the whole plan is the final ORDER BY's
@@ -534,7 +533,7 @@ class PlanSpec extends SparkSpec {
     // side must never cartesian
     assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("CartesianProduct"),
       s"distance table is a tiny cross join:\n$plan")
-    // round 12: the contract ORDER BY is ~80% of the 100× wall and scales
+    // the contract ORDER BY is ~80% of the 100× wall and scales
     // with shuffle VOLUME — the sort row must stay the narrow
     // dictionary-coded form (no strings through the exchange; names
     // decode in the projection ABOVE the Sort)
@@ -596,7 +595,7 @@ class PlanSpec extends SparkSpec {
     assert(selected == 7, s"expected 7 of ~30 date partitions selected, got $selected")
   }
 
-  // ---- TPC-H gauntlet: plan shape on the 3 biggest plans (round 18) ----
+  // ---- TPC-H gauntlet: plan shape on the 3 biggest plans ----
 
   test("q_tpch_q5: all four dims broadcast, one fact shuffle pair, filters pushed, no cartesian") {
     val plan = formatted(operators.TpcH.q5(spark, sf))
@@ -610,9 +609,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_tpch_q18: ONE lineitem scan, one aggregate serves HAVING and output, no cartesian") {
-    // round 19 (optimization round): the HAVING subquery's per-order sum IS
-    // the output's sum_qty, so the plan must aggregate lineitem exactly once
-    // — no semi join, no second fact scan (the r18 1000× spill term)
+    // the HAVING subquery's per-order sum IS the output's sum_qty, so the
+    // plan must aggregate lineitem exactly once — no semi join, no second
+    // fact scan (the 1000× spill term)
     val plan = formatted(operators.TpcH.q18(spark, sf))
     assert(plan.linesIterator.count(_.contains("lineitem.parquet")) == 1,
       s"lineitem must be scanned exactly once:\n$plan")
@@ -627,7 +626,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_tpch_q21: EXISTS legs fold into per-order window min/max, ONE lineitem scan, no cartesian") {
-    // round 19 (optimization round): the semi+anti pair (three fact-wide
+    // the semi+anti pair (three fact-wide
     // exchanges at 1000×) is replaced by four min/max window aggregates
     // over one pass of the joined fact — OptimizedFormsSpec holds the two
     // forms row-for-row equal

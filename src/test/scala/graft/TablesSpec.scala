@@ -6,7 +6,7 @@ import java.nio.file.attribute.FileTime
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.LongType
 
-import graft.sources.{CsvSource, JsonSource, SchemaInfer}
+import graft.sources.{CsvSource, JsonSource}
 
 class TablesSpec extends SparkSpec {
 
@@ -163,23 +163,13 @@ class TablesSpec extends SparkSpec {
     }
   }
 
-  test("CSV, JSON and mergeSchema reads run their inference job on every build") {
-    import spark.implicits._
+  test("CSV and JSON reads run their inference job on every build") {
     // first builds: the derived CSV/JSONL copies are written here
     CsvSource.qCsvScan(spark, sf)
     JsonSource.qJsonScan(spark, sf)
-    val base = Files.createTempDirectory("graft_tables_merge").toString
-    Seq((1L, "a")).toDF("k", "s").write.parquet(s"$base/v1")
-    Seq((2L, "b", 1.0)).toDF("k", "s", "x").write.parquet(s"$base/v2")
-    SchemaInfer.readEvolved(spark, s"$base/v1", s"$base/v2")
     val csv = ran { CsvSource.qCsvScan(spark, sf) }
     assert(csv.jobs.exists(_.contains("CsvSource.scala")), csv)
     val json = ran { JsonSource.qJsonScan(spark, sf) }
     assert(json.jobs.exists(_.contains("JsonSource.scala")), json)
-    val merged = ran {
-      assert(SchemaInfer.readEvolved(spark, s"$base/v1", s"$base/v2").columns.toSeq ==
-        Seq("k", "s", "x"))
-    }
-    assert(merged.jobs.exists(_.contains("SchemaInfer.scala")), merged)
   }
 }

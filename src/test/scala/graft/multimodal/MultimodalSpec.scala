@@ -8,6 +8,12 @@ class MultimodalSpec extends SparkSpec {
 
   private lazy val media = Multimodal.asMedia(graft.Tables.documents(spark, sf))
 
+  /** The byte-lane feature projection exactly as `qMultimodalFeatures`
+    * writes it, over the same media rows. */
+  private def features = media.select(col("media_id"),
+    graft.functions.ByteFeaturesExpr.byteFeatures(col("payload"), Multimodal.FeatureDim)
+      .as("features"))
+
   test("media schema: binary payload + typed metadata struct") {
     val schema = media.schema
     assert(schema("payload").dataType == org.apache.spark.sql.types.BinaryType)
@@ -16,9 +22,9 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("byte-lane feature extraction is deterministic and fixed-width") {
-    val f1 = Multimodal.extractFeatures(media).collect()
+    val f1 = features.collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    val f2 = Multimodal.extractFeatures(media).collect()
+    val f2 = features.collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     assert(f1 == f2)
     assert(f1.values.forall(_.length == Multimodal.FeatureDim))
@@ -33,7 +39,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("feature extraction stays inside whole-stage codegen (no RDD break)") {
-    val plan = Multimodal.extractFeatures(media)
+    val plan = features
       .queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert(plan.contains("graft_byte_features"), plan)
     assert(!plan.contains("Scan ExistingRDD"), "features must come from a projection, not an RDD:\n" + plan)

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the pure round-9 derivations that have no Spark surface of their
+/** Pins the pure derivations that have no Spark surface of their
   * own: the scale-derived bucket count, the stale-registry eviction core,
   * and the dead-process scratch sweep. */
 class BucketedCountSpec extends AnyFunSuite {
@@ -49,8 +49,9 @@ class BucketedCountSpec extends AnyFunSuite {
   }
 
   test("edgeSerializedFor: format follows footprint vs unified pool") {
-    import Graph.edgeSerializedFor
     val gib = 1L << 30
+    def edgeSerializedFor(lineitemRows: Long, heap: Long): Boolean =
+      Graph.edgeSerializedForPool(lineitemRows, Graph.unifiedPoolOf(heap))
     // 100x probe corpus (60M lineitem rows -> ~12GB deserialized estimate):
     // must go serialized in the 8 GiB dev JVM (deserialized measured: task
     // death), deserialized in the 32 GiB probe JVM (measured 1.7x faster)

@@ -216,7 +216,7 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("pq gate exact: the oracle-checked ground truth agrees with qAnnPq's self-gate flags") {
-    // q_pq_gate_exact (round-14 verdict item 3) surfaces the self-gate's
+    // q_pq_gate_exact surfaces the self-gate's
     // exact-L2 top-k as a hash-checked query; consistency contract: a PQ
     // top-k row is flagged in_exact_topk by qAnnPq IFF its (query_id,
     // vec_id) appears in q_pq_gate_exact's rows — the two plans compute
@@ -243,7 +243,7 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("ann recall full query set: gate ids are the pinned md5 subset and " +
       "the FULL-set recall property still holds at spec level") {
-    // the contract query gates a deterministic md5 subsample (round-9);
+    // the contract query gates a deterministic md5 subsample;
     // the subset is a compile-time property of the fixed candidate ids —
     // pin it so a selector change can never silently move the gate
     assert(Similarity.lshGateIds == Seq(1L, 4L), Similarity.lshGateIds)
@@ -252,7 +252,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // gate measured pre-subsample): every LSH query's bucket probe and
     // every IVF query's cell probe must keep a sane fraction of the exact
     // brute top-3 — the property the oracle now checks on the subsample
-    val brute = Similarity.bruteTopKInSpec(spark, sf,
+    val brute = Similarity.bruteTopKIn(spark, sf,
       Seq((0L, Similarity.NQueries.toLong),
         (Similarity.IvfQueryLo.toLong, (Similarity.IvfQueryLo + Similarity.NQueries).toLong)), 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
@@ -296,7 +296,7 @@ class DedupSimilaritySpec extends SparkSpec {
     }
     val df = docs.toDF("vec_id", "embedding")
     for (np <- Seq(Similarity.MinPlanes, 12, Similarity.MaxPlanes)) {
-      val nb = Similarity.bucketOf(df, np).select("bucket").distinct().count()
+      val nb = df.select(Similarity.lshBucket(np).as("bucket")).distinct().count()
       assert(nb == 1L, s"cluster split across $nb buckets at np=$np")
     }
   }

@@ -26,13 +26,13 @@ class GraphSpec extends SparkSpec {
 
   test("serialized edge checkpoint yields byte-identical pagerank results") {
     // qPagerank picks the checkpoint's storage format from the estimated
-    // footprint (Graph.edgeSerializedFor) — at fixture scale that is the
-    // deserialized form, so the serialized path would otherwise only ever
-    // run at probe scale. Drive Graph.iterate (the production iteration)
-    // over a checkpoint built serialized via the same Bridge call and
-    // assert the ranks equal the production path's exactly: the storage
-    // format must be invisible to the values. Since round 12 this is ALSO
-    // the cross-STRATEGY equality pin: iterate here runs the
+    // footprint (Graph.edgeSerializedForPool) — at fixture scale that is
+    // the deserialized form, so the serialized path would otherwise only
+    // ever run at probe scale. Drive Graph.iterate (the production
+    // iteration) over the production edge layout checkpointed serialized
+    // via the same Bridge call and assert the ranks equal the production
+    // path's exactly: the storage format must be invisible to the values.
+    // This is ALSO the cross-STRATEGY equality pin: iterate here runs the
     // src-partitioned shuffle-hash shape (bcast = false) while the
     // production path at fixture |V| runs the broadcast/dst-partitioned
     // shape — the exact micro-unit long sums are associative under any
@@ -44,7 +44,7 @@ class GraphSpec extends SparkSpec {
       try {
         spark.conf.set(coalesceKey, "false")
         val (e, eRdd) = org.apache.spark.sql.graft.Bridge
-          .localCheckpointed(Graph.partitionedEdges(spark, sf), serialized = true)
+          .localCheckpointed(Graph.edgeLayout(spark, sf, bcast = false)._1, serialized = true)
         val (d, dRdd) = org.apache.spark.sql.graft.Bridge
           .localCheckpointed(e.groupBy("src").agg(count(lit(1)).as("deg")))
         (e, eRdd, d, dRdd)
@@ -59,7 +59,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("materialized-broadcast tier yields byte-identical pagerank results (round 19)") {
-    // the round-19 middle tier: per-round rank materialization under the
+    // the middle tier: per-round rank materialization under the
     // broadcast strategy (≤ 2 live hashed relations instead of PrRounds+1).
     // Strategy and materialization must be invisible to the values — the
     // exact micro-unit long sums are associative, and localCheckpoint
@@ -83,12 +83,12 @@ class GraphSpec extends SparkSpec {
 
   test("materialized tier admits the fused tier's r18 failure point (round 19)") {
     // the fused ×(PrRounds+1) budget rejects |V|=16M under the 32g pool
-    // (the r18 1000× BroadcastExchange OOM) — the ×2 materialized budget
+    // (the 1000× BroadcastExchange OOM) — the ×2 materialized budget
     // must ADMIT it (2.05 GB ≤ pool/8 = 2.38 GB), which is the whole point
     // of decoupling the live-relation count from PrRounds
     val heap32g = 32L << 30
     val unified = ((heap32g - (300L << 20)) * 0.6).toLong
-    assert(!Graph.vertexBroadcastable(16000000L, heap32g),
+    assert(!Graph.vertexBroadcastablePool(16000000L, Graph.unifiedPoolOf(heap32g)),
       "fused tier still rejects 16M at 32g")
     assert(Graph.vertexBroadcastableMaterializedPool(16000000L, unified),
       "materialized tier must admit 16M at 32g")
@@ -105,19 +105,21 @@ class GraphSpec extends SparkSpec {
     // executes every round's contribution broadcast plus the degree
     // broadcast in one plan) — fits in 1/8 of the unified pool AND under
     // a 64 M-row absolute cap; same pure-function convention as
-    // edgeSerializedFor, so re-invocations agree by construction.
+    // edgeSerializedForPool, so re-invocations agree by construction.
     val heap32g = 32L << 30
     val unified = ((heap32g - (300L << 20)) * 0.6).toLong
     val perRow = 64L * (Graph.PrRounds + 1)
-    assert(Graph.vertexBroadcastable(1600000L, heap32g), "100x |V|=1.6M at 32g")
-    assert(Graph.vertexBroadcastable(16000L, 8L << 30), "fixture |V| at dev 8g")
-    assert(!Graph.vertexBroadcastable(100000000L, heap32g), "100M rows > 64M cap")
-    // round-18 1000x probe: 16M vertices under the 32g (19GiB) pool DIED
-    // in the BroadcastExchange build — the heuristic must say shuffle-hash
-    assert(!Graph.vertexBroadcastable(16000000L, heap32g),
-      "1000x |V|=16M at 32g must flip to shuffle-hash (r18 probe failure)")
-    assert(!Graph.vertexBroadcastable(unified / 8 / perRow + 1, heap32g),
+    def fits(vUpper: Long, heap: Long): Boolean =
+      Graph.vertexBroadcastablePool(vUpper, Graph.unifiedPoolOf(heap))
+    assert(fits(1600000L, heap32g), "100x |V|=1.6M at 32g")
+    assert(fits(16000L, 8L << 30), "fixture |V| at dev 8g")
+    assert(!fits(100000000L, heap32g), "100M rows > 64M cap")
+    // 1000x probe: 16M vertices under the 32g (19GiB) pool DIED in the
+    // BroadcastExchange build — the heuristic must say shuffle-hash
+    assert(!fits(16000000L, heap32g),
+      "1000x |V|=16M at 32g must flip to shuffle-hash (1000x probe failure)")
+    assert(!fits(unified / 8 / perRow + 1, heap32g),
       "bytes estimate crossing pool/8 must flip to shuffle-hash")
-    assert(Graph.vertexBroadcastable(unified / 8 / perRow, heap32g))
+    assert(fits(unified / 8 / perRow, heap32g))
   }
 }

@@ -28,49 +28,6 @@ class LayoutSpec extends SparkSpec {
     }
   }
 
-  test("zvalue64: bijection above the 16-bit torus, agrees with zvalue below it") {
-    import spark.implicits._
-    // keys straddling 65536 — the old masked path aliased all of these
-    val pts = (for (i <- 0 until 32; j <- 0 until 32)
-      yield (i * 67_108_863L % (1L << 31), j * 33_554_431L % (1L << 31))).distinct
-    val out = pts.toDF("a", "b")
-      .select(col("a"), col("b"), Layout.zvalue64(col("a"), col("b")).as("z"))
-      .collect()
-    assert(out.map(_.getLong(2)).distinct.length == out.length,
-      "z64 collision above 16-bit domain")
-    out.foreach { r =>
-      val (a, b, z) = (r.getLong(0), r.getLong(1), r.getLong(2))
-      assert(z >= 0, s"z64 sign overflow at ($a,$b)")
-      var (da, db) = (0L, 0L)
-      for (i <- 0 until 31) {
-        da |= ((z >> (2 * i)) & 1L) << i
-        db |= ((z >> (2 * i + 1)) & 1L) << i
-      }
-      assert(da == a && db == b, s"z64 decode mismatch at ($a,$b): got ($da,$db)")
-    }
-    // small keys: identical to the 16-bit contract code
-    val both = (for (i <- 0 until 64) yield (i * 997L % 65536, i * 1041L % 65536))
-      .toDF("a", "b")
-      .select(Layout.zvalue(col("a"), col("b")).as("z16"),
-        Layout.zvalue64(col("a"), col("b")).as("z64"))
-      .collect()
-    both.foreach(r => assert(r.getLong(0) == r.getLong(1), "z16 != z64 on small keys"))
-  }
-
-  test("zvalue64 raises on keys outside [0, 2^31) instead of aliasing") {
-    import spark.implicits._
-    val bad = Seq((1L << 31, 5L), (-1L, 5L))
-    bad.foreach { case (a, b) =>
-      val e = intercept[Exception] {
-        Seq((a, b)).toDF("a", "b")
-          .select(Layout.zvalue64(col("a"), col("b"))).collect()
-      }
-      def msgs(t: Throwable): Seq[String] =
-        Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
-      assert(msgs(e).exists(_.contains("zorder key out of")), s"wrong error for ($a,$b): $e")
-    }
-  }
-
   test("every zpart is an exact axis-aligned quadrant of the key space") {
     // top 2*ZPartBits z-bits = ZPartBits leading bits of EACH dim: all rows
     // in a zpart share the same (a >> 14, b >> 14) high-bit pair
@@ -84,24 +41,6 @@ class LayoutSpec extends SparkSpec {
     perPart.foreach { case (zp, rs) =>
       assert(rs.map(r => (r.getLong(1), r.getLong(2))).distinct.length == 1,
         s"zpart $zp spans more than one quadrant")
-    }
-  }
-
-  test("zorder write: files hold disjoint z-ranges covering all rows") {
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
-    val li = graft.Tables.lineitem(spark, sf)
-    Layout.zorderWrite(li, "l_partkey", "l_suppkey", dir)
-    val back = spark.read.parquet(dir)
-    assert(back.count() == li.count(), "row conservation")
-    val ranges = back
-      .select(Layout.zvalue(col("l_partkey"), col("l_suppkey")).as("z"),
-        input_file_name().as("f"))
-      .groupBy("f").agg(min("z").as("lo"), max("z").as("hi"))
-      .collect().map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Array((_, hi1), (lo2, _)) =>
-        assert(hi1 <= lo2, s"overlapping z-ranges across files: $hi1 > $lo2")
-      case _ =>
     }
   }
 }

@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
 
-/** Round-19 optimization-round equivalence pins: every contract query whose
-  * PLAN was restructured this round is held row-for-row equal to its
-  * round-18 form (the declared results may not change — the driver re-runs
-  * every query against the DuckDB oracle, and the oracle SQL is untouched).
+/** Equivalence pins for the contract queries whose PLAN departs from the
+  * obvious form: each is held row-for-row equal to that form (the declared
+  * results may not change — every query is re-run against the DuckDB
+  * oracle, and the oracle SQL follows the obvious form).
   * Comparisons collect both forms and compare ordered row seqs (each query
   * ends in a total ORDER BY / top-k, so order is part of the contract).
   */
@@ -20,25 +20,25 @@ class OptimizedFormsSpec extends SparkSpec {
   private def assertEqualForms(opt: DataFrame, ref: DataFrame, tag: String): Unit = {
     val (o, r) = (rows(opt), rows(ref))
     assert(o.nonEmpty, s"$tag: optimized form returned no rows")
-    assert(o == r, s"$tag: optimized form diverges from round-18 form:\n$o\nvs\n$r")
+    assert(o == r, s"$tag: optimized form diverges from the reference form:\n$o\nvs\n$r")
     assert(opt.schema == ref.schema,
       s"$tag: schema drift: ${opt.schema} vs ${ref.schema}")
   }
 
   test("q18: single-aggregation form == semi-join form (sf0.001 + sf0.01)") {
     for (dir <- Seq(sf, "/root/testdata/sf0.01"))
-      assertEqualForms(TpcH.q18(spark, dir), TpcH.q18SemiJoinForm(spark, dir),
+      assertEqualForms(TpcH.q18(spark, dir), TpcHReference.q18SemiJoinForm(spark, dir),
         s"q18@$dir")
   }
 
   test("q21: window min/max form == semi+anti form (sf0.001 + sf0.01)") {
     for (dir <- Seq(sf, "/root/testdata/sf0.01"))
-      assertEqualForms(TpcH.q21(spark, dir), TpcH.q21SemiAntiForm(spark, dir),
+      assertEqualForms(TpcH.q21(spark, dir), TpcHReference.q21SemiAntiForm(spark, dir),
         s"q21@$dir")
   }
 
   test("q13: aggregate-before-join form == join-then-aggregate form") {
-    // the round-18 form inline: LEFT join the full orders fact onto
+    // the join-then-aggregate form inline: LEFT join the full orders fact onto
     // customer with the priority exclusion as a join condition, then count
     val ref = {
       val c = Tables.customer(spark, "/root/testdata/sf0.01")
@@ -63,9 +63,9 @@ class OptimizedFormsSpec extends SparkSpec {
   }
 
   test("q1: split-lane form == direct Decimal(38,6) form, bitwise (sf0.001 + sf0.01)") {
-    // round 20: q1's three money sums moved to the split primitive-long
-    // lanes; totals (and the avg_price division) must be BIT-identical to
-    // the decimal form's. dataTypes compared (nullability-blind, the q13
+    // q1's three money sums run on the split primitive-long lanes; totals
+    // (and the avg_price division) must be BIT-identical to the decimal
+    // form's. dataTypes compared (nullability-blind, the q13
     // convention — lane reassembly arithmetic differs in nullability).
     for (dir <- Seq(sf, "/root/testdata/sf0.01")) {
       val opt = Relational.q1PricingSummary(spark, dir)
@@ -90,13 +90,13 @@ class OptimizedFormsSpec extends SparkSpec {
   }
 
   test("dim broadcast gate: admits fixture-scale dims, rejects at-scale dims") {
-    // round 20 (r19 verdict item 2): the SF-proportional dimension hints
-    // are size-gated. Pure-function pins of the admission boundary:
+    // the SF-proportional dimension hints are size-gated. Pure-function
+    // pins of the admission boundary:
     val pool32g = Graph.unifiedPoolOf(32L << 30) // the probe standard's pool
     // sf0.1 customer ≈ 1 MB of scan bytes — admitted (plan unchanged)
     assert(TpcH.dimBroadcastable(BigInt(1L << 20), pool32g))
-    // 100× customer ≈ 100 MB — still admitted (r18/r19 measured broadcast
-    // as the win there; ×8 expansion = 800 MB ≤ pool/8 ≈ 2.4 GB)
+    // 100× customer ≈ 100 MB — still admitted (the 100× probe measured
+    // broadcast as the win there; ×8 expansion = 800 MB ≤ pool/8 ≈ 2.4 GB)
     assert(TpcH.dimBroadcastable(BigInt(100L << 20), pool32g))
     // 1000×+ customer ≥ 1 GB scan bytes — REJECTED (×8 ≥ the 2 GiB absolute
     // cap and past pool/8): the join is left to AQE instead of a forced OOM

@@ -1,43 +1,10 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 
 class SchemaInferSpec extends SparkSpec {
-
-  test("csv inferSchema recovers long/double/string/timestamp columns") {
-    val dir = Files.createTempDirectory("graft_csv").toFile
-    val f = new java.io.File(dir, "t.csv")
-    Files.writeString(f.toPath,
-      """id,price,name,when
-        |1,1.5,alpha,2024-01-01T00:00:00
-        |2,2.25,beta,2024-01-02T12:30:00
-        |""".stripMargin)
-    val schema = SchemaInfer.inferCsv(spark, f.getAbsolutePath)
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
-    assert(types("id") == IntegerType || types("id") == LongType)
-    assert(types("price") == DoubleType)
-    assert(types("name") == StringType)
-    assert(types("when").isInstanceOf[TimestampType.type] ||
-      types("when").isInstanceOf[TimestampNTZType.type])
-  }
-
-  test("json inference recovers nested structure") {
-    val dir = Files.createTempDirectory("graft_json").toFile
-    val f = new java.io.File(dir, "t.json")
-    Files.writeString(f.toPath,
-      """{"a": 1, "b": {"c": "x", "d": 2.5}}
-        |{"a": 2, "b": {"c": "y", "d": 3.5}}
-        |""".stripMargin)
-    val schema = SchemaInfer.inferJson(spark, f.getAbsolutePath)
-    assert(schema("a").dataType == LongType)
-    val b = schema("b").dataType.asInstanceOf[StructType]
-    assert(b("c").dataType == StringType)
-    assert(b("d").dataType == DoubleType)
-  }
 
   test("tightest-type inference over string columns") {
     import spark.implicits._
@@ -126,23 +93,6 @@ class SchemaInferSpec extends SparkSpec {
       ("b", "decimal(3,2)", false),   // mixed scale 2/1 -> s=2, p=3
       ("c", "string", true),          // absent in row 2 -> nullable
       ("d", "date", true)))
-  }
-
-  test("schema evolution: vintages union under the merged superset schema") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("evolve").toString
-    // v1 writer: (doc_id, text); v2 writer adds a lang column
-    Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
-      .write.parquet(s"$base/v1")
-    Seq((3L, "gamma", "en"), (4L, "delta", "fr")).toDF("doc_id", "text", "lang")
-      .write.parquet(s"$base/v2")
-    val merged = SchemaInfer.readEvolved(spark, s"$base/v1", s"$base/v2")
-    assert(merged.columns.sorted.toSeq == Seq("doc_id", "lang", "text"))
-    val rows = merged.collect()
-      .map(r => r.getLong(0) -> Option(r.getAs[String]("lang"))).toMap
-    assert(rows.size == 4, "every vintage's rows present")
-    assert(rows(1L).isEmpty && rows(2L).isEmpty, "pre-evolution rows carry null lang")
-    assert(rows(3L).contains("en") && rows(4L).contains("fr"))
   }
 
   test("applyInferred casts in place") {

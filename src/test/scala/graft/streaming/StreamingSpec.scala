@@ -2,283 +2,52 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.SparkSpec
-import graft.streaming.StreamOps.UserEvent
+import graft.streaming.StreamOps.{RollEvent, RollQuantiles}
+
+object StreamingSpec {
+
+  /** One event row for the MemoryStream tests. */
+  case class UserEvent(event_id: Long, ts: Timestamp, user_id: Long,
+                       event_type: String, value: Double)
+
+  /** The trailing-row quantile ring on flatMapGroupsWithState, over the
+    * same [[StreamOps.rollFold]] as the ListState [[RollingRingProcessor]]:
+    * the reference the ListState form and the batch window are held to. */
+  def rollingQuantileStream(events: Dataset[RollEvent]): Dataset[RollQuantiles] = {
+    import events.sparkSession.implicits._
+    events
+      .groupByKey(_.event_type)
+      .flatMapGroupsWithState[Vector[(Long, Long, Double)], RollQuantiles](
+        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
+        (key: String, batch: Iterator[RollEvent], state: GroupState[Vector[(Long, Long, Double)]]) =>
+          val (next, out) = StreamOps.rollFold(key,
+            state.getOption.getOrElse(Vector.empty), batch.toVector)
+          state.update(next)
+          out.iterator
+      }
+  }
+}
 
 class StreamingSpec extends SparkSpec {
+  import StreamingSpec.{UserEvent, rollingQuantileStream}
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
-
-  private val fixture = Seq(
-    UserEvent(1, ts("2024-01-01 00:05:00"), 1, "click", 1.0),
-    UserEvent(2, ts("2024-01-01 00:15:00"), 1, "click", 2.0),
-    UserEvent(3, ts("2024-01-01 00:55:00"), 2, "view", 3.0),
-    UserEvent(4, ts("2024-01-01 01:05:00"), 1, "click", 4.0),
-    UserEvent(5, ts("2024-01-01 01:06:00"), 2, "view", 5.0),
-    UserEvent(6, ts("2024-01-01 03:00:00"), 2, "view", 6.0))
-
-  test("streaming hourly agg equals the batch plan on the same data") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val mem = MemoryStream[UserEvent]
-    mem.addData(fixture: _*)
-    val q = StreamOps.hourlyAgg(mem.toDF())
-      .writeStream.format("memory").queryName("hourly").outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("hourly")
-      .select("hour", "event_type", "n", "sum_value")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-    val batch = fixture.toDF()
-      .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum("value").as("sum_value"))
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(streamed == batch)
-  }
-
-  test("streaming dedup drops repeated (user_id, event_type) keys") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val mem = MemoryStream[UserEvent]
-    mem.addData(fixture: _*)
-    val q = StreamOps.dedupByKey(mem.toDF())
-      .writeStream.format("memory").queryName("dedup").outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val out = spark.table("dedup").select("user_id", "event_type").collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    assert(out.length == out.distinct.length)
-    assert(out.toSet == Set((1L, "click"), (2L, "view")))
-  }
-
-  test("streaming ingest chain equals the batch plan on the same docs") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val docs = graft.Tables.documents(spark, sf)
-      .select("doc_id", "text").as[(Long, String)].collect().toSeq
-    val mem = MemoryStream[(Long, String)]
-    mem.addData(docs: _*)
-    val q = StreamOps.ingestDocs(mem.toDF().toDF("doc_id", "text"))
-      .writeStream.format("memory").queryName("ingest").outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("ingest").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getDouble(3))).toSet
-    // the same plan over the batch frame IS the batch twin; the fixture has
-    // no duplicate texts at sf0.001, so dedup nondeterminism can't differ
-    val batch = StreamOps.ingestDocs(docs.toDF("doc_id", "text")).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getDouble(3))).toSet
-    assert(streamed == batch)
-    assert(streamed.nonEmpty, "ingest chain must pass some docs")
-  }
-
-  test("streaming ingest dedups content ACROSS micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val mem = MemoryStream[(Long, String)]
-    val q = StreamOps.ingestDocs(mem.toDF().toDF("doc_id", "text"))
-      .writeStream.format("memory").queryName("ingest_dedup").outputMode("append").start()
-    try {
-      // 200 distinct words: all 3-grams distinct (repetition filter passes)
-      // and n_chars*60 > 65536 caps the sample threshold, so EVERY doc_id's
-      // 16-bit key passes — the only thing that can drop the second copy is
-      // the fingerprint state
-      val text = (1 to 200).map(i => s"word$i").mkString(" ")
-      mem.addData((1L, text))
-      q.processAllAvailable()
-      val afterFirst = spark.table("ingest_dedup").count()
-      // batch 2: same CONTENT under a new doc_id -> fingerprint state drops it
-      mem.addData((2L, text))
-      q.processAllAvailable()
-      assert(spark.table("ingest_dedup").count() == afterFirst,
-        "identical content in a later micro-batch must be dropped by state")
-    } finally q.stop()
-  }
-
-  test("session windows split on the inactivity gap") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val mem = MemoryStream[UserEvent]
-    mem.addData(fixture: _*)
-    val q = StreamOps.sessionize(mem.toDF())
-      .writeStream.format("memory").queryName("sessions").outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    val sessions = spark.table("sessions").collect()
-    // user 2: events at 00:55, 01:06 (11min gap -> same session), 03:00 (new)
-    val u2 = sessions.filter(_.getLong(2) == 2L)
-    assert(u2.length == 2, u2.mkString(";"))
-    assert(u2.map(_.getLong(3)).sorted.toSeq == Seq(1L, 2L))
-  }
-
-  test("session windows MERGE across micro-batches (3 incremental triggers)") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val mem = MemoryStream[UserEvent]
-    val q = StreamOps.sessionize(mem.toDF())
-      .writeStream.format("memory").queryName("sess_multi").outputMode("complete").start()
-    try {
-      // trigger 1: opens a session at 00:00
-      mem.addData(UserEvent(1, ts("2024-01-01 00:00:00"), 7, "click", 1.0))
-      q.processAllAvailable()
-      assert(spark.table("sess_multi").count() == 1)
-      // trigger 2: 20 min later (< 30 min gap) -> must EXTEND the open
-      // session's state, not start a new one
-      mem.addData(UserEvent(2, ts("2024-01-01 00:20:00"), 7, "click", 2.0))
-      q.processAllAvailable()
-      val afterT2 = spark.table("sess_multi").collect()
-      assert(afterT2.length == 1 && afterT2.head.getLong(3) == 2L,
-        s"expected one merged 2-event session, got ${afterT2.mkString(";")}")
-      // trigger 3: one more extension at 00:40 AND a fresh session at 02:00
-      mem.addData(
-        UserEvent(3, ts("2024-01-01 00:40:00"), 7, "click", 3.0),
-        UserEvent(4, ts("2024-01-01 02:00:00"), 7, "click", 4.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val sessions = spark.table("sess_multi").collect()
-      .map(r => (r.getTimestamp(0), r.getTimestamp(1), r.getLong(3), r.getDouble(4)))
-      .sortBy(_._1)
-    assert(sessions.length == 2, sessions.mkString(";"))
-    // merged session: 3 events over [00:00, 00:40+30min), value 6
-    assert(sessions(0) ==
-      ((ts("2024-01-01 00:00:00"), ts("2024-01-01 01:10:00"), 3L, 6.0)))
-    assert(sessions(1) ==
-      ((ts("2024-01-01 02:00:00"), ts("2024-01-01 02:30:00"), 1L, 4.0)))
-  }
-
-  test("dedup state persists across micro-batches (3 incremental triggers)") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val mem = MemoryStream[UserEvent]
-    val q = StreamOps.dedupByKey(mem.toDF())
-      .writeStream.format("memory").queryName("dedup_multi").outputMode("append").start()
-    try {
-      mem.addData(UserEvent(1, ts("2024-01-01 00:00:00"), 1, "click", 1.0))
-      q.processAllAvailable()
-      // trigger 2: duplicate key from batch 1 (must be dropped by carried
-      // state) + a brand-new key (must pass)
-      mem.addData(
-        UserEvent(2, ts("2024-01-01 00:10:00"), 1, "click", 2.0),
-        UserEvent(3, ts("2024-01-01 00:11:00"), 2, "view", 3.0))
-      q.processAllAvailable()
-      // trigger 3: duplicates of BOTH earlier keys, still within watermark
-      mem.addData(
-        UserEvent(4, ts("2024-01-01 00:20:00"), 1, "click", 4.0),
-        UserEvent(5, ts("2024-01-01 00:21:00"), 2, "view", 5.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val out = spark.table("dedup_multi").select("event_id").collect().map(_.getLong(0)).sorted
-    assert(out.toSeq == Seq(1L, 3L), s"state failed to drop cross-batch dups: ${out.mkString(",")}")
-  }
-
-  test("incremental hourly agg over 3 triggers equals the batch agg of the union") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val mem = MemoryStream[UserEvent]
-    val q = StreamOps.hourlyAgg(mem.toDF())
-      .writeStream.format("memory").queryName("hourly_multi").outputMode("complete").start()
-    try {
-      fixture.grouped(2).foreach { chunk =>
-        mem.addData(chunk: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val streamed = spark.table("hourly_multi")
-      .select("hour", "event_type", "n", "sum_value")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-    val batch = fixture.toDF()
-      .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum("value").as("sum_value"))
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(streamed == batch)
-  }
-
-  test("late data beyond the watermark is dropped in append mode") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val mem = MemoryStream[UserEvent]
-    val q = StreamOps.hourlyAgg(mem.toDF())
-      .writeStream.format("memory").queryName("late").outputMode("append").start()
-    try {
-      // batch 1: advance event time far enough that watermark (max-2h)
-      // passes hour 00:00
-      mem.addData(
-        UserEvent(1, ts("2024-01-01 00:30:00"), 1, "click", 1.0),
-        UserEvent(2, ts("2024-01-01 05:00:00"), 1, "click", 1.0))
-      q.processAllAvailable()
-      // batch 2: an event for hour 00:00 — behind the 03:00 watermark
-      mem.addData(UserEvent(3, ts("2024-01-01 00:40:00"), 1, "click", 100.0))
-      q.processAllAvailable()
-      // batch 3: advance far enough to close every window
-      mem.addData(UserEvent(4, ts("2024-01-01 23:00:00"), 1, "click", 1.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val hour0 = spark.table("late")
-      .filter(col("hour") === ts("2024-01-01 00:00:00")).collect()
-    // the late event (value=100) must NOT be counted
-    assert(hour0.length == 1, hour0.mkString(";"))
-    assert(hour0.head.getLong(2) == 1L, s"late row leaked: ${hour0.head}")
-    assert(hour0.head.getDouble(3) == 1.0)
-  }
-
-  test("mapGroupsWithState accumulates per-user totals across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val mem = MemoryStream[UserEvent]
-    val q = StreamOps.runningUserStats(mem.toDS())
-      .writeStream.format("memory").queryName("stats").outputMode("update").start()
-    try {
-      mem.addData(fixture.take(3): _*)
-      q.processAllAvailable()
-      mem.addData(fixture.drop(3): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    // last update per user wins
-    val last = spark.table("stats").collect()
-      .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).maxBy(_._1) }
-    assert(last(1L) == ((3L, 7.0)))
-    assert(last(2L) == ((3L, 14.0)))
-  }
-
-  test("streaming tokenizer equals the batch boundary tokenizer across triggers") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    // train side: boundaries from a batch snapshot
-    val snapshot = spark.range(5000).select(col("id"), randn(11).as("v"))
-    val bounds = graft.operators.Tokenize
-      .quantileBoundsSelect(snapshot, Seq("v"), graft.operators.Tokenize.innerProbs(100))
-      .map { case (c, bs) => c -> bs.map(b => math.rint(b * 1e6) / 1e6) }
-    // serve side: 3 incremental micro-batches of fresh values
-    val rows = (0 until 900).map(i => (i.toLong, (i % 37) / 5.0 - 3.0))
-    val mem = MemoryStream[(Long, Double)]
-    val q = StreamOps.tokenizeStream(
-        mem.toDF().toDF("id", "v"), bounds, keep = Seq("id"))
-      .writeStream.format("memory").queryName("tok_stream").outputMode("append").start()
-    try {
-      rows.grouped(300).foreach { chunk =>
-        mem.addData(chunk: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val streamed = spark.table("tok_stream").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toMap
-    val batch = StreamOps.tokenizeStream(rows.toDF("id", "v"), bounds, keep = Seq("id"))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toMap
-    assert(streamed.size == 900)
-    assert(streamed == batch)
-  }
 
   test("streaming rolling quantiles equal the batch window across 3 triggers") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    import StreamOps.RollEvent
     // 30 in-order events per type: the 20-row ring wraps mid-stream
     val evs = (1 to 30).flatMap { i =>
       Seq(RollEvent(i, ts(f"2024-01-01 00:$i%02d:00"), "click", i * 1.7 % 13),
         RollEvent(100 + i, ts(f"2024-01-01 00:$i%02d:30"), "view", i * 2.3 % 7))
     }
     val mem = MemoryStream[RollEvent]
-    val q = StreamOps.rollingQuantileStream(mem.toDS())
+    val q = rollingQuantileStream(mem.toDS())
       .writeStream.format("memory").queryName("roll_q").outputMode("append").start()
     try {
       evs.grouped(20).foreach { g => mem.addData(g: _*); q.processAllAvailable() }
@@ -382,7 +151,7 @@ class StreamingSpec extends SparkSpec {
   test("pace and state-partition derivations are pinned (round 10)") {
     // pace = cores × measured per-core throughput × fixed batch cost —
     // the trigger-amortization sizing, floored at 1 Mi rows; 32 cores
-    // reproduces the round-9 measured ~4 M sweet spot
+    // reproduces the measured ~4 M sweet spot
     assert(StreamOps.paceRowsFor(32) ==
       (32 * StreamOps.PaceRowsPerCorePerSec * StreamOps.PaceFixedBatchSec).toLong)
     assert(StreamOps.paceRowsFor(32) > 4000000L && StreamOps.paceRowsFor(32) < 5000000L)
@@ -394,21 +163,21 @@ class StreamingSpec extends SparkSpec {
     assert(StreamOps.statePartsFor(100000000L, 32) == 32, "cores cap")
     assert(StreamOps.statePartsFor(10000000L, 4) == StreamOps.DefaultStateParts,
       "the floor wins below it even on small-core boxes")
-    // per-batch rows = what one staged file carries (round-10 advisor
-    // item: NOT min(staged, pace) — once the MaxPaceBatches cap binds,
-    // files are larger than the pace)
+    // per-batch rows = what one staged file carries — NOT min(staged,
+    // pace): once the MaxPaceBatches cap binds, files are larger than the
+    // pace
     assert(StreamOps.perBatchRows(10000000L, 3) == 3333334L)
     assert(StreamOps.perBatchRows(1000L, 1) == 1000L)
     assert(StreamOps.perBatchRows(640000000L, 64) == 10000000L,
       "capped staging: real batches exceed the pace and the sizing must see it")
-    // round-11 advisor item: zero staged files is a staging bug and must
-    // surface as a clear error, not an ArithmeticException
+    // zero staged files is a staging bug and must surface as a clear
+    // error, not an ArithmeticException
     val e = intercept[IllegalArgumentException](StreamOps.perBatchRows(1000L, 0))
     assert(e.getMessage.contains("stagedFiles"))
   }
 
   test("paced session drain evicts sessions INCREMENTALLY (state plateaus below the corpus)") {
-    // The round-9 paced drain's claim is not just final-answer equality
+    // The paced drain's claim is not just final-answer equality
     // (the test above) but HOW the answer is produced: the watermark
     // advances every micro-batch, so sessions leave state mid-drain and
     // live state plateaus at one time slice — not the corpus-wide session
@@ -543,8 +312,7 @@ class StreamingSpec extends SparkSpec {
   test("OUTER stream-stream join state is also evicted mid-drain (the gated-emission mechanism)") {
     // the outer form's whole novelty is eviction-GATED emission; assert
     // the eviction itself from its own telemetry tag, not just the final
-    // aggregate (round-15 review: the inner form was asserted, the outer
-    // form's telemetry was recorded but never read)
+    // aggregate: telemetry that is recorded but never read pins nothing
     val prev = StreamOps.PaceRowsPerBatch
     try {
       StreamOps.PaceRowsPerBatch = 100
@@ -698,66 +466,13 @@ class StreamingSpec extends SparkSpec {
     assert(last("C") == (("C", 15L, 1L)), s"C: ${last("C")}")
   }
 
-  test("transformWithState per-state TTL expires dedup entries (re-admission after the TTL)") {
-    // the TTL lever that bounds an unbounded fingerprint space, driven
-    // for real (round 16): a 500 ms TTL on the value state and a 1.5 s
-    // wall-clock pause between triggers — the entry expires, so the key
-    // re-admits as first-seen (first_doc_id RESETS, copies restart),
-    // where the no-TTL form would count the recurrence as a suppressed
-    // duplicate. TTL is wall-clock (it requires
-    // TimeMode.ProcessingTime), which is why it lives here and not on an
-    // oracle lane; the 3x sleep-over-TTL margin makes the race practical
-    // noise — this can only flake if the host freezes the JVM for a
-    // second between triggers.
-    import StreamOps.DocSeen
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val sqlCtx = ss.sqlContext
-    import ss.implicits._
-    val mem = MemoryStream[DocSeen]
-    val q = StreamOps.dedupWithCountsTws(mem.toDS(),
-        ttl = Some(java.time.Duration.ofMillis(500)))
-      .writeStream.format("memory").queryName("dedup_ttl")
-      .outputMode("update").start()
-    // ProcessingTime mode runs CONTINUOUS micro-batches (the engine keeps
-    // triggering to advance the wall clock for TTL/timers), so
-    // processAllAvailable never settles — synchronize by polling the sink
-    // for the expected emission instead
-    def awaitRow(want: (String, Long, Long) => Boolean, label: String): Unit = {
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!ss.table("dedup_ttl").collect()
-          .exists(r => want(r.getString(0), r.getLong(1), r.getLong(2)))) {
-        assert(System.nanoTime() < deadline, s"timed out waiting for $label: " +
-          ss.table("dedup_ttl").collect().mkString(";"))
-        Thread.sleep(50)
-      }
-    }
-    val rows = try {
-      mem.addData(DocSeen("A", 10), DocSeen("A", 11))
-      awaitRow((fp, first, d) => fp == "A" && first == 10L && d == 1L,
-        "batch-1 in-batch dedup (A,10,1)")
-      Thread.sleep(1500) // 3x the TTL: the entry expires
-      mem.addData(DocSeen("A", 20))
-      awaitRow((fp, first, _) => fp == "A" && first == 20L,
-        "post-TTL re-admission of doc 20")
-      ss.table("dedup_ttl").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    } finally q.stop()
-    assert(rows.contains(("A", 20L, 0L)),
-      s"expired entry must re-admit doc 20 as FIRST-seen with a reset count: $rows")
-    assert(!rows.exists(r => r._2 == 10L && r._3 > 1L),
-      s"TTL'd state must not count doc 20 as a duplicate of doc 10: $rows")
-  }
-
   test("transformWithState ListState ring equals the flatMapGroupsWithState roller across triggers") {
-    // round 16 — the LIST named-state variable driven for real: the
+    // the LIST named-state variable driven for real: the
     // bounded per-key ring lives in an ordered ListState slot (the
     // API's native fit, vs serializing a whole Vector through a
     // ValueState/GroupState blob). Both forms run the same 3-trigger
     // input; their full Append emission streams must be equal as
     // multisets, on RocksDB.
-    import StreamOps.RollEvent
     val ss = spark.newSession()
     ss.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -769,7 +484,7 @@ class StreamingSpec extends SparkSpec {
     }
     def drain(name: String,
         form: org.apache.spark.sql.Dataset[RollEvent] =>
-          org.apache.spark.sql.Dataset[StreamOps.RollQuantiles]): Seq[(Long, String, Int, Double, Double)] = {
+          org.apache.spark.sql.Dataset[RollQuantiles]): Seq[(Long, String, Int, Double, Double)] = {
       val mem = MemoryStream[RollEvent]
       val q = form(mem.toDS())
         .writeStream.format("memory").queryName(name).outputMode("append").start()
@@ -780,20 +495,19 @@ class StreamingSpec extends SparkSpec {
         .toSeq
     }
     val list = drain("roll_tws", StreamOps.rollingQuantileStreamTws)
-    val fmgws = drain("roll_fmgws", StreamOps.rollingQuantileStream)
+    val fmgws = drain("roll_fmgws", rollingQuantileStream)
     assert(list.size == 60 && list.sorted == fmgws.sorted,
       s"ListState and GroupState rollers must emit identically:\n$list\nvs\n$fmgws")
   }
 
   test("rollFold's incremental sorted window equals the naive sort-per-event fold") {
-    // round 17 (hot-path rewrite): the fold maintains one sorted array
-    // with O(rollRows) shifts instead of sorting a fresh copy per event —
-    // this property pins the rewrite to the NAIVE reference (the original
-    // implementation, inlined here) over inputs chosen to stress it:
+    // the fold maintains one sorted array with O(rollRows) shifts instead
+    // of sorting a fresh copy per event — this property pins it to the
+    // NAIVE sort-per-event reference (inlined here) over inputs chosen to
+    // stress it:
     // duplicate values (multiset eviction must remove exactly one equal
     // instance), ties on ts, carries across many batches, and the
     // growing (< rollRows) phase. Same RNG seed → deterministic.
-    import StreamOps.{RollEvent, RollQuantiles}
     val rollRows = graft.operators.EventOps.RollRows
     def naive(key: String, ring: Vector[(Long, Long, Double)], batch: Seq[RollEvent])
         : (Vector[(Long, Long, Double)], Vector[RollQuantiles]) = {
@@ -830,10 +544,10 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("the staged replay copy is built ONCE per dir and shared across drains") {
-    // round-17 verdict item 5: N drains on one fixture must cost ONE
-    // staging job — the (dir, pace) ModelState registry entry is the
-    // shared fixture. Two different scaffold drains back-to-back may add
-    // at most one build (zero if an earlier test already staged this dir).
+    // N drains on one fixture must cost ONE staging job — the (dir, pace)
+    // ModelState registry entry is the shared fixture. Two different
+    // scaffold drains back-to-back may add at most one build (zero if an
+    // earlier test already staged this dir).
     val before = StreamOps.stagedBuildCount.get()
     StreamOps.qRollingTwsLive(spark, sf).collect()
     StreamOps.qSessionWindowLive(spark, sf).collect()
@@ -843,9 +557,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("q_rolling_tws_live drains the ListState ring to exactly the batch window") {
-    // round 17 — the ring promoted to the contract surface: the full
-    // paced staged replay (RocksDB, multi-batch at this fixture's pacing
-    // only if the corpus exceeds one pace file — either way the REAL
+    // the ring on the contract surface: the full paced staged replay
+    // (RocksDB, multi-batch at this fixture's pacing only if the corpus
+    // exceeds one pace file — either way the REAL
     // drain path) must reproduce the batch trailing-20 window
     // row-for-row, the same equality the DuckDB oracle hashes
     val live = StreamOps.qRollingTwsLive(spark, sf)
@@ -854,36 +568,6 @@ class StreamingSpec extends SparkSpec {
       .collect().map(_.toSeq).toSeq
     assert(live.nonEmpty && live == batch,
       s"live ListState drain must equal the batch window (got ${live.size} vs ${batch.size} rows)")
-  }
-
-  test("transformWithState MapState accumulates per-(user, type) totals across batches") {
-    // round 16 — the MAP named-state variable driven for real: one
-    // MapState slot per user, sub-keyed by event_type, point-updated per
-    // event without rewriting the user's other types. The LAST Update
-    // emission per (user, type) must equal the exact batch fold.
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val sqlCtx = ss.sqlContext
-    import ss.implicits._
-    val mem = MemoryStream[UserEvent]
-    val q = StreamOps.runningUserTypeStats(mem.toDS())
-      .writeStream.format("memory").queryName("user_type_stats")
-      .outputMode("update").start()
-    try {
-      fixture.grouped(2).foreach { g => mem.addData(g: _*); q.processAllAvailable() }
-    } finally q.stop()
-    val last = ss.table("user_type_stats").collect()
-      .map(r => (r.getLong(0), r.getString(1)) -> ((r.getLong(2), r.getLong(3))))
-      .groupBy(_._1)
-      // n is monotone across a pair's emissions: max(n) = final state
-      .map { case (k, vs) => k -> vs.map(_._2).maxBy(_._1) }
-    val want = fixture.groupBy(e => (e.user_id, e.event_type)).map { case (k, es) =>
-      k -> ((es.size.toLong, es.map(e =>
-        BigDecimal(e.value).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-          .*(BigDecimal(1000000)).toLongExact).sum))
-    }
-    assert(last == want, s"MapState totals must equal the batch fold:\n$last\nvs\n$want")
   }
 
   test("dropDuplicatesWithinWatermark bounds dedup state and re-admits expired keys") {
@@ -932,8 +616,8 @@ class StreamingSpec extends SparkSpec {
     // watermark reaches the timer only once watermark*1000 > end_us
     val gap = graft.operators.PipelineOps.SessionGapUs
     // ms-aligned end: last=1s, gap=30min -> end 1801s -> timer at 1801001 ms
-    // (a LITERAL pin — round-16 review: re-deriving the expectation with
-    // the implementation's own formula could never fail)
+    // (a LITERAL pin: re-deriving the expectation with the
+    // implementation's own formula could never fail)
     assert(StreamOps.sessionTimerMs(1000000L) == 1801001L)
     // sub-ms end: 1_000_500 + gap must round UP past the end, not down into it
     val t = StreamOps.sessionTimerMs(1000500L)
@@ -942,7 +626,7 @@ class StreamingSpec extends SparkSpec {
     // tsUs: getTime carries seconds+ms, getNanos the full sub-second part
     val fine = Timestamp.valueOf("2024-01-01 00:00:01.234567")
     assert(StreamOps.tsUs(fine) % 1000000L == 234567L)
-    // pre-epoch (round-16 advisor item): getNanos is always non-negative,
+    // pre-epoch: getNanos is always non-negative,
     // so the seconds term must FLOOR — truncation toward zero read
     // 1969-12-31T23:59:59.5Z as +500000 µs instead of −500000
     val preEpoch = Timestamp.from(java.time.Instant.parse("1969-12-31T23:59:59.5Z"))
@@ -1058,24 +742,5 @@ class StreamingSpec extends SparkSpec {
         s"live dedup state ($maxState keys) must plateau strictly below the " +
           s"corpus's $totalKeys (user, type, epoch) keys")
     } finally StreamOps.PaceRowsPerBatch = prev
-  }
-
-  test("stream-static enrichment join matches the batch join per micro-batch") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val dim = Seq((1L, "gold"), (2L, "silver"), (99L, "unused"))
-      .toDF("user_id", "tier")
-    val mem = MemoryStream[UserEvent]
-    mem.addData(fixture: _*)
-    val q = StreamOps.enrich(mem.toDF(), dim, "user_id")
-      .writeStream.format("memory").queryName("enriched").outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("enriched").select("event_id", "tier").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
-    val batch = fixture.toDF().join(dim, Seq("user_id"), "left")
-      .select("event_id", "tier").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(streamed == batch)
-    assert(streamed.forall(_._2 != null), "every fixture user has a tier")
   }
 }
